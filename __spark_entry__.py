@@ -8,255 +8,96 @@ at sf=0.01 and compares against ``oracle_sql()[name]`` via DuckDB
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-import etl_guiacores_spark.queries_corpus  # noqa: F401 — registers corpus-curation queries
-import etl_guiacores_spark.queries_extra  # noqa: F401 — registers coverage queries
-import etl_guiacores_spark.queries_eval  # noqa: F401 — registers eval/drift queries
-import etl_guiacores_spark.queries_analytics  # noqa: F401 — registers round-8 analytics queries
-import etl_guiacores_spark.queries_scale  # noqa: F401 — registers scale queries
-from etl_guiacores_spark.queries import REGISTRY
+from etl_guiacores_spark.harness import load_registry
 from etl_guiacores_spark.session import configure_session
+
+REGISTRY = load_registry()
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# The driver's CORRECTNESS artifact truncates at 50 rows, so emission
-# order decides which rows get a fresh confirmation each round. This
-# list is no longer hand-maintained: it is DERIVED by
-# tools/gen_rotation.py from the CORRECTNESS_r*.json history —
-# queries with no driver row yet lead (new-row debt outranks
-# stale-row debt), then queries whose implementation was TOUCHED
-# after their last driver-green round (gen_rotation.TOUCHED_SINCE —
-# changed-code debt, r13 verdict item 5), then ascending last-green
-# round, numeric query id breaking ties (NOT registry insertion
-# order — that depends on which module imported the query packages
-# first and differed between the CLI and pytest).
-# tests/test_rotation.py asserts this committed list matches
-# the derivation, and `python tools/gen_rotation.py --check` verifies
-# it from the shell. Round-14 window (first 50): the ten round-13-
-# optimized queries whose driver rows predate their code change
-# lead (the driver must re-hash a touched query before plain stale
-# rows rotate), then the cohort whose driver rows are the oldest —
-# steady-state rotation (registry 203; every prior query has a
-# driver row <= 5 rounds old, the arithmetic steady state under a
-# 50-row cap, period ceil(203/50)=5).
-# The derivation reads only git-tracked CORRECTNESS artifacts, so the
-# driver dropping the round's file after the final commit cannot turn
-# tests/test_rotation.py red mid-boundary. Every row is also locally
-# re-verified every round (tools/check_oracle.py green at sf0.01 AND
-# sf0.1 this round).
-_FIRST = [
-    "q92_semantic_dup_groups",
-    "q101_pagerank_neardup",
-    "q127_ewma_global",
-    "q131_bm25_batch",
-    "q132_retrieval_metrics",
-    "q134_repeated_spans",
-    "q135_span_strip",
-    "q137_triangle_counts",
-    "q107_bloom_decontaminate",
-    "q143_cohen_kappa",
-    "q199_streaming_acquisition_twin",
-    "q152_confusion_metrics",
-    "q158_vocab_jaccard",
-    "q162_kcore_dedup",
-    "q168_countmin_audit",
-    "q175_hll_audit",
-    "q177_span_decontam",
-    "q200_prechunked_span_strip",
-    "q193_lorenz_concentration",
-    "q194_quantile_sketch_audit",
-    "q195_mmr_batch",
-    "q03_regional_revenue",
-    "q04_resume_anti_join",
-    "q34_merge_upsert",
-    "q35_type_coercion",
-    "q36_phone_list_ops",
-    "q37_exact_dedupe",
-    "q38_running_totals",
-    "q39_pivot_events",
-    "q40_total_matches",
-    "q41_stat_aggregates",
-    "q42_conditional_agg",
-    "q43_json_props",
-    "q47_asof_join",
-    "q87_weighted_sample",
-    "q90_cluster_representatives",
-    "q91_ngram_novelty",
-    "q93_dup_graph_degree",
-    "q94_mixture_rebalance",
-    "q96_source_overlap_matrix",
-    "q97_label_centroid_cosine",
-    "q98_zipf_slope",
-    "q99_funnel",
-    "q100_cohort_retention",
-    "q102_rank_windows",
-    "q103_topk_via_aggregate",
-    "q104_dsir_importance",
-    "q105_sketch_distinct_audit",
-    "q119_bm25_topk",
-    "q122_snapshot_diff",
-    "q123_ewma_smooth",
-    "q124_mad_outliers",
-    "q125_mmr_rerank",
-    "q126_schema_drift",
-    "q128_winsorize",
-    "q129_majority_label",
-    "q130_temporal_split",
-    "q133_hard_negatives",
-    "q136_pmi_collocations",
-    "q138_exact_quota_sample",
-    "q139_ohlc_resample",
-    "q196_salted_quality_lang",
-    "q197_salted_gopher",
-    "q05_semi_join_segments",
-    "q06_filter_cross_product",
-    "q07_keep_first_dedupe",
-    "q08_dup_report",
-    "q09_top3_orders_per_customer",
-    "q10_latest_version",
-    "q11_set_ops",
-    "q12_rollup_acctbal",
-    "q13_cube_orders",
-    "q32_sessionization",
-    "q33_event_dedupe_first",
-    "q44_document_chunking",
-    "q45_vocabulary",
-    "q46_tfidf",
-    "q48_range_join",
-    "q49_hypertable_rollup",
-    "q50_corpus_dedup_survivors",
-    "q51_range_frame_window",
-    "q52_grouping_sets_sql",
-    "q53_lateral_top_order",
-    "q54_bag_set_ops",
-    "q55_null_safe_join",
-    "q57_decimal_exact",
-    "q58_source_mixture",
-    "q59_decontamination",
-    "q60_pii_redaction",
-    "q61_repetition_score",
-    "q62_dedup_clusters",
-    "q70_salted_distinct_count",
-    "q80_dense_ids",
-    "q89_token_offsets",
-    "q95_shard_manifest",
-    "q106_linear_quality_score",
-    "q108_scd2_history",
-    "q109_fuzzy_match_pairs",
-    "q110_entity_resolution",
-    "q111_scd2_asof_lookup",
-    "q112_gapfill_resample",
-    "q113_session_concurrency",
-    "q114_random_projection",
-    "q115_boilerplate_extract",
-    "q140_funnel",
-    "q141_cohort_retention",
-    "q142_cusum_drift",
-    "q144_quantile_report",
-    "q145_token_histogram",
-    "q198_orc_pushdown_roundtrip",
-    "q14_phone_normalize",
-    "q15_email_validate",
-    "q16_url_pipeline",
-    "q17_address_split",
-    "q18_business_id_from_url",
-    "q19_urlgen",
-    "q20_clean_text_documents",
-    "q21_token_quality",
-    "q22_lang_id",
-    "q146_spearman_trend",
-    "q147_last_touch",
-    "q148_gini_tokens",
-    "q149_twap",
-    "q150_auc_roc",
-    "q151_ks_drift",
-    "q153_transition_matrix",
-    "q154_pareto_frontier",
-    "q155_benford_digits",
-    "q156_rrf_fusion",
-    "q157_decile_lift",
-    "q159_weighted_median",
-    "q160_assoc_rules",
-    "q161_top_paths",
-    "q163_golden_record",
-    "q164_kanonymity",
-    "q165_interval_union",
-    "q166_l_diversity",
-    "q167_column_profile",
-    "q169_quantile_normalize",
-    "q170_holt_trend",
-    "q171_position_attribution",
-    "q172_mixture_waterfill",
-    "q173_padding_waste",
-    "q174_pq_assign",
-    "q176_kmeans_step",
-    "q178_kaplan_meier",
-    "q179_codebook_balance",
-    "q180_negative_sampling",
-    "q181_cluster_cohesion",
-    "q182_threshold_sweep",
-    "q183_bootstrap_ci",
-    "q184_ab_readout",
-    "q185_gap_percentiles",
-    "q01_pricing_summary",
-    "q02_top_revenue_orders",
-    "q23_fingerprint",
-    "q24_minhash_signatures",
-    "q25_lsh_candidates",
-    "q26_ngram_jaccard",
-    "q27_simhash",
-    "q28_cosine_topk",
-    "q29_embedding_neardup",
-    "q30_tumbling_window",
-    "q31_sliding_window",
-    "q56_extract_all_numbers",
-    "q63_ivf_ann_fullprobe",
-    "q64_quantize_int8",
-    "q65_multimodal_decode",
-    "q66_sequence_packing",
-    "q66b_packing_invariants",
-    "q67_stratified_sample",
-    "q68_bigram_counts",
-    "q69_simhash_hamming_pairs",
-    "q71_dup_ngram_fraction",
-    "q72_winnowing_fingerprints",
-    "q73_hash_split_counts",
-    "q74_bigram_lm_score",
-    "q75_bpe_token_count",
-    "q76_source_length_deciles",
-    "q77_winnow_overlap_pairs",
-    "q78_gopher_quality_rules",
-    "q79_centroid_outliers",
-    "q81_span_dedup_reconstruct",
-    "q82_temperature_mixture",
-    "q83_zorder_layout",
-    "q84_knn_label_vote",
-    "q85_split_leakage",
-    "q86_minhash_estimate_error",
-    "q88_blocklist_filter",
-    "q116_qgram_fuzzy_join",
-    "q117_dsir_select",
-    "q118_qgram_entity_resolution",
-    "q120_leakage_safe_split",
-    "q121_incremental_dedup",
-    "q186_daily_acquisition",
-    "q187_max_drawdown",
-    "q188_state_dwell",
-    "q189_lead_lag_xcorr",
-    "q190_coo_matmul",
-    "q191_fk_orphan_audit",
-    "q192_wow_growth",
-    "q201_fetch_parse_roundtrip",
-    "q202_search_results_discovery",
-]
+# The driver's CORRECTNESS artifact truncates at 50 rows, so the order
+# in which queries() yields names decides which queries get a fresh
+# driver confirmation each round. generate() below derives that order
+# from the CORRECTNESS_r*.json history next to this file on every call,
+# so a newly dropped artifact moves the order with it and no committed
+# list can go stale. Every row is also re-verified locally every round
+# (tools/check_oracle.py at sf0.01 AND sf0.1).
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def _ordered_names() -> list[str]:
-    head = [n for n in _FIRST if n in REGISTRY]
-    return head + [n for n in REGISTRY if n not in _FIRST]
+def last_green_rounds(directory: str = HERE) -> dict[str, int]:
+    """Latest round with a green driver row, per query name."""
+    hist: dict[str, int] = {}
+    for path in glob.glob(os.path.join(directory, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            green = bool(row.get("hash_match")) or (
+                bool(row.get("rows_match")) and row.get("err") is None
+            )
+            if green:
+                hist[name] = max(hist.get(name, 0), rnd)
+    return hist
+
+
+def _qnum(name: str) -> int:
+    """Numeric id from a registry name (``q101_pagerank`` → 101)."""
+    return int(re.match(r"q(\d+)", name).group(1))
+
+
+#: Queries whose IMPLEMENTATION changed in a given round — maintained
+#: by the round that touches them. A name whose touched round is LATER
+#: than its last driver-green round carries re-verification debt that
+#: outranks ordinary staleness (the r13 verdict, item 5: the driver's
+#: rotating 50-row window must re-hash a changed query before plain
+#: stale rows). Entries become inert once the driver re-confirms the
+#: query (last green >= touched round) and are then deleted.
+TOUCHED_SINCE: dict[str, int] = {
+    # round 15: q127's footer sizing estimate counts id 0; hll_audit
+    # drops a NULL group as q175's oracle does
+    "q127_ewma_global": 15,
+    "q175_hll_audit": 15,
+}
+
+
+def debt_key(name: str, hist: dict[str, int]) -> tuple:
+    """Sort key encoding driver-verification debt: (group, last-green
+    round, numeric id, name). Group 0 = never driver-confirmed (new-row
+    debt leads), group 1 = implementation touched AFTER the last green
+    round (changed-code debt), group 2 = ordinary staleness."""
+    last = hist.get(name, -1)
+    if last < 0:
+        group = 0
+    elif TOUCHED_SINCE.get(name, -1) > last:
+        group = 1
+    else:
+        group = 2
+    return (group, last, _qnum(name), name)
+
+
+def generate(directory: str = HERE) -> list[str]:
+    """Full registry ordering by driver-verification debt (debt_key).
+
+    The tie-break is the numeric query id, NOT registry insertion
+    order: that order is whatever the first importer of the query
+    modules happened to use, so it differs between a CLI run and a
+    pytest run that imported one query module first.
+    """
+    hist = last_green_rounds(directory)
+    return sorted(REGISTRY, key=lambda n: debt_key(n, hist))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -265,35 +106,33 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["q01_pricing_summary"].fn(spark, SMOKE_SF_DIR)
 
 
+def _run(
+    fn: Callable[[SparkSession, str], DataFrame], spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    configure_session(spark)
+    # reclaim the PREVIOUS query's persisted tables before building
+    # this one: several queries stage persist()ed relations (the
+    # MinHash/LSH family, q137/q200/q92) and hand cache ownership to
+    # the caller; a 203-query driver correctness session would
+    # otherwise accumulate every entry (MEMORY_AND_DISK spills rather
+    # than OOMs, but the pressure slows the driver's own run — r13
+    # verdict item 8). The previous query's result was collected
+    # before the next query is called, so nothing live is dropped;
+    # recomputation cost is nil because each query re-persists what it
+    # needs.
+    spark.catalog.clearCache()
+    return fn(spark, sf_dir)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-
-    def wrap(fn):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            configure_session(spark)
-            # reclaim the PREVIOUS query's persisted tables before
-            # building this one: several queries stage persist()ed
-            # relations (the MinHash/LSH family, q137/q200/q92) and
-            # hand cache ownership to the caller; a 203-query driver
-            # correctness session would otherwise accumulate every
-            # entry (MEMORY_AND_DISK spills rather than OOMs, but the
-            # pressure slows the driver's own run — r13 verdict
-            # item 8). The previous query's result was collected
-            # before the next run() is called, so nothing live is
-            # dropped; recomputation cost is nil because each query
-            # re-persists what it needs.
-            spark.catalog.clearCache()
-            return fn(spark, sf_dir)
-
-        return run
-
-    return {name: wrap(REGISTRY[name].fn) for name in _ordered_names()}
+    return {name: functools.partial(_run, REGISTRY[name].fn) for name in generate()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL per query (omitted -> rows-only check)."""
     return {
         name: REGISTRY[name].oracle
-        for name in _ordered_names()
+        for name in generate()
         if REGISTRY[name].oracle is not None
     }

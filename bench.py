@@ -24,9 +24,29 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def payload(
+    timings_cold: dict[str, float], timings: dict[str, float], sf: float
+) -> dict:
+    """The bench's one JSON line. Key order matters for artifact
+    robustness: the driver records the TAIL of stdout, so the per-query
+    dicts go first and the headline metric/value/sf land at the end of
+    the line where truncation can't eat them (round 2's artifact lost
+    the head of the line)."""
+    return {
+        "queries_cold": timings_cold,
+        "queries": timings,
+        "n_queries": len(timings),
+        "timing_mode": "warm_of_2_runs",
+        "cold_total": round(sum(timings_cold.values()), 3),
+        "metric": "query_suite_seconds",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "sf": sf,
+    }
 
 
 def main() -> None:
@@ -36,29 +56,11 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    import etl_guiacores_spark.queries_extra  # noqa: F401 — registers coverage queries
-    import etl_guiacores_spark.queries_eval  # noqa: F401 — registers eval/drift queries
-    import etl_guiacores_spark.queries_analytics  # noqa: F401 — registers round-8 analytics queries
-    import etl_guiacores_spark.queries_scale  # noqa: F401 — registers scale queries
-    import etl_guiacores_spark.queries_corpus  # noqa: F401 — registers corpus-curation queries
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
+    from etl_guiacores_spark import harness
 
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm up JVM/codegen/parquet footers so the first timed query
-    # isn't charged for session startup
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-
-    # warm up the Python worker pool: the first mapInPandas stage in a
-    # session spawns one Python worker per core (~8s on local[32]) —
-    # a one-time environment cost, not a property of whichever Arrow
-    # query happens to run first (measured: q65 10.7s cold-attributed
-    # vs 1.0s steady-state)
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: (pdf for pdf in it), "id long").count()
+    registry = harness.load_registry()
+    spark = harness.session("bench")
+    harness.warm(spark, sf_dir)
 
     # Each query runs TWICE: the first (cold) run pays first-touch
     # codegen compilation, Python-worker spin-up, and broadcast build;
@@ -74,39 +76,15 @@ def main() -> None:
     WARM_RERUN_THRESHOLD_S = 0.3
     timings: dict[str, float] = {}
     timings_cold: dict[str, float] = {}
-    for name, spec in REGISTRY.items():
-        for run, sink in ((0, timings_cold), (1, timings)):
-            if run == 1 and timings_cold[name] < WARM_RERUN_THRESHOLD_S:
-                sink[name] = timings_cold[name]
-                continue
-            t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            # force full execution without collecting rows to the driver
-            df.write.format("noop").mode("overwrite").save()
-            sink[name] = round(time.time() - t0, 3)
-            # queries that stage persisted tables (the MinHash/LSH
-            # family) hand cache ownership to the caller; reclaim
-            # between runs so the warm run re-executes the full plan
-            # (warm = JVM/codegen warm, NOT cached-data warm) and a
-            # 112-query session doesn't accumulate cache pressure
-            spark.catalog.clearCache()
+    for name, spec in registry.items():
+        timings_cold[name] = round(harness.run_noop(spark, spec.fn, sf_dir)[1], 3)
+        timings[name] = (
+            timings_cold[name]
+            if timings_cold[name] < WARM_RERUN_THRESHOLD_S
+            else round(harness.run_noop(spark, spec.fn, sf_dir)[1], 3)
+        )
 
-    total = round(sum(timings.values()), 3)
-    payload = {
-        "queries_cold": timings_cold,
-        "queries": timings,
-        "n_queries": len(timings),
-        "timing_mode": "warm_of_2_runs",
-        "cold_total": round(sum(timings_cold.values()), 3),
-        "metric": "query_suite_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-    }
-    # key order matters for artifact robustness: the driver records the
-    # TAIL of stdout, so the per-query dict goes first and the headline
-    # metric/value/sf land at the end of the line where truncation
-    # can't eat them (round 2's artifact lost the head of the line).
+    out = payload(timings_cold, timings, sf)
     # A full, never-truncated copy also lands next to the script
     # (BENCH_full_latest.json) so cross-round per-query comparisons
     # stop depending on the driver's tail window — tools/bench_compare
@@ -114,7 +92,7 @@ def main() -> None:
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "BENCH_full_latest.json"), "w") as f:
-            json.dump(payload, f)
+            json.dump(out, f)
     except OSError:
         pass  # a read-only checkout must not fail the bench
     spark.stop()
@@ -126,7 +104,7 @@ def main() -> None:
     # "compact headline" line was considered and rejected because a
     # driver that parses the last stdout line would then lose the
     # per-query dict — a far worse failure than the one being fixed.
-    print(json.dumps(payload), flush=True)
+    print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

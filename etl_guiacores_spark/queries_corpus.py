@@ -2873,10 +2873,11 @@ def q127_ewma_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate set tiny at every SF, degenerating to 1 chunk (plain
     # exact fold) on tiny samples. Sizing only — the carry-select
     # protocol is bit-exact for ANY num_chunks — so the row count
-    # comes from the parquet footer (total/31 for the % 31 == 0
-    # filter over dense ids; was an eager ev.count() job that scanned
-    # the table before the first real action, guide §5.4)
-    n = table_row_count("events", sf_dir) // 31
+    # comes from the parquet footer: (total + 30) // 31 is the number
+    # of 0-based dense ids 0..total-1 with id % 31 == 0 (was an eager
+    # ev.count() job that scanned the table before the first real
+    # action, guide §5.4)
+    n = (table_row_count("events", sf_dir) + 30) // 31
     chunks = max(1, min(8, n // 400))
     sm = ewma_smooth_global(
         ev, "ts", "v_micro", alpha_ppm=200_000,

@@ -131,7 +131,9 @@ def table_row_count(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
     replaces an eager ``df.count()`` that would run a full cluster job
     before the first real action; at 100 TB the difference is a
     footer read vs a complete pass over the table. Handles both a
-    single ``<name>.parquet`` file and a directory of part files."""
+    single ``<name>.parquet`` file and a flat directory of part files;
+    a directory with no top-level part files (a nested, partitioned
+    layout) raises FileNotFoundError rather than counting 0 rows."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     key = (sf_dir, name)
@@ -148,6 +150,8 @@ def table_row_count(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
         if os.path.isdir(path)
         else [path]
     )
+    if not files:
+        raise FileNotFoundError(f"no top-level part files under {path}")
     n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     _TABLE_ROWS[key] = n
     return n

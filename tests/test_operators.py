@@ -391,6 +391,30 @@ def test_hll_audit_small_range_reports_empty_registers(spark):
     assert got["n_empty"] >= 59  # the caller's signal to distrust est
 
 
+def test_hll_audit_null_group_matches_q175_oracle(spark):
+    # q175's oracle SQL, fed a frame with a NULL group, drops that
+    # group in its final USING join; the Spark side must drop it too
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from etl_guiacores_spark.operators.sketches import hll_audit
+
+    rows = [("a", f"t{i}") for i in range(40)] + [("b", "t1"), ("b", "t2")]
+    rows += [(None, f"n{i}") for i in range(7)] + [("c", None)]
+    df = spark.createDataFrame(rows, "source string, tok string")
+    got = sorted(tuple(r) for r in hll_audit(df, "source", "tok").collect())
+
+    oracle = entrymod.REGISTRY["q175_hll_audit"].oracle
+    sql = "WITH v AS (SELECT source, tok FROM t),\n" + oracle[oracle.index("b AS (") :]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(rows, columns=["source", "tok"]))
+    want = sorted(con.execute(sql).fetchall())
+
+    assert [r[0] for r in got] == ["a", "b", "c"]
+    assert got == want
+
+
 # --- Kaplan-Meier survival ------------------------------------------------------
 
 def test_kaplan_meier_textbook_example(spark):

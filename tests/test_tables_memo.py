@@ -67,3 +67,17 @@ def test_table_row_count_rejects_unknown_table():
 
     with pytest.raises(KeyError):
         tbl.table_row_count("nope", SF_A)
+
+
+def test_table_row_count_rejects_nested_layout(tmp_path):
+    # part files one level down (a partitioned layout) must fail
+    # loudly, not count 0 rows
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    part = tmp_path / "events.parquet" / "day=1"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"event_id": [0, 1, 2]}), part / "part-0.parquet")
+    with pytest.raises(FileNotFoundError):
+        tbl.table_row_count("events", str(tmp_path))

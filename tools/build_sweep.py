@@ -22,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_guiacores_spark import harness  # noqa: E402
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -29,24 +31,13 @@ def main() -> int:
     ap.add_argument("--top", type=int, default=20)
     args = ap.parse_args()
 
-    import etl_guiacores_spark.queries_corpus  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401
-    import etl_guiacores_spark.queries_analytics  # noqa: F401
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
-
-    spark = get_spark(app_name="build-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: (pdf for pdf in it), "id long").count()
+    registry = harness.load_registry()
+    spark = harness.session("build-sweep")
+    harness.warm(spark, args.sf)
 
     builds: dict[str, float] = {}
     for _pass in (0, 1):
-        for name, spec in REGISTRY.items():
+        for name, spec in registry.items():
             t0 = time.time()
             spec.fn(spark, args.sf)
             builds[name] = round(time.time() - t0, 3)

@@ -15,7 +15,10 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from etl_guiacores_spark import harness  # noqa: E402
 
 
 def main() -> int:
@@ -27,30 +30,18 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    import etl_guiacores_spark.queries_corpus  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401
-    import etl_guiacores_spark.queries_analytics  # noqa: F401
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
-
-    names = list(REGISTRY) if args.all else args.names
-    unknown = [n for n in names if n not in REGISTRY]
+    registry = harness.load_registry()
+    names = list(registry) if args.all else args.names
+    unknown = [n for n in names if n not in registry]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    spark = get_spark(app_name="capture-plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        args.tag,
-    )
+    spark = harness.session("capture-plans")
+    outdir = os.path.join(REPO, "plans", args.tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        df = REGISTRY[name].fn(spark, args.sf)
+        df = registry[name].fn(spark, args.sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

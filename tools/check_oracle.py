@@ -13,10 +13,11 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize_value(v) -> str:
@@ -87,10 +88,10 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from etl_guiacores_spark.session import get_spark
+    from etl_guiacores_spark import harness
     from etl_guiacores_spark.sources.tables import TABLE_NAMES
 
-    spark = get_spark(app_name="oracle-check")
+    spark = harness.session("oracle-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(
@@ -108,11 +109,6 @@ def main() -> int:
             sdf = qs[name](spark, args.sf)
             srows = [tuple(r) for r in sdf.collect()]
             scols, scount, shash = frame_fingerprint(sdf.columns, srows)
-            # queries that persist an interior relation (q74/q200/
-            # q201/...) rely on the harness reclaiming it per query,
-            # same as bench.py:92 — without this the caches pin
-            # executor storage for the remaining ~200 queries
-            spark.catalog.clearCache()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)

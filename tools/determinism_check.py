@@ -14,12 +14,15 @@ Usage: python tools/determinism_check.py [query_name ...] [--sf DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from check_oracle import frame_fingerprint  # noqa: E402
+import __spark_entry__ as entrymod  # noqa: E402
+from etl_guiacores_spark import harness  # noqa: E402
+from tools.check_oracle import frame_fingerprint  # noqa: E402
 
 
 def main() -> int:
@@ -28,11 +31,7 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    import __spark_entry__ as entrymod
-    from etl_guiacores_spark.session import get_spark
-
-    spark = get_spark(app_name="determinism-check")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("determinism-check")
 
     qs = entrymod.queries()
     names = args.names or list(qs)
@@ -43,12 +42,12 @@ def main() -> int:
             fps = []
             for _ in range(2):
                 # rebuild the plan each time: catches nondeterminism in
-                # plan construction AND execution; clear cached tables
-                # between runs so run 2 re-executes from the sources
+                # plan construction AND execution; each queries() entry
+                # clears cached tables first, so run 2 re-executes from
+                # the sources
                 df = qs[name](spark, args.sf)
                 rows = [tuple(r) for r in df.collect()]
                 fps.append(frame_fingerprint(df.columns, rows))
-                spark.catalog.clearCache()
         except Exception as e:
             print(f"FAIL  {name}: error: {e}")
             failures.append(name)

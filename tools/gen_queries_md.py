@@ -5,29 +5,28 @@ Usage: python tools/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from etl_guiacores_spark.harness import load_registry  # noqa: E402
 
 
 def main() -> int:
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401 — registers eval/drift queries
-    import etl_guiacores_spark.queries_analytics  # noqa: F401 — registers round-8 analytics queries
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    import etl_guiacores_spark.queries_corpus  # noqa: F401 — registers corpus-curation queries
-    from etl_guiacores_spark.queries import REGISTRY
+    registry = load_registry()
 
     rows = []
-    for name, spec in sorted(REGISTRY.items(), key=lambda kv: kv[0]):
+    for name, spec in sorted(registry.items(), key=lambda kv: kv[0]):
         num = re.match(r"q(\d+)", name).group(1)
         doc = " ".join((spec.doc or "").split())
         mark = "" if spec.oracle is not None else " *(rows-only: not SQL-expressible)*"
         rows.append(f"| {num} | `{name}` | {doc}{mark} |")
 
-    n = len(REGISTRY)
-    n_oracle = sum(1 for s in REGISTRY.values() if s.oracle is not None)
+    n = len(registry)
+    n_oracle = sum(1 for s in registry.values() if s.oracle is not None)
     out = [
         "# QUERIES — the oracle-checked suite (auto-generated from the registry)",
         "",
@@ -69,7 +68,7 @@ def main() -> int:
         *rows,
         "",
     ]
-    with open("QUERIES.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(out))
     print(f"QUERIES.md: {n} entries ({n_oracle} oracle-checked)")
     return 0

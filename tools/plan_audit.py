@@ -14,9 +14,10 @@ Usage: python tools/plan_audit.py [--sf DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 INTENTIONAL_CROSS = {"q06_filter_cross_product", "q28_cosine_topk",
                      # query set x broadcast nlist-row centroid table —
@@ -209,19 +210,13 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401 — registers eval/drift queries
-    import etl_guiacores_spark.queries_analytics  # noqa: F401 — registers round-8 analytics queries
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    import etl_guiacores_spark.queries_corpus  # noqa: F401 — registers corpus-curation queries
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
+    from etl_guiacores_spark import harness
 
-    spark = get_spark(app_name="plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    registry = harness.load_registry()
+    spark = harness.session("plan-audit")
 
     problems = []
-    for name, spec in REGISTRY.items():
+    for name, spec in registry.items():
         df = spec.fn(spark, args.sf)
         # execute THIS DataFrame's own QueryExecution: AQE only
         # finalizes (and codegen-annotates) the plan after an action,
@@ -255,7 +250,7 @@ def main() -> int:
         if issues:
             problems.append((name, issues))
 
-    print(f"\n{len(REGISTRY) - len(problems)}/{len(REGISTRY)} clean plans")
+    print(f"\n{len(registry) - len(problems)}/{len(registry)} clean plans")
     return 0  # informational — warnings reviewed by hand
 
 

@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_guiacores_spark import harness  # noqa: E402
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -26,24 +28,12 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    import etl_guiacores_spark.queries_corpus  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401
-    import etl_guiacores_spark.queries_analytics  # noqa: F401
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
+    registry = harness.load_registry()
+    spark = harness.session("profile-query")
+    harness.warm(spark, args.sf)
 
-    spark = get_spark(app_name="profile-query")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: (pdf for pdf in it), "id long").count()
-
-    out = {}
     for name in args.names:
-        spec = REGISTRY[name]
+        spec = registry[name]
         execs = []
         build = plan = None
         for i in range(args.repeats):
@@ -58,8 +48,7 @@ def main() -> int:
                 build, plan = round(t1 - t0, 3), round(t2 - t1, 3)
             execs.append(round(t3 - t2, 3))
             spark.catalog.clearCache()
-        out[name] = {"build_s": build, "plan_s": plan, "exec_s": execs}
-        print(name, json.dumps(out[name]))
+        print(name, json.dumps({"build_s": build, "plan_s": plan, "exec_s": execs}))
     spark.stop()
     return 0
 

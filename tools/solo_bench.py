@@ -20,9 +20,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from etl_guiacores_spark import harness  # noqa: E402
 
 
 def main() -> int:
@@ -32,38 +33,21 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    import etl_guiacores_spark.queries_corpus  # noqa: F401
-    import etl_guiacores_spark.queries_eval  # noqa: F401
-    import etl_guiacores_spark.queries_analytics  # noqa: F401 — registers round-8 analytics queries
-    import etl_guiacores_spark.queries_extra  # noqa: F401
-    import etl_guiacores_spark.queries_scale  # noqa: F401
-    from etl_guiacores_spark.queries import REGISTRY
-    from etl_guiacores_spark.session import get_spark
-
-    unknown = [n for n in args.names if n not in REGISTRY]
+    registry = harness.load_registry()
+    unknown = [n for n in args.names if n not in registry]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    spark = get_spark(app_name="solo-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py: parquet footers + Python worker pool
-    spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: (pdf for pdf in it), "id long").count()
+    spark = harness.session("solo-bench")
+    harness.warm(spark, args.sf)
 
     out: dict[str, dict] = {}
     for name in args.names:
-        spec = REGISTRY[name]
-        runs = []
-        for _ in range(args.repeats + 1):
-            t0 = time.time()
-            spec.fn(spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+        runs = [
+            round(harness.run_noop(spark, registry[name].fn, args.sf)[1], 3)
+            for _ in range(args.repeats + 1)
+        ]
         out[name] = {
             "cold": runs[0],
             "warm": runs[1:],
