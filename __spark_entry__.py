@@ -70,6 +70,17 @@ TOUCHED_SINCE: dict[str, int] = {
     # drops a NULL group as q175's oracle does
     "q127_ewma_global": 15,
     "q175_hll_audit": 15,
+    # round 15: the graph operators' one-fetch driver-local gate and
+    # Arrow-backed local results (every query reaching CC, PageRank or
+    # k-core)
+    "q62_dedup_clusters": 15,
+    "q90_cluster_representatives": 15,
+    "q101_pagerank_neardup": 15,
+    "q110_entity_resolution": 15,
+    "q118_qgram_entity_resolution": 15,
+    "q120_leakage_safe_split": 15,
+    "q162_kcore_dedup": 15,
+    "q181_cluster_cohesion": 15,
 }
 
 

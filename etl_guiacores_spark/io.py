@@ -23,6 +23,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from etl_guiacores_spark.session import local_frame
 
 
 def run_timestamp(clock: datetime | None = None) -> str:
@@ -390,7 +393,9 @@ def append_audit_log(spark: SparkSession, path: str, **fields) -> None:
     import json as _json
 
     row = {"logged_at": datetime.now(timezone.utc).isoformat(), **fields}
-    df = spark.createDataFrame([(_json.dumps(row, default=str),)], "entry string")
+    # Arrow-backed one-row frame: the append runs no Python-worker task
+    schema = T.StructType([T.StructField("entry", T.StringType(), True)])
+    df = local_frame(spark, [(_json.dumps(row, default=str),)], schema)
     df.write.mode("append").json(path)
 
 

@@ -1,18 +1,20 @@
-"""Connected components via iterative min-label propagation.
+"""Graph operators: connected components, integer PageRank, k-core,
+triangle counts.
 
-Upgrades the near-dup greedy rule to true duplicate CLUSTERS: every
-doc gets the minimum doc-id of its connected component in the
-verified-pair graph, so one representative per cluster survives
+Connected components turn the near-dup greedy rule into true duplicate
+CLUSTERS: every doc gets the minimum doc-id of its connected component
+in the verified-pair graph, so one representative per cluster survives
 regardless of clique shape.
 
-Execution model is ADAPTIVE on edge count. Near-dup graphs at any
-corpus size have edges ~ verified-duplicate density, usually orders
-of magnitude below node count — when the edge list is small it is
-union-found on the driver in one pass and broadcast back (nodes stay
-distributed). Otherwise: a driver loop of join+aggregate rounds (the
-standard Spark shape for iterative graph algorithms without
-GraphFrames). Per round: labels join edges, each node takes min(own,
-neighbors'); convergence when no label changes.
+Components, PageRank and k-core are ADAPTIVE through one driver-local
+regime. Near-dup graphs have edges ~ verified-duplicate density, far
+below node count, so each operator gates its deduped symmetric edge
+list (``_symmetric``) with ONE bounded action (``_fits_driver``) that
+both sizes it and hands the driver its rows. A graph that fits is
+solved on the driver and returned as an Arrow-backed LocalTableScan
+(``local_frame``); a larger one runs the distributed loop of
+join+aggregate rounds (the standard Spark shape for iterative graph
+algorithms without GraphFrames).
 
 Lineage control: each round truncates lineage so round N doesn't
 replay rounds 1..N-1. ``localCheckpoint`` (default) stores blocks on
@@ -28,6 +30,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_guiacores_spark.session import local_frame
+
+
+def _symmetric(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The deduped two-direction edge list ``(src, dst)``, from ONE scan
+    of ``edges`` (a two-branch union would plan the edge subtree twice)."""
+    a, b = F.col(src_col), F.col(dst_col)
+    both = F.array(F.struct(a.alias("src"), b.alias("dst")),
+                   F.struct(b.alias("src"), a.alias("dst")))
+    return edges.select(F.explode(both).alias("e")).select("e.*").distinct()
+
+
+def _fits_driver(df: DataFrame, max_rows: int):
+    """``df``'s rows as a ``pyarrow.Table`` when it has at most
+    ``max_rows`` of them, else ``None``. One action, ``limit(max_rows+1)``
+    pulled with ``toArrow()``, both sizes ``df`` and fetches the
+    driver-local regime's input; ``max_rows=0`` (force distributed)
+    runs none."""
+    if not max_rows:
+        return None
+    rows = df.limit(max_rows + 1).toArrow()
+    return rows if rows.num_rows <= max_rows else None
 
 
 def connected_components(
@@ -47,16 +72,17 @@ def connected_components(
     is detected by counting rows whose label changed, never by
     arithmetic on the label column.
 
-    Adaptive execution: when the deduplicated EDGE set fits under
-    ``local_edge_threshold`` rows, the labels come from a driver-side
-    union-find over just the edges (O(E α(E)), one job instead of
-    ~log(diameter) join rounds) and broadcast-join back onto the
-    still-distributed node set — nodes are NEVER collected, so a
-    10^10-node corpus with a few thousand verified near-dup edges
-    takes the fast path. Above the threshold the iterative
-    pointer-jumping loop runs; both paths produce identical labels
-    (test-asserted). Set ``local_edge_threshold=0`` to force the
-    distributed loop.
+    Execution is ADAPTIVE on edge count: one bounded fetch of the
+    deduplicated symmetric EDGE set (``_fits_driver``) decides the
+    regime. When it has at most ``local_edge_threshold`` rows, the
+    fetched edges are union-found on the driver (O(E α(E)), one job
+    instead of ~log(diameter) join rounds) and the label map
+    broadcast-joins back onto the still-distributed node set — nodes
+    are NEVER collected, so a 10^10-node corpus with a few thousand
+    verified near-dup edges takes the fast path. Above the threshold
+    the iterative pointer-jumping loop runs; both paths produce
+    identical labels (test-asserted). Set ``local_edge_threshold=0``
+    to force the distributed loop.
 
     ``checkpoint_dir``: when set, uses reliable ``checkpoint()`` (the
     directory is registered via ``setCheckpointDir``) instead of
@@ -72,28 +98,24 @@ def connected_components(
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
 
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    ).distinct()
+    sym = _symmetric(edges, src_col, dst_col)
     # materialize ONCE: the edge plan (often an LSH candidate join)
     # must not re-execute per action/iteration. In durable mode the
     # edges go straight to the reliable checkpoint (that durability is
     # what the caller asked for). In the default local mode a
-    # transient persist is cheaper: it serves the fast path's count +
-    # collect from cache and is released as soon as the edges are
-    # either collected (fast path) or checkpoint-truncated (loop).
+    # transient persist is cheaper: the gate's fetch populates it, and
+    # it is released as soon as the edges are either on the driver
+    # (fast path) or checkpoint-truncated (loop).
     transient = checkpoint_dir is None
     sym = sym.persist() if transient else _persist_round(sym)
 
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
 
-    if local_edge_threshold and sym.count() <= local_edge_threshold:
-        out = _local_union_find(labels, sym)  # collects sym eagerly
+    edge_rows = _fits_driver(sym, local_edge_threshold)
+    if edge_rows is not None:
         if transient:
             sym.unpersist()
-        return out
+        return _local_union_find(labels, edge_rows)
     if transient:
         # iterative path: truncate the edge lineage once (reads the
         # cache), then drop the cache — the loop reads the blocks
@@ -165,12 +187,7 @@ def connected_components(
 PAGERANK_SCALE = 1_000_000_000_000
 
 
-def _local_pagerank(
-    n_nodes: DataFrame,
-    sym: DataFrame,
-    iterations: int,
-    damping_pct: int,
-) -> DataFrame:
+def _local_pagerank(nodes, edges, id_type, spark, iterations, damping_pct) -> DataFrame:
     """Driver-side power iteration over a SMALL graph (the
     ``_local_union_find`` / ``_local_kcore`` regime): Python integers
     replicate the distributed loop's scaled-integer arithmetic EXACTLY
@@ -180,19 +197,15 @@ def _local_pagerank(
     per-destination contribution sum is order-independent integer
     addition — so both regimes produce bit-identical ranks
     (test-asserted on a hub-and-spoke graph; oracle-hash-checked on
-    q101). ``sym`` must already be the deduped symmetric edge list."""
-    ids = [r["id"] for r in n_nodes.collect()]
-    edge_rows = [(r["src"], r["dst"]) for r in sym.collect()]
-    spark = n_nodes.sparkSession
-    schema = T.StructType(
-        [
-            T.StructField("id", n_nodes.schema["id"].dataType, True),
-            T.StructField("rank_scaled", T.LongType(), True),
-        ]
-    )
+    q101). ``nodes`` is the fetched distinct ``id`` table and
+    ``edges`` the fetched deduped symmetric edge list, both Arrow."""
+    ids = nodes.column("id").to_pylist()
+    edge_rows = list(zip(edges["src"].to_pylist(), edges["dst"].to_pylist()))
+    schema = T.StructType([T.StructField("id", id_type, True),
+                           T.StructField("rank_scaled", T.LongType(), True)])
     n = len(ids)
     if n == 0:
-        return spark.createDataFrame([], schema=schema)
+        return local_frame(spark, [], schema)
     deg: dict = {}
     for s, _ in edge_rows:
         deg[s] = deg.get(s, 0) + 1
@@ -211,8 +224,7 @@ def _local_pagerank(
             v: base + (damping_pct * incoming.get(v, 0)) // 100
             for v in ids
         }
-    rows = [(v, ranks[v]) for v in sorted(ids)]
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, [(v, ranks[v]) for v in sorted(ids)], schema)
 
 
 def pagerank_int(
@@ -250,12 +262,14 @@ def pagerank_int(
     nothing) and multi-job runs (persist the edge table, materialize
     the result before releasing the caches).
 
-    Execution is ADAPTIVE like ``kcore``/``connected_components``:
-    when BOTH the deduped symmetric edge count and the node count are
-    <= ``local_graph_threshold``, the power iteration runs on the
-    driver in exact Python integer arithmetic — bit-identical ranks
-    (``_local_pagerank``), none of the per-round join/agg job stack.
-    Set ``local_graph_threshold=0`` to force the distributed loop.
+    Execution is ADAPTIVE like ``kcore``/``connected_components``: one
+    bounded fetch of the deduped symmetric edge list and, when that
+    fits, one of the distinct node ids (``_fits_driver``). When BOTH
+    have at most ``local_graph_threshold`` rows, the power iteration
+    runs on the fetched rows in exact Python integer arithmetic —
+    bit-identical ranks (``_local_pagerank``), none of the per-round
+    join/agg job stack. Set ``local_graph_threshold=0`` to force the
+    distributed loop.
     """
     if checkpoint_interval < 1:
         raise ValueError("checkpoint_interval must be >= 1")
@@ -290,37 +304,26 @@ def pagerank_int(
     #   are released — unpersisting first would drop them before the
     #   lazy plan ever executed (round-9 review catch).
     multi_job = iterations > checkpoint_interval
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    ).distinct()
-    if local_graph_threshold:
-        # adaptive regime, mirroring kcore/connected_components: the
-        # distributed loop costs a fixed stack of join+agg jobs per
-        # run regardless of data size, so a small candidate graph
-        # (edges ~ verified-duplicate density) pays almost pure
-        # scheduling — measured 7.7 s eager build on the 5k-node/84k-
-        # directed-edge q101 graph at sf0.1 vs ~0.5 s on the driver.
-        # Gate on BOTH axes (unlike kcore, PageRank's state is
-        # node-sized: every node carries a rank and appears in the
-        # output), collect only when both are bounded. Set
-        # local_graph_threshold=0 to force the distributed loop; the
-        # gate's edge count rides the persisted edge list the
-        # multi-job regime materializes anyway.
+    sym = _symmetric(edges, src_col, dst_col)
+    if multi_job:
+        # persisted BEFORE the gate: a failed gate's fetch populates the
+        # cache out_edges reads. The single-job regime keeps its
+        # uncached lineage, so its failed gate drops no cache.
         sym = sym.persist()
-        n_nodes_gate = nodes.select(F.col(id_col).alias("id")).distinct()
-        if sym.count() <= local_graph_threshold:
-            if n_nodes_gate.count() <= local_graph_threshold:
-                out = _local_pagerank(
-                    n_nodes_gate, sym, iterations, damping_pct
-                )
-                sym.unpersist()
-                return out
-        if not multi_job:
-            # gate failed: restore the single-job regime's uncached
-            # lineage (ReusedExchange dedups the edge subtree there)
+    # adaptive regime: the distributed loop costs a fixed stack of
+    # join+agg jobs regardless of data size — measured 7.7 s eager
+    # build on the 5k-node/84k-directed-edge q101 graph at sf0.1 vs
+    # ~0.5 s on the driver. Gate on BOTH axes (PageRank's state is
+    # node-sized: every node carries a rank), edges first; each fetch
+    # is also the local regime's input.
+    n_nodes = nodes.select(F.col(id_col).alias("id")).distinct()
+    edge_rows = _fits_driver(sym, local_graph_threshold)
+    node_rows = None if edge_rows is None else _fits_driver(n_nodes, local_graph_threshold)
+    if node_rows is not None:
+        if multi_job:
             sym.unpersist()
+        return _local_pagerank(node_rows, edge_rows, n_nodes.schema["id"].dataType,
+                               nodes.sparkSession, iterations, damping_pct)
 
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
     # repartition("src") either way: in the multi-job regime the cached
@@ -331,14 +334,10 @@ def pagerank_int(
     out_edges = sym.join(deg, "src").repartition("src")
     if multi_job:
         # materialize BEFORE releasing sym: out_edges references sym
-        # twice (degree + join subtrees); the count populates sym's
-        # cache on the first and reads it on the second
+        # twice (degree + join subtrees); both read its cache
         out_edges = out_edges.persist()
         out_edges.count()
         sym.unpersist()
-
-    n_nodes = nodes.select(F.col(id_col).alias("id")).distinct()
-    if multi_job:
         n_nodes = n_nodes.persist()
     total = n_nodes.agg(F.count("*").alias("__n"))
     base_expr = (
@@ -391,10 +390,10 @@ def pagerank_int(
     return out
 
 
-def _local_union_find(labels: DataFrame, sym: DataFrame) -> DataFrame:
-    """Driver-side union-find over a SMALL edge list; the label map
-    (only edge-touched nodes, ≤ 2|E| entries) broadcast-joins back
-    onto the distributed node set."""
+def _local_union_find(labels: DataFrame, edges) -> DataFrame:
+    """Driver-side union-find over a SMALL fetched edge list (Arrow
+    ``src``/``dst``); the label map (only edge-touched nodes, ≤ 2|E|
+    entries) broadcast-joins back onto the distributed node set."""
     parent: dict = {}
 
     def find(x):
@@ -405,8 +404,7 @@ def _local_union_find(labels: DataFrame, sym: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in sym.collect():
-        a, b = row["src"], row["dst"]
+    for a, b in zip(edges["src"].to_pylist(), edges["dst"].to_pylist()):
         for v in (a, b):
             if v not in parent:
                 parent[v] = v
@@ -416,11 +414,10 @@ def _local_union_find(labels: DataFrame, sym: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
-    mapping = [(k, find(k)) for k in parent]
-    spark = labels.sparkSession
-    if not mapping:
+    if not parent:
         return labels
-    map_df = spark.createDataFrame(mapping, schema=labels.schema).select(
+    mapping = [(k, find(k)) for k in parent]
+    map_df = local_frame(labels.sparkSession, mapping, labels.schema).select(
         F.col("id"), F.col("component").alias("__mapped")
     )
     return (
@@ -429,8 +426,8 @@ def _local_union_find(labels: DataFrame, sym: DataFrame) -> DataFrame:
     )
 
 
-def _local_kcore(sym: DataFrame, k: int) -> DataFrame:
-    """Driver-side peel over a SMALL symmetric edge list (the
+def _local_kcore(edges, id_type: T.DataType, spark, k: int) -> DataFrame:
+    """Driver-side peel over a SMALL fetched symmetric edge list (the
     ``_local_union_find`` regime): adjacency sets + a removal queue,
     O(E) total since each edge is touched once per endpoint removal.
     The k-core is a unique fixpoint, so peel order cannot change the
@@ -438,8 +435,8 @@ def _local_kcore(sym: DataFrame, k: int) -> DataFrame:
     from collections import deque
 
     adj: dict = {}
-    for row in sym.collect():
-        adj.setdefault(row["src"], set()).add(row["dst"])
+    for s, d in zip(edges["src"].to_pylist(), edges["dst"].to_pylist()):
+        adj.setdefault(s, set()).add(d)
     deg = {v: len(ns) for v, ns in adj.items()}
     queue = deque(v for v, d in deg.items() if d < k)
     removed: set = set()
@@ -454,15 +451,10 @@ def _local_kcore(sym: DataFrame, k: int) -> DataFrame:
             deg[u] -= 1
             if deg[u] < k:
                 queue.append(u)
-    spark = sym.sparkSession
-    out_schema = T.StructType(
-        [
-            T.StructField("id", sym.schema["src"].dataType, True),
-            T.StructField("degree", T.LongType(), True),
-        ]
-    )
+    out_schema = T.StructType([T.StructField("id", id_type, True),
+                               T.StructField("degree", T.LongType(), True)])
     survivors = [(v, deg[v]) for v in adj if v not in removed]
-    return spark.createDataFrame(survivors, schema=out_schema)
+    return local_frame(spark, survivors, out_schema)
 
 
 def kcore(
@@ -486,10 +478,12 @@ def kcore(
     with a global fixpoint guarantee.
 
     Execution is ADAPTIVE on edge count like ``connected_components``:
-    under ``local_edge_threshold`` the materialized edge list peels on
-    the driver in one O(E) pass (the candidate-graph case — edges ~
+    one bounded fetch of the deduped symmetric edge list decides the
+    regime, and under ``local_edge_threshold`` those fetched rows peel
+    on the driver in one O(E) pass (the candidate-graph case — edges ~
     verified-duplicate density, far below node count); both regimes
-    produce the identical unique fixpoint (test-asserted).
+    produce the identical unique fixpoint (test-asserted). Set
+    ``local_edge_threshold=0`` to force the distributed loop.
 
     Distributed engine shape per peel round: one map-side-combinable
     groupBy for degrees, one scalar count of below-k vertices (the
@@ -505,23 +499,18 @@ def kcore(
     """
     if k < 1:
         raise ValueError("kcore requires k >= 1")
-    sym = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # adaptive regime, mirroring connected_components: the peel loop
-    # costs ~3 jobs per round (degree agg + count + semi-join
-    # checkpoint) regardless of data size, so a small candidate graph
-    # pays almost pure scheduling. Under the threshold the (already
-    # materialized) edge list peels on the driver in one pass; the
-    # result is the same unique fixpoint. Set local_edge_threshold=0
-    # to force the distributed loop.
-    if local_edge_threshold and sym.count() <= local_edge_threshold:
-        return _local_kcore(sym, k)
+    # the peel loop costs ~3 jobs per round (degree agg + count +
+    # semi-join checkpoint) regardless of data size, so a small graph
+    # takes connected_components' persist + one-fetch gate
+    sym = _symmetric(pairs, src_col, dst_col).persist()
+    edge_rows = _fits_driver(sym, local_edge_threshold)
+    if edge_rows is not None:
+        sym.unpersist()
+        return _local_kcore(edge_rows, sym.schema["src"].dataType, pairs.sparkSession, k)
+    # truncate the edge lineage once (reads the cache), then drop it
+    sym_ck = sym.localCheckpoint(eager=True)
+    sym.unpersist()
+    sym = sym_ck
     for _ in range(max_iterations):
         deg = sym.groupBy("src").agg(F.count("*").cast("long").alias("degree"))
         deg = deg.persist()

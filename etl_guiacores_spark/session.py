@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
@@ -73,3 +74,23 @@ def configure_session(spark: SparkSession) -> SparkSession:
 
     ensure_package_shipped(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A small driver-built DataFrame of ``rows`` (tuples in ``schema``
+    order), handed to Spark as a ``pyarrow.Table``.
+
+    It plans as a ``LocalTableScan``, also when empty. A
+    ``createDataFrame(list)`` plans as a Python-RDD scan (``Scan
+    ExistingRDD``) that unpickles its rows in Python workers on every
+    evaluation — the boundary crossing that dominates a small result."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

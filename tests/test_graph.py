@@ -299,3 +299,146 @@ def test_pagerank_checkpoint_interval_validated(spark):
     edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     with pytest.raises(ValueError, match="checkpoint_interval"):
         pagerank_int(nodes, edges, iterations=2, checkpoint_interval=0)
+
+
+# --- the one driver-local regime gate --------------------------------------
+#
+# ``_symmetric`` dedups both directions of every edge, so these input rows
+# (a duplicate, a reversed duplicate and a self-loop around the triangle
+# 1-2-3) hold exactly T = 7 symmetric edges; one more self-loop makes T+1.
+_T = 7
+_AT_T = [(1, 2), (1, 2), (2, 1), (2, 3), (3, 1), (5, 5)]
+_OVER_T = _AT_T + [(4, 4)]
+
+
+def _edges(spark, rows):
+    return spark.createDataFrame(rows, "id_a long, id_b long")
+
+
+def _spy(monkeypatch, name):
+    """Record each call of the graph module's ``name`` helper."""
+    from etl_guiacores_spark.operators import graph
+
+    calls = []
+    real = getattr(graph, name)
+
+    def spy(*args, **kwargs):
+        calls.append(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, name, spy)
+    return calls
+
+
+def _as_dict(df):
+    return {r[0]: r[1] for r in df.collect()}
+
+
+def test_boundary_edge_lists_have_exact_symmetric_counts(spark):
+    from etl_guiacores_spark.operators.graph import _fits_driver, _symmetric
+
+    at_t = _symmetric(_edges(spark, _AT_T), "id_a", "id_b")
+    over_t = _symmetric(_edges(spark, _OVER_T), "id_a", "id_b")
+    assert at_t.count() == _T and over_t.count() == _T + 1
+    assert _fits_driver(at_t, _T).num_rows == _T
+    assert _fits_driver(over_t, _T) is None
+    assert _fits_driver(at_t, 0) is None  # force-distributed: no fetch
+
+
+def test_connected_components_regime_boundary(spark, monkeypatch):
+    from etl_guiacores_spark.operators.graph import connected_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
+    calls = _spy(monkeypatch, "_local_union_find")
+    for rows, local in ((_AT_T, True), (_OVER_T, False)):
+        calls.clear()
+        edges = _edges(spark, rows)
+        got = _as_dict(connected_components(nodes, edges, local_edge_threshold=_T))
+        assert calls == (["_local_union_find"] if local else [])
+        forced = _as_dict(connected_components(nodes, edges, local_edge_threshold=0))
+        assert got == forced == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 6}
+
+
+def test_pagerank_regime_boundary_on_both_axes(spark, monkeypatch):
+    from etl_guiacores_spark.operators.graph import pagerank_int
+
+    def nodes(n):  # n distinct ids, each listed twice
+        return spark.createDataFrame([(i,) for i in range(1, n + 1)] * 2, "id long")
+
+    calls = _spy(monkeypatch, "_local_pagerank")
+    cases = (
+        (_AT_T, _T, True),          # both axes at T
+        (_OVER_T, _T, False),       # edge axis over
+        (_AT_T, _T + 1, False),     # node axis over
+    )
+    for rows, n, local in cases:
+        for ck in (2, 8):  # multi-job and single-job distributed regimes
+            calls.clear()
+            kw = dict(iterations=3, checkpoint_interval=ck)
+            edges = _edges(spark, rows)
+            got = _as_dict(pagerank_int(nodes(n), edges, local_graph_threshold=_T, **kw))
+            assert calls == (["_local_pagerank"] if local else [])
+            forced = _as_dict(pagerank_int(nodes(n), edges, local_graph_threshold=0, **kw))
+            assert got == forced and set(got) == set(range(1, n + 1))
+
+
+def test_kcore_regime_boundary(spark, monkeypatch):
+    from etl_guiacores_spark.operators.graph import kcore
+
+    calls = _spy(monkeypatch, "_local_kcore")
+    for rows, local in ((_AT_T, True), (_OVER_T, False)):
+        edges = _edges(spark, rows)
+        for k in (1, 2):
+            calls.clear()
+            got = _as_dict(kcore(edges, k=k, local_edge_threshold=_T))
+            assert calls == (["_local_kcore"] if local else [])
+            assert got == _as_dict(kcore(edges, k=k, local_edge_threshold=0))
+        assert set(got) == {1, 2, 3}  # k=2: the triangle; self-loops peel
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_arrow_backed(df):
+    plan = _executed_plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_driver_local_results_are_local_table_scans(spark):
+    """Every driver-local result plans as an Arrow-backed LocalTableScan
+    — never a Python-RDD scan — for int and string ids, and for the
+    empty k-core. Inputs come from ``local_frame`` too, so any
+    ExistingRDD in a plan would be the operator's own."""
+    from pyspark.sql import types as T
+
+    from etl_guiacores_spark.operators.graph import (
+        connected_components,
+        kcore,
+        pagerank_int,
+    )
+    from etl_guiacores_spark.session import local_frame
+
+    for typ, ids in ((T.LongType(), [1, 2, 3, 4, 5]),
+                     (T.StringType(), ["a", "b", "c", "d", "e"])):
+        one = T.StructType([T.StructField("id", typ, True)])
+        two = T.StructType([T.StructField("id_a", typ, True),
+                            T.StructField("id_b", typ, True)])
+        a, b, c, d, e = ids
+        nodes = local_frame(spark, [(v,) for v in ids], one)
+        tri = local_frame(spark, [(a, b), (b, c), (c, a), (d, e)], two)
+        path = local_frame(spark, [(a, b), (b, c)], two)
+
+        labels = connected_components(nodes, tri)
+        _assert_arrow_backed(labels)
+        assert _as_dict(labels) == {a: a, b: a, c: a, d: d, e: d}
+        ranks = pagerank_int(nodes, tri)
+        _assert_arrow_backed(ranks)
+        assert set(_as_dict(ranks)) == set(ids)
+        core = kcore(tri, k=2)
+        _assert_arrow_backed(core)
+        assert _as_dict(core) == {a: 2, b: 2, c: 2}
+        empty = kcore(path, k=2)
+        _assert_arrow_backed(empty)
+        assert empty.count() == 0 and empty.schema["id"].dataType == typ
