@@ -73,7 +73,8 @@ def topk_per_key(
     CONSTANT (salt_buckets*k rows), not by cluster size — the
     giant-group half of the q103 trade.
 
-    Precise accounting (measured, tools/soak_topk.py): for
+    Precise accounting (measured; SCALE.md "Round-10: two-stage salted
+    top-k for the batch-retrieval windows"): for
     ``ROW_NUMBER() OVER (PARTITION BY key ...) <= k`` Spark >= 3.5
     already inserts a Partial ``WindowGroupLimit`` that pre-cuts each
     MAP partition to k rows per key before the exchange — the naive

@@ -53,7 +53,8 @@ table (a second aggregate over the corpus would defeat exchange reuse
 and re-scan + re-tokenize everything); the 1-row corpus stats
 broadcast. Total corpus passes: exactly TWO (stats + filtered
 postings), independent of query count — asserted by
-tools/soak_retrieval.py. Top-k is a distributed
+tests/test_retrieval.py::test_bm25_batch_scans_corpus_twice_whatever_the_query_count.
+Top-k is a distributed
 TakeOrderedAndProject (per-partition heads, merged on the driver;
 never a global sort).
 
@@ -116,8 +117,8 @@ def bm25_scores(
     # aggregate over a separate read of ``base``: divergent column
     # pruning between the two consumers defeats Spark's exchange
     # reuse, and the "tiny df table" then silently costs a full
-    # third corpus scan + re-tokenize (measured by
-    # tools/soak_retrieval.py's scan-count assertion)
+    # third corpus scan + re-tokenize (bm25_batch_topk uses the same
+    # window; tests/test_retrieval.py pins its corpus scans at two)
     tf = tf.withColumn(
         "__df",
         F.count("*").over(Window.partitionBy("__tok")).cast("long"),

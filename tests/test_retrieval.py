@@ -326,6 +326,33 @@ def test_bm25_batch_equals_per_query_runs(spark):
         bm25_batch_topk(docs, dup, k=3)
 
 
+def test_bm25_batch_scans_corpus_twice_whatever_the_query_count(spark, tmp_path):
+    """The corpus is read by at most two scans (1-row stats + filtered
+    postings), as many for 64 queries as for 4; a per-query scan or a
+    df aggregate over a second read of the corpus would add leaves.
+    Planned only, never executed."""
+    from etl_guiacores_spark.operators.retrieval import bm25_batch_topk
+
+    vocab = sorted({t for text in DOCS.values() for t in text.split()})
+    path = str(tmp_path / "corpus.parquet")
+    _df(spark).write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def scans(n_queries: int) -> int:
+        qdf = spark.createDataFrame(
+            [(q, [vocab[q % len(vocab)], vocab[(q + 3) % len(vocab)]])
+             for q in range(n_queries)],
+            "query_id long, terms array<string>",
+        )
+        plan = bm25_batch_topk(docs, qdf, k=5)._jdf.queryExecution().executedPlan()
+        # the corpus is the plan's only parquet source (queries are local)
+        return plan.toString().count("Scan parquet")
+
+    few, many = scans(4), scans(64)
+    assert few == many
+    assert 0 < many <= 2
+
+
 def test_hard_negatives_brute_force(spark):
     import math
 

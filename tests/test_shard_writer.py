@@ -3,9 +3,20 @@ conservation invariants asserted against the WRITTEN artifact."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark.plans.shard_writer import write_training_shards
+
+
+def _parquet_mtimes(shards_dir: str) -> dict[str, float]:
+    return {
+        os.path.join(root, f): os.path.getmtime(os.path.join(root, f))
+        for root, _, files in os.walk(shards_dir)
+        for f in files
+        if f.endswith(".parquet")
+    }
 
 
 def test_shards_manifest_and_conservation(spark, tmp_path):
@@ -64,8 +75,6 @@ def test_append_continues_global_stream_without_rewrites(spark, tmp_path):
     """Append must (a) never touch landed shard files, (b) keep
     global_seq dense and token offsets tiling across the COMBINED
     artifact, (c) extend the manifest coherently."""
-    import os
-
     import pytest
 
     from etl_guiacores_spark.plans.shard_writer import append_training_shards
@@ -82,18 +91,9 @@ def test_append_continues_global_stream_without_rewrites(spark, tmp_path):
               num_bins=8, sequences_per_shard=50)
     b_stats = write_training_shards(base, out, **kw)
 
-    def file_mtimes():
-        snap = {}
-        for root, _, files in os.walk(f"{out}/shards"):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    snap[p] = os.path.getmtime(p)
-        return snap
-
-    before = file_mtimes()
+    before = _parquet_mtimes(f"{out}/shards")
     a_stats = append_training_shards(inc, out, **kw)
-    after = file_mtimes()
+    after = _parquet_mtimes(f"{out}/shards")
 
     # (a) no landed file rewritten or removed
     for p, m in before.items():
@@ -207,6 +207,7 @@ class TestBatchAppendProtocol:
 
         out = str(tmp_path / "swap_crash")
         s0 = append_batch_shards(self._docs(spark, 0, 200), out, 0, **self.KW)
+        landed = _parquet_mtimes(f"{out}/shards")
 
         real_rename = os.rename
         calls = {"n": 0}
@@ -241,9 +242,14 @@ class TestBatchAppendProtocol:
             covered = m["last_seq"] + 1
             tok_run += m["n_tokens"]
         assert covered == n
+        assert tok_run == s0["total_tokens"] + s1["total_tokens"]
+        assert seqs.filter(F.col("n_tokens") > 128).count() == 0
         # chunk conservation across the crash: every chunk exactly once
         packed_chunkrefs = seqs.agg(F.sum(F.size("doc_ids"))).first()[0]
         assert packed_chunkrefs == s0["n_chunks"] + s1["n_chunks"]
+        # the crash and the retry's prune left batch 0's files alone
+        after = _parquet_mtimes(f"{out}/shards")
+        assert all(after.get(p) == m for p, m in landed.items())
 
     def test_lost_manifest_with_landed_batches_refuses_to_prune(
         self, spark, tmp_path

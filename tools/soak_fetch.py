@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -46,7 +47,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from etl_guiacores_spark.session import get_spark
+    from etl_guiacores_spark import harness
     from etl_guiacores_spark.sources.fetch import fetch_pages
     from etl_guiacores_spark.sources.html_parse import parse_pages
     from etl_guiacores_spark.sources.synthetic import (
@@ -55,8 +56,7 @@ def main() -> int:
         synthetic_site_transport,
     )
 
-    spark = get_spark(app_name="soak-fetch")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("soak-fetch")
     # warm the Python worker pool so run 1 isn't a fork benchmark
     spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
         spark.sparkContext.defaultParallelism

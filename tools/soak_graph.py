@@ -22,12 +22,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -38,11 +39,10 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from etl_guiacores_spark import harness
     from etl_guiacores_spark.operators.graph import triangle_counts
-    from etl_guiacores_spark.session import get_spark
 
-    spark = get_spark(app_name="graph-soak")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("graph-soak")
 
     # Zipf-HUB construction (a pure inverse-CDF Zipf draw collapses to
     # ~13k distinct edges after dedupe — hubs eat every draw): a

@@ -32,10 +32,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HOT = "restaurante el "
 PLANT_OFF = 10_000_000
@@ -123,11 +124,10 @@ def main() -> int:
     ap.add_argument("--n-volume", type=int, default=150_000)
     args = ap.parse_args()
 
+    from etl_guiacores_spark import harness
     from etl_guiacores_spark.operators.linkage import qgram_match_pairs
-    from etl_guiacores_spark.session import get_spark
 
-    spark = get_spark(app_name="qgram-stopgram-soak")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("qgram-stopgram-soak")
     out: dict = {"soak": "qgram_stopgrams", "cap": args.cap}
 
     # --- phase 1: equivalence at 20k ---------------------------------

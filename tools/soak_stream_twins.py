@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -35,9 +36,9 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from etl_guiacores_spark import harness
     from etl_guiacores_spark.operators.rollup_time import max_drawdown
     from etl_guiacores_spark.operators.temporal import state_dwell
-    from etl_guiacores_spark.session import get_spark
     from etl_guiacores_spark.streaming import (
         max_drawdown_stream,
         read_max_drawdown,
@@ -45,8 +46,7 @@ def main() -> int:
         state_dwell_stream,
     )
 
-    spark = get_spark(app_name="soak-stream-twins")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("soak-stream-twins")
     out = tempfile.mkdtemp(prefix="soak_twins_")
 
     # deterministic synthetic stream: event_id IS the global event-time
