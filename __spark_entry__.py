@@ -81,6 +81,11 @@ TOUCHED_SINCE: dict[str, int] = {
     "q120_leakage_safe_split": 15,
     "q162_kcore_dedup": 15,
     "q181_cluster_cohesion": 15,
+    # round 15: the chunked text queries read prechunk_documents rows
+    # (the in-task salted operators are gone)
+    "q196_salted_quality_lang": 15,
+    "q197_salted_gopher": 15,
+    "q200_prechunked_span_strip": 15,
 }
 
 

@@ -210,8 +210,7 @@ def cmd_corpus(spark, args) -> dict:
         write_shards=args.write_shards,
         budget_tokens=args.budget_tokens,
         sequences_per_shard=args.sequences_per_shard,
-        salt_chunk_tokens=args.salt_chunk_tokens,
-        prechunk=args.prechunk,
+        prechunk_tokens=args.prechunk_tokens,
     )
     return run_corpus_pipeline(
         docs,
@@ -466,19 +465,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="packed sequence token budget (with "
                    "--write-shards)")
     k.add_argument("--sequences-per-shard", type=int, default=10_000)
-    k.add_argument("--salt-chunk-tokens", type=int, default=None,
-                   help="salt every heavy per-row text stage by "
-                   "(doc_id, chunk): per-task work bounded by this "
-                   "many tokens instead of the document length — "
-                   "bit-identical outputs; requires unique non-null "
-                   "doc_id (measured faster even at uniform lengths, "
-                   "SCALE.md round-11 crossover table)")
-    k.add_argument("--prechunk", action="store_true",
-                   help="with --salt-chunk-tokens (>= 3): land the "
-                   "pre-chunked bronze layout once at ingest and feed "
-                   "the salted stages balanced chunk rows — no task "
-                   "ever tokenizes a whole document after the bronze "
-                   "write (the raw-scan skew floor)")
+    k.add_argument("--prechunk-tokens", type=int, default=None,
+                   help="land the pre-chunked bronze layout (chunks of "
+                   "N >= 3 tokens) once at ingest and feed every heavy "
+                   "text stage from its chunk rows: per-task work "
+                   "bounded by N tokens instead of the document "
+                   "length, bit-identical outputs; requires unique "
+                   "non-null doc_id")
     k.add_argument("--resume", action="store_true",
                    help="skip stages whose handoff is already landed "
                    "in OUT (config-fingerprint guarded; a changed "

@@ -44,13 +44,6 @@ def write_run_csv(
     return path
 
 
-def append_stage(df: DataFrame, path: str) -> None:
-    """L2 — incremental append (Parquet; idempotence comes from the
-    resume anti-join upstream, or a checkpointed stream in
-    streaming mode)."""
-    df.write.mode("append").parquet(path)
-
-
 def write_handoff(df: DataFrame, path: str) -> None:
     """L3 — inter-stage handoff; Parquet instead of the reference's
     JSON arrays (reference: src/extractors/run_extraction.py:130-134)."""

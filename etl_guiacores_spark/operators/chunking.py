@@ -54,39 +54,6 @@ def chunk_spans(col: Column, chunk_tokens: int, overlap: int = 0) -> Column:
     return F.element_at(F.transform(F.array(toks), build), 1)
 
 
-def id_contract_counters(id_col: str) -> list:
-    """The two aggregate columns behind :func:`require_unique_ids`
-    (``nulls``, ``dups``) — exposed so run_corpus_pipeline can ride
-    them on the n_raw count job it already pays instead of
-    re-implementing the contract inline (round-10 review finding:
-    two copies of the counters could silently diverge)."""
-    return [
-        F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0)).alias(
-            "nulls"
-        ),
-        (F.count(id_col) - F.count_distinct(id_col)).alias("dups"),
-    ]
-
-
-def require_unique_ids(df: DataFrame, id_col: str, op_name: str) -> None:
-    """Eagerly enforce the chunk-merge key contract: ``id_col`` unique
-    and non-null. One column-pruned aggregate scan — the loud-contract
-    price the salted operators pay up front (round-10 review finding:
-    in-plan raise_error guards are unreliable here because the merge
-    join's IsNotNull pushdown filters a NULL-keyed row out BELOW the
-    guard projection, so a NULL id silently vanished instead of
-    erroring; a duplicate id silently merged two documents)."""
-    row = df.agg(*id_contract_counters(id_col)).first()
-    nulls, dups = row["nulls"] or 0, row["dups"] or 0
-    if nulls or dups:
-        raise ValueError(
-            f"{op_name}: {id_col} must be unique and non-null (it is "
-            f"the chunk-merge key) — found {nulls} NULL id row(s) and "
-            f"{dups} duplicate id row(s); score such rows with the "
-            "per-row operators"
-        )
-
-
 def prechunk_documents(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -96,17 +63,11 @@ def prechunk_documents(
 ) -> DataFrame:
     """The ingest-time pre-chunked BRONZE layout: one row per
     (document, chunk) — ``(id_col, chunk_pos, chunk_text)`` — written
-    once so every downstream salted pass reads balanced chunk rows
-    instead of re-tokenizing whole documents.
-
-    Why: the chunk-and-merge operators (similarity.salted_minhash,
-    textstats.salted_text_scores / salted_gopher_quality) bound
-    per-task COMPUTE by the chunk size, but their input scan still
-    hands one task the whole fat document to tokenize before the salt
-    can spread its chunks — the ~20x raw-scan max/median floor the
-    round-10 skew soak named as a storage-layer boundary. Writing
-    this layout at ingest moves that one-time cost to the bronze
-    write; every later stage scans chunk-sized parquet rows.
+    once so every chunked consumer (the ``prechunked_*`` operators)
+    reads balanced chunk rows instead of tokenizing whole documents.
+    A fat document's tokenization is paid once, at the bronze write;
+    every later stage scans chunk-sized rows, so per-task work is
+    bounded by the chunk size, not the document length.
 
     The chunk construction is WHITESPACE-PRESERVING and exact:
 
@@ -129,9 +90,8 @@ def prechunk_documents(
       so the merge layer recovers every input row.
 
     The giant-single-token document (no whitespace at all) remains
-    one chunk — the same floor the in-task salted operators have;
-    byte-range splitting below token granularity would change what a
-    token is.
+    one chunk; byte-range splitting below token granularity would
+    change what a token is.
 
     Output is hash-repartitioned on (id, chunk_pos) so a parquet
     write of it spreads a fat document's chunks across files — that
@@ -242,10 +202,9 @@ def require_chunk_contract(
     rides on: non-null ids, and per id the positions are exactly
     0..k-1 (unique, contiguous, starting at 0). A gap or duplicate
     would silently drop or double a document's chunk in the merged
-    counters — the same loud-contract stance as
-    :func:`require_unique_ids` (and for the same reason: in-plan
-    guards are unreliable under join pushdown). One aggregate job;
-    the violation probe is LIMIT 1, never data-sized."""
+    counters — loud, because in-plan guards are unreliable under
+    join pushdown. One aggregate job; the violation probe is LIMIT 1,
+    never data-sized."""
     g = chunks.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("c"),
         F.count_distinct(pos_col).alias("d"),
@@ -492,31 +451,6 @@ def prechunked_positional_grams(
         (F.col("__off") + F.col("__lpos")).cast("int").alias("__pos"),
         _gram_key("__gram").alias("__g"),
     )
-
-
-def salted_explode(
-    df: DataFrame, id_col: str, chunks: Column, out_col: str
-) -> DataFrame:
-    """(id_col, __cpos, out_col) rows: posexplode a per-row chunk
-    array, then hash-repartition on (id, chunk position) — THE salt
-    that the skew-proof operators (similarity.salted_minhash,
-    textstats.salted_text_scores) share. Without the repartition the
-    exploded chunks stay co-located with their parent row and a fat
-    document still runs on one task.
-
-    This is the one copy of the explode-and-salt scaffold (round-10
-    review finding: three hand-rolled copies carried the same
-    load-bearing repartition). ``chunks`` must arrive PRE-BUILT as an
-    array Column; expensive derivations (tokenization) must be bound
-    once by the caller via the array/transform/element_at trick —
-    interpreted HOFs have no common-subexpression elimination, so an
-    unbound expression would recompute per chunk (the kgrams lesson).
-    ``__cpos`` is also the callers' row-multiplicity probe: position 0
-    occurs exactly once per input row."""
-    return df.select(
-        id_col,
-        F.posexplode_outer(chunks).alias("__cpos", out_col),
-    ).repartition(F.col(id_col), F.col("__cpos"))
 
 
 def chunk_documents(

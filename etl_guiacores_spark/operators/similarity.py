@@ -38,7 +38,7 @@ the verify step.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -91,23 +91,6 @@ def _hasher_fast(seed: int):
     return lambda s: F.xxhash64(F.lit(seed), s)
 
 
-def minhash_signature(col: Column, num_hashes: int = 4, n: int = 3) -> list[Column]:
-    """MinHash signature: for seed i, min over shingles of
-    md5(i || ':' || shingle) (lexicographic min of hex = a valid
-    uniform hash family, and portable across engines).
-
-    Returns one Column per hash so callers can band them for LSH.
-    NOTE: each returned Column embeds the full shingle expression —
-    fine for one signature, wasteful for several. ``with_minhash``
-    stages the shingle array once; prefer it for multi-hash use.
-    """
-    shingles = word_shingles(col, n)
-    return [
-        F.when(F.size(shingles) > 0, F.array_min(F.transform(shingles, _hasher(i))))
-        for i in range(num_hashes)
-    ]
-
-
 def with_minhash(
     df: DataFrame,
     text_col: str,
@@ -116,9 +99,6 @@ def with_minhash(
     prefix: str = "sig_",
     portable: bool = True,
     shingle_col: str | None = None,
-    salt_chunk_tokens: int | None = None,
-    salt_id_col: str | None = None,
-    validate_ids: bool = True,
 ) -> DataFrame:
     """Add ``sig_0..sig_{k-1}`` minhash columns.
 
@@ -129,40 +109,7 @@ def with_minhash(
     tests the (already materialized) shingle size rather than the md5
     transform output, so each md5 pass is evaluated exactly once.
     (Measured 8-16x on the sf0.1 bench vs the naive expression tree.)
-
-    ``salt_chunk_tokens`` (with ``salt_id_col``, which must be a
-    unique key) routes the shingle/hash compute through
-    ``salted_minhash`` — per-task work bounded by the chunk size
-    instead of the document length — and joins the merged signatures
-    back on the id. Same bits, two extra shuffles; use it when the
-    length distribution is heavy-tailed (see salted_minhash).
     """
-    if salt_chunk_tokens is not None:
-        if salt_id_col is None:
-            raise ValueError(
-                "with_minhash: salt_chunk_tokens requires salt_id_col "
-                "(the unique key the merged signatures join back on)"
-            )
-        if shingle_col is not None and shingle_col in df.columns:
-            raise ValueError(
-                f"shingle_col {shingle_col!r} already exists in the input — "
-                "the rename would create a duplicate/ambiguous column"
-            )
-        salted = salted_minhash(
-            df,
-            salt_id_col,
-            text_col,
-            num_hashes,
-            n,
-            portable=portable,
-            chunk_tokens=salt_chunk_tokens,
-            with_shingles=shingle_col is not None,
-            prefix=prefix,
-            validate_ids=validate_ids,
-        )
-        if shingle_col is not None:
-            salted = salted.withColumnRenamed("shingles", shingle_col)
-        return df.join(salted, salt_id_col, "left")
     hasher = _hasher if portable else _hasher_fast
     if "__shingles" in df.columns:
         raise ValueError(
@@ -189,150 +136,6 @@ def with_minhash(
     return out.withColumnRenamed("__shingles", shingle_col)
 
 
-def salted_minhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 4,
-    n: int = 3,
-    portable: bool = True,
-    chunk_tokens: int = 512,
-    with_shingles: bool = False,
-    prefix: str = "sig_",
-    validate_ids: bool = True,
-) -> DataFrame:
-    """Skew-proof minhash: salt the shingle pass by (id, chunk).
-
-    ``with_minhash`` computes each document's shingles + k hash passes
-    in ONE task, so per-task time inherits the document-length
-    distribution directly — the round-9 skew soak measured a 22.7x
-    max/median task-time ratio on a Zipf length tail (SCALE.md). This
-    variant bounds per-task work by ``chunk_tokens``:
-
-    1. split the token stream into chunks of ``chunk_tokens`` tokens
-       overlapping by n-1 (so every word n-gram of the document lies
-       wholly inside some chunk, and chunks — being contiguous token
-       slices — introduce no n-gram the document doesn't have);
-    2. ``posexplode`` + hash-repartition on (id, chunk_pos): the fat
-       document's chunks now land on MANY tasks;
-    3. per-chunk shingles + minhash, exactly the with_minhash
-       expression tree;
-    4. min-merge per id: MinHash is trivially mergeable — min over
-       chunks of (min over chunk shingles) == min over the union of
-       chunk shingle sets == the whole-document signature. Shingles
-       (optional) reassemble as the sorted distinct union.
-
-    Returns one row per input row: (id, [shingles,] sig_0..k-1).
-    ``id_col`` must be unique in ``df`` (it is the merge key). Output
-    signatures are BIT-IDENTICAL to ``with_minhash``'s; the shingle
-    array is the same SET but sorted (consumers treat it as a set —
-    Jaccard via array_intersect/array_union is order-insensitive).
-
-    Cost: two shuffles (chunk redistribution + the merge) that the
-    unsalted path doesn't pay. Round-11 measurement: the trade wins
-    at soak scale even for UNIFORM document lengths (bounded
-    per-evaluation arrays also bound the superlinear interpreted-HOF
-    costs — SCALE.md crossover table), and at 100 TB it is the
-    difference between the shingle stage finishing with the p50 task
-    and waiting on one 2 GB-document straggler. Keep the unsalted
-    path when ``id_col`` cannot meet the unique-non-null contract.
-    """
-    if chunk_tokens < n:
-        raise ValueError(
-            f"salted_minhash: chunk_tokens={chunk_tokens} must be >= n={n} "
-            "(a chunk must fit at least one shingle)"
-        )
-    # loud merge-key contract, checked EAGERLY (one column-pruned
-    # scan): a NULL id would come back from with_minhash's left join
-    # with NULL signatures — indistinguishable from an empty document
-    # — and a duplicate id would silently min-merge two documents'
-    # signatures (round-10 review findings; an in-plan raise_error
-    # guard is unreliable here because join null-filter pushdown can
-    # drop the NULL-keyed row below the guard projection)
-    if validate_ids:
-        from etl_guiacores_spark.operators.chunking import (
-            require_unique_ids,
-        )
-
-        require_unique_ids(df, id_col, "salted_minhash")
-    hasher = _hasher if portable else _hasher_fast
-    stride = chunk_tokens - (n - 1)
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-
-    # chunk starts 1, 1+stride, ... capped at the last n-gram start, so
-    # chunk i covers exactly the n-gram starts [s_i, s_{i+1}) — complete
-    # and non-redundant coverage of the document's shingle positions.
-    # Chunks are TOKEN-ARRAY slices end-to-end (never re-joined into
-    # strings): the old concat_ws + re-split round trip silently
-    # dropped the phantom empty tokens whole-document tokenization
-    # leaves at \t/\n document edges, so signatures diverged from
-    # with_minhash's on such documents (latent parity bug, caught by
-    # the round-11 pre-chunked parity fixtures)
-    def chunks_of(t: Column) -> Column:
-        last_start = F.greatest(F.size(t) - (n - 1), F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), last_start, F.lit(stride)),
-            lambda s: F.slice(t, s, chunk_tokens),
-        )
-
-    from etl_guiacores_spark.operators.chunking import salted_explode
-
-    chunked = salted_explode(
-        df,
-        id_col,
-        F.element_at(F.transform(F.array(toks), chunks_of), 1),
-        "__ctoks",
-    ).withColumn("__shingles", shingles_of_tokens(F.col("__ctoks"), n))
-    return _chunk_minhash_merge(
-        chunked, id_col, num_hashes, hasher, with_shingles, prefix,
-        # with_minhash parity: null/empty/short text all yield the
-        # EMPTY shingle array (shingles_of_tokens' <n guard), never
-        # NULL — so the merged array is gated on nothing
-        guard=F.lit(True),
-    )
-
-
-def _chunk_minhash_merge(
-    shingled: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    hasher,
-    with_shingles: bool,
-    prefix: str,
-    guard: Column,
-) -> DataFrame:
-    """Per-chunk hash passes, then the min-merge per id — the one
-    copy of the chunk-minhash tail, shared by the in-task salted path
-    (:func:`salted_minhash`) and the bronze pre-chunked path
-    (:func:`prechunked_minhash`). ``shingled``: one row per
-    (id, chunk) carrying ``__shingles`` where every document n-gram
-    lies wholly inside some chunk's shingle set and chunks introduce
-    no n-gram the document doesn't have — the caller's chunk
-    construction owes that invariant. ``guard`` gates the merged
-    shingle array (NULL when false for the whole group)."""
-    has = F.size(F.col("__shingles")) > 0
-    per_chunk = shingled.withColumns(
-        {
-            f"{prefix}{i}": F.when(
-                has, F.array_min(F.transform(F.col("__shingles"), hasher(i)))
-            )
-            for i in range(num_hashes)
-        }
-    )
-    aggs = [F.min(f"{prefix}{i}").alias(f"{prefix}{i}") for i in range(num_hashes)]
-    if with_shingles:
-        aggs.insert(
-            0,
-            F.when(
-                F.max(guard),
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("__shingles")))
-                ),
-            ).alias("shingles"),
-        )
-    return per_chunk.groupBy(id_col).agg(*aggs)
-
-
 def prechunked_minhash(
     chunks: DataFrame,
     id_col: str = "doc_id",
@@ -348,30 +151,24 @@ def prechunked_minhash(
 ) -> DataFrame:
     """MinHash from a PRE-CHUNKED bronze table
     (chunking.prechunk_documents) — signatures BIT-IDENTICAL to
-    :func:`with_minhash` / :func:`salted_minhash`, but the scan reads
-    balanced chunk rows instead of whole documents: no task ever
-    tokenizes a fat document (the raw-scan skew floor the in-task
-    salted variant pays once per pass; see
-    textstats.prechunked_text_scores for the rationale and
-    /root/reference/src/main.py:46-57 for the reference's analogous
-    ingest-time chunk handoff).
+    :func:`with_minhash`, but the scan reads balanced chunk rows
+    instead of whole documents: no task ever tokenizes a fat
+    document.
 
     Bronze chunks are NON-overlapping, so n-grams spanning a chunk
     boundary live in no single chunk. Each chunk is therefore
     augmented with the first ``n - 1`` tokens of the NEXT chunk (one
     narrow self-join on (id, pos+1) — tiny head strings, unique join
     keys, no skew): the augmented chunks are contiguous token runs
-    that cover every document n-gram and introduce none, exactly the
-    overlap invariant salted_minhash builds in-task. Boundary-region
-    n-grams appear in two augmented chunks — harmless, the merge is
-    min/distinct-union.
+    that cover every document n-gram and introduce none.
+    Boundary-region n-grams appear in two augmented chunks — harmless,
+    the merge is min/distinct-union.
 
     Requires every non-final chunk to hold at least ``n - 1`` tokens
     (prechunk_documents guarantees chunk_tokens tokens per non-final
-    chunk; pass ``chunk_tokens >= n`` at bronze-write time, the same
-    bound salted_minhash enforces). ``validate`` runs the chunk
-    contract check; the pipeline passes False because it wrote the
-    bronze table itself this run.
+    chunk; pass ``chunk_tokens >= n`` at bronze-write time).
+    ``validate`` runs the chunk contract check; the pipeline passes
+    False because it wrote the bronze table itself this run.
 
     Everything runs on chunking.prechunked_tokens' EXACT token-array
     slices (never a re-tokenized string round-trip), so even the
@@ -447,13 +244,30 @@ def prechunked_minhash(
         )
         .withColumn("__shingles", shingles_of_tokens(F.col("__aug"), n))
     )
-    return _chunk_minhash_merge(
-        shingled, id_col, num_hashes, hasher, with_shingles, prefix,
-        # __toks is never NULL (prechunked_tokens' empty-guard), so
-        # the merge's shingle guard is unconditionally true — matching
-        # with_minhash's empty-array (not NULL) result for NULL text
-        guard=F.lit(True),
+    # per-chunk hash passes, then the min-merge per id: min over
+    # chunks of (min over chunk shingles) == min over the union of
+    # the chunk shingle sets == the whole-document signature
+    has = F.size(F.col("__shingles")) > 0
+    per_chunk = shingled.withColumns(
+        {
+            f"{prefix}{i}": F.when(
+                has, F.array_min(F.transform(F.col("__shingles"), hasher(i)))
+            )
+            for i in range(num_hashes)
+        }
     )
+    aggs = [F.min(f"{prefix}{i}").alias(f"{prefix}{i}") for i in range(num_hashes)]
+    if with_shingles:
+        # __toks is never NULL (prechunked_tokens' empty-guard), so the
+        # union is never NULL either — matching with_minhash's
+        # empty-array (not NULL) result for NULL text
+        aggs.insert(
+            0,
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("__shingles")))
+            ).alias("shingles"),
+        )
+    return per_chunk.groupBy(id_col).agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -546,9 +360,7 @@ def staged_minhash_shingles(
     text_col: str,
     num_hashes: int = 4,
     n: int = 3,
-    salt_chunk_tokens: int | None = None,
     portable: bool = True,
-    validate_ids: bool = True,
 ) -> DataFrame:
     """One persisted ``(id, shingles, sig_0..k-1)`` table — the shape
     every LSH-then-verify query wants. Banding, the exact-Jaccard
@@ -564,18 +376,7 @@ def staged_minhash_shingles(
     action has completed (or ``spark.catalog.clearCache()`` between
     independent jobs, as bench.py does). Until then the cache entry
     lives for the session; Spark's LRU eviction bounds the damage but
-    long multi-query sessions should reclaim explicitly.
-
-    ``salt_chunk_tokens`` bounds per-task shingle work by the chunk
-    size (salted_minhash) — the staged output is then the merge
-    result directly, no join-back needed, since this table is exactly
-    (id, shingles, sigs)."""
-    if salt_chunk_tokens is not None:
-        return salted_minhash(
-            df.select(id_col, text_col), id_col, text_col, num_hashes, n,
-            portable=portable, chunk_tokens=salt_chunk_tokens,
-            with_shingles=True, validate_ids=validate_ids,
-        ).persist()
+    long multi-query sessions should reclaim explicitly."""
     return (
         with_minhash(
             df.select(id_col, text_col), text_col, num_hashes, n,

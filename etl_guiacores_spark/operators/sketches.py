@@ -45,13 +45,6 @@ def approx_quantiles_by(
     )
 
 
-def frequent_items(df: DataFrame, col: str, support: float = 0.01) -> DataFrame:
-    """Heavy hitters with frequency >= support (Karp et al. single-pass
-    streaming algorithm; may over-report, never under-reports). One
-    row: array of candidate heavy hitters."""
-    return df.freqItems([col], support=support)
-
-
 def count_min_frequencies(
     df: DataFrame, col: str, probes: list, eps: float = 0.001, confidence: float = 0.99
 ) -> dict:

@@ -63,9 +63,8 @@ def _quality_from_counters(
 ) -> Column:
     """The quality formula over its four counters — the ONE place the
     thresholds live, shared by the per-row :func:`quality_score` and
-    the chunk-merged :func:`salted_text_scores` (the round-10 review
-    flagged the duplicated arithmetic: a threshold tuned in one copy
-    would silently diverge the other until the parity test tripped)."""
+    the chunk-merged :func:`prechunked_text_scores` (a threshold tuned
+    in one copy would otherwise silently diverge the other)."""
     len_ok = F.when((n_tok >= 10) & (n_tok <= 10000), F.lit(1.0)).otherwise(
         F.lit(0.0)
     )
@@ -80,7 +79,7 @@ def _quality_from_counters(
 
 def _pick_best_lang(counts: dict) -> Column:
     """Fixed-priority argmax over per-language marker-hit counts —
-    shared by :func:`lang_id` and :func:`salted_text_scores` so the
+    shared by :func:`lang_id` and :func:`prechunked_text_scores` so the
     tie-break order lives once. Priority = ``counts`` insertion order
     (both callers build it from LANG_MARKERS, whose insertion order —
     en, es, de, fr — IS the documented tie-break); iterating the dict
@@ -141,9 +140,9 @@ def gopher_quality(
     staged = docs.withColumn("__toks", toks)
     t = F.col("__toks")
     # long counters end-to-end: a >2^31-char document — exactly the
-    # giant-doc tail the salted twin is advertised for — must gate,
-    # not throw CAST_OVERFLOW under ANSI (round-10 advice item); both
-    # twins widen together so parity holds
+    # giant-doc tail the chunked twin is for — must gate, not throw
+    # CAST_OVERFLOW under ANSI; both twins widen together so parity
+    # holds
     counters = staged.select(
         F.col(id_col),
         F.size(t).cast("long").alias("__n"),
@@ -170,7 +169,7 @@ def _gopher_report(
 ):
     """Metrics + pass flag from the four gopher counters — the one
     copy of the bands, shared by per-row :func:`gopher_quality` and
-    chunk-merged :func:`salted_gopher_quality`. ``counters``:
+    chunk-merged :func:`prechunked_gopher_quality`. ``counters``:
     (id_col, __n, __total_len, __alpha, __stops)."""
     n = F.col("__n")
     m = counters.select(
@@ -202,9 +201,8 @@ def _stopword_bitmask(low: Column) -> Column:
     """Per-chunk distinct-stopword PRESENCE bitmask over a lowercased
     token-array column: one bit per STOPWORDS entry, merged across
     chunks with ``bit_or`` then counted with ``bit_count`` — exact
-    distinct count from constant-size state, no collect_set. The one
-    copy shared by :func:`salted_gopher_quality` and
-    :func:`prechunked_gopher_quality`."""
+    distinct count from constant-size state, no collect_set (used by
+    :func:`prechunked_gopher_quality`)."""
     # the mask packs one bit per stopword into a single long; bit 63
     # is the sign bit and bit 64+ would alias, silently corrupting
     # n_stop_distinct — fail loud if the vocabulary grows
@@ -240,16 +238,14 @@ def prechunked_gopher_quality(
 ):
     """Gopher gate from a PRE-CHUNKED bronze table
     (chunking.prechunk_documents) — same counters and bands as
-    :func:`gopher_quality` / :func:`salted_gopher_quality`, but the
-    scan reads balanced chunk rows instead of whole documents, so no
-    task ever tokenizes a fat document (the raw-scan skew floor the
-    in-task salted variant can't fix; see
-    :func:`prechunked_text_scores` for the full rationale).
+    :func:`gopher_quality`, but the scan reads balanced chunk rows
+    instead of whole documents, so no task ever tokenizes a fat
+    document.
 
     Bronze chunks split only between tokens, so the token-side sums
     (count, total length, alpha count) merge exactly, and the
     distinct-stopword count merges as the shared presence BITMASK.
-    Output row-for-row identical to both twins (parity-tested).
+    Output row-for-row identical to the per-row twin (parity-tested).
     ``validate`` runs the chunk contract check; the pipeline passes
     False because it wrote the bronze table itself this run."""
     from etl_guiacores_spark.operators.chunking import (
@@ -287,85 +283,6 @@ def prechunked_gopher_quality(
     return _gopher_report(counters, id_col, min_tokens, max_tokens)
 
 
-def salted_gopher_quality(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 20,
-    max_tokens: int = 80,
-    chunk_tokens: int = 4096,
-    validate_ids: bool = True,
-):
-    """Skew-proof gopher gate: the same chunk-and-merge treatment
-    :func:`salted_text_scores` gives the filter leg, completing the
-    chunk-merge family (shingles, quality/lang, gopher) — every
-    counter is sum-mergeable over non-overlapping token slices, and
-    the DISTINCT-stopword count merges as a BITMASK (STOPWORDS is a
-    fixed 10-word vocabulary: per-chunk presence bits OR together,
-    then bit_count — exact, constant-size state, no collect_set).
-
-    Output is identical to :func:`gopher_quality` row-for-row
-    (parity-tested incl. empty/NULL/boundary docs; same rounded
-    metrics, same pass flag). ``id_col`` must be unique non-null
-    (require_unique_ids, the chunk-merge key contract)."""
-    if chunk_tokens < 1:
-        raise ValueError(
-            f"salted_gopher_quality: chunk_tokens must be >= 1, got "
-            f"{chunk_tokens}"
-        )
-    from etl_guiacores_spark.operators.chunking import (
-        require_unique_ids,
-        salted_explode,
-    )
-
-    if validate_ids:
-        require_unique_ids(docs, id_col, "salted_gopher_quality")
-    toks = tokens(F.col(text_col))
-
-    def tok_chunks(t: Column) -> Column:
-        return F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(t), F.lit(1)), F.lit(chunk_tokens)
-            ),
-            lambda s: F.slice(t, s, chunk_tokens),
-        )
-
-    chunked = salted_explode(
-        docs,
-        id_col,
-        F.element_at(F.transform(F.array(toks), tok_chunks), 1),
-        "__ctoks",
-    )
-    # materialize the lowercase pass ONCE per chunk: the 10 per-word
-    # exists() probes below would otherwise each re-run the transform
-    # (interpreted HOFs get no CSE — the kgrams lesson; round-10
-    # review finding)
-    chunked = chunked.withColumn(
-        "__low", F.transform(F.col("__ctoks"), lambda t: F.lower(t))
-    )
-    c = F.col("__ctoks")
-    low = F.col("__low")
-
-    stop_mask = _stopword_bitmask(low)
-    # merged counters stay long (F.sum's natural type): casting back
-    # to int would CAST_OVERFLOW under ANSI on a >2^31-char document —
-    # the giant-doc tail this variant exists for (round-10 advice
-    # item); the per-row twin widens identically so parity holds
-    counters = chunked.groupBy(id_col).agg(
-        F.sum(F.size(c)).alias("__n"),
-        F.sum(
-            F.aggregate(
-                c, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-            )
-        ).alias("__total_len"),
-        F.sum(F.size(F.filter(c, lambda x: x.rlike("[A-Za-z]")))).alias(
-            "__alpha"
-        ),
-        F.bit_count(F.bit_or(stop_mask)).cast("int").alias("__stops"),
-    )
-    return _gopher_report(counters, id_col, min_tokens, max_tokens)
-
-
 def lang_id(col: Column) -> Column:
     """N-gram/marker-word language heuristic.
 
@@ -389,157 +306,6 @@ def lang_id(col: Column) -> Column:
     return F.when(cjk > 0, F.lit("zh")).otherwise(best)
 
 
-def salted_text_scores(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 4096,
-    chunk_chars: int | None = None,
-    validate_ids: bool = True,
-):
-    """Skew-proof (quality, pred_lang): chunk-and-merge the filter-leg
-    counters so per-task work is bounded by the chunk size, not the
-    document length — the residual the round-10 skew soak named after
-    salting the shingle pass (SCALE.md: the filter-leg scan kept a
-    ~19x max/median task ratio in both runs; a 2 GB tail document
-    would make quality/lang-id the new straggler).
-
-    Every counter behind :func:`quality_score` and :func:`lang_id` is
-    sum-mergeable: token count, stopword hits, and per-language marker
-    hits over non-overlapping TOKEN-array slices; char length,
-    punctuation count, and CJK count over non-overlapping SUBSTRING
-    slices. Each exploded chunk relation is hash-repartitioned on
-    (id, chunk_pos) — the salt, same as similarity.salted_minhash —
-    counters merge per id, and the final quality/lang arithmetic runs
-    on the merged sums with the IDENTICAL formulas, so the output is
-    BIT-IDENTICAL to the per-row operators (integer operands into the
-    same double divisions; parity-tested incl. empty/NULL/CJK/
-    boundary-multiple docs).
-
-    Returns (id_col, quality, pred_lang), one row per input row.
-    ``id_col`` must be unique (it is the merge key — the same
-    contract as salted_minhash). Cost: two narrow-counter shuffles
-    plus the join back onto the document row the caller pays —
-    measured worthwhile at soak scale even for uniform lengths
-    (SCALE.md round-11 crossover table); keep the per-row operators
-    when the id contract can't be met.
-    """
-    if chunk_tokens < 1:
-        raise ValueError(
-            f"salted_text_scores: chunk_tokens must be >= 1, got {chunk_tokens}"
-        )
-    cc = chunk_chars if chunk_chars is not None else chunk_tokens * 16
-    if cc < 1:
-        raise ValueError(
-            f"salted_text_scores: chunk_chars must be >= 1, got {cc}"
-        )
-    if validate_ids:
-        from etl_guiacores_spark.operators.chunking import (
-            require_unique_ids,
-        )
-
-        require_unique_ids(docs, id_col, "salted_text_scores")
-
-    # --- token-side counters over non-overlapping token slices -------
-    toks = tokens(F.col(text_col))
-
-    def tok_chunks(t: Column) -> Column:
-        return F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(t), F.lit(1)), F.lit(chunk_tokens)
-            ),
-            lambda s: F.slice(t, s, chunk_tokens),
-        )
-
-    from etl_guiacores_spark.operators.chunking import salted_explode
-
-    tchunk = salted_explode(
-        docs,
-        id_col,
-        # bind the tokenization once (the kgrams lesson: HOFs have no
-        # CSE — referencing `toks` per chunk would re-split the whole
-        # document per chunk)
-        F.element_at(F.transform(F.array(toks), tok_chunks), 1),
-        "__ctoks",
-    )
-    # materialize the lowercase pass ONCE per chunk: the stopword +
-    # 4 language-marker counters below reference it 5 times, and
-    # interpreted HOFs get no CSE (the kgrams lesson)
-    tchunk = tchunk.withColumn(
-        "__low", F.transform(F.col("__ctoks"), lambda t: F.lower(t))
-    )
-    low = F.col("__low")
-    tok_counts = tchunk.groupBy(id_col).agg(
-        F.sum(F.size("__ctoks")).cast("long").alias("__n_tok"),
-        F.sum(F.size(F.filter(low, lambda t: t.isin(*STOPWORDS))))
-        .cast("long")
-        .alias("__stop_hits"),
-        *[
-            F.sum(F.size(F.filter(low, lambda t: t.isin(*markers))))
-            .cast("long")
-            .alias(f"__hits_{lang}")
-            for lang, markers in LANG_MARKERS.items()
-        ],
-    )
-
-    # --- char-side counters over non-overlapping substring slices ----
-    s = F.coalesce(F.col(text_col), F.lit(""))
-
-    def char_chunks(txt: Column) -> Column:
-        return F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.length(txt), F.lit(1)), F.lit(cc)
-            ),
-            lambda i: F.substr(txt, i, F.lit(cc)),
-        )
-
-    cchunk = salted_explode(
-        docs,
-        id_col,
-        F.element_at(F.transform(F.array(s), char_chunks), 1),
-        "__ctext",
-    )
-    char_counts = cchunk.groupBy(id_col).agg(
-        F.sum(F.length("__ctext")).cast("long").alias("__n_chars"),
-        F.sum(punct_count(F.col("__ctext"))).cast("long").alias("__punct"),
-        F.sum(
-            F.coalesce(
-                F.regexp_count("__ctext", F.lit(r"[\x{4e00}-\x{9fff}]")),
-                F.lit(0),
-            )
-        )
-        .cast("long")
-        .alias("__cjk"),
-    )
-
-    # --- derive with the per-row formulas on the merged sums ---------
-    return _scores_from_counters(tok_counts.join(char_counts, id_col), id_col)
-
-
-def _scores_from_counters(merged, id_col: str):
-    """(quality, pred_lang) from the merged filter-leg counters — the
-    one copy of the final arithmetic, shared by the in-task salted
-    path (:func:`salted_text_scores`) and the bronze pre-chunked path
-    (:func:`prechunked_text_scores`). ``merged``: (id_col, __n_tok,
-    __stop_hits, __hits_<lang>.., __n_chars, __punct, __cjk)."""
-    quality_raw = _quality_from_counters(
-        n_tok=F.col("__n_tok"),
-        stop_hits=F.col("__stop_hits"),
-        punct=F.col("__punct"),
-        n_chars=F.col("__n_chars"),
-    )
-    best_lang = _pick_best_lang(
-        {lang: F.col(f"__hits_{lang}") for lang in LANG_MARKERS}
-    )
-    return merged.select(
-        id_col,
-        quality_raw.alias("quality"),
-        F.when(F.col("__cjk") > 0, F.lit("zh"))
-        .otherwise(best_lang)
-        .alias("pred_lang"),
-    )
-
-
 def prechunked_text_scores(
     chunks,
     id_col: str = "doc_id",
@@ -549,24 +315,16 @@ def prechunked_text_scores(
 ):
     """(quality, pred_lang) per document from a PRE-CHUNKED bronze
     table (chunking.prechunk_documents: whitespace-preserving chunk
-    substrings that concatenate back to the document) — the
-    storage-layer answer to the raw-scan skew floor the in-task
-    salted path can't fix: :func:`salted_text_scores` bounds per-task
-    COMPUTE by the chunk size, but its input scan still hands one
-    task the whole fat document to tokenize before the salt spreads
-    the chunks. Reading the bronze layout, every task scans
-    chunk-sized rows from parquet; no task ever holds a document.
+    substrings that concatenate back to the document). Every task
+    scans chunk-sized rows; no task ever tokenizes a whole document.
 
-    Output is BIT-IDENTICAL to :func:`salted_text_scores` and the
-    per-row operators: the bronze chunks preserve whitespace (char
-    counters — length, punct, CJK — sum exactly over the substring
-    partition) and split only between tokens (token counters —
-    stopword/marker hits — sum exactly over the token partition);
-    the merged sums feed the identical final arithmetic
-    (:func:`_scores_from_counters`). One exploded scan + ONE
-    aggregation — cheaper than the in-task salted path, which builds
-    separate token-side and char-side chunk relations because
-    in-task substring slices can't align with token slices.
+    Output is BIT-IDENTICAL to :func:`quality_score` / :func:`lang_id`:
+    the bronze chunks preserve whitespace (char counters — length,
+    punct, CJK — sum exactly over the substring partition) and split
+    only between tokens (token counters — stopword/marker hits — sum
+    exactly over the token partition); the merged sums feed the same
+    final arithmetic (:func:`_quality_from_counters`,
+    :func:`_pick_best_lang`). One exploded scan + ONE aggregation.
 
     ``validate`` runs :func:`chunking.require_chunk_contract` (ids
     non-null, positions 0..k-1); the pipeline passes False because it
@@ -620,7 +378,22 @@ def prechunked_text_scores(
         .cast("long")
         .alias("__cjk"),
     )
-    return _scores_from_counters(counters, id_col)
+    quality = _quality_from_counters(
+        n_tok=F.col("__n_tok"),
+        stop_hits=F.col("__stop_hits"),
+        punct=F.col("__punct"),
+        n_chars=F.col("__n_chars"),
+    )
+    best_lang = _pick_best_lang(
+        {lang: F.col(f"__hits_{lang}") for lang in LANG_MARKERS}
+    )
+    return counters.select(
+        id_col,
+        quality.alias("quality"),
+        F.when(F.col("__cjk") > 0, F.lit("zh"))
+        .otherwise(best_lang)
+        .alias("pred_lang"),
+    )
 
 
 def normalize_for_fingerprint(col: Column) -> Column:

@@ -34,7 +34,11 @@ from pyspark.sql import functions as F
 
 from etl_guiacores_spark import io as gio
 from etl_guiacores_spark.operators.bucketing import write_bucketed
-from etl_guiacores_spark.operators.chunking import build_vocab, chunk_documents
+from etl_guiacores_spark.operators.chunking import (
+    build_vocab,
+    chunk_documents,
+    prechunk_documents,
+)
 from etl_guiacores_spark.operators.dedupe import dedupe_keyed_first
 from etl_guiacores_spark.operators.similarity import (
     jaccard_of_shingles,
@@ -53,49 +57,23 @@ class CorpusConfig:
     min_quality: float = 0.5
     allowed_langs: tuple[str, ...] = ()  # empty = keep all
     near_dup_jaccard: float = 0.8
-    #: when set, every heavy per-row text stage is SALTED by
-    #: (doc_id, chunk) with per-task work bounded by this many tokens
-    #: instead of the document length: the near-dup shingle/signature
-    #: pass (similarity.salted_minhash — bit-identical signatures,
-    #: shingle sets reassembled by union), the filter-leg quality/lang
-    #: scoring (textstats.salted_text_scores), and the gopher gate
-    #: (textstats.salted_gopher_quality) — all bit-identical to their
-    #: per-row twins from chunk-merged counters. Costs extra shuffles
-    #: per salted stage plus one column-pruned id-validation scan
-    #: each. Operating guidance (round-11, measured): enable whenever
-    #: ``doc_id`` is unique and non-null — salting won the sf0.1 soak
-    #: at BOTH Zipf-tail (125.5 -> 79.9 s, round 10) and UNIFORM
-    #: lengths (52.6 -> 40.6 s; bounding the per-evaluation array
-    #: size also bounds the superlinear interpreted-HOF costs, not
-    #: just the tail — SCALE.md round-11 crossover table). It stays
-    #: opt-in only because it hard-requires the id contract that the
-    #: per-row path tolerates violating. None = per-row compute.
-    salt_chunk_tokens: int | None = None
-    #: requires ``salt_chunk_tokens``: write the PRE-CHUNKED bronze
-    #: layout (chunking.prechunk_documents — (doc_id, chunk_pos,
-    #: chunk_text) rows, landed + fenced as ``bronze_chunks``) once
-    #: at ingest, and feed the prechunked consumers
-    #: (prechunked_text_scores / prechunked_minhash /
-    #: prechunked_gopher_quality) from it instead of re-chunking
-    #: whole documents in-task per stage. This closes the raw-scan
-    #: skew floor the in-task salted path keeps (one task must still
-    #: tokenize a fat document before the salt spreads its chunks —
-    #: the ~20x max/median residual in the round-10 soak): after the
-    #: one-time bronze write, every salted stage scans balanced
-    #: chunk-sized parquet rows. Outputs are bit-identical. The SPAN
-    #: stages read chunk rows too (prechunked_repeated_spans /
-    #: cross_span_contamination(chunks=) / prechunked_strip_given_
-    #: spans — round 12), provided ``salt_chunk_tokens >= n - 1`` for
-    #: that stage's gram width (``decontam_span_n`` / ``span_n``;
-    #: below that the stage falls back to the bit-identical per-row
-    #: path). After each text REWRITE the pipeline re-chunks the
-    #: landed rewritten survivors once (``bronze_rechunked`` after
-    #: the eval-span excision, ``bronze_restripped`` after the
-    #: repeated-span strip — both fenced, both cheap because the
-    #: funnel narrows), so near-dup and the gopher gate always read
-    #: chunk rows: no stage in ANY config tokenizes a whole document
-    #: in-task after the ingest bronze write.
-    prechunk: bool = False
+    #: None = every text stage computes per row. An int (>= 3, the
+    #: near-dup shingle n needs every non-final chunk to hold >= n-1
+    #: tokens) lands the PRE-CHUNKED bronze layout once at ingest
+    #: (chunking.prechunk_documents: (doc_id, chunk_pos, chunk_text)
+    #: rows of this many tokens, fenced as ``bronze_chunks``) and
+    #: feeds every heavy text stage from those chunk rows — the
+    #: filter-leg scores, near-dup shingling, the gopher gate, and the
+    #: span stages when this is >= that stage's gram width - 1
+    #: (``decontam_span_n`` / ``span_n``; below that the stage runs
+    #: per row). After each text rewrite the landed survivors are
+    #: re-chunked once (``bronze_rechunked`` after the eval-span
+    #: excision, ``bronze_restripped`` after the repeated-span strip).
+    #: Outputs are bit-identical to the per-row path; per-task work
+    #: is bounded by the chunk size instead of the document length.
+    #: Requires unique, non-null ``doc_id`` (the chunk-merge key),
+    #: checked on the ingest count job.
+    prechunk_tokens: int | None = None
     #: True = connected-components clustering (one survivor per
     #: component, exact); False = greedy drop-higher-id per pair
     #: (one pass, conservative)
@@ -183,7 +161,7 @@ def filter_documents(
     if chunks is not None:
         # bronze path: the scores come from balanced pre-chunked rows
         # (no task ever tokenizes a whole document); bit-identical to
-        # both other legs. The inner join onto the scores would
+        # the per-row leg. The inner join onto the scores would
         # silently DROP any document missing from a stale/partial
         # bronze table, so standalone callers get the coverage probe
         # (the pipeline wrote the bronze from these docs this run)
@@ -201,23 +179,6 @@ def filter_documents(
             )
         scored = docs.join(
             prechunked_text_scores(chunks, validate=validate_ids),
-            "doc_id",
-        )
-    elif config.salt_chunk_tokens is not None:
-        # skew-proof leg: chunk-merged counters, bit-identical scores
-        # (textstats.salted_text_scores); the join back onto the doc
-        # row is the documented salting price — narrow score rows and
-        # one text shuffle versus an unbounded per-row straggler
-        from etl_guiacores_spark.operators.textstats import (
-            salted_text_scores,
-        )
-
-        scored = docs.join(
-            salted_text_scores(
-                docs, "doc_id", "text",
-                chunk_tokens=config.salt_chunk_tokens,
-                validate_ids=validate_ids,
-            ),
             "doc_id",
         )
     else:
@@ -255,7 +216,6 @@ def near_dup_removal(
     threshold: float,
     cluster_exact: bool = False,
     portable: bool = False,
-    salt_chunk_tokens: int | None = None,
     validate_ids: bool = True,
     chunks: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -264,22 +224,15 @@ def near_dup_removal(
     (``cluster_exact``, iterative label propagation) or the greedy
     drop-higher-id-of-each-pair rule (one pass, conservative).
 
-    ``salt_chunk_tokens`` routes shingling through the skew-proof
-    salted path (similarity.salted_minhash): ONE salted
-    (id, shingles, sigs) table — per-task work bounded by the chunk
-    size instead of the document length — feeds both the LSH banding
-    and the Jaccard verify, so the heavy per-row HOF compute is both
-    salted AND computed once. The persisted handle rides out on the
-    pair result as ``staged_sigs`` (the pipeline releases it after
-    landing the pairs, same lifecycle as ``staged_bands``).
-
     ``chunks`` (a pre-chunked bronze table covering at least the ids
     in ``docs``, with text identical to what the chunks were written
     from) routes the shingle pass through
-    ``similarity.prechunked_minhash`` instead: the scan reads
-    balanced chunk rows, no task tokenizes a whole document. The
-    chunk table is key-semi-joined down to ``docs``' ids first so
-    upstream stages' drops are respected."""
+    ``similarity.prechunked_minhash``: the scan reads balanced chunk
+    rows, no task tokenizes a whole document. ONE persisted
+    (id, shingles, sigs) table, restricted to ``docs``' ids, feeds
+    both the LSH banding and the Jaccard verify; the handle rides out
+    on the pair result as ``staged_sigs`` (the pipeline releases it
+    after landing the pairs, same lifecycle as ``staged_bands``)."""
     staged_sigs = None
     if chunks is not None:
         # an uncovered doc would have NO signature rows and become an
@@ -300,14 +253,6 @@ def near_dup_removal(
             chunks, "doc_id", portable=portable, with_shingles=True,
             validate=validate_ids, keep_ids=docs,
         ).persist()
-        candidates = lsh_candidate_pairs_from_sigs(staged_sigs, "doc_id")
-        sh = staged_sigs.select("doc_id", F.col("shingles").alias("sh"))
-    elif salt_chunk_tokens is not None:
-        staged_sigs = staged_minhash_shingles(
-            docs, "doc_id", "text",
-            salt_chunk_tokens=salt_chunk_tokens, portable=portable,
-            validate_ids=validate_ids,
-        )
         candidates = lsh_candidate_pairs_from_sigs(staged_sigs, "doc_id")
         sh = staged_sigs.select("doc_id", F.col("shingles").alias("sh"))
     else:
@@ -348,19 +293,17 @@ def near_dup_removal(
 def _staged_sigs_for(
     docs: DataFrame,
     portable: bool,
-    salt_chunk_tokens: int | None,
     chunks: DataFrame | None,
     validate_ids: bool,
     op_name: str,
 ) -> DataFrame:
     """One PERSISTED ``(doc_id, shingles, sig_0..k-1)`` frame for
-    ``docs`` via whichever leg the caller selected — the ONE copy of
-    the plain/salted/pre-chunked dispatch shared by the staged-shape
-    functions (stage_corpus_artifacts, incremental_near_dup,
-    append_corpus_artifacts); the first draft copy-pasted it three
-    ways and promptly drifted (the coverage probe existed in only one
-    copy — round-11 review finding). The caller owns the returned
-    handle's unpersist, per the staged_minhash_shingles lifecycle."""
+    ``docs`` — per row, or from ``chunks`` when given — the ONE copy
+    of that dispatch shared by the staged-shape functions
+    (stage_corpus_artifacts, incremental_near_dup,
+    append_corpus_artifacts), so the coverage probe cannot drift
+    between copies. The caller owns the returned handle's unpersist,
+    per the staged_minhash_shingles lifecycle."""
     if chunks is not None:
         if validate_ids:
             from etl_guiacores_spark.operators.chunking import (
@@ -376,13 +319,8 @@ def _staged_sigs_for(
             chunks, "doc_id", portable=portable, with_shingles=True,
             validate=validate_ids, keep_ids=docs,
         ).persist()
-    # staged_minhash_shingles persists internally and handles BOTH the
-    # salted (salt_chunk_tokens) and plain (None) legs
-    return staged_minhash_shingles(
-        docs, "doc_id", "text",
-        salt_chunk_tokens=salt_chunk_tokens, portable=portable,
-        validate_ids=validate_ids,
-    )
+    # staged_minhash_shingles persists internally
+    return staged_minhash_shingles(docs, "doc_id", "text", portable=portable)
 
 
 def stage_corpus_artifacts(
@@ -390,7 +328,6 @@ def stage_corpus_artifacts(
     table_prefix: str,
     num_buckets: int = 16,
     portable: bool = False,
-    salt_chunk_tokens: int | None = None,
     chunks: DataFrame | None = None,
     validate_ids: bool = True,
 ) -> dict[str, str]:
@@ -402,13 +339,12 @@ def stage_corpus_artifacts(
     100 TB shape: signatures are ingest-time artifacts, not per-query
     recomputation.
 
-    ``salt_chunk_tokens`` routes the one staging pass through the
-    skew-proof salted shingle build; ``chunks`` (a pre-chunked bronze
-    table) routes it through balanced chunk rows instead — the
-    staging pass IS the pass where a fat document's one-task shingle
-    build hurts, since everything downstream reads these tables.
-    Outputs are bit-identical either way (shingle sets sorted on the
-    salted/bronze paths — consumers treat them as sets)."""
+    ``chunks`` (a pre-chunked bronze table) routes the one staging
+    pass through balanced chunk rows — the staging pass IS the pass
+    where a fat document's one-task shingle build hurts, since
+    everything downstream reads these tables. Outputs are
+    bit-identical either way (shingle sets sorted on the bronze
+    path — consumers treat them as sets)."""
     shingles_t, sigs_t = f"{table_prefix}_shingles", f"{table_prefix}_sigs"
     # ONE shingling pass feeds both tables: every leg exposes the
     # shingle array it computes anyway, and the transient persist
@@ -416,8 +352,7 @@ def stage_corpus_artifacts(
     # corpus a second time for the signature table would double the
     # most expensive per-row expression at ingest
     handle = _staged_sigs_for(
-        docs, portable, salt_chunk_tokens, chunks, validate_ids,
-        "stage_corpus_artifacts",
+        docs, portable, chunks, validate_ids, "stage_corpus_artifacts"
     )
     # unpersist must target the HANDLE whose plan carries the cache
     # entry — a renamed child df's unpersist would silently no-op
@@ -465,7 +400,6 @@ def incremental_near_dup(
     tables: dict[str, str],
     threshold: float,
     portable: bool = False,
-    salt_chunk_tokens: int | None = None,
     chunks: DataFrame | None = None,
     validate_ids: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
@@ -488,17 +422,14 @@ def incremental_near_dup(
     from etl_guiacores_spark.operators.similarity import band_rows
 
     spark = new_docs.sparkSession
-    # salted / pre-chunked legs stage ONE (id, shingles, sigs) table
-    # that serves both the banding below and the shingle verify —
-    # which also removes the unsalted path's historical duplication
-    # of the batch's shingle pass (with_minhash here + word_shingles
-    # later); the handle rides out on the pair result as staged_sigs,
-    # same lifecycle contract as near_dup_removal's
+    # the pre-chunked leg stages ONE (id, shingles, sigs) table that
+    # serves both the banding below and the shingle verify; the handle
+    # rides out on the pair result as staged_sigs, same lifecycle
+    # contract as near_dup_removal's
     staged_new = None
-    if chunks is not None or salt_chunk_tokens is not None:
+    if chunks is not None:
         staged_new = _staged_sigs_for(
-            new_docs, portable, salt_chunk_tokens, chunks,
-            validate_ids, "incremental_near_dup",
+            new_docs, portable, chunks, validate_ids, "incremental_near_dup"
         )
         new_sigs = staged_new.drop("shingles")
     else:
@@ -593,26 +524,22 @@ def append_corpus_artifacts(
     new_docs: DataFrame,
     tables: dict[str, str],
     portable: bool = False,
-    salt_chunk_tokens: int | None = None,
     chunks: DataFrame | None = None,
     validate_ids: bool = True,
 ) -> None:
     """Fold an accepted batch into the staged artifacts: appended
     bucket files join the existing spec (same bucket count/key), so
     the next incremental run still reads bucket-aligned. Same
-    plain/salted/pre-chunked legs as the staging/increment functions
-    (the round-11 review caught this one function still re-paying the
-    per-row shingle skew after the increment had just computed the
-    batch skew-proof).
+    per-row / pre-chunked legs as the staging/increment functions.
 
     CAUTION: any still-lazy plan built over these tables (e.g. the
     survivors frame from ``incremental_near_dup``) re-reads them on its
     next action and would now see the batch's own signatures —
     materialize (collect/write) the survivors BEFORE appending."""
-    if chunks is not None or salt_chunk_tokens is not None:
+    if chunks is not None:
         handle = _staged_sigs_for(
-            new_docs, portable, salt_chunk_tokens, chunks,
-            validate_ids, "append_corpus_artifacts",
+            new_docs, portable, chunks, validate_ids,
+            "append_corpus_artifacts",
         )
         staged = handle.withColumnRenamed("shingles", "sh")
         try:
@@ -841,14 +768,12 @@ def run_corpus_pipeline(
             "decontam_spans requires benchmark_path (the eval set "
             "whose quoted spans get excised)"
         )
-    if config.prechunk and (
-        config.salt_chunk_tokens is None or config.salt_chunk_tokens < 3
-    ):
+    ct = config.prechunk_tokens
+    if ct is not None and ct < 3:
         raise ValueError(
-            "prechunk=True requires salt_chunk_tokens >= 3 (the "
-            "bronze chunk size; the near-dup shingle n=3 needs every "
-            f"non-final chunk to hold >= n-1 tokens) — got "
-            f"{config.salt_chunk_tokens!r}"
+            "prechunk_tokens must be >= 3 or None (the bronze chunk "
+            "size; the near-dup shingle n=3 needs every non-final "
+            f"chunk to hold >= n-1 tokens) — got {ct!r}"
         )
     if config.write_shards and "://" in out_dir and not out_dir.startswith(
         "file://"
@@ -872,25 +797,20 @@ def run_corpus_pipeline(
     # are exactly as stale as artifacts from a different config.
     docs = spread_narrow_input(docs, "doc_id")
     docs = docs.filter(F.length(F.trim("text")) > 0)
-    if config.salt_chunk_tokens is not None:
-        # the salted stages' chunk-merge key contract, validated ONCE
-        # here riding the n_raw job the run pays anyway — the salted
-        # operators are then called with validate_ids=False so a
-        # RESUME (which reads stages back without computing them)
-        # doesn't pay three wasted validation scans (the first soak
-        # after the eager checks failed its resume<wall/2 assertion)
-        from etl_guiacores_spark.operators.chunking import (
-            id_contract_counters,
-        )
-
+    if ct is not None:
+        # the chunk-merge key contract, validated ONCE here riding the
+        # n_raw job the run pays anyway — the chunked operators are
+        # then called with validate=False so a RESUME (which reads
+        # stages back without computing them) pays no extra scans
         row = docs.agg(
             F.count(F.lit(1)).alias("n"),
-            *id_contract_counters("doc_id"),
+            F.sum(F.col("doc_id").isNull().cast("int")).alias("nulls"),
+            (F.count("doc_id") - F.count_distinct("doc_id")).alias("dups"),
         ).first()
         n_raw = row["n"]
         if (row["nulls"] or 0) or (row["dups"] or 0):
             raise ValueError(
-                "run_corpus_pipeline: salt_chunk_tokens requires unique "
+                "run_corpus_pipeline: prechunk_tokens requires unique "
                 f"non-null doc_id (the chunk-merge key) — found "
                 f"{row['nulls'] or 0} NULL and {row['dups'] or 0} "
                 "duplicate id row(s) in the input"
@@ -968,20 +888,13 @@ def run_corpus_pipeline(
     emit("raw", {"records": n_raw})
 
     bronze = None
-    if config.prechunk:
+    if ct is not None:
         # the one-time chunk build: THIS write pays the fat-document
-        # tokenization once; every salted stage below scans the
+        # tokenization once; every chunked stage below scans the
         # landed table's balanced chunk rows instead (and a resumed
         # run re-reads it without re-chunking at all)
-        from etl_guiacores_spark.operators.chunking import (
-            prechunk_documents,
-        )
-
         bronze, n_bronze = _land(
-            prechunk_documents(
-                docs, chunk_tokens=config.salt_chunk_tokens
-            ),
-            "bronze_chunks",
+            prechunk_documents(docs, chunk_tokens=ct), "bronze_chunks"
         )
         emit("bronze_chunks", {"records": n_bronze})
 
@@ -1030,9 +943,7 @@ def run_corpus_pipeline(
             # silently lose boundary n-grams.
             span_bronze = (
                 bronze
-                if bronze is not None
-                and config.salt_chunk_tokens
-                >= config.decontam_span_n - 1
+                if bronze is not None and ct >= config.decontam_span_n - 1
                 else None
             )
             ev_spans = cross_span_contamination(
@@ -1050,7 +961,7 @@ def run_corpus_pipeline(
                     # chunk size -> the apply can assign spans to
                     # chunks arithmetically (no per-chunk span-array
                     # fan-out)
-                    chunk_tokens=config.salt_chunk_tokens,
+                    chunk_tokens=ct,
                 )
             else:
                 excised = strip_given_spans(
@@ -1108,17 +1019,9 @@ def run_corpus_pipeline(
                 # current documents — re-chunk the landed rewritten
                 # survivors ONCE, fenced like the ingest bronze, so
                 # the near-dup leg below still reads balanced chunk
-                # rows instead of falling back to in-task chunking
-                # (the last path where one task had to tokenize a
-                # whole fat document — round-11 verdict, item #2)
-                from etl_guiacores_spark.operators.chunking import (
-                    prechunk_documents as _prechunk,
-                )
-
+                # rows
                 bronze, n_rechunk = _land(
-                    _prechunk(
-                        exact, chunk_tokens=config.salt_chunk_tokens
-                    ),
+                    prechunk_documents(exact, chunk_tokens=ct),
                     "bronze_rechunked",
                 )
                 emit("bronze_rechunked", {"records": n_rechunk})
@@ -1132,7 +1035,6 @@ def run_corpus_pipeline(
         config.near_dup_jaccard,
         cluster_exact=config.cluster_exact,
         portable=config.portable_hashes,
-        salt_chunk_tokens=config.salt_chunk_tokens,
         validate_ids=False,  # checked once at ingest
         # bronze is always current here: it reflects ingest text, and
         # when decontam_spans rewrote documents the bronze_rechunked
@@ -1144,7 +1046,7 @@ def run_corpus_pipeline(
     if staged_bands is not None:  # the pairs are materialized — release
         staged_bands.unpersist()
     staged_sigs = getattr(dup_pairs, "staged_sigs", None)
-    if staged_sigs is not None:  # salted path: release the sig cache too
+    if staged_sigs is not None:  # bronze path: release the sig cache too
         staged_sigs.unpersist()
     if config.cluster_exact:
         from etl_guiacores_spark.operators.graph import connected_components
@@ -1183,10 +1085,7 @@ def run_corpus_pipeline(
         # not just cost: min_docs counts distinct docs and must count
         # survivors only. Boundary requirement checked here
         # (validate=False on our own bronze), as in the decontam leg.
-        if (
-            bronze is not None
-            and config.salt_chunk_tokens >= config.span_n - 1
-        ):
+        if bronze is not None and ct >= config.span_n - 1:
             rep_spans = prechunked_repeated_spans(
                 bronze,
                 n=config.span_n,
@@ -1197,7 +1096,7 @@ def run_corpus_pipeline(
             stripped = prechunked_strip_given_spans(
                 bronze, rep_spans, keep_text=True,
                 validate=False, keep_ids=survivors,
-                chunk_tokens=config.salt_chunk_tokens,
+                chunk_tokens=ct,
             )
         else:
             stripped = strip_repeated_spans(
@@ -1265,14 +1164,8 @@ def run_corpus_pipeline(
             # gopher gate below reads balanced chunk rows too; with
             # the pre-chunked span legs above, NO stage in any config
             # now tokenizes a whole document in-task after ingest
-            from etl_guiacores_spark.operators.chunking import (
-                prechunk_documents as _prechunk_post,
-            )
-
             bronze, n_restrip = _land(
-                _prechunk_post(
-                    survivors, chunk_tokens=config.salt_chunk_tokens
-                ),
+                prechunk_documents(survivors, chunk_tokens=ct),
                 "bronze_restripped",
             )
             emit("bronze_restripped", {"records": n_restrip})
@@ -1280,10 +1173,7 @@ def run_corpus_pipeline(
     n_before_gopher = n_clean if span_totals is None else span_totals["span_docs"]
     n_gopher = None
     if config.gopher_gate:
-        from etl_guiacores_spark.operators.textstats import (
-            gopher_quality,
-            salted_gopher_quality,
-        )
+        from etl_guiacores_spark.operators.textstats import gopher_quality
 
         if bronze is not None:
             # bronze path: survivor text matches the chunk table
@@ -1302,16 +1192,6 @@ def run_corpus_pipeline(
                 min_tokens=config.gopher_min_tokens,
                 max_tokens=config.gopher_max_tokens,
                 validate=False,  # the pipeline wrote the bronze table
-            )
-        elif config.salt_chunk_tokens is not None:
-            # skew-proof gate, same salt knob as the shingle/filter
-            # legs — identical metrics and pass flags, chunk-merged
-            gq = salted_gopher_quality(
-                survivors,
-                min_tokens=config.gopher_min_tokens,
-                max_tokens=config.gopher_max_tokens,
-                chunk_tokens=config.salt_chunk_tokens,
-                validate_ids=False,  # checked once at ingest
             )
         else:
             gq = gopher_quality(

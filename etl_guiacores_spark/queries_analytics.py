@@ -798,8 +798,8 @@ def q195_mmr_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q196: salted (chunk-merged) quality + lang scoring — same answer as the
-# per-row operators, skew-proof plan
+# q196: chunk-merged quality + lang scoring over pre-chunked rows — same
+# answer as the per-row operators, per-task work bounded by the chunk
 # ---------------------------------------------------------------------------
 
 _SW196 = "'the','a','an','and','of','to','in','is','it','for'"
@@ -855,31 +855,38 @@ def _q196_oracle() -> str:
 @register(
     "q196_salted_quality_lang",
     _q196_oracle(),
-    doc="The q103 pairing applied to the filter leg: chunk-merged "
-    "quality + lang-id (textstats.salted_text_scores) whose ORACLE is "
-    "the plain per-row formula — proving the salted plan computes the "
+    doc="The q103 pairing applied to the filter leg: quality + "
+    "lang-id merged from pre-chunked rows "
+    "(chunking.prechunk_documents at 64 tokens, then "
+    "textstats.prechunked_text_scores) whose ORACLE is the plain "
+    "per-row formula — proving the chunked plan computes the "
     "identical answer with per-task work bounded by the chunk size "
-    "instead of the document length. Token/char counters merge as "
-    "sums over non-overlapping slices, each exploded chunk relation "
-    "hash-repartitioned on (doc_id, chunk_pos) — the skew-proof shape "
-    "the round-10 skew soak measured for the 19x filter-leg residual. "
-    "Covers ALL docs including empty/NULL text (quality computed, "
-    "pred_lang 'und'), unlike q22's confusion matrix which drops "
-    "empties (operators/textstats.salted_text_scores).",
+    "instead of the document length. Token counters merge as sums "
+    "over the token partition, char counters over the "
+    "whitespace-preserving substring partition; the chunk rows are "
+    "hash-repartitioned on (doc_id, chunk_pos). Covers ALL docs "
+    "including empty/NULL text (quality computed, pred_lang 'und'), "
+    "unlike q22's confusion matrix which drops empties.",
 )
 def q196_salted_quality_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_guiacores_spark.operators.textstats import salted_text_scores
+    from etl_guiacores_spark.operators.chunking import prechunk_documents
+    from etl_guiacores_spark.operators.textstats import prechunked_text_scores
 
-    d = _t(spark, sf_dir, "documents")
-    out = salted_text_scores(d, "doc_id", "text", chunk_tokens=64)
+    chunks = prechunk_documents(
+        _t(spark, sf_dir, "documents"), chunk_tokens=64
+    )
+    # validate=False: the chunk relation is built in this plan, so
+    # the contract holds by construction (the probe is for external
+    # bronze tables)
+    out = prechunked_text_scores(chunks, validate=False)
     return out.select(
         "doc_id", F.round("quality", 6).alias("quality"), "pred_lang"
     )
 
 
 # ---------------------------------------------------------------------------
-# q197: salted (chunk-merged) gopher gate — same answer as q78's per-row
-# operator, skew-proof plan; completes the chunk-merge family
+# q197: chunk-merged gopher gate over pre-chunked rows — same answer as
+# q78's per-row operator
 # ---------------------------------------------------------------------------
 
 _STOPLIST197 = "['the','a','an','and','of','to','in','is','it','for']"
@@ -909,23 +916,28 @@ _TOKS197 = "string_split_regex(trim(text), '[ \\t\\n\\r\\f\\v]+')"
     FROM m
     """,
     doc="The q103 same-answer/different-plan pairing applied to the "
-    "gopher gate (q78's oracle verbatim): chunk-merged gopher rules "
-    "(textstats.salted_gopher_quality) with per-task work bounded by "
-    "the chunk size. Token count, token-length total, and alpha count "
-    "merge as sums over non-overlapping token slices; the DISTINCT "
+    "gopher gate (q78's oracle verbatim): gopher rules merged from "
+    "pre-chunked rows (chunking.prechunk_documents at 64 tokens, then "
+    "textstats.prechunked_gopher_quality) with per-task work bounded "
+    "by the chunk size. Token count, token-length total, and alpha "
+    "count merge as sums over the token partition; the DISTINCT "
     "stopword count merges as a BITMASK (10-word fixed vocabulary -> "
     "per-chunk presence bits, bit_or, bit_count — exact with "
-    "constant-size state, no collect_set). Completes the chunk-merge "
-    "family: shingles (salted_minhash), quality/lang "
-    "(salted_text_scores, q196), gopher (this) — the whole heavy "
-    "per-row text surface of run_corpus_pipeline is now skew-proof "
-    "under one salt_chunk_tokens knob.",
+    "constant-size state, no collect_set). With q196 (quality/lang) "
+    "and q200 (span strip) it covers the chunked text stages "
+    "run_corpus_pipeline runs under prechunk_tokens.",
 )
 def q197_salted_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_guiacores_spark.operators.textstats import salted_gopher_quality
+    from etl_guiacores_spark.operators.chunking import prechunk_documents
+    from etl_guiacores_spark.operators.textstats import (
+        prechunked_gopher_quality,
+    )
 
     d = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    return salted_gopher_quality(d, chunk_tokens=64)
+    # validate=False: built in this plan, contract holds by construction
+    return prechunked_gopher_quality(
+        prechunk_documents(d, chunk_tokens=64), validate=False
+    )
 
 
 # ---------------------------------------------------------------------------

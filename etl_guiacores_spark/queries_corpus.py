@@ -3372,8 +3372,8 @@ def q135_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "coalesce), and the strip applies per chunk with global offsets "
     "(dedupe.prechunked_strip_given_spans). The oracle is q135's SQL "
     "verbatim, so the driver hash-checks that the storage-layout "
-    "twins are value-identical end-to-end — the same equivalence "
-    "class q69 gives salted MinHash. At 100 TB this is the plan that "
+    "twins are value-identical end-to-end, as q196/q197 do for the "
+    "filter scores and the gopher gate. At 100 TB this is the plan that "
     "runs: no task tokenizes or kgram-walks a whole document; "
     "per-task work is bounded by the 64-token chunk, and the global "
     "positions ride the scan instead of a corpus-wide window.",

@@ -140,29 +140,3 @@ def ohlc_bars(
             "n_events",
         )
     )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
-    left_time: str = "ts",
-    right_time: str = "ts",
-) -> DataFrame:
-    """Stream-stream inner join: right rows within (left_time -
-    max_delay, left_time]. Both sides watermarked so the join state
-    is bounded — the time-range predicate is what lets Spark expire
-    buffered rows (an unconstrained stream-stream join would hold
-    state forever)."""
-    l = left.withWatermark(left_time, watermark).alias("l")
-    r = right.withWatermark(right_time, watermark).alias("r")
-    return l.join(
-        r,
-        F.expr(
-            f"l.{key} = r.{key} AND "
-            f"r.{right_time} > l.{left_time} - INTERVAL {max_delay} AND "
-            f"r.{right_time} <= l.{left_time}"
-        ),
-    )

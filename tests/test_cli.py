@@ -323,7 +323,7 @@ def test_search_mode(spark):
 
 
 def test_corpus_mode_salted_prechunk(spark, tmp_path):
-    """--salt-chunk-tokens + --prechunk reach the pipeline: the bronze
+    """--prechunk-tokens reaches the pipeline: the bronze
     artifact lands fenced and the metrics envelope equals the plain
     run's (outputs are bit-identical by the operator parity tests;
     this pins the CLI wiring)."""
@@ -333,7 +333,7 @@ def test_corpus_mode_salted_prechunk(spark, tmp_path):
     plain = main(["--out", str(tmp_path / "p")] + base, spark=spark)
     salted = main(
         ["--out", str(tmp_path / "s")] + base
-        + ["--salt-chunk-tokens", "8", "--prechunk"],
+        + ["--prechunk-tokens", "8"],
         spark=spark,
     )
     assert plain == salted

@@ -259,6 +259,7 @@ def test_incremental_near_dup_releases_staged_on_raise(spark):
     import pytest
     from pyspark.sql import functions as F
 
+    from etl_guiacores_spark.operators.chunking import prechunk_documents
     from etl_guiacores_spark.plans.corpus_pipeline import (
         incremental_near_dup,
         stage_corpus_artifacts,
@@ -275,12 +276,14 @@ def test_incremental_near_dup_releases_staged_on_raise(spark):
     assert cm.isEmpty()
 
     # raise path 1: staged tables don't exist (spark.table raises
-    # BEFORE the schema check) — salted leg persists batch sigs first
+    # BEFORE the schema check) — the chunk leg persists batch sigs first
+    batch = docs.filter("doc_id >= 100")
+    chunks = prechunk_documents(batch, chunk_tokens=8)
     with pytest.raises(Exception):
         incremental_near_dup(
-            docs.filter("doc_id >= 100"),
+            batch,
             {"sigs": "no_such_sigs_tbl", "shingles": "no_such_sh_tbl"},
-            0.6, salt_chunk_tokens=8,
+            0.6, chunks=chunks,
         )
     assert cm.isEmpty(), "staged batch signatures leaked on missing-table raise"
 
@@ -292,13 +295,43 @@ def test_incremental_near_dup_releases_staged_on_raise(spark):
     try:
         with pytest.raises(ValueError, match="hash family"):
             incremental_near_dup(
-                docs.filter("doc_id >= 100"), tables, 0.6,
-                portable=False, salt_chunk_tokens=8,
+                batch, tables, 0.6, portable=False, chunks=chunks,
             )
         assert cm.isEmpty(), "staged batch signatures leaked on schema-mismatch raise"
     finally:
         for t in tables.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_prechunk_tokens_id_check_fails_loud(spark, tmp_path):
+    """prechunk_tokens makes doc_id the chunk-merge key, so the run
+    refuses a NULL or duplicate id on its ingest count job, naming the
+    counts; the per-row path accepts the same duplicate-id input, and
+    a chunk size below the shingle bound is refused up front."""
+    import pytest
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id long, text string, source string"
+    null_id = spark.createDataFrame(
+        [(1, text, "s"), (None, text + " more", "s")], schema
+    )
+    dup_id = spark.createDataFrame(
+        [(1, text, "s"), (1, text + " more", "s")], schema
+    )
+    cfg = CorpusConfig(min_quality=0.0, prechunk_tokens=8)
+    with pytest.raises(ValueError, match="found 1 NULL and 0 duplicate"):
+        run_corpus_pipeline(null_id, str(tmp_path / "null"), cfg)
+    with pytest.raises(ValueError, match="found 0 NULL and 1 duplicate"):
+        run_corpus_pipeline(dup_id, str(tmp_path / "dup"), cfg)
+    m = run_corpus_pipeline(
+        dup_id, str(tmp_path / "rows"),
+        CorpusConfig(min_quality=0.0, prechunk_tokens=None),
+    )
+    assert m["raw_docs"] == 2
+    with pytest.raises(ValueError, match="prechunk_tokens"):
+        run_corpus_pipeline(
+            dup_id, str(tmp_path / "small"), CorpusConfig(prechunk_tokens=2)
+        )
 
 
 def test_model_quality_gate_in_filter_stage(spark, tmp_path):

@@ -6,7 +6,7 @@ The layout's contract is exactness: chunks concatenate back to the
 document byte-for-byte, and chunking.prechunked_tokens reproduces the
 document's tokens() array as per-chunk slices INCLUDING the phantom
 empty tokens space-only trim leaves at \t/\n document edges — so every
-consumer is bit-identical to its per-row / in-task-salted twins.
+consumer is bit-identical to its per-row twin.
 """
 
 from __future__ import annotations
@@ -253,55 +253,12 @@ class TestPrechunkedConsumers:
         )
         assert got == want
 
-    def test_salted_minhash_phantom_edge_parity(self, spark):
-        """Regression for the round-11 latent bug: salted_minhash's
-        old concat_ws + re-split chunk round trip dropped the phantom
-        empty tokens at \t/\n document edges (docs 11-15), so its
-        signatures and shingle sets diverged from with_minhash's on
-        such documents. The token-array-slice rework must be
-        bit-identical on exactly those fixtures."""
-        from etl_guiacores_spark.operators.similarity import (
-            salted_minhash,
-            with_minhash,
-        )
-
-        df = _docs(spark)
-        want = sorted(
-            tuple(r)
-            for r in with_minhash(
-                df.select("doc_id", "text"), "text",
-                shingle_col="shingles",
-            )
-            .select(
-                "doc_id",
-                F.array_sort("shingles").alias("sh"),
-                "sig_0", "sig_1", "sig_2", "sig_3",
-            )
-            .collect()
-        )
-        for sct in (3, 5, 64):
-            got = sorted(
-                tuple(r)
-                for r in salted_minhash(
-                    df, "doc_id", "text", with_shingles=True,
-                    chunk_tokens=sct,
-                )
-                .select(
-                    "doc_id",
-                    F.array_sort("shingles").alias("sh"),
-                    "sig_0", "sig_1", "sig_2", "sig_3",
-                )
-                .collect()
-            )
-            assert got == want, sct
-
     def test_pipeline_prechunk_equals_salted_and_plain(
         self, spark, tmp_path
     ):
-        """run_corpus_pipeline(prechunk=True) must land the identical
-        metrics envelope and survivor sets as both the in-task salted
-        run and the per-row run, with the bronze_chunks artifact
-        fenced on disk."""
+        """run_corpus_pipeline(prechunk_tokens=8) must land the
+        identical metrics envelope and survivor sets as the per-row
+        run, with the bronze_chunks artifact fenced on disk."""
         from etl_guiacores_spark.plans.corpus_pipeline import (
             CorpusConfig,
             run_corpus_pipeline,
@@ -318,15 +275,11 @@ class TestPrechunkedConsumers:
         m_plain = run_corpus_pipeline(
             docs, str(tmp_path / "plain"), CorpusConfig(**base)
         )
-        m_salted = run_corpus_pipeline(
-            docs, str(tmp_path / "salted"),
-            CorpusConfig(**base, salt_chunk_tokens=8),
-        )
         m_bronze = run_corpus_pipeline(
             docs, str(tmp_path / "bronze"),
-            CorpusConfig(**base, salt_chunk_tokens=8, prechunk=True),
+            CorpusConfig(**base, prechunk_tokens=8),
         )
-        assert m_bronze == m_salted == m_plain
+        assert m_bronze == m_plain
         for stage in ("gopher_gated", "clean", "filtered"):
             ids = {
                 v: sorted(
@@ -335,9 +288,9 @@ class TestPrechunkedConsumers:
                         str(tmp_path / v / stage)
                     ).collect()
                 )
-                for v in ("plain", "salted", "bronze")
+                for v in ("plain", "bronze")
             }
-            assert ids["bronze"] == ids["salted"] == ids["plain"], stage
+            assert ids["bronze"] == ids["plain"], stage
         # the bronze artifact itself landed, fenced, and reconstructs
         bronze = spark.read.parquet(str(tmp_path / "bronze/bronze_chunks"))
         assert bronze.columns == [
@@ -351,8 +304,8 @@ class TestPrechunkedConsumers:
         """Round-12 (verdict item #2): with decontam_spans rewriting
         survivor text upstream of near-dup, the prechunk run must
         land a bronze_rechunked refresh and route near-dup through it
-        — no fallback to in-task chunking — while staying
-        envelope-identical to the in-task salted and per-row runs.
+        — no fallback to whole-document shingling — while staying
+        envelope-identical to the per-row run.
         The fixture includes a doc QUOTING the benchmark mid-page
         (partial excision), a doc that IS the benchmark verbatim
         (fully excised to empty text — the post-rewrite empty-doc
@@ -390,10 +343,10 @@ class TestPrechunkedConsumers:
         base = dict(
             min_quality=0.0, near_dup_jaccard=0.6, chunk_tokens=16,
             chunk_overlap=4, gopher_gate=True, strip_spans=True,
-            # span_n=6 <= salt_chunk_tokens-1+... activates the
-            # PRE-CHUNKED repeated-span leg (needs chunks >= n-1=5
-            # tokens; salt is 8); decontam_span_n=8 needs >= 7 —
-            # also active. Both legs must stay envelope-identical.
+            # span_n=6 activates the PRE-CHUNKED repeated-span leg
+            # (needs chunks >= n-1=5 tokens; prechunk_tokens is 8);
+            # decontam_span_n=8 needs >= 7 — also active. Both legs
+            # must stay envelope-identical.
             span_n=6, span_min_docs=2, benchmark_path=bench_p,
             decontam_min_overlaps=10_000,  # only the SPAN stage acts
             decontam_spans=True, decontam_span_n=8,
@@ -401,17 +354,13 @@ class TestPrechunkedConsumers:
         m_plain = run_corpus_pipeline(
             docs, str(tmp_path / "plain"), CorpusConfig(**base)
         )
-        m_salted = run_corpus_pipeline(
-            docs, str(tmp_path / "salted"),
-            CorpusConfig(**base, salt_chunk_tokens=8),
-        )
         stages = []
         m_bronze = run_corpus_pipeline(
             docs, str(tmp_path / "bronze"),
-            CorpusConfig(**base, salt_chunk_tokens=8, prechunk=True),
+            CorpusConfig(**base, prechunk_tokens=8),
             progress_callback=lambda s, i: stages.append(s),
         )
-        assert m_bronze == m_salted == m_plain
+        assert m_bronze == m_plain
         assert "bronze_rechunked" in stages
         assert "bronze_restripped" in stages  # post-strip gopher feed
         for stage in ("clean", "gopher_gated", "eval_span_stripped"):
@@ -422,9 +371,9 @@ class TestPrechunkedConsumers:
                         str(tmp_path / v / stage)
                     ).collect()
                 )
-                for v in ("plain", "salted", "bronze")
+                for v in ("plain", "bronze")
             }
-            assert ids["bronze"] == ids["salted"] == ids["plain"], stage
+            assert ids["bronze"] == ids["plain"], stage
         # the refresh landed, fenced, and concatenates back to the
         # REWRITTEN survivor text (not the ingest text)
         root = tmp_path / "bronze"
@@ -464,7 +413,7 @@ class TestPrechunkedConsumers:
         ).select("doc_id", "text", "source")
         cfg = CorpusConfig(
             min_quality=0.0, near_dup_jaccard=0.6, chunk_tokens=16,
-            chunk_overlap=4, salt_chunk_tokens=8, prechunk=True,
+            chunk_overlap=4, prechunk_tokens=8,
         )
         out = str(tmp_path / "run")
         m1 = run_corpus_pipeline(docs, out, cfg)
@@ -485,11 +434,11 @@ class TestPrechunkedConsumers:
         docs = spark.createDataFrame(
             [(1, "a b c", "s")], "doc_id long, text string, source string"
         )
-        for bad in (None, 2):
-            with pytest.raises(ValueError, match="prechunk"):
+        for bad in (0, 2):
+            with pytest.raises(ValueError, match="prechunk_tokens"):
                 run_corpus_pipeline(
                     docs, str(tmp_path / "x"),
-                    CorpusConfig(prechunk=True, salt_chunk_tokens=bad),
+                    CorpusConfig(prechunk_tokens=bad),
                 )
 
     def test_minhash_rejects_undersized_nonfinal_chunks(self, spark):
@@ -536,7 +485,7 @@ class TestPrechunkedConsumers:
             require_chunk_coverage(docs, partial, "doc_id", "t")
         with pytest.raises(ValueError, match="no rows in the pre-chunked"):
             filter_documents(
-                docs, CorpusConfig(salt_chunk_tokens=4, prechunk=True),
+                docs, CorpusConfig(prechunk_tokens=4),
                 validate_ids=True, chunks=partial,
             )
         with pytest.raises(ValueError, match="no rows in the pre-chunked"):
@@ -549,10 +498,10 @@ class TestPrechunkedConsumers:
 
     def test_staged_and_incremental_legs_equivalent(self, spark):
         """stage_corpus_artifacts + incremental_near_dup accept the
-        salted and pre-chunked legs: identical staged-table content
-        semantics (survivors + incremental survivors match the
-        per-row leg exactly), so the daily-ingest shape can ride the
-        skew-proof paths end-to-end."""
+        pre-chunked leg: identical staged-table content semantics
+        (survivors + incremental survivors match the per-row leg
+        exactly), so the daily-ingest shape can ride chunk rows
+        end-to-end."""
         from etl_guiacores_spark.plans.corpus_pipeline import (
             incremental_near_dup,
             near_dup_removal_staged,
@@ -570,7 +519,6 @@ class TestPrechunkedConsumers:
         results = {}
         for leg, kw in (
             ("plain", {}),
-            ("salted", {"salt_chunk_tokens": 8}),
             ("bronze", {"chunks": prechunk_documents(docs, chunk_tokens=8)}),
         ):
             from etl_guiacores_spark.plans.corpus_pipeline import (
@@ -594,8 +542,8 @@ class TestPrechunkedConsumers:
                 )
                 # fold the accepted batch back in on the same leg and
                 # pin the table growth (the append path shares the
-                # staged dispatch, so a skew-proof increment stays
-                # skew-proof end-to-end)
+                # staged dispatch, so a chunked increment stays
+                # chunked end-to-end)
                 accepted = new.join(
                     spark.createDataFrame(
                         [(i,) for i in inc_rows], "doc_id long"
@@ -617,7 +565,6 @@ class TestPrechunkedConsumers:
             finally:
                 for t in tables.values():
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
-        assert results["salted"] == results["plain"]
         assert results["bronze"] == results["plain"]
 
     def test_contract_enforced_by_default(self, spark):

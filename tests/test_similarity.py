@@ -7,7 +7,6 @@ import math
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark.operators.similarity import (
-    salted_minhash,
     cosine,
     embedding_near_dup_pairs,
     knn_brute_force,
@@ -155,72 +154,11 @@ def test_knn_null_ids_not_dropped(spark):
 
 
 class TestSaltedMinhash:
-    """salted_minhash: skew-proof chunked shingling must be
-    bit-identical to the per-row path (signatures) and set-identical
-    (shingles) — the round-9 skew-soak lever."""
-
-    ROWS = [
-        (1, "the quick brown fox jumps over the lazy dog " * 50),
-        (2, "a b"),  # fewer than n tokens
-        (3, ""),
-        (4, None),
-        (5, "alpha beta gamma delta epsilon"),
-        (6, "  padded   with \t odd   whitespace tokens here  "),
-        (7, " ".join(str(i * 7919 % 104729) for i in range(2000))),
-    ]
-
-    def _df(self, spark):
-        return spark.createDataFrame(self.ROWS, "doc_id int, text string")
-
-    def test_signatures_bit_identical(self, spark):
-        df = self._df(spark)
-        for portable in (True, False):
-            base = {
-                r["doc_id"]: r
-                for r in with_minhash(
-                    df, "text", num_hashes=4, portable=portable, shingle_col="sh"
-                ).collect()
-            }
-            # chunk_tokens=3 == n is the maximal-salting degenerate case
-            for chunk_tokens in (3, 8, 64):
-                salted = {
-                    r["doc_id"]: r
-                    for r in salted_minhash(
-                        df, "doc_id", "text", num_hashes=4, portable=portable,
-                        chunk_tokens=chunk_tokens, with_shingles=True,
-                    ).collect()
-                }
-                assert set(salted) == set(base)
-                for k, b in base.items():
-                    s = salted[k]
-                    for i in range(4):
-                        assert s[f"sig_{i}"] == b[f"sig_{i}"], (portable, chunk_tokens, k, i)
-                    assert (s["shingles"] is None) == (b["sh"] is None)
-                    if b["sh"] is not None:
-                        # salted shingles are the sorted distinct union
-                        assert list(s["shingles"]) == sorted(set(b["sh"]))
-
-    def test_chunk_smaller_than_shingle_raises(self, spark):
-        import pytest
-
-        with pytest.raises(ValueError, match="chunk_tokens"):
-            salted_minhash(self._df(spark), "doc_id", "text", n=3, chunk_tokens=2)
-
-    def test_with_minhash_salted_keeps_all_columns(self, spark):
-        df = self._df(spark).withColumn("extra", F.lit("x"))
-        out = with_minhash(
-            df, "text", num_hashes=2, salt_chunk_tokens=8, salt_id_col="doc_id"
-        )
-        assert {"doc_id", "text", "extra", "sig_0", "sig_1"} == set(out.columns)
-        assert out.count() == len(self.ROWS)
-
-    def test_with_minhash_salt_requires_id(self, spark):
-        import pytest
-
-        with pytest.raises(ValueError, match="salt_id_col"):
-            with_minhash(self._df(spark), "text", salt_chunk_tokens=8)
+    """Near-dup removal over pre-chunked rows (spread on
+    (doc_id, chunk_pos)) must match the per-row path exactly."""
 
     def test_near_dup_removal_salted_identical(self, spark):
+        from etl_guiacores_spark.operators.chunking import prechunk_documents
         from etl_guiacores_spark.plans.corpus_pipeline import near_dup_removal
 
         docs = spark.createDataFrame(
@@ -234,7 +172,9 @@ class TestSaltedMinhash:
             "doc_id int, text string, source string",
         )
         surv_u, pairs_u = near_dup_removal(docs, 0.5)
-        surv_s, pairs_s = near_dup_removal(docs, 0.5, salt_chunk_tokens=16)
+        surv_s, pairs_s = near_dup_removal(
+            docs, 0.5, chunks=prechunk_documents(docs, chunk_tokens=16)
+        )
         assert sorted(r["doc_id"] for r in surv_u.collect()) == sorted(
             r["doc_id"] for r in surv_s.collect()
         )
@@ -245,25 +185,3 @@ class TestSaltedMinhash:
             if handle is not None:
                 handle.unpersist()
 
-
-def test_salted_minhash_null_or_duplicate_id_fails_loud(spark):
-    """The unique-id merge contract is enforced EAGERLY (round-10
-    review): a NULL id previously came back from with_minhash's join
-    with NULL signatures — indistinguishable from an empty document —
-    and a duplicate id silently min-merged two documents' signatures."""
-    import pytest
-
-    from etl_guiacores_spark.operators.similarity import salted_minhash
-
-    null_id = spark.createDataFrame(
-        [(1, "a b c d e f"), (None, "x y z w v u")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="1 NULL id row"):
-        salted_minhash(null_id, "doc_id", "text", chunk_tokens=4)
-    dup_id = spark.createDataFrame(
-        [(1, "a b c d e f"), (1, "x y z w v u")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="1 duplicate id row"):
-        salted_minhash(dup_id, "doc_id", "text", chunk_tokens=4)

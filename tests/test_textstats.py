@@ -224,9 +224,10 @@ class TestVocabOverlap:
 
 
 class TestSaltedTextScores:
-    """textstats.salted_text_scores must be BIT-identical to the
-    per-row quality_score/lang_id — the chunk-merged counters feed the
-    same formulas — for every edge the per-row operators handle."""
+    """The filter leg over pre-chunked rows must keep exactly the
+    documents the per-row quality_score/lang_id leg keeps — the
+    chunk-merged counters feed the same formulas — for every edge the
+    per-row operators handle."""
 
     DOCS = [
         (1, "the quick brown fox jumps over the lazy dog and it is a "
@@ -243,52 +244,8 @@ class TestSaltedTextScores:
         (11, "word " * 7),                           # exact chunk multiple
     ]
 
-    def _frames(self, spark):
-        from etl_guiacores_spark.operators.textstats import (
-            lang_id,
-            quality_score,
-        )
-
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        want = {
-            r["doc_id"]: (r["quality"], r["pred_lang"])
-            for r in df.select(
-                "doc_id",
-                quality_score(F.col("text")).alias("quality"),
-                lang_id(F.col("text")).alias("pred_lang"),
-            ).collect()
-        }
-        return df, want
-
-    def test_bit_identical_across_chunk_sizes(self, spark):
-        from etl_guiacores_spark.operators.textstats import (
-            salted_text_scores,
-        )
-
-        df, want = self._frames(spark)
-        for ct, cc in ((1, 1), (3, 5), (7, 4096), (4096, 16)):
-            got = {
-                r["doc_id"]: (r["quality"], r["pred_lang"])
-                for r in salted_text_scores(
-                    df, chunk_tokens=ct, chunk_chars=cc
-                ).collect()
-            }
-            assert got == want, (ct, cc)
-
-    def test_guards(self, spark):
-        import pytest
-
-        from etl_guiacores_spark.operators.textstats import (
-            salted_text_scores,
-        )
-
-        df, _ = self._frames(spark)
-        with pytest.raises(ValueError, match="chunk_tokens"):
-            salted_text_scores(df, chunk_tokens=0)
-        with pytest.raises(ValueError, match="chunk_chars"):
-            salted_text_scores(df, chunk_tokens=4, chunk_chars=0)
-
     def test_filter_documents_salted_equals_unsalted(self, spark):
+        from etl_guiacores_spark.operators.chunking import prechunk_documents
         from etl_guiacores_spark.plans.corpus_pipeline import (
             CorpusConfig,
             filter_documents,
@@ -300,37 +257,13 @@ class TestSaltedTextScores:
         )
         plain = filter_documents(df, CorpusConfig(min_quality=0.5))
         salted = filter_documents(
-            df, CorpusConfig(min_quality=0.5, salt_chunk_tokens=4)
+            df, CorpusConfig(min_quality=0.5),
+            chunks=prechunk_documents(df, chunk_tokens=4),
         )
         assert plain.columns == salted.columns
         assert sorted(map(tuple, plain.collect())) == sorted(
             map(tuple, salted.collect())
         )
-
-    def test_null_or_duplicate_doc_id_fails_loud(self, spark):
-        """The merge-key contract is enforced EAGERLY (round-10
-        review): an inner join back on doc_id would otherwise silently
-        drop NULL-id rows and mis-score duplicate-id rows — and an
-        in-plan guard is unreliable because join null-filter pushdown
-        can remove the NULL-keyed row below the guard projection."""
-        import pytest
-
-        from etl_guiacores_spark.operators.textstats import (
-            salted_text_scores,
-        )
-
-        null_id = spark.createDataFrame(
-            [(1, "the fine day"), (None, "el la de que")],
-            "doc_id long, text string",
-        )
-        with pytest.raises(ValueError, match="1 NULL id row"):
-            salted_text_scores(null_id, chunk_tokens=4)
-        dup_id = spark.createDataFrame(
-            [(1, "the fine day"), (1, "el la de que")],
-            "doc_id long, text string",
-        )
-        with pytest.raises(ValueError, match="1 duplicate id row"):
-            salted_text_scores(dup_id, chunk_tokens=4)
 
 
 class TestSaltedGopher:
@@ -344,59 +277,21 @@ class TestSaltedGopher:
         (8, "supercalifragilistic " * 30),
     ]
 
-    def test_bit_identical_across_chunk_sizes(self, spark):
-        """salted_gopher_quality == gopher_quality row-for-row: the
-        sums merge exactly and the distinct-stopword BITMASK (presence
-        bits, bit_or, bit_count) equals the per-row array_distinct
-        count by construction."""
-        from etl_guiacores_spark.operators.textstats import (
-            gopher_quality,
-            salted_gopher_quality,
-        )
-
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        want = sorted(tuple(r) for r in gopher_quality(df).collect())
-        for ct in (1, 3, 7, 4096):
-            got = sorted(
-                tuple(r)
-                for r in salted_gopher_quality(df, chunk_tokens=ct).collect()
-            )
-            assert got == want, ct
-
-    def test_id_contract_and_chunk_guard(self, spark):
-        import pytest
-
-        from etl_guiacores_spark.operators.textstats import (
-            salted_gopher_quality,
-        )
-
-        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        with pytest.raises(ValueError, match="chunk_tokens"):
-            salted_gopher_quality(df, chunk_tokens=0)
-        dup = spark.createDataFrame(
-            [(1, "a b"), (1, "c d")], "doc_id long, text string"
-        )
-        with pytest.raises(ValueError, match="1 duplicate id row"):
-            salted_gopher_quality(dup, chunk_tokens=4)
-        null_id = spark.createDataFrame(
-            [(1, "a b"), (None, "c d")], "doc_id long, text string"
-        )
-        with pytest.raises(ValueError, match="1 NULL id row"):
-            salted_gopher_quality(null_id, chunk_tokens=4)
-
     def test_counters_stay_long_in_both_twins(self, spark):
         """n_tokens is bigint in BOTH twins: the merged counters must
         not be cast back to int, or a >2^31-char document — the
-        giant-doc tail salting exists for — throws CAST_OVERFLOW under
-        ANSI instead of gating (round-10 advice item). Parity requires
-        the per-row twin to widen identically."""
+        giant-doc tail chunking exists for — throws CAST_OVERFLOW under
+        ANSI instead of gating. Parity requires the per-row twin to
+        widen identically."""
+        from etl_guiacores_spark.operators.chunking import prechunk_documents
         from etl_guiacores_spark.operators.textstats import (
             gopher_quality,
-            salted_gopher_quality,
+            prechunked_gopher_quality,
         )
 
         df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        for out in (gopher_quality(df), salted_gopher_quality(df)):
+        chunked = prechunked_gopher_quality(prechunk_documents(df))
+        for out in (gopher_quality(df), chunked):
             dt = dict(out.dtypes)
             assert dt["n_tokens"] == "bigint", dt
 
@@ -408,17 +303,18 @@ class TestSaltedGopher:
         import pytest
 
         from etl_guiacores_spark.operators import textstats
+        from etl_guiacores_spark.operators.chunking import prechunk_documents
 
         monkeypatch.setattr(
             textstats, "STOPWORDS", tuple(f"w{i}" for i in range(64))
         )
         df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
         with pytest.raises(ValueError, match="at most 63"):
-            textstats.salted_gopher_quality(df)
+            textstats.prechunked_gopher_quality(prechunk_documents(df))
 
     def test_pipeline_gate_salted_equals_unsalted(self, spark, tmp_path):
         """run_corpus_pipeline's gopher stage must land the identical
-        survivor set under the salt flag."""
+        survivor set under prechunk_tokens."""
         from etl_guiacores_spark.plans.corpus_pipeline import (
             CorpusConfig,
             run_corpus_pipeline,
@@ -435,7 +331,7 @@ class TestSaltedGopher:
         )
         m_salted = run_corpus_pipeline(
             docs, str(tmp_path / "salted"),
-            CorpusConfig(**base, salt_chunk_tokens=8),
+            CorpusConfig(**base, prechunk_tokens=8),
         )
         assert m_plain == m_salted
         plain_ids = sorted(

@@ -16,8 +16,9 @@ The fake-transport number is the FRAMEWORK ceiling (network-free);
 a real deployment divides by its HTTP latency / rate limit, which
 the token bucket enforces per partition. For scale honesty the soak
 also runs a rate-limited arm (--rate) and asserts wall time is
-within tolerance of n / (rate * partitions) — i.e. the limiter
-bounds each partition independently instead of serializing the job.
+within tolerance of n / (rate * partitions) * ceil(partitions / cores)
+— i.e. the limiter bounds each partition independently instead of
+serializing the job.
 
 Usage: python tools/soak_fetch.py [--urls N] [--partitions P]
                                   [--rate R] [--repeats K]
@@ -101,11 +102,15 @@ def main() -> int:
     assert env["parsed_ok"] == expect_ok, (env, expect_ok)
 
     # --- rate-limited arm: the limiter must bound per PARTITION ------
-    # ideal wall = n / (rate * partitions); serialization across
-    # partitions would show ~partitions x that. Allow generous slack
-    # for startup + uneven partition sizes.
+    # one partition's share takes n / (rate * partitions) seconds, and
+    # the cores run ceil(partitions / cores) waves of partitions, so
+    # ideal wall = n / (rate * partitions) * waves; serialization
+    # across partitions would show ~partitions x the one-wave figure.
+    # Allow generous slack for startup + uneven partition sizes.
     rw, renv = run_once(args.rate_urls, rate=args.rate)
-    ideal = args.rate_urls / (args.rate * args.partitions)
+    cores = spark.sparkContext.defaultParallelism
+    waves = -(-args.partitions // cores)
+    ideal = args.rate_urls / (args.rate * args.partitions) * waves
     assert renv["rows"] == args.rate_urls, renv
     limiter_ok = rw < ideal * 3 + 2.0
 
@@ -121,6 +126,7 @@ def main() -> int:
         "rate_arm": {
             "urls": args.rate_urls,
             "rate_per_partition": args.rate,
+            "cores": cores,
             "wall_s": round(rw, 2),
             "ideal_wall_s": round(ideal, 2),
             "per_partition_bound_held": limiter_ok,

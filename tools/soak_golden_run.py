@@ -64,21 +64,15 @@ def main() -> int:
     ap.add_argument("--mixture-total", type=int, default=3000)
     ap.add_argument("--skew", action="store_true")
     ap.add_argument("--hot-n", type=int, default=800)
-    # round-9 verdict lever: salt the shingle/minhash pass by
-    # (doc_id, chunk) so per-task work is bounded by the chunk size
-    # instead of the Zipf document-length tail; run --skew with and
-    # without this flag and compare task_skew_top + the metrics
-    # envelope (outputs must be identical — signatures are bit-equal)
-    ap.add_argument("--salt-chunk", type=int, default=None)
-    # round-11 lever: ALSO write the pre-chunked bronze layout at
-    # ingest and feed the salted stages from it — the one-time bronze
-    # write pays the fat-document tokenization once; the consuming
-    # scans read balanced chunk rows. Compare task_skew_top per stage
-    # NAME: with --prechunk the remaining high-ratio stages should be
-    # the bronze write itself (one-time) while the filter/shingle/
-    # gopher scans drop to the shuffle-balance floor.
-    ap.add_argument("--prechunk", action="store_true")
-    # the span stages REWRITE text. Since round 12 the pipeline
+    # write the pre-chunked bronze layout (chunks of N tokens) at
+    # ingest and feed every heavy text stage from it, so per-task work
+    # is bounded by the chunk size instead of the Zipf document-length
+    # tail; run --skew with and without it and compare task_skew_top
+    # per stage NAME + the metrics envelope (outputs must be
+    # identical). With it, the remaining high-ratio stage should be
+    # the one-time bronze write itself.
+    ap.add_argument("--prechunk-tokens", type=int, default=None)
+    # the span stages REWRITE text. With --prechunk-tokens the pipeline
     # re-chunks rewritten survivors (bronze_rechunked after the span
     # strip, bronze_restripped after near-dup), so near-dup AND the
     # gopher gate read chunk rows in EVERY config — no stage
@@ -213,8 +207,7 @@ def main() -> int:
         write_shards=True,
         budget_tokens=512,
         sequences_per_shard=1000,
-        salt_chunk_tokens=args.salt_chunk,
-        prechunk=args.prechunk,
+        prechunk_tokens=args.prechunk_tokens,
     )
     stage_t: dict[str, float] = {}
     last = time.time()
@@ -356,7 +349,7 @@ def main() -> int:
                     "median_ms": int(d[1]),
                     "max_ms": int(d[2]),
                     # attribution: which pipeline phase owns the skew
-                    # (the --prechunk A/B reads this to tell the
+                    # (the --prechunk-tokens A/B reads this to tell the
                     # one-time bronze write from consuming scans)
                     "name": (s.get("name") or "")[:48],
                 }
@@ -369,8 +362,7 @@ def main() -> int:
         json.dumps(
             {
                 "soak": "golden_run_skew" if args.skew else "golden_run",
-                "salt_chunk": args.salt_chunk,
-                "prechunk": args.prechunk,
+                "prechunk_tokens": args.prechunk_tokens,
                 "span_stages": not args.no_span_stages,
                 "replicas": args.replicas,
                 "hot_n": args.hot_n if args.skew else None,
