@@ -86,6 +86,10 @@ TOUCHED_SINCE: dict[str, int] = {
     "q196_salted_quality_lang": 15,
     "q197_salted_gopher": 15,
     "q200_prechunked_span_strip": 15,
+    # round 15: the near-dup queries call the corpus pipeline's
+    # near_dup_pairs (one signature pass, one verify)
+    "q50_corpus_dedup_survivors": 15,
+    "q85_split_leakage": 15,
 }
 
 

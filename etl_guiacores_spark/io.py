@@ -390,59 +390,3 @@ def append_audit_log(spark: SparkSession, path: str, **fields) -> None:
     schema = T.StructType([T.StructField("entry", T.StringType(), True)])
     df = local_frame(spark, [(_json.dumps(row, default=str),)], schema)
     df.write.mode("append").json(path)
-
-
-def jdbc_upsert(
-    df: DataFrame,
-    url: str,
-    table: str,
-    key: str,
-    properties: dict | None = None,
-) -> None:
-    """L4 — JDBC sink, merge-then-overwrite FALLBACK: read the target,
-    ``merge_upsert`` with the batch, write back. Quadratic over time on
-    a growing target and not atomic — use
-    ``jdbc_merge.jdbc_keyed_upsert`` (staging table + one on-database
-    MERGE/ON CONFLICT statement) wherever the target supports it; this
-    path remains for targets with no upsert syntax at all. Raises a
-    clear error when no JDBC driver is on the classpath — none ships in
-    this container (reference: src/extractors/manual_scraper.py:197-295)."""
-    from etl_guiacores_spark.operators.joins import merge_upsert
-
-    spark = df.sparkSession
-    props = properties or {}
-    try:
-        try:
-            target = spark.read.jdbc(url, table, properties=props)
-        except Exception as read_err:
-            from etl_guiacores_spark.jdbc_merge import missing_driver
-
-            if missing_driver(read_err):
-                raise
-            # first-ever upsert: the target may simply not exist yet —
-            # bootstrap by writing the batch as the initial load (the
-            # create-on-first-write the reference's init_db performs).
-            # If the read actually failed for another reason (auth,
-            # network), this write fails too and THAT error surfaces.
-            df.write.jdbc(url, table, mode="errorifexists", properties=props)
-            return
-        merged = merge_upsert(target, df, key)
-        # MATERIALIZE + SEVER LINEAGE before the overwrite: the merged
-        # plan lazily READS the same table the overwrite is about to
-        # drop. persist()+count() is not enough — a lost/evicted cache
-        # block would silently RECOMPUTE its partition from lineage
-        # against the already-emptied target. localCheckpoint truncates
-        # the lineage entirely: after it, block loss fails the job
-        # loudly instead of fabricating rows from a dropped table.
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.jdbc(url, table, mode="overwrite", properties=props)
-    except Exception as e:  # pragma: no cover - no JDBC driver in test env
-        # only a genuinely missing driver earns the classpath hint;
-        # SQL/auth/constraint errors must surface as themselves
-        from etl_guiacores_spark.jdbc_merge import missing_driver
-
-        if missing_driver(e):
-            raise RuntimeError(
-                f"jdbc_upsert needs a JDBC driver for {url} on the Spark classpath"
-            ) from e
-        raise

@@ -11,8 +11,7 @@ scalable twin:
 2. one set-based ``MERGE INTO`` / ``INSERT ... ON CONFLICT`` from
    staging into the target, executed ON the database (a single
    statement regardless of batch size — no read-modify-write of the
-   whole target, unlike the merge-then-overwrite fallback in
-   ``io.jdbc_upsert``),
+   whole target),
 3. drop staging.
 
 SQL generation is split out pure (``bootstrap_ddl`` / ``merge_sql``)
@@ -81,9 +80,7 @@ def staging_name(table: str) -> str:
 
 def missing_driver(e: Exception) -> bool:
     """True only for a genuinely absent JDBC driver — SQL/auth/network
-    failures must surface as themselves, not as a classpath hint.
-    Shared by every JDBC entry point so a new driver-missing signature
-    gets added in exactly one place."""
+    failures must surface as themselves, not as a classpath hint."""
     msg = str(e)
     return "No suitable driver" in msg or "ClassNotFound" in msg
 

@@ -329,8 +329,8 @@ def lsh_candidate_pairs_from_sigs(
     cache-read + explode per join side, so a second cache entry would
     cost population + memory for nothing. When it does persist, the
     handle rides out on the result as the ``staged_bands`` attribute —
-    unpersist it after the consuming action (run_corpus_pipeline
-    does), or ``spark.catalog.clearCache()`` between jobs."""
+    unpersist it after the consuming action, or
+    ``spark.catalog.clearCache()`` between jobs."""
     bands = band_rows(sigs, id_col, num_hashes)
     sigs_cached = sigs.storageLevel.useMemory or sigs.storageLevel.useDisk
     if not sigs_cached:
@@ -348,8 +348,8 @@ def lsh_candidate_pairs_from_sigs(
         # GC-reclaimed, so without this no caller could ever release
         # the band cache — each dedup invocation would leak one entry
         # for the session lifetime (LRU pressure on everything else).
-        # Callers unpersist after their consuming action (see
-        # run_corpus_pipeline), or clearCache between jobs (bench.py).
+        # Callers unpersist after their consuming action, or
+        # clearCache between jobs (bench.py).
         pairs.staged_bands = bands
     return pairs
 
@@ -395,6 +395,39 @@ def jaccard_of_shingles(sa: Column, sb: Column) -> Column:
     union = F.size(F.array_union(sa, sb))
     return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
         F.lit(0.0)
+    )
+
+
+def verified_pairs(
+    candidates: DataFrame,
+    shingles: DataFrame,
+    threshold: float,
+    shingles_b: DataFrame | None = None,
+) -> DataFrame:
+    """The exact-Jaccard verify of an LSH candidate list: each
+    ``(id_a, id_b)`` candidate joins its shingle array on both sides
+    and is kept when ``jaccard >= threshold``. Output
+    ``(id_a, id_b, jaccard)``.
+
+    ``shingles`` is a ``(doc_id, shingles)`` table (a staged
+    ``staged_minhash_shingles`` / ``prechunked_minhash`` frame);
+    ``shingles_b`` is the id_b side when it differs (an incremental
+    batch verified against staged history plus itself)."""
+    b = shingles if shingles_b is None else shingles_b
+    return (
+        candidates.join(
+            shingles.select(
+                F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
+            ),
+            "id_a",
+        )
+        .join(
+            b.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")),
+            "id_b",
+        )
+        .withColumn("jaccard", jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 

@@ -41,13 +41,10 @@ from etl_guiacores_spark.operators.chunking import (
 )
 from etl_guiacores_spark.operators.dedupe import dedupe_keyed_first
 from etl_guiacores_spark.operators.similarity import (
-    jaccard_of_shingles,
-    lsh_candidate_pairs,
     lsh_candidate_pairs_from_sigs,
     prechunked_minhash,
     staged_minhash_shingles,
-    with_minhash,
-    word_shingles,
+    verified_pairs,
 )
 from etl_guiacores_spark.operators.textstats import fingerprint, lang_id, quality_score
 
@@ -211,85 +208,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     return dedupe_keyed_first(with_fp, ["fp"], ["doc_id"]).drop("fp")
 
 
-def near_dup_removal(
-    docs: DataFrame,
-    threshold: float,
-    cluster_exact: bool = False,
-    portable: bool = False,
-    validate_ids: bool = True,
-    chunks: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (survivors, removed_pairs). LSH proposes, exact Jaccard
-    verifies; survivors are either one-per-connected-component
-    (``cluster_exact``, iterative label propagation) or the greedy
-    drop-higher-id-of-each-pair rule (one pass, conservative).
-
-    ``chunks`` (a pre-chunked bronze table covering at least the ids
-    in ``docs``, with text identical to what the chunks were written
-    from) routes the shingle pass through
-    ``similarity.prechunked_minhash``: the scan reads balanced chunk
-    rows, no task tokenizes a whole document. ONE persisted
-    (id, shingles, sigs) table, restricted to ``docs``' ids, feeds
-    both the LSH banding and the Jaccard verify; the handle rides out
-    on the pair result as ``staged_sigs`` (the pipeline releases it
-    after landing the pairs, same lifecycle as ``staged_bands``)."""
-    staged_sigs = None
-    if chunks is not None:
-        # an uncovered doc would have NO signature rows and become an
-        # automatic near-dup survivor — silently; probe unless the
-        # caller vouches (the pipeline wrote the bronze this run)
-        if validate_ids:
-            from etl_guiacores_spark.operators.chunking import (
-                require_chunk_coverage,
-            )
-
-            require_chunk_coverage(
-                docs, chunks, "doc_id", "near_dup_removal"
-            )
-        # keep_ids INSIDE the operator, not a pre-join here: the
-        # operator self-joins its chunk input, so a caller-side
-        # semi-join would execute twice
-        staged_sigs = prechunked_minhash(
-            chunks, "doc_id", portable=portable, with_shingles=True,
-            validate=validate_ids, keep_ids=docs,
-        ).persist()
-        candidates = lsh_candidate_pairs_from_sigs(staged_sigs, "doc_id")
-        sh = staged_sigs.select("doc_id", F.col("shingles").alias("sh"))
-    else:
-        candidates = lsh_candidate_pairs(docs, "doc_id", "text", portable=portable)
-        sh = docs.select("doc_id", word_shingles(F.col("text")).alias("sh"))
-    verified = (
-        candidates.join(sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn("jaccard", jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if cluster_exact:
-        from etl_guiacores_spark.operators.graph import connected_components
-
-        labels = connected_components(
-            docs.select("doc_id"), verified.select("id_a", "id_b"), id_col="doc_id"
-        )
-        survivors = docs.join(
-            labels.filter(F.col("id") == F.col("component")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-        )
-    else:
-        # The doomed-id set scales with the corpus dup rate — no
-        # broadcast hint; AQE picks broadcast only when it truly fits.
-        doomed = verified.select(F.col("id_b").alias("doc_id")).distinct()
-        survivors = docs.join(doomed, "doc_id", "left_anti")
-    # ride the cache handles out to the pipeline so they can be
-    # released once the consuming actions finish (similarity.py
-    # persists them per invocation and CacheManager never GCs them)
-    verified.staged_bands = getattr(candidates, "staged_bands", None)
-    verified.staged_sigs = staged_sigs
-    return survivors, verified
-
-
 def _staged_sigs_for(
     docs: DataFrame,
     portable: bool,
@@ -298,12 +216,16 @@ def _staged_sigs_for(
     op_name: str,
 ) -> DataFrame:
     """One PERSISTED ``(doc_id, shingles, sig_0..k-1)`` frame for
-    ``docs`` — per row, or from ``chunks`` when given — the ONE copy
-    of that dispatch shared by the staged-shape functions
-    (stage_corpus_artifacts, incremental_near_dup,
-    append_corpus_artifacts), so the coverage probe cannot drift
-    between copies. The caller owns the returned handle's unpersist,
-    per the staged_minhash_shingles lifecycle."""
+    ``docs``: per row through ``staged_minhash_shingles``, or from
+    ``chunks`` through ``prechunked_minhash`` (bit-identical
+    signatures; shingle sets sorted on the chunk leg, and every
+    consumer treats them as sets). It is the one signature pass of
+    every near-dup path — ``near_dup_pairs`` (so the golden run and
+    ``near_dup_removal``), ``stage_corpus_artifacts``,
+    ``incremental_near_dup`` and ``append_corpus_artifacts`` — so the
+    corpus is shingled once per call and the coverage probe cannot
+    drift between copies. The caller owns the returned handle's
+    unpersist, per the staged_minhash_shingles lifecycle."""
     if chunks is not None:
         if validate_ids:
             from etl_guiacores_spark.operators.chunking import (
@@ -311,16 +233,85 @@ def _staged_sigs_for(
             )
 
             # an uncovered doc would silently get NO signature rows:
-            # dropped from staged tables / auto-admitted by the
-            # incremental dedup — the same failure mode
-            # near_dup_removal probes for
+            # an automatic near-dup survivor, dropped from staged
+            # tables, or auto-admitted by the incremental dedup
             require_chunk_coverage(docs, chunks, "doc_id", op_name)
+        # keep_ids INSIDE the operator, not a pre-join here: the
+        # operator self-joins its chunk input, so a caller-side
+        # semi-join would execute twice
         return prechunked_minhash(
             chunks, "doc_id", portable=portable, with_shingles=True,
             validate=validate_ids, keep_ids=docs,
         ).persist()
     # staged_minhash_shingles persists internally
     return staged_minhash_shingles(docs, "doc_id", "text", portable=portable)
+
+
+def near_dup_pairs(
+    docs: DataFrame,
+    threshold: float,
+    portable: bool = False,
+    validate_ids: bool = True,
+    chunks: DataFrame | None = None,
+) -> DataFrame:
+    """The verified near-dup pairs ``(id_a, id_b, jaccard)`` of
+    ``docs``, id_a < id_b: LSH proposes, exact Jaccard verifies. ONE
+    persisted (id, shingles, sigs) table from ``_staged_sigs_for``
+    (per row, or from the pre-chunked ``chunks`` table covering at
+    least ``docs``' ids) feeds both the banding and the verify. Lazy;
+    the handle rides out on the result as ``staged_sigs`` — release
+    it once the consuming action has run (the pipeline does so after
+    landing the pairs)."""
+    staged = _staged_sigs_for(
+        docs, portable, chunks, validate_ids, "near_dup_removal"
+    )
+    pairs = verified_pairs(
+        lsh_candidate_pairs_from_sigs(staged, "doc_id"), staged, threshold
+    )
+    pairs.staged_sigs = staged
+    return pairs
+
+
+def near_dup_survivors(
+    docs: DataFrame, pairs: DataFrame, cluster_exact: bool = False
+) -> DataFrame:
+    """The survivor rule over verified ``pairs``: one survivor per
+    connected component, the lowest id (``cluster_exact``, exact), or
+    greedy drop-the-higher-id of each pair (one pass, conservative).
+    Under ``cluster_exact`` the components are computed eagerly (the
+    graph operator's driver-local gate fetches the edges), so pass
+    LANDED pairs to run the pair leg once."""
+    if cluster_exact:
+        from etl_guiacores_spark.operators.graph import connected_components
+
+        labels = connected_components(
+            docs.select("doc_id"), pairs.select("id_a", "id_b"), id_col="doc_id"
+        )
+        return docs.join(
+            labels.filter(F.col("id") == F.col("component")).select(
+                F.col("id").alias("doc_id")
+            ),
+            "doc_id",
+        )
+    # The doomed-id set scales with the corpus dup rate — no
+    # broadcast hint; AQE picks broadcast only when it truly fits.
+    doomed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return docs.join(doomed, "doc_id", "left_anti")
+
+
+def near_dup_removal(
+    docs: DataFrame,
+    threshold: float,
+    cluster_exact: bool = False,
+    portable: bool = False,
+    validate_ids: bool = True,
+    chunks: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (survivors, removed_pairs): ``near_dup_survivors`` over
+    ``near_dup_pairs``. The pairs carry the ``staged_sigs`` handle to
+    release after the consuming actions."""
+    pairs = near_dup_pairs(docs, threshold, portable, validate_ids, chunks)
+    return near_dup_survivors(docs, pairs, cluster_exact), pairs
 
 
 def stage_corpus_artifacts(
@@ -365,36 +356,6 @@ def stage_corpus_artifacts(
     return {"shingles": shingles_t, "sigs": sigs_t}
 
 
-def near_dup_removal_staged(
-    docs: DataFrame, tables: dict[str, str], threshold: float
-) -> tuple[DataFrame, DataFrame]:
-    """near_dup_removal over pre-staged bucketed artifacts: candidates
-    come from the signature table (no re-hashing), the Jaccard verify
-    joins the bucketed shingle table on its bucket key — the planner
-    elides the exchange under each shingle scan (plan-asserted in
-    tests), so only the slim (id_a, id_b) pair list shuffles."""
-    spark = docs.sparkSession
-    candidates = lsh_candidate_pairs_from_sigs(spark.table(tables["sigs"]), "doc_id")
-    sh = spark.table(tables["shingles"])
-    sh_a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        candidates.hint("merge")
-        .join(sh_a, "id_a")
-        .hint("merge")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    doomed = verified.select(F.col("id_b").alias("doc_id")).distinct()
-    survivors = docs.join(doomed, "doc_id", "left_anti")
-    # same band-cache handoff as near_dup_removal: the per-invocation
-    # persisted band table must be releasable by the caller
-    verified.staged_bands = getattr(candidates, "staged_bands", None)
-    return survivors, verified
-
-
 def incremental_near_dup(
     new_docs: DataFrame,
     tables: dict[str, str],
@@ -422,21 +383,15 @@ def incremental_near_dup(
     from etl_guiacores_spark.operators.similarity import band_rows
 
     spark = new_docs.sparkSession
-    # the pre-chunked leg stages ONE (id, shingles, sigs) table that
-    # serves both the banding below and the shingle verify; the handle
-    # rides out on the pair result as staged_sigs, same lifecycle
-    # contract as near_dup_removal's
-    staged_new = None
-    if chunks is not None:
-        staged_new = _staged_sigs_for(
-            new_docs, portable, chunks, validate_ids, "incremental_near_dup"
-        )
-        new_sigs = staged_new.drop("shingles")
-    else:
-        new_sigs = with_minhash(
-            new_docs.select("doc_id", "text"), "text", portable=portable
-        ).drop("text")
+    # ONE staged (id, shingles, sigs) batch table serves both the
+    # banding below and the shingle verify; the handle rides out on
+    # the pair result as staged_sigs, same lifecycle contract as
+    # near_dup_pairs'
+    staged_new = _staged_sigs_for(
+        new_docs, portable, chunks, validate_ids, "incremental_near_dup"
+    )
     try:
+        new_sigs = staged_new.drop("shingles")
         # replay-safety: a re-delivered batch may already be IN the staged
         # tables; its own staged copies must not doom it
         staged_sigs = spark.table(tables["sigs"])
@@ -478,44 +433,28 @@ def incremental_near_dup(
             .select("id_a", "id_b")
             .distinct()
         )
-        if staged_new is not None:
-            new_sh = staged_new.select(
-                "doc_id", F.col("shingles").alias("sh")
-            )
-        else:
-            new_sh = new_docs.select(
-                "doc_id", word_shingles(F.col("text")).alias("sh")
-            )
+        new_sh = staged_new.select("doc_id", "shingles")
         # replay-safety on the SHINGLE side too: a re-delivered batch's
         # rows may already sit in the staged table, and keeping both
         # copies would fan every verified pair out twice through the id_a
         # join (the sigs table above gets the same left_anti)
         all_sh = (
             spark.table(tables["shingles"])
+            .withColumnRenamed("sh", "shingles")
             .join(new_docs.select("doc_id"), on="doc_id", how="left_anti")
             .unionByName(new_sh)
         )
-        verified = (
-            candidates.join(
-                all_sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-            )
-            .join(new_sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-            .withColumn("jaccard", jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-        doomed = verified.select(F.col("id_b").alias("doc_id")).distinct()
-        survivors = new_docs.join(doomed, "doc_id", "left_anti")
+        verified = verified_pairs(candidates, all_sh, threshold, shingles_b=new_sh)
+        survivors = near_dup_survivors(new_docs, verified)
         # caller releases once the consuming action has run — the same
-        # handle-riding contract as near_dup_removal's staged_sigs
+        # handle-riding contract as near_dup_pairs' staged_sigs
         verified.staged_sigs = staged_new
     except BaseException:
         # ANY raise before the handle reaches the caller (missing or
         # renamed staged table, schema mismatch, analysis error) must
         # release the just-persisted batch signatures, or the cache
         # entry leaks for the session lifetime (round-11 advice item)
-        if staged_new is not None:
-            staged_new.unpersist()
+        staged_new.unpersist()
         raise
     return survivors, verified
 
@@ -536,28 +475,19 @@ def append_corpus_artifacts(
     survivors frame from ``incremental_near_dup``) re-reads them on its
     next action and would now see the batch's own signatures —
     materialize (collect/write) the survivors BEFORE appending."""
-    if chunks is not None:
-        handle = _staged_sigs_for(
-            new_docs, portable, chunks, validate_ids,
-            "append_corpus_artifacts",
-        )
-        staged = handle.withColumnRenamed("shingles", "sh")
-        try:
-            staged.select("doc_id", "sh").write.mode("append").format(
-                "parquet"
-            ).insertInto(tables["shingles"])
-            staged.drop("sh").write.mode("append").format(
-                "parquet"
-            ).insertInto(tables["sigs"])
-        finally:
-            handle.unpersist()
-        return
-    sh = new_docs.select("doc_id", word_shingles(F.col("text")).alias("sh"))
-    sh.write.mode("append").format("parquet").insertInto(tables["shingles"])
-    sigs = with_minhash(
-        new_docs.select("doc_id", "text"), "text", portable=portable
-    ).drop("text")
-    sigs.write.mode("append").format("parquet").insertInto(tables["sigs"])
+    handle = _staged_sigs_for(
+        new_docs, portable, chunks, validate_ids, "append_corpus_artifacts"
+    )
+    staged = handle.withColumnRenamed("shingles", "sh")
+    try:
+        staged.select("doc_id", "sh").write.mode("append").format(
+            "parquet"
+        ).insertInto(tables["shingles"])
+        staged.drop("sh").write.mode("append").format(
+            "parquet"
+        ).insertInto(tables["sigs"])
+    finally:
+        handle.unpersist()
 
 
 def streaming_corpus_ingest(
@@ -601,7 +531,7 @@ def streaming_corpus_ingest(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        survivors, _ = incremental_near_dup(
+        survivors, pairs = incremental_near_dup(
             batch_df.select("doc_id", "text"), tables, threshold, portable=portable
         )
         # execute the dedup plan ONCE via the idempotent per-batch
@@ -609,7 +539,12 @@ def streaming_corpus_ingest(
         # never collect(): a big backlog batch carrying full document
         # text would OOM the driver
         out = f"{accepted_dir}/batch={batch_id}"
-        survivors.write.mode("overwrite").parquet(out)
+        try:
+            survivors.write.mode("overwrite").parquet(out)
+        finally:
+            # the batch signatures are consumed: release them, or
+            # every micro-batch leaks one cache entry
+            pairs.staged_sigs.unpersist()
         spark_b = batch_df.sparkSession
         accepted = spark_b.read.schema(survivors.schema).parquet(out)
         if not accepted.isEmpty():
@@ -1026,14 +961,14 @@ def run_corpus_pipeline(
                 )
                 emit("bronze_rechunked", {"records": n_rechunk})
 
-    # land the VERIFIED PAIRS, not the lazy survivor plan: both the
-    # survivor derivation and the pair count then read the stored pair
-    # list, so the LSH+Jaccard leg — the most expensive in the
-    # pipeline — executes exactly once
-    survivors_lazy, dup_pairs = near_dup_removal(
+    # land the VERIFIED PAIRS, then derive the survivors from the
+    # STORED pair list: the LSH+Jaccard leg — the most expensive in
+    # the pipeline — executes exactly once, also under cluster_exact
+    # (whose components are computed eagerly), and not at all on a
+    # resume over a fenced dup_pairs
+    dup_pairs = near_dup_pairs(
         exact,
         config.near_dup_jaccard,
-        cluster_exact=config.cluster_exact,
         portable=config.portable_hashes,
         validate_ids=False,  # checked once at ingest
         # bronze is always current here: it reflects ingest text, and
@@ -1041,32 +976,13 @@ def run_corpus_pipeline(
         # refresh above re-derived it from the landed rewritten text
         chunks=bronze,
     )
-    pairs, n_pairs = _land(dup_pairs, "dup_pairs")
-    staged_bands = getattr(dup_pairs, "staged_bands", None)
-    if staged_bands is not None:  # the pairs are materialized — release
-        staged_bands.unpersist()
-    staged_sigs = getattr(dup_pairs, "staged_sigs", None)
-    if staged_sigs is not None:  # bronze path: release the sig cache too
-        staged_sigs.unpersist()
-    if config.cluster_exact:
-        from etl_guiacores_spark.operators.graph import connected_components
-
-        labels = connected_components(
-            exact.select("doc_id"), pairs.select("id_a", "id_b"), id_col="doc_id"
-        )
-        survivors_lazy = exact.join(
-            labels.filter(F.col("id") == F.col("component")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-        )
-    else:
-        survivors_lazy = exact.join(
-            pairs.select(F.col("id_b").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        )
-    survivors, n_clean = _land(survivors_lazy, "clean")
+    try:
+        pairs, n_pairs = _land(dup_pairs, "dup_pairs")
+    finally:  # landed (or failed): release the sig cache
+        dup_pairs.staged_sigs.unpersist()
+    survivors, n_clean = _land(
+        near_dup_survivors(exact, pairs, config.cluster_exact), "clean"
+    )
     emit("near_dup", {"records": n_clean})
 
     span_totals = None

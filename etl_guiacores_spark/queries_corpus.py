@@ -800,29 +800,10 @@ _SPLIT_CTE = """,
     "leakage join moves only (id, split) pairs.",
 )
 def q85_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_guiacores_spark.operators.similarity import (
-        jaccard_of_shingles,
-        lsh_candidate_pairs_from_sigs,
-        staged_minhash_shingles,
-    )
+    from etl_guiacores_spark.plans.corpus_pipeline import near_dup_pairs
 
     d = _docs(spark, sf_dir)
-    docs = d.select("doc_id", "text")
-    staged = staged_minhash_shingles(docs, "doc_id", "text")
-    candidates = lsh_candidate_pairs_from_sigs(staged, "doc_id")
-    sh = staged.select("doc_id", F.col("shingles").alias("sh"))
-    verified = (
-        candidates.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
-            "id_b",
-        )
-        .filter(jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")) >= 0.6)
-        .select("id_a", "id_b")
-    )
+    verified = near_dup_pairs(d.select("doc_id", "text"), 0.6, portable=True)
     splits = hash_split(
         load_table(spark, "documents", sf_dir).select("doc_id"),
         "doc_id",

@@ -667,31 +667,16 @@ def q49_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "core as one oracle-checked query.",
 )
 def q50_corpus_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_guiacores_spark.operators.similarity import (
-        jaccard_of_shingles,
-        lsh_candidate_pairs_from_sigs,
-        staged_minhash_shingles,
+    from etl_guiacores_spark.plans.corpus_pipeline import (
+        near_dup_pairs,
+        near_dup_survivors,
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     docs = d.select("doc_id", "text")
-    staged = staged_minhash_shingles(docs, "doc_id", "text")
-    candidates = lsh_candidate_pairs_from_sigs(staged, "doc_id")
-    sh = staged.select("doc_id", F.col("shingles").alias("sh"))
-    verified = (
-        candidates.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-        )
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .filter(jaccard_of_shingles(F.col("sh_a"), F.col("sh_b")) >= 0.6)
-        .select("id_b")
-        .distinct()
-    )
-    # No broadcast hint on the duplicate-id set: at a high dup rate the
-    # set grows with the corpus, so let AQE pick the join strategy.
-    return docs.join(
-        verified.withColumnRenamed("id_b", "doc_id"), "doc_id", "left_anti"
-    ).select("doc_id")
+    # portable md5 signatures: the oracle reproduces them bit-for-bit
+    pairs = near_dup_pairs(docs, 0.6, portable=True)
+    return near_dup_survivors(docs, pairs).select("doc_id")
 
 
 @register(

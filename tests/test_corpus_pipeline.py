@@ -72,42 +72,33 @@ def test_cluster_exact_keeps_one_per_component(spark, tmp_path):
     assert clean_ids == {1}  # one survivor per component, minimum id
 
 
-def test_staged_bucketed_near_dup(spark):
-    """Bucketed signature/shingle artifacts: same survivors as the
-    direct path, and the verify join's heavy (array-carrying) shingle
-    scans are bucket-aligned — no exchange on the bucketed side."""
-    from pyspark.sql import functions as F
+def test_cluster_exact_components_run_once(spark, tmp_path, monkeypatch):
+    """Under cluster_exact the pipeline lands the verified pairs and
+    derives the survivors from the landed table, so connected
+    components run once per run — on a fresh run and on a resume over
+    the finished out_dir — never a second time inside the pair leg."""
+    from etl_guiacores_spark.operators import graph
 
-    from etl_guiacores_spark.plans.corpus_pipeline import (
-        near_dup_removal,
-        near_dup_removal_staged,
-        stage_corpus_artifacts,
-    )
-    from etl_guiacores_spark.sources.tables import load_table
+    calls = []
+    real = graph.connected_components
 
-    docs = (
-        load_table(spark, "documents", "/root/testdata/sf0.001")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", "text")
-    )
-    tables = stage_corpus_artifacts(docs, "corpus_bkt_test", num_buckets=4)
-    try:
-        staged_surv, staged_ver = near_dup_removal_staged(docs, tables, 0.6)
-        direct_surv, _ = near_dup_removal(docs, 0.6)
-        assert sorted(r["doc_id"] for r in staged_surv.collect()) == sorted(
-            r["doc_id"] for r in direct_surv.collect()
-        )
-        staged_ver.collect()
-        plan = staged_ver._jdf.queryExecution().executedPlan().toString()
-        # both shingle-table joins read bucket-aligned splits...
-        assert plan.count("Bucketed: true") >= 2
-        # ...and the bucket key itself is never re-shuffled: only the
-        # slim candidate-pair side exchanges (on id_a/id_b)
-        assert "Exchange hashpartitioning(doc_id" not in plan
-        assert plan.count("Exchange hashpartitioning") <= 2
-    finally:
-        for t in tables.values():
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "connected_components", spy)
+    base = "the quick brown fox jumps over the lazy dog again and again it runs far"
+    b = base.replace("lazy", "sleepy")
+    c = b.replace("quick", "rapid").replace("brown", "red")
+    docs = spark.createDataFrame([(1, base), (2, b), (3, c)], ["doc_id", "text"])
+    cfg = CorpusConfig(min_quality=0.0, near_dup_jaccard=0.3, cluster_exact=True,
+                       chunk_tokens=8, chunk_overlap=2)
+    out = str(tmp_path / "cc")
+    fresh = run_corpus_pipeline(docs, out, cfg)
+    assert len(calls) == 1
+    resumed = run_corpus_pipeline(docs, out, cfg, resume=True)
+    assert len(calls) == 2  # exactly one more, on the resume
+    assert resumed == fresh and fresh["after_near_dup"] == 1
 
 
 def test_incremental_near_dup_matches_full_recompute(spark):
@@ -202,6 +193,8 @@ def test_streaming_corpus_ingest(spark, tmp_path):
     inp = str(tmp_path / "incoming")
     acc = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     try:
         batch_a.write.mode("append").parquet(inp)
         q = streaming_corpus_ingest(spark, inp, tables, acc, ckpt, threshold=0.6)
@@ -210,6 +203,8 @@ def test_streaming_corpus_ingest(spark, tmp_path):
         batch_b.write.mode("append").parquet(inp)
         q = streaming_corpus_ingest(spark, inp, tables, acc, ckpt, threshold=0.6)
         q.awaitTermination(120)
+        # every micro-batch released its staged batch signatures
+        assert cm.isEmpty(), "streaming ingest leaked a cache entry"
 
         got_ids = {r["doc_id"] for r in spark.read.parquet(acc).collect()}
         assert got_ids == exp_ids
@@ -275,29 +270,28 @@ def test_incremental_near_dup_releases_staged_on_raise(spark):
     spark.catalog.clearCache()
     assert cm.isEmpty()
 
-    # raise path 1: staged tables don't exist (spark.table raises
-    # BEFORE the schema check) — the chunk leg persists batch sigs first
     batch = docs.filter("doc_id >= 100")
-    chunks = prechunk_documents(batch, chunk_tokens=8)
-    with pytest.raises(Exception):
-        incremental_near_dup(
-            batch,
-            {"sigs": "no_such_sigs_tbl", "shingles": "no_such_sh_tbl"},
-            0.6, chunks=chunks,
-        )
-    assert cm.isEmpty(), "staged batch signatures leaked on missing-table raise"
-
-    # raise path 2: schema mismatch (the originally-guarded raise)
     tables = stage_corpus_artifacts(
         docs.filter("doc_id < 100"), "corpus_leak_test",
         num_buckets=4, portable=True,
     )
     try:
-        with pytest.raises(ValueError, match="hash family"):
-            incremental_near_dup(
-                batch, tables, 0.6, portable=False, chunks=chunks,
-            )
-        assert cm.isEmpty(), "staged batch signatures leaked on schema-mismatch raise"
+        # both legs persist the batch signatures before the raises
+        for leg in ({}, {"chunks": prechunk_documents(batch, chunk_tokens=8)}):
+            # raise path 1: staged tables don't exist (spark.table
+            # raises BEFORE the schema check)
+            with pytest.raises(Exception):
+                incremental_near_dup(
+                    batch,
+                    {"sigs": "no_such_sigs_tbl", "shingles": "no_such_sh_tbl"},
+                    0.6, **leg,
+                )
+            assert cm.isEmpty(), "staged batch signatures leaked on missing-table raise"
+
+            # raise path 2: schema mismatch (the originally-guarded raise)
+            with pytest.raises(ValueError, match="hash family"):
+                incremental_near_dup(batch, tables, 0.6, portable=False, **leg)
+            assert cm.isEmpty(), "staged batch signatures leaked on schema-mismatch raise"
     finally:
         for t in tables.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -498,13 +498,13 @@ class TestPrechunkedConsumers:
 
     def test_staged_and_incremental_legs_equivalent(self, spark):
         """stage_corpus_artifacts + incremental_near_dup accept the
-        pre-chunked leg: identical staged-table content semantics
-        (survivors + incremental survivors match the per-row leg
-        exactly), so the daily-ingest shape can ride chunk rows
-        end-to-end."""
+        pre-chunked leg: the staged tables themselves match the
+        per-row leg (signature rows equal, shingle arrays equal as
+        sets) and so do the incremental survivors, so the daily-ingest
+        shape can ride chunk rows end-to-end."""
         from etl_guiacores_spark.plans.corpus_pipeline import (
+            append_corpus_artifacts,
             incremental_near_dup,
-            near_dup_removal_staged,
             stage_corpus_artifacts,
         )
         from etl_guiacores_spark.sources.tables import load_table
@@ -521,25 +521,22 @@ class TestPrechunkedConsumers:
             ("plain", {}),
             ("bronze", {"chunks": prechunk_documents(docs, chunk_tokens=8)}),
         ):
-            from etl_guiacores_spark.plans.corpus_pipeline import (
-                append_corpus_artifacts,
-            )
-
             tables = stage_corpus_artifacts(
                 old, f"pchk_{leg}", num_buckets=4, **kw
             )
             try:
-                surv, staged_pairs = near_dup_removal_staged(
-                    old, tables, 0.6
+                sigs = sorted(
+                    tuple(r) for r in spark.table(tables["sigs"]).collect()
                 )
+                shingles = {
+                    r["doc_id"]: frozenset(r["sh"])
+                    for r in spark.table(tables["shingles"]).collect()
+                }
                 inc, inc_pairs = incremental_near_dup(
                     new, tables, 0.6, **kw
                 )
                 inc_rows = sorted(r["doc_id"] for r in inc.collect())
-                results[leg] = (
-                    sorted(r["doc_id"] for r in surv.collect()),
-                    inc_rows,
-                )
+                results[leg] = (sigs, shingles, inc_rows)
                 # fold the accepted batch back in on the same leg and
                 # pin the table growth (the append path shares the
                 # staged dispatch, so a chunked increment stays
@@ -554,17 +551,14 @@ class TestPrechunkedConsumers:
                 append_corpus_artifacts(accepted, tables, **kw)
                 n = spark.table(tables["shingles"]).count()
                 assert n == old.count() + len(inc_rows)
-                # release every persisted handle the calls rode out
+                # release the persisted handle the call rode out
                 # (repo convention: leaked cache entries are never
                 # GC-reclaimed and pressure the shared session)
-                for res in (staged_pairs, inc_pairs):
-                    for attr in ("staged_sigs", "staged_bands"):
-                        h = getattr(res, attr, None)
-                        if h is not None:
-                            h.unpersist()
+                inc_pairs.staged_sigs.unpersist()
             finally:
                 for t in tables.values():
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
+        assert len(results["plain"][0]) == old.count()
         assert results["bronze"] == results["plain"]
 
     def test_contract_enforced_by_default(self, spark):

@@ -181,7 +181,6 @@ class TestSaltedMinhash:
         pu = sorted((r["id_a"], r["id_b"]) for r in pairs_u.collect())
         ps = sorted((r["id_a"], r["id_b"]) for r in pairs_s.collect())
         assert pu == ps and len(pu) >= 2
-        for handle in (pairs_s.staged_sigs, getattr(pairs_s, "staged_bands", None)):
-            if handle is not None:
-                handle.unpersist()
+        for pairs in (pairs_u, pairs_s):
+            pairs.staged_sigs.unpersist()
 
