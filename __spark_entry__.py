@@ -90,6 +90,9 @@ TOUCHED_SINCE: dict[str, int] = {
     # near_dup_pairs (one signature pass, one verify)
     "q50_corpus_dedup_survivors": 15,
     "q85_split_leakage": 15,
+    # round 15: qgram_match_pairs is one SQL text (q118, listed above,
+    # reaches it through resolve_entities too)
+    "q116_qgram_fuzzy_join": 15,
 }
 
 

@@ -175,41 +175,58 @@ def qgram_match_pairs(
     """
     # below/at this max-side length the count bound max-q+1-q*k is <= 0
     short_max = q * (max_dist + 1) - 1
-    t = (
-        df.select(F.col(id_col).alias("__id"), F.col(name_col).alias("__name"))
-        .filter(F.col("__name").isNotNull())
-        .withColumn("__len", F.length("__name"))
+    posts = (
+        "SELECT __id, __len, __g, __occ, 0 AS __drop FROM raw"
+        if max_posting_freq is None
+        else "SELECT /*+ BROADCAST(hot) */ __id, __len, __g, __occ, "
+        "coalesce(__drop, 0) AS __drop FROM raw "
+        "LEFT ANTI JOIN hot USING (__g, __occ) LEFT JOIN dropped USING (__id)"
     )
-
-    # --- posting path: every pair whose LONGER side exceeds short_max ---
-    # positional q-grams with per-gram occurrence numbers; the
-    # occurrence rank orders by the SELF-COMPUTED character position
-    # (never a physical row order), so it is deterministic across
-    # evaluations. Guarded for len < q: an unguarded
-    # sequence(1, len-q+1) has a NEGATIVE step there ([1,0]) and emits
-    # phantom grams from substring position 0.
-    idx = F.when(
-        F.col("__len") >= q, F.sequence(F.lit(1), F.col("__len") - (q - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = t.select(
-        "__id",
-        "__len",
-        F.explode(
-            F.transform(idx, lambda i: F.struct(F.substring(F.col("__name"), i, q).alias("g"), i.alias("p")))
-        ).alias("__gp"),
-    ).select("__id", "__len", F.col("__gp.g").alias("__g"), F.col("__gp.p").alias("__p"))
-    occ_w = Window.partitionBy("__id", "__g").orderBy("__p")
-    posts = grams.withColumn("__occ", F.row_number().over(occ_w)).select(
-        "__id", "__len", "__g", "__occ"
-    )
+    # ONE SQL text, parsed on the JVM side: a handful of py4j calls per
+    # build, where DataFrame calls pay one per column expression
+    ctes = f"""
+    WITH t AS (
+      SELECT *, length(__name) AS __len
+      FROM (SELECT `{id_col}` AS __id, `{name_col}` AS __name FROM {{df}})
+      WHERE __name IS NOT NULL
+    ),
+    -- positional q-grams with per-gram occurrence numbers; the rank
+    -- orders by the SELF-COMPUTED character position (never a physical
+    -- row order), so it is deterministic across evaluations. Guarded
+    -- for len < q: sequence(1, len-q+1) would count DOWN there ([1,0])
+    -- and emit phantom grams from substring position 0.
+    grams AS (
+      SELECT __id, __len, __gp.g AS __g, __gp.p AS __p
+      FROM (SELECT __id, __len, explode(transform(
+              CASE WHEN __len >= {q} THEN sequence(1, __len - {q - 1})
+                   ELSE CAST(array() AS array<int>) END,
+              i -> struct(substring(__name, i, {q}) AS g, i AS p))) AS __gp
+            FROM t)
+    ),
+    raw AS (
+      SELECT __id, __len, __g,
+             row_number() OVER (PARTITION BY __id, __g ORDER BY __p) AS __occ
+      FROM grams
+    ),
+    hot AS (
+      SELECT __g, __occ FROM raw GROUP BY __g, __occ
+      HAVING count(*) > {max_posting_freq or 0}
+    ),
+    -- per-id dropped-posting counts: a true pair's OBSERVED shared
+    -- count falls short of the theorem bound by at most
+    -- min(dropped_a, dropped_b) hidden hot matches, so the count filter
+    -- relaxes by that much or capping would reject true matches the
+    -- candidate join still found (a capped-mode-only shuffle on __id)
+    dropped AS (
+      SELECT /*+ BROADCAST(hot) */ __id, count(*) AS __drop
+      FROM raw LEFT SEMI JOIN hot USING (__g, __occ) GROUP BY __id
+    ),
+    posts AS ({posts})
+    """
+    spark = df.sparkSession
     if max_posting_freq is not None:
-        hot = (
-            posts.groupBy("__g", "__occ")
-            .agg(F.count("*").alias("__f"))
-            .filter(F.col("__f") > max_posting_freq)
-            .select("__g", "__occ")
-        )
-        n_hot = hot.count()  # eager by design: the no-silent-caps log
+        # eager by design: the no-silent-caps log
+        n_hot = spark.sql(ctes + "SELECT count(*) FROM hot", df=df).first()[0]
         if n_hot:
             logger.warning(
                 "qgram_match_pairs: dropping %d hot postings above "
@@ -218,115 +235,53 @@ def qgram_match_pairs(
                 n_hot,
                 max_posting_freq,
             )
-        # per-id dropped-posting counts: a true pair's OBSERVED shared
-        # count falls short of the theorem bound by at most
-        # min(dropped_a, dropped_b) hidden hot matches, so the count
-        # filter must relax by that much or capping would reject true
-        # matches the candidate join still found. Capped-mode-only
-        # extra shuffle on __id (the escape hatch pays for itself by
-        # bounding the posting self-join).
-        dropped = (
-            posts.join(F.broadcast(hot), ["__g", "__occ"], "left_semi")
-            .groupBy("__id")
-            .agg(F.count("*").alias("__drop"))
-        )
-        posts = (
-            posts.join(F.broadcast(hot), ["__g", "__occ"], "left_anti")
-            .join(dropped, "__id", "left")
-            .withColumn("__drop", F.coalesce("__drop", F.lit(0)))
-        )
-    else:
-        posts = posts.withColumn("__drop", F.lit(0))
-    a = posts.select(
-        F.col("__id").alias("id_a"),
-        F.col("__len").alias("__la"),
-        F.col("__drop").alias("__da"),
-        "__g",
-        "__occ",
-    )
-    b = posts.select(
-        F.col("__id").alias("id_b"),
-        F.col("__len").alias("__lb"),
-        F.col("__drop").alias("__db"),
-        "__g",
-        "__occ",
-    )
-    shared = (
-        a.join(b, ["__g", "__occ"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.abs(F.col("__la") - F.col("__lb")) <= max_dist)
-        # short-short pairs belong to the fallback path (disjoint union)
-        .filter(F.greatest("__la", "__lb") > short_max)
-        .groupBy("id_a", "id_b", "__la", "__lb", "__da", "__db")
-        .agg(F.count("*").alias("__c"))
-        .filter(
-            F.col("__c")
-            # on this path max(la,lb) > short_max so the bound is >= 1;
-            # under a max_posting_freq cap it relaxes by the pair's
-            # maximum possible hidden (hot) shared count, and the clamp
-            # keeps it >= 1
-            >= F.greatest(
-                F.greatest("__la", "__lb")
-                - F.lit(q - 1)
-                - F.lit(q * max_dist)
-                - F.least("__da", "__db"),
-                F.lit(1),
-            )
-        )
-    )
-    names = t.select(F.col("__id"), F.col("__name"))
-    dist = F.levenshtein(F.col("__name_a"), F.col("__name_b"), max_dist)
-    posting_pairs = (
-        shared.join(names.select(F.col("__id").alias("id_a"), F.col("__name").alias("__name_a")), "id_a")
-        .join(names.select(F.col("__id").alias("id_b"), F.col("__name").alias("__name_b")), "id_b")
-        .select("id_a", "id_b", dist.alias("dist"))
-        .filter(F.col("dist") >= 0)
-    )
-
-    # --- short-string fallback: both sides <= short_max chars ---
-    # candidate name pairs over DISTINCT short names (bounded by the
-    # number of distinct strings of <= short_max chars), generated by
-    # a LENGTH-BANDED equi-join rather than a cross join: |len_a -
-    # len_b| <= k is a necessary condition for a match, so side B
-    # probes every length in [len_b - k, len_b + k] and the planner
-    # keeps a broadcast HASH join (no nested-loop node) — the same
-    # banded-bucket trick as the temporal range join. Ids are then
-    # re-expanded; the name-pair set keeps na <= nb, and the
-    # (na < nb) | (ia < ib) filter emits each id pair exactly once.
-    shorts = t.filter(F.col("__len") <= short_max)
-    sn = shorts.select("__name", "__len").distinct()
-    short_d = F.levenshtein(F.col("__name_a"), F.col("__name_b"), max_dist)
-    a_names = sn.select(F.col("__name").alias("__name_a"), F.col("__len").alias("__lband"))
-    b_names = sn.select(
-        F.col("__name").alias("__name_b"),
-        F.explode(
-            F.sequence(F.col("__len") - max_dist, F.col("__len") + max_dist)
-        ).alias("__lband"),
-    )
-    name_pairs = (
-        a_names.join(F.broadcast(b_names), "__lband")
-        .filter(F.col("__name_a") <= F.col("__name_b"))
-        .withColumn("__d", short_d)
-        .filter(F.col("__d") >= 0)
-        .drop("__lband")
-    )
-    short_pairs = (
-        shorts.select(F.col("__id").alias("__ia"), F.col("__name").alias("__name_a"))
-        .join(name_pairs, "__name_a")
-        .join(
-            shorts.select(F.col("__id").alias("__ib"), F.col("__name").alias("__name_b")),
-            "__name_b",
-        )
-        .filter(
-            (F.col("__name_a") < F.col("__name_b")) | (F.col("__ia") < F.col("__ib"))
-        )
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            F.col("__d").alias("dist"),
-        )
-    )
-    return posting_pairs.unionByName(short_pairs)
+    return spark.sql(ctes + f"""
+    SELECT id_a, id_b, dist FROM (
+      SELECT id_a, id_b, levenshtein(na.__name, nb.__name, {max_dist}) AS dist
+      FROM (
+        SELECT * FROM (
+          SELECT a.__id AS id_a, b.__id AS id_b, a.__len AS __la, b.__len AS __lb,
+                 a.__drop AS __da, b.__drop AS __db, count(*) AS __c
+          FROM posts a JOIN posts b USING (__g, __occ)
+          WHERE abs(a.__len - b.__len) <= {max_dist}
+            -- short-short pairs belong to the fallback (disjoint union)
+            AND greatest(a.__len, b.__len) > {short_max}
+            AND a.__id < b.__id
+          GROUP BY 1, 2, 3, 4, 5, 6)
+        -- on this path max(la,lb) > short_max so the bound is >= 1;
+        -- under a cap it relaxes by the pair's maximum possible hidden
+        -- (hot) shared count, and the clamp keeps it >= 1
+        WHERE __c >= greatest(greatest(__la, __lb) - {q - 1} - {q * max_dist}
+                              - least(__da, __db), 1)
+      ) s
+      JOIN t na ON s.id_a = na.__id
+      JOIN t nb ON s.id_b = nb.__id)
+    WHERE dist >= 0
+    UNION ALL
+    -- short-string fallback, both sides <= short_max chars: name pairs
+    -- over DISTINCT short names via a LENGTH-BANDED broadcast hash join
+    -- (|len_a - len_b| <= k is necessary, so side b probes every length
+    -- in [len_b - k, len_b + k]; no nested-loop node), then ids are
+    -- re-expanded; na <= nb plus (na < nb OR ia < ib) emits each id
+    -- pair exactly once
+    SELECT least(__ia, __ib) AS id_a, greatest(__ia, __ib) AS id_b, __d AS dist
+    FROM (SELECT __id AS __ia, __name AS __name_a FROM t WHERE __len <= {short_max})
+    JOIN (
+      SELECT * FROM (
+        SELECT /*+ BROADCAST(b) */ a.__name AS __name_a, __name_b,
+               levenshtein(a.__name, __name_b, {max_dist}) AS __d
+        FROM (SELECT DISTINCT __name, __len FROM t WHERE __len <= {short_max}) a
+        JOIN (SELECT __name AS __name_b,
+                     explode(sequence(__len - {max_dist}, __len + {max_dist})) AS __lband
+              FROM (SELECT DISTINCT __name, __len FROM t WHERE __len <= {short_max})) b
+          ON a.__len = b.__lband
+        WHERE a.__name <= __name_b)
+      WHERE __d >= 0
+    ) USING (__name_a)
+    JOIN (SELECT __id AS __ib, __name AS __name_b FROM t WHERE __len <= {short_max})
+      USING (__name_b)
+    WHERE __name_a < __name_b OR __ia < __ib
+    """, df=df)
 
 
 def golden_record(

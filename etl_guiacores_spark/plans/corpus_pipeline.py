@@ -980,8 +980,14 @@ def run_corpus_pipeline(
         pairs, n_pairs = _land(dup_pairs, "dup_pairs")
     finally:  # landed (or failed): release the sig cache
         dup_pairs.staged_sigs.unpersist()
+    # cluster_exact's components run eagerly; a resume over a fenced
+    # clean reads it back, so hand _land the lazy greedy frame (same
+    # schema) and skip them
+    cluster_exact = config.cluster_exact and not (
+        resume and _fenced(spark, f"{out_dir}/clean")
+    )
     survivors, n_clean = _land(
-        near_dup_survivors(exact, pairs, config.cluster_exact), "clean"
+        near_dup_survivors(exact, pairs, cluster_exact), "clean"
     )
     emit("near_dup", {"records": n_clean})
 

@@ -12,6 +12,14 @@ shape or result hashing is pinned:
 - Arrow on: every Pandas-UDF boundary is vectorized.
 - shuffle partitions sized to cores for local runs; a real cluster
   deployment overrides via ``extra_conf`` (AQE coalesces anyway).
+- generated-code cache of ``CODEGEN_CACHE_ENTRIES``: Spark's default
+  of 100 classes is below every working set here (a perfbench
+  ``query_mix`` pass compiles ~130 classes, a golden corpus run ~300,
+  one pass over the full registry at sf0.001 ~2,550 cache entries),
+  so the LRU evicted everything and each repeated plan recompiled
+  every class with Janino and JIT-warmed it again. The cache is built
+  once per JVM from a STATIC conf, so it is set on the builder before
+  the first session starts; a runtime ``conf.set`` cannot reach it.
 """
 
 from __future__ import annotations
@@ -20,6 +28,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+#: holds the full registry's two-pass working set (~2,640 entries) with
+#: headroom; see the module docstring
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -51,6 +64,7 @@ def get_spark(
         # nanosecond parquet timestamps (events table) read as long;
         # sources.tables converts them back to TimestampType
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -65,7 +79,9 @@ def configure_session(spark: SparkSession) -> SparkSession:
     """Pin result-affecting conf on an externally created session.
 
     The verification driver owns its own SparkSession; only settings
-    that are safe to change at runtime are applied here.
+    that are safe to change at runtime are applied here. The static
+    ``spark.sql.codegen.cache.maxEntries`` is not among them: a session
+    created elsewhere keeps Spark's 100-entry codegen cache.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -75,8 +75,9 @@ def test_cluster_exact_keeps_one_per_component(spark, tmp_path):
 def test_cluster_exact_components_run_once(spark, tmp_path, monkeypatch):
     """Under cluster_exact the pipeline lands the verified pairs and
     derives the survivors from the landed table, so connected
-    components run once per run — on a fresh run and on a resume over
-    the finished out_dir — never a second time inside the pair leg."""
+    components run once on a fresh run — never a second time inside
+    the pair leg — and not at all on a resume over the finished
+    out_dir, whose clean stage is read back."""
     from etl_guiacores_spark.operators import graph
 
     calls = []
@@ -97,7 +98,7 @@ def test_cluster_exact_components_run_once(spark, tmp_path, monkeypatch):
     fresh = run_corpus_pipeline(docs, out, cfg)
     assert len(calls) == 1
     resumed = run_corpus_pipeline(docs, out, cfg, resume=True)
-    assert len(calls) == 2  # exactly one more, on the resume
+    assert len(calls) == 1  # none on the resume: clean is fenced
     assert resumed == fresh and fresh["after_near_dup"] == 1
 
 
@@ -519,6 +520,42 @@ def test_golden_corpus_run_composes_all_stages(spark, tmp_path):
     assert m["shards"]["total_tokens"] == agg["t"]
     # no sequence exceeds the budget (chunk_tokens <= budget_tokens)
     assert (shards.agg(F.max("n_tokens")).first()[0] or 0) <= 64
+
+
+def test_golden_run_reuses_compiled_classes(spark, tmp_path):
+    """A repeated golden run in one JVM reuses its generated classes:
+    the session's codegen cache holds the run's whole working set, so
+    the second run compiles almost nothing. With Spark's default
+    100-entry cache the LRU evicted every class and the second run
+    recompiled ~300 of them. The residual (6-10 measured) is Spark's:
+    a generated class name carries its codegen stage id, and AQE can
+    number a few stages differently on a rerun."""
+    docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
+        "doc_id", "text", "source"
+    )
+    bench_rows = [
+        (" ".join(r["text"].split()[2:12]),)
+        for r in docs.orderBy("doc_id").limit(4).collect()
+    ]
+    bench_p = str(tmp_path / "bench")
+    spark.createDataFrame(bench_rows, "text string").write.parquet(bench_p)
+    cfg = CorpusConfig(
+        min_quality=0.0, near_dup_jaccard=0.6, cluster_exact=True,
+        chunk_tokens=64, chunk_overlap=8, vocab_top_k=1000,
+        benchmark_path=bench_p, decontam_spans=True, decontam_span_n=8,
+        strip_spans=True, span_n=10, gopher_gate=True, gopher_min_tokens=10,
+        gopher_max_tokens=200, mixture_total=100, mixture_strata=("source",),
+        write_shards=True, budget_tokens=512, sequences_per_shard=1000,
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    first = run_corpus_pipeline(docs, str(tmp_path / "run1"), cfg)
+    before = compiles.getCount()
+    second = run_corpus_pipeline(docs, str(tmp_path / "run2"), cfg)
+    recompiled = compiles.getCount() - before
+    assert {k: v for k, v in second.items() if k != "shards"} == {
+        k: v for k, v in first.items() if k != "shards"
+    }
+    assert recompiled <= 30
 
 
 def test_resume_skips_landed_stages_and_guards_config(spark, tmp_path):
