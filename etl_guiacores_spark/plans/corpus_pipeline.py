@@ -820,6 +820,58 @@ def run_corpus_pipeline(
         back = spark.read.schema(df.schema).parquet(path)
         return back, obs.get["records"]
 
+    def _land_stripped(
+        base: DataFrame, stripped: DataFrame, stage: str, what: str
+    ) -> tuple[DataFrame, int, tuple[int, int, int]]:
+        """Land a span leg: its per-doc accounting as
+        ``{stage}_accounting``, then ``base`` with ``text`` rebuilt
+        from the leg's ``retained_text`` as ``{stage}_stripped`` (docs
+        the leg does not account for pass through untouched). Token
+        conservation is asserted on the STORED artifacts in one
+        aggregate over their join: the per-doc split sums to the
+        whole, the written text re-tokenizes to exactly the retained
+        total, and every accounted doc is in the rewritten table.
+        Returns the rewritten table, its row count and the
+        (total, dup, retained) token sums."""
+        from etl_guiacores_spark.operators.textstats import tokens
+
+        acct, n_acct = _land(
+            stripped.select(
+                "doc_id", "n_tokens", "dup_tokens", "retained_tokens",
+                "retained_md5",
+            ),
+            f"{stage}_accounting",
+        )
+        rebuilt = (
+            base.join(
+                stripped.select("doc_id", F.col("retained_text").alias("__rt")),
+                "doc_id",
+                "left",
+            )
+            .withColumn("text", F.coalesce("__rt", "text"))
+            .drop("__rt")
+        )
+        landed, n_landed = _land(rebuilt, f"{stage}_stripped")
+        tot = (
+            acct.join(landed.select("doc_id", "text"), "doc_id")
+            .agg(
+                F.sum("n_tokens").alias("t"),
+                F.sum("dup_tokens").alias("d"),
+                F.sum("retained_tokens").alias("r"),
+                F.sum(F.size(tokens(F.col("text")))).alias("k"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .first()
+        )
+        t, d, r, k = (int(tot[c] or 0) for c in "tdrk")
+        if t != d + r or k != r or tot["n"] != n_acct:
+            raise RuntimeError(
+                f"{what} token conservation violated: "
+                f"total={tot['t']} dup={tot['d']} retained={tot['r']} "
+                f"rewritten={k} docs={tot['n']}/{n_acct}"
+            )
+        return landed, n_landed, (t, d, r)
+
     emit("raw", {"records": n_raw})
 
     bronze = None
@@ -864,9 +916,6 @@ def run_corpus_pipeline(
                 prechunked_strip_given_spans,
                 strip_given_spans,
             )
-            from etl_guiacores_spark.operators.textstats import (
-                tokens as _dtoks,
-            )
 
             # pre-chunked span leg: detection AND apply read the
             # ingest bronze's balanced chunk rows (exact's text is
@@ -902,48 +951,14 @@ def run_corpus_pipeline(
                 excised = strip_given_spans(
                     exact, ev_spans, keep_text=True
                 )
-            ev_acct, _ = _land(
-                excised.select(
-                    "doc_id", "n_tokens", "dup_tokens",
-                    "retained_tokens", "retained_md5",
-                ),
-                "eval_span_accounting",
+            exact, n_excised, (_, excised_tokens, _) = _land_stripped(
+                exact, excised, "eval_span", "eval-span-strip"
             )
-            rebuilt = (
-                exact.join(
-                    excised.select(
-                        "doc_id", F.col("retained_text").alias("__rt")
-                    ),
-                    "doc_id",
-                    "left",
-                )
-                .withColumn("text", F.coalesce("__rt", "text"))
-                .drop("__rt")
-            )
-            exact, n_excised = _land(rebuilt, "eval_span_stripped")
-            ev_tot = ev_acct.agg(
-                F.sum("n_tokens").alias("t"),
-                F.sum("dup_tokens").alias("d"),
-                F.sum("retained_tokens").alias("r"),
-            ).first()
-            ev_rewritten = (
-                exact.join(ev_acct.select("doc_id"), "doc_id")
-                .select(F.sum(F.size(_dtoks(F.col("text")))).alias("k"))
-                .first()["k"]
-            ) or 0
-            if (
-                ev_tot["t"] != (ev_tot["d"] or 0) + (ev_tot["r"] or 0)
-            ) or ev_rewritten != (ev_tot["r"] or 0):
-                raise RuntimeError(
-                    "eval-span-strip token conservation violated: "
-                    f"total={ev_tot['t']} dup={ev_tot['d']} "
-                    f"retained={ev_tot['r']} rewritten={ev_rewritten}"
-                )
             emit(
                 "decontam_spans",
                 {
                     "records": n_excised,
-                    "excised_tokens": int(ev_tot["d"] or 0),
+                    "excised_tokens": excised_tokens,
                 },
             )
 
@@ -1027,55 +1042,16 @@ def run_corpus_pipeline(
                 min_docs=config.span_min_docs,
                 keep_text=True,
             )
-        accounting, _ = _land(
-            stripped.select(
-                "doc_id", "n_tokens", "dup_tokens", "retained_tokens",
-                "retained_md5",
-            ),
-            "span_accounting",
-        )
         # survivors whose text tokenizes to [] pass through untouched
         # (strip_repeated_spans excludes them by contract)
-        rebuilt = (
-            survivors.join(
-                stripped.select(
-                    "doc_id", F.col("retained_text").alias("__rt")
-                ),
-                "doc_id",
-                "left",
-            )
-            .withColumn("text", F.coalesce("__rt", "text"))
-            .drop("__rt")
+        survivors, n_span, (t, d, r) = _land_stripped(
+            survivors, stripped, "span", "span-strip"
         )
-        survivors, n_span = _land(rebuilt, "span_stripped")
-        # conservation, asserted on the STORED artifacts: per-doc
-        # split sums to the whole, and the written stripped text
-        # re-tokenizes to exactly the accounted retained total
-        from etl_guiacores_spark.operators.textstats import tokens as _toks
-
-        totals = accounting.agg(
-            F.sum("n_tokens").alias("t"),
-            F.sum("dup_tokens").alias("d"),
-            F.sum("retained_tokens").alias("r"),
-        ).first()
-        rewritten = (
-            survivors.join(accounting.select("doc_id"), "doc_id")
-            .select(F.sum(F.size(_toks(F.col("text")))).alias("k"))
-            .first()["k"]
-        ) or 0
-        if (totals["t"] != (totals["d"] or 0) + (totals["r"] or 0)) or (
-            rewritten != (totals["r"] or 0)
-        ):
-            raise RuntimeError(
-                "span-strip token conservation violated: "
-                f"total={totals['t']} dup={totals['d']} "
-                f"retained={totals['r']} rewritten={rewritten}"
-            )
         span_totals = {
             "span_docs": n_span,
-            "span_total_tokens": int(totals["t"] or 0),
-            "span_dup_tokens": int(totals["d"] or 0),
-            "span_retained_tokens": int(totals["r"] or 0),
+            "span_total_tokens": t,
+            "span_dup_tokens": d,
+            "span_retained_tokens": r,
         }
         emit("span_strip", {"records": n_span})
 

@@ -1,8 +1,7 @@
 """Training-shard writer: the last mile from a clean corpus to the
 fixed-length sequence shards a pretraining job actually reads.
 
-Composes the engine's existing pieces into one artifact-producing
-plan:
+One core, :func:`_land_shards`, lands every batch:
 
 1. ``chunk_documents`` — token-window chunks (chunking.py),
 2. ``pack_chunks`` — greedy fill into ``budget_tokens`` sequences
@@ -17,10 +16,17 @@ plan:
    counts) plus a stats JSON — both derived from the data written,
    not recomputed upstream.
 
-Every count is observed from the landed parquet (the execute-once
-discipline of corpus_pipeline); the conservation invariants the q66b
-oracle checks (token totals, chunk counts, zero over-budget) hold by
-construction and are test-asserted against the written artifact.
+:func:`write_training_shards` is a batch landed after an empty tail,
+:func:`append_training_shards` one landed after the committed
+manifest's tail; every difference between the two follows from that
+tail.
+
+The document and chunk counts are observed on the chunk write itself
+and every other count is read from the landed parquet (the
+execute-once discipline of corpus_pipeline); the conservation
+invariants the q66b oracle checks (token totals, chunk counts, zero
+over-budget) hold by construction and are test-asserted against the
+written artifact.
 """
 
 from __future__ import annotations
@@ -106,6 +112,150 @@ def _recover_manifest(out_dir: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _land_shards(
+    docs: DataFrame,
+    out_dir: str,
+    old_rows: list | None,
+    budget_tokens: int,
+    chunk_tokens: int,
+    overlap: int,
+    num_bins: int,
+    sequences_per_shard: int,
+) -> dict:
+    """Land ``docs`` as new shards after the manifest tail ``old_rows``
+    (the committed manifest's rows in shard order; ``None`` for an
+    initial write over ``out_dir``) and commit the manifest.
+
+    An initial write overwrites ``out_dir/shards`` and stages its
+    chunks, packed sequences and ``stats.json`` in ``out_dir``. An
+    append writes new ``shard_id`` partitions only, stages in
+    ``append_batches/batch_<first new shard>``, commits the old rows
+    plus the new ones and adds ``appended_after_seq`` to the stats.
+    """
+    import time
+
+    from pyspark.sql import Observation
+
+    from etl_guiacores_spark.session import local_frame
+
+    spark = docs.sparkSession
+    appending = old_rows is not None
+    old_rows = old_rows or []
+    if old_rows:
+        last = old_rows[-1]
+        seq_base = int(last["first_seq"]) + int(last["n_sequences"])
+        token_base = sum(int(r["n_tokens"]) for r in old_rows)
+        shard_base = int(last["shard_id"]) + 1
+    else:
+        seq_base, token_base, shard_base = 0, 0, 0
+    stage_dir = (
+        f"{out_dir}/append_batches/batch_{shard_base:06d}" if appending else out_dir
+    )
+
+    timings: dict[str, float] = {}
+    t0 = time.time()
+    # both counts ride the chunk write (chunk_documents is one select +
+    # explode, so that job reads its input once)
+    doc_obs, chunk_obs = Observation("shard_docs"), Observation("shard_chunks")
+    chunks = chunk_documents(
+        docs.observe(doc_obs, F.count(F.lit(1)).alias("n")),
+        chunk_tokens=chunk_tokens, overlap=overlap,
+    )
+    gio.write_handoff(
+        chunks.observe(chunk_obs, F.count(F.lit(1)).alias("n")),
+        f"{stage_dir}/chunks",
+    )
+    # explicit schema on every re-read: an empty stage writes no
+    # row groups and inference would crash (corpus_pipeline's rule)
+    chunks = spark.read.schema(chunks.schema).parquet(f"{stage_dir}/chunks")
+    timings["chunk_s"] = round(time.time() - t0, 1)
+
+    t0 = time.time()
+    packed = pack_chunks(chunks, budget_tokens=budget_tokens, num_bins=num_bins)
+    gio.write_handoff(packed, f"{stage_dir}/packed")
+    packed = spark.read.schema(packed.schema).parquet(f"{stage_dir}/packed")
+    timings["pack_s"] = round(time.time() - t0, 1)
+    t0 = time.time()
+
+    # deterministic global order key; unique because (bin, seq) is
+    ordered = packed.withColumn(
+        "__ord",
+        F.col("bin_id").cast("long") * F.lit(1 << 40) + F.col("seq_id"),
+    )
+    with_off = global_prefix_sum(
+        ordered, order_col="__ord", value_col="n_tokens",
+        out_col="token_offset", exclusive=True,
+    )
+    seqs = (
+        global_prefix_sum(
+            with_off.withColumn("__one", F.lit(1)),
+            order_col="__ord", value_col="__one", out_col="global_seq",
+        )
+        .withColumn("token_offset", F.col("token_offset") + F.lit(token_base))
+        # 0-based, continuing the tail
+        .withColumn("global_seq", F.col("global_seq") - 1 + F.lit(seq_base))
+        .withColumn(
+            "shard_id",
+            (
+                F.floor((F.col("global_seq") - F.lit(seq_base)) / sequences_per_shard)
+                + F.lit(shard_base)
+            ).cast("int"),
+        )
+        .drop("__one", "__ord")
+    )
+    # an append creates only NEW shard_id partitions (its shard ids
+    # start past the manifest tail by construction)
+    (
+        seqs.repartitionByRange(F.col("shard_id"), F.col("global_seq"))
+        .sortWithinPartitions("global_seq")
+        .write.mode("append" if appending else "overwrite")
+        .option("maxRecordsPerFile", sequences_per_shard)
+        .partitionBy("shard_id")
+        .parquet(f"{out_dir}/shards")
+    )
+    timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
+    t0 = time.time()
+
+    manifest = (
+        spark.read.schema(seqs.schema).parquet(f"{out_dir}/shards")
+        .filter(F.col("shard_id") >= shard_base)
+        .groupBy("shard_id")
+        .agg(
+            F.min("global_seq").alias("first_seq"),
+            F.max("global_seq").alias("last_seq"),
+            F.min("token_offset").alias("first_token"),
+            F.count("*").alias("n_sequences"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+        )
+    )
+    if old_rows:
+        kept = [tuple(r[f.name] for f in manifest.schema) for r in old_rows]
+        manifest = local_frame(spark, kept, manifest.schema).unionByName(manifest)
+    manifest = manifest.orderBy("shard_id")
+    _commit_manifest_atomic(manifest, f"{out_dir}/manifest")
+    mrows = spark.read.schema(manifest.schema).parquet(f"{out_dir}/manifest").collect()
+    timings["manifest_s"] = round(time.time() - t0, 1)
+
+    new_tokens = sum(int(r["n_tokens"]) for r in mrows) - token_base
+    new_seqs = sum(int(r["n_sequences"]) for r in mrows) - seq_base
+    stats = {
+        "timings_s": timings,
+        "n_docs": doc_obs.get["n"],
+        "n_chunks": chunk_obs.get["n"],
+        "n_sequences": new_seqs,
+        "total_tokens": new_tokens,
+        "n_shards": len(mrows) - len(old_rows),
+        "budget_tokens": budget_tokens,
+        "fill_ratio": round(new_tokens / (new_seqs * budget_tokens), 4)
+        if new_seqs
+        else 0.0,
+    }
+    if appending:
+        stats["appended_after_seq"] = seq_base
+    gio.write_stats_json(stats, f"{stage_dir}/stats.json")
+    return stats
+
+
 def write_training_shards(
     docs: DataFrame,
     out_dir: str,
@@ -126,93 +276,10 @@ def write_training_shards(
     ``token_offset`` are their dense global index and cumulative token
     start, computed distributed.
     """
-    import time
-
-    spark = docs.sparkSession
-    timings: dict[str, float] = {}
-    t0 = time.time()
-    n_docs = docs.count()
-
-    chunks = chunk_documents(
-        docs, chunk_tokens=chunk_tokens, overlap=overlap
+    return _land_shards(
+        docs, out_dir, None, budget_tokens, chunk_tokens, overlap,
+        num_bins, sequences_per_shard,
     )
-    gio.write_handoff(chunks, f"{out_dir}/chunks")
-    # explicit schema on every re-read: an empty stage writes no
-    # row groups and inference would crash (corpus_pipeline's rule)
-    chunks = spark.read.schema(chunks.schema).parquet(f"{out_dir}/chunks")
-    n_chunks = chunks.count()
-    timings["chunk_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    packed = pack_chunks(
-        chunks, budget_tokens=budget_tokens, num_bins=num_bins
-    )
-    gio.write_handoff(packed, f"{out_dir}/packed")
-    packed = spark.read.schema(packed.schema).parquet(f"{out_dir}/packed")
-    timings["pack_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    # deterministic global order key; unique because (bin, seq) is
-    ordered = packed.withColumn(
-        "__ord",
-        F.col("bin_id").cast("long") * F.lit(1 << 40) + F.col("seq_id"),
-    )
-    with_off = global_prefix_sum(
-        ordered, order_col="__ord", value_col="n_tokens",
-        out_col="token_offset", exclusive=True,
-    )
-    seqs = (
-        global_prefix_sum(
-            with_off.withColumn("__one", F.lit(1)),
-            order_col="__ord", value_col="__one", out_col="global_seq",
-        )
-        .withColumn("global_seq", F.col("global_seq") - 1)  # 0-based
-        .withColumn("shard_id", F.floor(F.col("global_seq") / sequences_per_shard).cast("int"))
-        .drop("__one", "__ord")
-    )
-    (
-        seqs.repartitionByRange(F.col("shard_id"), F.col("global_seq"))
-        .sortWithinPartitions("global_seq")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", sequences_per_shard)
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    shards = spark.read.schema(seqs.schema).parquet(f"{out_dir}/shards")
-    timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    manifest = (
-        shards.groupBy("shard_id")
-        .agg(
-            F.min("global_seq").alias("first_seq"),
-            F.max("global_seq").alias("last_seq"),
-            F.min("token_offset").alias("first_token"),
-            F.count("*").alias("n_sequences"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .orderBy("shard_id")
-    )
-    _commit_manifest_atomic(manifest, f"{out_dir}/manifest")
-    mrows = spark.read.schema(manifest.schema).parquet(f"{out_dir}/manifest").collect()
-
-    timings["manifest_s"] = round(time.time() - t0, 1)
-    total_tokens = int(sum(r["n_tokens"] for r in mrows))
-    n_sequences = int(sum(r["n_sequences"] for r in mrows))
-    stats = {
-        "timings_s": timings,
-        "n_docs": n_docs,
-        "n_chunks": n_chunks,
-        "n_sequences": n_sequences,
-        "total_tokens": total_tokens,
-        "n_shards": len(mrows),
-        "budget_tokens": budget_tokens,
-        "fill_ratio": round(total_tokens / (n_sequences * budget_tokens), 4)
-        if n_sequences
-        else 0.0,
-    }
-    gio.write_stats_json(stats, f"{out_dir}/stats.json")
-    return stats
 
 
 def append_training_shards(
@@ -258,9 +325,7 @@ def append_training_shards(
     :func:`write_training_shards` for the initial load.
     """
     import os
-    import time
 
-    spark = docs.sparkSession
     _recover_manifest(out_dir)
     manifest_path = f"{out_dir}/manifest"
     if not os.path.isdir(manifest_path):
@@ -268,114 +333,11 @@ def append_training_shards(
             f"append_training_shards: no manifest at {manifest_path} — "
             "write the initial shard set with write_training_shards first"
         )
-    old_manifest = spark.read.parquet(manifest_path)
-    m_schema = old_manifest.schema
-    old_rows = old_manifest.orderBy("shard_id").collect()
-    if old_rows:
-        last = old_rows[-1]
-        seq_base = int(last["first_seq"]) + int(last["n_sequences"]) - 1 + 1
-        token_base = sum(int(r["n_tokens"]) for r in old_rows)
-        shard_base = int(last["shard_id"]) + 1
-    else:
-        seq_base, token_base, shard_base = 0, 0, 0
-
-    timings: dict[str, float] = {}
-    t0 = time.time()
-    n_docs = docs.count()
-    batch_dir = f"{out_dir}/append_batches/batch_{shard_base:06d}"
-    chunks = chunk_documents(docs, chunk_tokens=chunk_tokens, overlap=overlap)
-    gio.write_handoff(chunks, f"{batch_dir}/chunks")
-    chunks = spark.read.schema(chunks.schema).parquet(f"{batch_dir}/chunks")
-    n_chunks = chunks.count()
-    timings["chunk_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    packed = pack_chunks(chunks, budget_tokens=budget_tokens, num_bins=num_bins)
-    gio.write_handoff(packed, f"{batch_dir}/packed")
-    packed = spark.read.schema(packed.schema).parquet(f"{batch_dir}/packed")
-    timings["pack_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    ordered = packed.withColumn(
-        "__ord",
-        F.col("bin_id").cast("long") * F.lit(1 << 40) + F.col("seq_id"),
+    old_rows = docs.sparkSession.read.parquet(manifest_path).orderBy("shard_id").collect()
+    return _land_shards(
+        docs, out_dir, old_rows, budget_tokens, chunk_tokens, overlap,
+        num_bins, sequences_per_shard,
     )
-    with_off = global_prefix_sum(
-        ordered, order_col="__ord", value_col="n_tokens",
-        out_col="token_offset", exclusive=True,
-    )
-    seqs = (
-        global_prefix_sum(
-            with_off.withColumn("__one", F.lit(1)),
-            order_col="__ord", value_col="__one", out_col="global_seq",
-        )
-        .withColumn("token_offset", F.col("token_offset") + F.lit(token_base))
-        .withColumn(
-            "global_seq", F.col("global_seq") - 1 + F.lit(seq_base)
-        )
-        .withColumn(
-            "shard_id",
-            (
-                F.floor((F.col("global_seq") - F.lit(seq_base)) / sequences_per_shard)
-                + F.lit(shard_base)
-            ).cast("int"),
-        )
-        .drop("__one", "__ord")
-    )
-    # append-mode partitioned write: only NEW shard_id partitions are
-    # created (shard ids start past the manifest tail by construction)
-    (
-        seqs.repartitionByRange(F.col("shard_id"), F.col("global_seq"))
-        .sortWithinPartitions("global_seq")
-        .write.mode("append")
-        .option("maxRecordsPerFile", sequences_per_shard)
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    new_shards = spark.read.schema(seqs.schema).parquet(
-        f"{out_dir}/shards"
-    ).filter(F.col("shard_id") >= shard_base)
-    new_manifest = (
-        new_shards.groupBy("shard_id")
-        .agg(
-            F.min("global_seq").alias("first_seq"),
-            F.max("global_seq").alias("last_seq"),
-            F.min("token_offset").alias("first_token"),
-            F.count("*").alias("n_sequences"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
-    combined = (
-        spark.createDataFrame([r.asDict() for r in old_rows], m_schema)
-        if old_rows
-        else spark.createDataFrame([], m_schema)
-    ).unionByName(new_manifest.select(*[f.name for f in m_schema.fields])).orderBy(
-        "shard_id"
-    )
-    _commit_manifest_atomic(combined, manifest_path)
-    mrows = spark.read.schema(m_schema).parquet(manifest_path).collect()
-    timings["manifest_s"] = round(time.time() - t0, 1)
-
-    new_tokens = int(sum(int(r["n_tokens"]) for r in mrows)) - token_base
-    new_seqs = int(sum(int(r["n_sequences"]) for r in mrows)) - seq_base
-    stats = {
-        "timings_s": timings,
-        "n_docs": n_docs,
-        "n_chunks": n_chunks,
-        "n_sequences": new_seqs,
-        "total_tokens": new_tokens,
-        "n_shards": len(mrows) - len(old_rows),
-        "budget_tokens": budget_tokens,
-        "fill_ratio": round(new_tokens / (new_seqs * budget_tokens), 4)
-        if new_seqs
-        else 0.0,
-        "appended_after_seq": seq_base,
-    }
-    gio.write_stats_json(stats, f"{batch_dir}/stats.json")
-    return stats
 
 
 def prune_orphan_shards(out_dir: str, allow_full_reset: bool = False) -> int:

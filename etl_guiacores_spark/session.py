@@ -20,6 +20,12 @@ shape or result hashing is pinned:
   every class with Janino and JIT-warmed it again. The cache is built
   once per JVM from a STATIC conf, so it is set on the builder before
   the first session starts; a runtime ``conf.set`` cannot reach it.
+- generated class names without the codegen stage id
+  (``spark.sql.codegen.useIdInClassName=false``): AQE numbers stages
+  in the order it plans them, so with the id in the name a repeated
+  plan missed the cache with byte-identical code (a repeated golden
+  run recompiled 6, a repeated sf0.001 registry pass 108 classes; 0
+  and 20 without the id; SCALE.md "compile once per JVM").
 """
 
 from __future__ import annotations
@@ -65,6 +71,7 @@ def get_spark(
         # sources.tables converts them back to TimestampType
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -282,6 +282,23 @@ def test_shards_mode(spark, tmp_path):
     from pyspark.sql import functions as F
     assert seqs.filter(F.col("n_tokens") > 128).count() == 0
 
+    # a second batch on the same --out continues the stream
+    app = cli.main(
+        ["--out", str(tmp_path / "sh"), "shards",
+         "--input", "/root/testdata/sf0.001/documents.parquet",
+         "--budget-tokens", "128", "--chunk-tokens", "32",
+         "--sequences-per-shard", "100", "--append"],
+        spark=spark,
+    )
+    assert app["mode"] == "shards_append"
+    assert app["appended_after_seq"] == res["n_sequences"]
+    seqs = spark.read.parquet(str(tmp_path / "sh" / "shards"))
+    assert sorted(r["global_seq"] for r in seqs.collect()) == list(
+        range(res["n_sequences"] + app["n_sequences"])
+    )
+    manifest = spark.read.parquet(str(tmp_path / "sh" / "manifest"))
+    assert manifest.count() == res["n_shards"] + app["n_shards"]
+
 
 def test_diff_mode(spark, tmp_path):
     import etl_guiacores_spark.cli as cli

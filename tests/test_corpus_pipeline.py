@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from etl_guiacores_spark.plans.corpus_pipeline import CorpusConfig, run_corpus_pipeline
 from etl_guiacores_spark.sources.tables import load_table
 
@@ -527,9 +529,10 @@ def test_golden_run_reuses_compiled_classes(spark, tmp_path):
     the session's codegen cache holds the run's whole working set, so
     the second run compiles almost nothing. With Spark's default
     100-entry cache the LRU evicted every class and the second run
-    recompiled ~300 of them. The residual (6-10 measured) is Spark's:
-    a generated class name carries its codegen stage id, and AQE can
-    number a few stages differently on a rerun."""
+    recompiled ~300 of them. With the codegen stage id in the class
+    name (Spark's default), AQE's renumbering of a few stages on a rerun
+    left a residual of 6-10; the session leaves the id out and the
+    second run measured 0."""
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "text", "source"
     )
@@ -872,6 +875,60 @@ def test_decontam_spans_stage(spark, tmp_path):
             docs, str(tmp_path / "bad"),
             CorpusConfig(decontam_spans=True),
         )
+
+
+@pytest.mark.parametrize("operator", ["strip_given_spans", "strip_repeated_spans"])
+def test_span_leg_conservation_check_trips(spark, tmp_path, monkeypatch, operator):
+    """Each span leg asserts token conservation on its stored
+    artifacts: a strip that loses one token from one document's
+    rewritten text (but still accounts for it) fails the run."""
+    from pyspark.sql import functions as F
+
+    import etl_guiacores_spark.operators.dedupe as dedupe
+
+    real = getattr(dedupe, operator)
+
+    def lossy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        return out.withColumn(
+            "retained_text",
+            F.when(
+                F.col("doc_id") == 1,
+                F.regexp_replace("retained_text", r"^\S+\s*", ""),
+            ).otherwise(F.col("retained_text")),
+        )
+
+    monkeypatch.setattr(dedupe, operator, lossy)
+    bench_text = ("which of the following best describes the "
+                  "capital allocation strategy question")
+    a = ("intro words here " + bench_text +
+         " closing words after the quotation run on")
+    b = "a perfectly ordinary document with nothing quoted from anywhere"
+    docs = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
+    cfg = dict(min_quality=0.0, near_dup_jaccard=0.99, chunk_tokens=8,
+               chunk_overlap=2, vocab_top_k=50)
+    if operator == "strip_given_spans":
+        bench_p = str(tmp_path / "bench")
+        spark.createDataFrame([(bench_text,)], ["text"]).write.parquet(bench_p)
+        cfg.update(benchmark_path=bench_p, decontam_min_overlaps=10_000,
+                   decontam_spans=True, decontam_span_n=8)
+    else:
+        cfg.update(strip_spans=True, span_n=10, span_min_docs=2)
+    with pytest.raises(RuntimeError, match="token conservation violated"):
+        run_corpus_pipeline(docs, str(tmp_path / "corpus"), CorpusConfig(**cfg))
+
+
+def test_span_legs_conserve_an_empty_input(spark, tmp_path):
+    """No document reaches either span leg: nothing is stripped, so
+    nothing can be lost, and the conservation checks pass."""
+    bench_p = str(tmp_path / "bench")
+    spark.createDataFrame([("short low quality",)], ["text"]).write.parquet(bench_p)
+    docs = spark.createDataFrame([(1, "short low quality")], ["doc_id", "text"])
+    cfg = CorpusConfig(min_quality=1.5, benchmark_path=bench_p,
+                       decontam_spans=True, strip_spans=True)
+    m = run_corpus_pipeline(docs, str(tmp_path / "corpus"), cfg)
+    assert m["after_quality_lang_filter"] == 0
+    assert (m["span_docs"], m["span_total_tokens"]) == (0, 0)
 
 
 def test_write_shards_refuses_remote_out_dir(spark):
