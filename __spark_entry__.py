@@ -93,6 +93,9 @@ TOUCHED_SINCE: dict[str, int] = {
     # round 15: qgram_match_pairs is one SQL text (q118, listed above,
     # reaches it through resolve_entities too)
     "q116_qgram_fuzzy_join": 15,
+    # round 15: daily_acquisition_stream folds through the shared
+    # snapshot driver (streaming/snapshots.py)
+    "q199_streaming_acquisition_twin": 15,
 }
 
 

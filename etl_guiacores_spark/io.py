@@ -390,3 +390,63 @@ def append_audit_log(spark: SparkSession, path: str, **fields) -> None:
     schema = T.StructType([T.StructField("entry", T.StringType(), True)])
     df = local_frame(spark, [(_json.dumps(row, default=str),)], schema)
     df.write.mode("append").json(path)
+
+
+# Small-file helpers over the Hadoop FileSystem API, not os/pathlib: a
+# stage or snapshot root is a Spark path, so on HDFS/S3 a driver-local
+# probe would silently see nothing. Shared by the corpus pipeline's
+# resume fencing and sidecars and by the streaming snapshot protocol.
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hp, hp.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _is_fenced(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` is a committed Spark write: its job committer
+    lands ``_SUCCESS`` last, so a crashed write is never fenced."""
+    hp, fs = _hadoop_path(spark, f"{path}/_SUCCESS")
+    return bool(fs.exists(hp))
+
+
+def _read_sidecar(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 text of a small file, or None when it does not exist."""
+    hp, fs = _hadoop_path(spark, path)
+    if not fs.exists(hp):
+        return None
+    stream = fs.open(hp)
+    try:
+        return str(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+
+
+def _write_sidecar(spark: SparkSession, path: str, text: str) -> None:
+    """Overwrite-write a small UTF-8 file (parent dirs created)."""
+    hp, fs = _hadoop_path(spark, path)
+    out = fs.create(hp, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _list_children(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
+    """(name, is_directory) of each entry under ``path``; [] when the
+    path does not exist."""
+    hp, fs = _hadoop_path(spark, path)
+    if not fs.exists(hp):
+        return []
+    return [
+        (st.getPath().getName(), bool(st.isDirectory()))
+        for st in fs.listStatus(hp)
+    ]
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is a no-op."""
+    hp, fs = _hadoop_path(spark, path)
+    fs.delete(hp, True)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark import io as gio
+from etl_guiacores_spark.io import _is_fenced, _read_sidecar, _write_sidecar
 from etl_guiacores_spark.operators.bucketing import write_bucketed
 from etl_guiacores_spark.operators.chunking import (
     build_vocab,
@@ -598,51 +599,6 @@ _LANDED_STAGES = (
 )
 
 
-def _fenced(spark, path: str) -> bool:
-    """True when ``path`` is a committed parquet stage dir
-    (``_SUCCESS`` present), via the Hadoop FileSystem API so resume
-    works on any Spark path scheme (the streaming drift.py lesson)."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hp))
-
-
-def _read_text(spark, path: str) -> str | None:
-    """Read a small sidecar (pipeline_config.json / metrics.json)
-    through the Hadoop FileSystem API, like ``_fenced``. The round-8
-    advice caught the asymmetry: stage fencing was scheme-agnostic but
-    the fingerprint used ``os.path`` — on an HDFS/S3 ``out_dir`` the
-    fingerprint was never found, so ``resume=True`` silently reused
-    ``_SUCCESS``-fenced stages that may have been produced under a
-    DIFFERENT config. Returns None when the file does not exist."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hp):
-        return None
-    stream = fs.open(hp)
-    try:
-        return str(
-            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        )
-    finally:
-        stream.close()
-
-
-def _write_text(spark, path: str, text: str) -> None:
-    """Overwrite-write a small sidecar via the Hadoop FileSystem API
-    (creates parent dirs on any scheme; replaces os.makedirs+open)."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(hp, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def _config_fingerprint(config: CorpusConfig) -> dict:
     from dataclasses import asdict
 
@@ -758,7 +714,7 @@ def run_corpus_pipeline(
     fp["__input_rows"] = n_raw
 
     fp_path = f"{out_dir}/pipeline_config.json"
-    stored_text = _read_text(spark, fp_path) if resume else None
+    stored_text = _read_sidecar(spark, fp_path) if resume else None
     if stored_text is not None:
         stored = _json.loads(stored_text)
         if stored != fp:
@@ -773,8 +729,8 @@ def run_corpus_pipeline(
                 "or use a fresh out_dir."
             )
     elif resume and (
-        any(_fenced(spark, f"{out_dir}/{s}") for s in _LANDED_STAGES)
-        or _read_text(spark, f"{out_dir}/shards/stats.json") is not None
+        any(_is_fenced(spark, f"{out_dir}/{s}") for s in _LANDED_STAGES)
+        or _read_sidecar(spark, f"{out_dir}/shards/stats.json") is not None
     ):
         # probe EVERY landed stage name, not just the first: a torn
         # out_dir whose "filtered" fence is missing but whose later
@@ -791,7 +747,7 @@ def run_corpus_pipeline(
             "without resume, or use a fresh out_dir."
         )
     else:
-        _write_text(
+        _write_sidecar(
             spark, fp_path, _json.dumps(fp, indent=1, sort_keys=True)
         )
 
@@ -807,7 +763,7 @@ def run_corpus_pipeline(
         Under ``resume``, a landed (``_SUCCESS``-fenced) stage is read
         back without recomputing ``df``'s lineage."""
         path = f"{out_dir}/{name}"
-        if resume and _fenced(spark, path):
+        if resume and _is_fenced(spark, path):
             back = spark.read.schema(df.schema).parquet(path)
             n = back.count()
             emit(f"{name}_resumed", {"records": n})
@@ -835,23 +791,33 @@ def run_corpus_pipeline(
         (total, dup, retained) token sums."""
         from etl_guiacores_spark.operators.textstats import tokens
 
-        acct, n_acct = _land(
-            stripped.select(
-                "doc_id", "n_tokens", "dup_tokens", "retained_tokens",
-                "retained_md5",
-            ),
-            f"{stage}_accounting",
-        )
-        rebuilt = (
-            base.join(
-                stripped.select("doc_id", F.col("retained_text").alias("__rt")),
-                "doc_id",
-                "left",
+        # both landings read one execution of the span detection: the
+        # accounting write fills the cache, the rewrite reads it. The
+        # persist is lazy, so a resume over fenced landings fills
+        # nothing
+        stripped = stripped.persist()
+        try:
+            acct, n_acct = _land(
+                stripped.select(
+                    "doc_id", "n_tokens", "dup_tokens", "retained_tokens",
+                    "retained_md5",
+                ),
+                f"{stage}_accounting",
             )
-            .withColumn("text", F.coalesce("__rt", "text"))
-            .drop("__rt")
-        )
-        landed, n_landed = _land(rebuilt, f"{stage}_stripped")
+            rebuilt = (
+                base.join(
+                    stripped.select(
+                        "doc_id", F.col("retained_text").alias("__rt")
+                    ),
+                    "doc_id",
+                    "left",
+                )
+                .withColumn("text", F.coalesce("__rt", "text"))
+                .drop("__rt")
+            )
+            landed, n_landed = _land(rebuilt, f"{stage}_stripped")
+        finally:
+            stripped.unpersist()
         tot = (
             acct.join(landed.select("doc_id", "text"), "doc_id")
             .agg(
@@ -999,7 +965,7 @@ def run_corpus_pipeline(
     # clean reads it back, so hand _land the lazy greedy frame (same
     # schema) and skip them
     cluster_exact = config.cluster_exact and not (
-        resume and _fenced(spark, f"{out_dir}/clean")
+        resume and _is_fenced(spark, f"{out_dir}/clean")
     )
     survivors, n_clean = _land(
         near_dup_survivors(exact, pairs, cluster_exact), "clean"
@@ -1155,7 +1121,7 @@ def run_corpus_pipeline(
 
     shard_stats = None
     shard_stats_text = (
-        _read_text(spark, f"{out_dir}/shards/stats.json")
+        _read_sidecar(spark, f"{out_dir}/shards/stats.json")
         if (config.write_shards and resume)
         else None
     )
@@ -1232,7 +1198,7 @@ def run_corpus_pipeline(
         metrics["after_mixture_quota"] = n_sampled
     if shard_stats is not None:
         metrics["shards"] = shard_stats
-    _write_text(
+    _write_sidecar(
         spark,
         f"{out_dir}/metrics.json",
         _json.dumps(metrics, indent=2, ensure_ascii=False, default=str),

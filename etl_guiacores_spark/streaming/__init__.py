@@ -7,15 +7,13 @@ from etl_guiacores_spark.streaming.drawdown import (
     max_drawdown_stream,
     read_max_drawdown,
 )
-from etl_guiacores_spark.streaming.drift import (
-    compact_snapshots,
-    cusum_drift_stream,
-)
+from etl_guiacores_spark.streaming.drift import cusum_drift_stream
 from etl_guiacores_spark.streaming.dwell import (
     read_state_dwell,
     state_dwell_stream,
 )
 from etl_guiacores_spark.streaming.smooth import holt_smooth_stream
+from etl_guiacores_spark.streaming.snapshots import compact_snapshots
 from etl_guiacores_spark.streaming.windows import (
     ohlc_bars,
     session_agg,

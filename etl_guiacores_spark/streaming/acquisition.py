@@ -31,34 +31,33 @@ containing any day EARLIER than the current open day would need
 closed-day rewrite and raises instead. Rows within a batch and
 within the open day across batches may arrive in any order.
 
-Crash/replay semantics are the drift.py protocol verbatim: outputs
-and state snapshots land in ``batch=<id>`` dirs with ``_SUCCESS``
-fencing, batch N reads the latest fenced snapshot with id < N
-(Hadoop-FS listing, replay fence on pruned-state redelivery), so a
+A NULL event time has no day and fails loud too. Snapshots, replay
+and pruning follow the protocol in ``streaming/snapshots.py``: a
 foreachBatch redelivery recomputes from its original inputs and
-overwrites its own output: exactly-once upserts.
+overwrites its own output, so the upserts are exactly-once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from etl_guiacores_spark.streaming.drift import (
-    _delete_dir,
-    _resolve_prev_snapshot,
-    _snapshot_ids,
+from etl_guiacores_spark.streaming.snapshots import (
+    _fold_stream,
+    read_latest_upsert,
 )
 
-def _state_schema(user_type: str) -> str:
+
+def _state_schema(user_type: str) -> T.StructType:
     """Union-schema state table: one fenced parquet per snapshot.
     kind='first' -> (user_id, first_day); kind='open' -> (day,
     n_events) single row; kind='openuser' -> (user_id) per open-day
     active user. The user_id field's type is DERIVED from the stream's
     own ``user_col`` (round-8 advice: a hard-coded ``long`` wrote
     string-typed snapshots the next batch read back with an
-    incompatible schema — same discipline as drift.py/smooth.py)."""
-    return (
+    incompatible schema)."""
+    return T.DataType.fromDDL(
         f"kind string, user_id {user_type}, first_day date, "
         "day date, n_events long"
     )
@@ -88,37 +87,15 @@ def daily_acquisition_stream(
     The setting is session-scoped while a batch folds: don't share
     the session with an unrelated concurrent query when using it."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # emptiness is detected by the fold's own span aggregate (its
-        # count rides the min/max/null job it already pays) — a
-        # separate isEmpty() probe was one more full job per
-        # micro-batch for information the fold computes anyway
-        spark = batch_df.sparkSession
-        if fold_shuffle_partitions is not None:
-            saved = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(fold_shuffle_partitions),
-            )
-            try:
-                _fold_batch(batch_df, batch_id)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
-        else:
-            _fold_batch(batch_df, batch_id)
-
-    def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state_root = f"{out_dir}/state"
+    def fold(batch_df, batch_id, state, fresh):
         user_type = batch_df.schema[user_col].dataType.simpleString()
-        state_schema = _state_schema(user_type)
 
         # rows feeds FIVE consumers (span guard, new-firsts, per-day
         # events, per-day users, touched days) across the two write
-        # jobs below — persist the narrow (user_id, day) projection so
-        # each consumer reads the cached batch instead of re-scanning
-        # the micro-batch source; footprint is one batch's rows,
-        # released in the finally below
+        # jobs — persist the narrow (user_id, day) projection so each
+        # consumer reads the cached batch instead of re-scanning the
+        # micro-batch source; footprint is one batch's rows, released
+        # with the other handles once both writes land
         rows = batch_df.select(
             F.col(user_col).alias("user_id"),
             F.to_date(time_col).alias("day"),
@@ -140,16 +117,9 @@ def daily_acquisition_stream(
         ).first()
         if not span["n"]:
             rows.unpersist()
-            return
+            return None
         new_open_day = span["hi"]
 
-        prev = _resolve_prev_snapshot(
-            spark, state_root, batch_id, "daily_acquisition_stream"
-        )
-        if prev is not None:
-            state = spark.read.schema(state_schema).parquet(prev)
-        else:
-            state = spark.createDataFrame([], state_schema)
         firsts0 = state.filter(F.col("kind") == "first").select(
             "user_id", "first_day"
         )
@@ -159,7 +129,7 @@ def daily_acquisition_stream(
         openusers0 = state.filter(F.col("kind") == "openuser").select(
             "user_id"
         )
-        if prev is not None:
+        if not fresh:
             open_row = open0.first()
             open_day = open_row["day"] if open_row else None
         else:
@@ -205,8 +175,8 @@ def daily_acquisition_stream(
         # per-batch folds were ~4.8 s of q199's 5.5 s, half of it this
         # recompute). The footprint is exactly the operator's stated
         # state envelope (|users| + one batch's day axis), and every
-        # handle is released in the finally below, so the stream holds
-        # no cache between micro-batches.
+        # handle goes back to the snapshot driver, which releases it
+        # once both writes land.
         firsts = firsts0.unionByName(new_firsts).persist()
 
         # per-day batch facts, folding in the carried open-day state
@@ -281,9 +251,6 @@ def daily_acquisition_stream(
                 F.lit(batch_id).cast("long").alias("batch_id"),
             )
         )
-        report.write.mode("overwrite").parquet(
-            f"{out_dir}/out/batch={batch_id}"
-        )
 
         # new state: firsts + the NEW open day (global max, computed
         # in the up-front span agg) and its distinct actives
@@ -320,28 +287,23 @@ def daily_acquisition_stream(
                 )
             )
         )
-        snap.write.mode("overwrite").parquet(
-            f"{state_root}/batch={batch_id}"
-        )
-        # release every per-batch cache handle: the stream must hold
-        # no storage between micro-batches (the state lives in the
-        # fenced parquet snapshots, not in the cache)
-        for staged in (day_users, day_events, firsts, rows):
-            staged.unpersist()
-        done = _snapshot_ids(spark, state_root)
-        for old in done[:-keep_snapshots]:
-            _delete_dir(spark, f"{state_root}/batch={old}")
+        return report, snap, day_users, day_events, firsts, rows
 
-    writer = events.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _fold_stream(
+        events, out_dir, "daily_acquisition_stream",
+        lambda batch: _state_schema(batch[user_col].dataType.simpleString()),
+        fold,
+        checkpoint_dir, keep_snapshots,
+        batch_conf=(
+            None
+            if fold_shuffle_partitions is None
+            else {"spark.sql.shuffle.partitions": str(fold_shuffle_partitions)}
+        ),
+    )
 
 
 def read_daily_acquisition(spark: SparkSession, out_dir: str) -> DataFrame:
     """Merge the per-batch upsert outputs into the current report: for
     each day, the row from the LATEST batch that emitted it (the shared
-    drift.read_latest_upsert merge, |days|-bounded)."""
-    from etl_guiacores_spark.streaming.drift import read_latest_upsert
-
+    read_latest_upsert merge, |days|-bounded)."""
     return read_latest_upsert(spark, out_dir, ["day"])

@@ -22,25 +22,18 @@ key, which equals running the batch operator over the full history
 (equivalence-tested in tests/test_streaming.py, including a
 redelivery replay).
 
-Delivery/replay contracts are the smooth.py/drift.py protocol
-verbatim: rows must arrive in per-key event-time order ACROSS batches
-(fail loud — a late row would need path rewrite); outputs and state
-snapshots land in ``batch=<id>`` dirs with overwrite + ``_SUCCESS``
-fencing; batch N reads the latest fenced snapshot with id < N
-(Hadoop-FS listing + replay fence), so a foreachBatch redelivery
-recomputes from its original inputs and overwrites its own output:
-exactly-once upserts. State at 100 TB is one 6-field row per key,
-shuffled like any keyed join; snapshots parquet-pruned.
+Delivery contract: per-key (event-time, tiebreak) order across
+batches (fail loud — a late row would need path rewrite), enforced by
+the shared guard. Snapshots, replay and pruning follow the protocol in
+``streaming/snapshots.py``. State at 100 TB is one 6-field row per
+key, shuffled like any keyed join; snapshots parquet-pruned.
 
 State-size bound: the snapshot holds EXACTLY one row per key ever
 seen — never per batch (asserted over 20 micro-batches with key churn
-in tests/test_streaming.py::TestTwinStateBounds), and only
-``keep_snapshots`` fenced snapshot dirs survive on disk. Key-churn
-retention: whole-history drawdown legitimately remembers every key
-forever; when a deployment retires keys (closed accounts), compact by
-filtering the latest fenced snapshot — it is a plain parquet table —
-before restarting the stream, or leave them: the carry cost is one
-narrow row per retired key, anti-joined (never rescanned) each batch.
+in tests/test_streaming.py::TestTwinStateBounds). Retired keys (closed
+accounts) can be dropped between runs with ``compact_snapshots``, or
+left: the carry cost is one narrow row per key, anti-joined (never
+rescanned) each batch.
 """
 
 from __future__ import annotations
@@ -50,12 +43,15 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_guiacores_spark.streaming.drift import (
-    _delete_dir,
-    _resolve_prev_snapshot,
-    _snapshot_ids,
+from etl_guiacores_spark.streaming.snapshots import (
+    _check_key_order,
+    _fold_stream,
+    _keyed_state_schema,
+    read_latest_upsert,
 )
 
+
+OP = "max_drawdown_stream"
 
 def max_drawdown_stream(
     events: DataFrame,
@@ -85,74 +81,18 @@ def max_drawdown_stream(
         )
     flow = F.col(flow_col) if isinstance(flow_col, str) else flow_col
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df, batch_id, state, fresh):
         if batch_df.isEmpty():
-            return
-        from pyspark.sql import types as T
-
-        spark = batch_df.sparkSession
-        state_root = f"{out_dir}/state"
-        prev = _resolve_prev_snapshot(
-            spark, state_root, batch_id, "max_drawdown_stream"
-        )
-        # key fields typed from the stream itself (the acquisition.py
-        # round-8 lesson: never hard-code a state field's type)
-        state_schema = T.StructType(
-            [batch_df.schema[k] for k in keys]
-            + [
-                T.StructField("cum", T.LongType()),
-                T.StructField("peak", T.LongType()),
-                T.StructField("maxdd", T.LongType()),
-                T.StructField("n_flows", T.LongType()),
-                T.StructField("ts_last", batch_df.schema[time_col].dataType),
-                T.StructField(
-                    "tb_last", batch_df.schema[tiebreak_col].dataType
-                ),
-            ]
-        )
-        if prev is not None:
-            state = spark.read.schema(state_schema).parquet(prev)
-        else:
-            state = spark.createDataFrame([], state_schema)
-
+            return None
         rows = batch_df.select(
             *keys,
             F.col(time_col).alias("__ts"),
             F.col(tiebreak_col).alias("__tb"),
             flow.cast("long").alias("__flow"),
         )
-
-        # in-order contract across batches — fail loud, as every twin
-        # does: folding carried state over an older row would silently
-        # rewrite the path. The comparison is on the SAME (ts, tiebreak)
-        # total order the operator folds in, so a later batch may
-        # legally carry the same timestamp with a larger tiebreak
-        # (round-9 review catch — comparing ts alone rejected it)
-        firsts = rows.groupBy(*keys).agg(
-            F.min(F.struct("__ts", "__tb")).alias("__first")
+        _check_key_order(
+            batch_df, state, keys, time_col, tiebreak_col, batch_id, OP
         )
-        n_late = (
-            firsts.join(
-                state.select(
-                    *keys,
-                    F.struct(
-                        F.col("ts_last").alias("__ts"),
-                        F.col("tb_last").alias("__tb"),
-                    ).alias("__held"),
-                ),
-                keys,
-            )
-            .filter(F.col("__first") <= F.col("__held"))
-            .count()
-        )
-        if n_late:
-            raise RuntimeError(
-                f"max_drawdown_stream: batch {batch_id} carries rows at "
-                f"or before already-processed event time for {n_late} "
-                f"key(s) — per-key event-time order across batches is "
-                f"the operator's delivery contract"
-            )
-
         seeded = rows.join(
             state.select(
                 *keys,
@@ -193,15 +133,6 @@ def max_drawdown_stream(
             F.max("__ts").alias("__ts_last"),
             F.max_by("__tb", F.struct("__ts", "__tb")).alias("__tb_last"),
         )
-        report.select(
-            *keys,
-            "n_flows",
-            "final",
-            "peak",
-            "max_drawdown",
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        ).write.mode("overwrite").parquet(f"{out_dir}/out/batch={batch_id}")
-
         new_state = report.select(
             *keys,
             F.col("final").alias("cum"),
@@ -212,24 +143,29 @@ def max_drawdown_stream(
             F.col("__tb_last").alias("tb_last"),
         )
         carried = state.join(new_state.select(*keys), keys, "left_anti")
-        snap = carried.unionByName(new_state)
-        snap.write.mode("overwrite").parquet(f"{state_root}/batch={batch_id}")
-        done = _snapshot_ids(spark, state_root)
-        for old in done[:-keep_snapshots]:
-            _delete_dir(spark, f"{state_root}/batch={old}")
+        out = report.select(
+            *keys,
+            "n_flows",
+            "final",
+            "peak",
+            "max_drawdown",
+            F.lit(batch_id).cast("long").alias("batch_id"),
+        )
+        return out, carried.unionByName(new_state)
 
-    writer = events.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    state_schema = _keyed_state_schema(
+        keys, ("cum", "peak", "maxdd", "n_flows"), time_col, tiebreak_col
+    )
+    return _fold_stream(
+        events, out_dir, OP, state_schema, fold, checkpoint_dir,
+        keep_snapshots,
+    )
 
 
 def read_max_drawdown(
     spark: SparkSession, out_dir: str, key_cols: Sequence[str]
 ) -> DataFrame:
     """Current cumulative report: latest batch's row per key (the
-    shared drift.read_latest_upsert merge). Matches the batch
+    shared read_latest_upsert merge). Matches the batch
     ``max_drawdown`` output columns."""
-    from etl_guiacores_spark.streaming.drift import read_latest_upsert
-
     return read_latest_upsert(spark, out_dir, key_cols)

@@ -20,353 +20,34 @@ the concatenated history — equivalence-tested against it in
 tests/test_streaming.py.
 
 Delivery contract (the same one every recurrence-over-a-stream
-carries, incl. the carry-select EWMA): rows must arrive in event-time
-order PER KEY across micro-batches — a row older than its key's last
-processed event would need history rewrite, so it raises rather than
-silently corrupting the statistic. Order WITHIN a batch is free (the
+carries, incl. the carry-select EWMA): rows must arrive in
+(event-time, tiebreak) order PER KEY across micro-batches — a row at
+or before its key's last processed event would need history rewrite,
+so it raises rather than silently corrupting the statistic. Order WITHIN a batch is free (the
 local window sorts); use an upstream watermark + sorted replay for
 out-of-order sources.
 
-Crash/replay semantics (foreachBatch may redeliver a batch): both the
-per-batch output and the per-batch state snapshot are written to
-``batch=<id>`` directories with mode=overwrite, and the state read
-for batch N takes the LATEST snapshot with id < N — a replayed batch
-recomputes from its original input state and overwrites its own
-output: exactly-once results, no duplicated rows.
-
-State at 100 TB: the state table is one row per key (two BIGINTs) —
-it shuffles on the key like any keyed join; snapshots are parquet so
-a 1000-executor cluster reads them pruned. Old snapshots are pruned
-to the newest ``keep_snapshots``. Snapshot listing/pruning goes
-through the Hadoop FileSystem API, so ``out_dir`` may be any Spark
-path (HDFS/S3/local alike). A replay DEEPER than the retained window
-(batch N redelivered after its input snapshot was pruned) is refused
-with an error instead of silently refolding from empty state —
-exactly-once only holds within the last ``keep_snapshots`` batches,
-which must cover the sink's maximum redelivery depth.
+State: one row per key, (p_last, p_min) plus the key's last
+(time, tiebreak) for the order guard; it shuffles on the key like any
+keyed join. Snapshots, replay and pruning follow the protocol in
+``streaming/snapshots.py``.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _snapshot_ids(
-    spark: SparkSession, root: str, allow_compacting: bool = False
-) -> list[int]:
-    """Sorted ids of FENCED (``_SUCCESS``-marked) ``batch=<id>``
-    snapshot dirs under ``root``, via the Hadoop FileSystem API — NOT
-    local pathlib/glob: ``out_dir`` is a Spark path, so on HDFS/S3 (the
-    cluster deployment) a driver-local listing would silently see
-    nothing and every batch would start from empty state."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return []
-    ids = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("_COMPACTING_") and not allow_compacting:
-            # an interrupted compact_snapshots swap: the snapshot it
-            # was rewriting may be missing, and folding the next
-            # batch from the one BEFORE it would silently drop a
-            # batch's contributions — refuse until recovered (re-run
-            # compact_snapshots; it completes or rolls back the swap)
-            raise RuntimeError(
-                f"interrupted snapshot compaction under {root} "
-                f"(marker {name}) — re-run compact_snapshots on this "
-                "state root to complete or roll back the swap before "
-                "resuming the stream"
-            )
-        if not (st.isDirectory() and name.startswith("batch=")):
-            continue
-        suffix = name.split("=", 1)[1]
-        if not suffix.isdigit():
-            continue
-        success = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-        if fs.exists(success):
-            ids.append(int(suffix))
-    return sorted(ids)
+from etl_guiacores_spark.streaming.snapshots import (
+    _check_key_order,
+    _fold_stream,
+    _keyed_state_schema,
+)
 
 
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def compact_snapshots(
-    spark: SparkSession,
-    state_root: str,
-    retired_keys: DataFrame,
-    key_cols: Sequence[str],
-    removable: Column | None = None,
-) -> int:
-    """Drop RETIRED keys' state rows from the latest fenced snapshot —
-    the offline key-churn compaction step for every foreachBatch twin
-    on this snapshot protocol (drawdown, dwell, CUSUM, EWMA, ...).
-
-    The twins correctly carry one state row per key FOREVER
-    (whole-history semantics; O(|keys|) proven by
-    TestTwinStateBounds), so a corpus with unbounded key churn needs
-    an out-of-band retirement decision. Run this BETWEEN runs (no
-    active query on ``out_dir``): the latest ``batch=<id>`` snapshot
-    is rewritten in place with the retired keys' rows removed; a
-    resumed stream folds the next batch from the compacted state
-    exactly as it would have minus those keys — resume-equivalence
-    is pinned in tests/test_streaming.py.
-
-    ``removable`` restricts which of a retired key's rows may drop
-    (the dwell twin passes ``kind == 'open'``: a retired key's open
-    hold is dropped but the shared per-state aggregate rows survive;
-    a NULL predicate value counts as "may not drop" — the filter
-    only removes rows it affirms). None means every row of a retired
-    key drops. Retire a key only when upstream will not send it
-    again — if it does reappear, the twin folds it as brand new (and
-    a replay DEEPER than the compacted snapshot resurrects it,
-    consistent with the same assumption). Returns the number of rows
-    removed. The join is a keyed anti-join — retired_keys may be
-    data-sized; nothing here is collected to the driver.
-
-    Crash safety: the in-place swap is fenced by a
-    ``_COMPACTING_<id>`` marker whose CONTENT is the expected
-    compacted row count. While the marker exists, ``_snapshot_ids``
-    (and therefore every stream resume on this root) REFUSES to list
-    snapshots — a crash mid-swap would otherwise let the next batch
-    silently fold from one-batch-stale state (the replay fence in
-    _resolve_prev_snapshot doesn't fire while an older snapshot
-    exists). Both installs are Spark WRITE JOBS, never a
-    FileSystem.rename: on object stores rename is copy-then-delete
-    and an interrupted copy/delete can leave a dir that carries
-    ``_SUCCESS`` while missing data files, so during recovery a
-    fenced dir is only trusted if its ROW COUNT matches the marker —
-    whichever of (batch dir, temp dir) verifies wins, the swap is
-    completed or rolled back from it, and the marker is removed.
-    Re-running compact_snapshots performs that recovery
-    automatically before compacting."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(state_root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-    def _marker_path(bid: int) -> str:
-        return f"{state_root}/_COMPACTING_{bid}"
-
-    def _fenced_dir(p: str) -> bool:
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{p}/_SUCCESS"))
-
-    def _verified(p: str, want: int | None) -> bool:
-        """Fenced AND (when the marker carries a count) the row count
-        matches. A bare ``_SUCCESS`` is NOT proof of completeness
-        during recovery: object-store rename/delete are per-object
-        operations, so an interrupted one can leave a dir carrying
-        the fence while missing data files."""
-        if not _fenced_dir(p):
-            return False
-        if want is None:  # legacy count-less marker
-            return True
-        try:
-            return spark.read.parquet(p).count() == want
-        except Exception:
-            return False  # torn files -> not trustworthy
-
-    # --- recovery: finish or roll back an interrupted swap ----------
-    root_p = jvm.org.apache.hadoop.fs.Path(state_root)
-    if fs.exists(root_p):
-        listing = [st.getPath() for st in fs.listStatus(root_p)]
-
-        def _suffix_id(name: str, prefix: str) -> int | None:
-            """Batch id from ``<prefix><int>``, None for foreign names
-            (a suffix this protocol never writes — skip it rather
-            than crash on or delete someone else's dir). Canonical
-            form only: a digit-but-zero-padded suffix (``007``) is
-            ALSO foreign — int()ing it would make recovery look for
-            batch=7 and clean up marker _COMPACTING_7, neither of
-            which is the on-disk name, wedging recovery forever."""
-            tail = name.split(prefix, 1)[1]
-            if tail.isdigit() and str(int(tail)) == tail:
-                return int(tail)
-            return None
-
-        marker_bids = {
-            bid
-            for p in listing
-            if p.getName().startswith("_COMPACTING_")
-            and (bid := _suffix_id(p.getName(), "_COMPACTING_"))
-            is not None
-        }
-        # a .compact-tmp-<id> with NO marker is pre-marker garbage: the
-        # temp-write job failed or was interrupted before the marker was
-        # created, so the original snapshot is untouched and the marker
-        # recovery loop below will never see the dir — sweep it here or
-        # it lives forever (round-11 advice item)
-        for p in listing:
-            name = p.getName()
-            if name.startswith(".compact-tmp-"):
-                bid = _suffix_id(name, ".compact-tmp-")
-                if bid is not None and bid not in marker_bids:
-                    _delete_dir(spark, f"{state_root}/{name}")
-        for p in listing:
-            name = p.getName()
-            if not name.startswith("_COMPACTING_"):
-                continue
-            bid = _suffix_id(name, "_COMPACTING_")
-            if bid is None:
-                # foreign non-integer marker name — same skip-foreign
-                # tolerance as the tmp-dir sweep above
-                continue
-            pdir = f"{state_root}/batch={bid}"
-            tdir = f"{state_root}/.compact-tmp-{bid}"
-            want: int | None = None
-            try:
-                stream = fs.open(p)
-                raw = bytes(
-                    stream.readAllBytes()
-                ).decode("utf-8").strip()
-                stream.close()
-            except Exception as e:
-                # 'marker exists but unreadable' is NOT the same as
-                # 'marker legitimately empty' (pre-write crash window):
-                # after the original snapshot was partially deleted, a
-                # transient IO error here must not downgrade _verified
-                # to trusting a bare _SUCCESS on a torn batch dir —
-                # fail loud and let the caller retry the recovery
-                raise RuntimeError(
-                    f"compact_snapshots: could not read marker "
-                    f"{_marker_path(bid)} — refusing count-less "
-                    "recovery; retry once the marker is readable"
-                ) from e
-            if raw:
-                try:
-                    want = int(raw)
-                except ValueError as e:
-                    raise RuntimeError(
-                        f"compact_snapshots: corrupt marker "
-                        f"{_marker_path(bid)} (contents {raw!r}) — "
-                        "refusing count-less recovery"
-                    ) from e
-            # else: marker created but count never written (crash in
-            # the pre-destructive-op window) — the original snapshot
-            # is still intact, so a count-less check is safe
-            if _verified(pdir, want):
-                # either the install job completed, or (count-equal
-                # rollback window) the original already equals the
-                # compacted content — trust it, clear the temp
-                _delete_dir(spark, tdir)
-            elif _verified(tdir, want):
-                # temp is the only complete copy: redo the install
-                # as a WRITE JOB (committer lands _SUCCESS last)
-                _delete_dir(spark, pdir)
-                spark.read.parquet(tdir).write.parquet(pdir)
-                _delete_dir(spark, tdir)
-            else:
-                raise RuntimeError(
-                    f"compact_snapshots: interrupted swap for batch "
-                    f"{bid} under {state_root} left neither a "
-                    "verifiable snapshot nor a verifiable temp — "
-                    "unrecoverable; restore from an earlier snapshot"
-                )
-            _delete_dir(spark, _marker_path(bid))
-
-    ids = _snapshot_ids(spark, state_root, allow_compacting=True)
-    if not ids:
-        raise ValueError(
-            f"compact_snapshots: no fenced snapshot under {state_root}"
-        )
-    path = f"{state_root}/batch={ids[-1]}"
-    snap = spark.read.parquet(path)
-    cols = list(key_cols)
-    marked = snap.join(
-        retired_keys.select(*cols).distinct().withColumn(
-            "__retired", F.lit(True)
-        ),
-        cols,
-        "left",
-    )
-    drop = F.col("__retired").isNotNull()
-    if removable is not None:
-        # NULL predicate = not affirmed = keep (TRUE & NULL is NULL,
-        # and filter(~NULL) would silently DELETE the row otherwise)
-        drop = drop & F.coalesce(removable, F.lit(False))
-    # both counts observed on the ONE temp-write job — no separate
-    # pre-scan of the snapshot and no post-install re-read (the
-    # second review pass flagged the 3x read volume on a state table
-    # that can be key-churn-sized)
-    from pyspark.sql import Observation
-
-    obs_all = Observation("compact_all")
-    obs_kept = Observation("compact_kept")
-    kept = (
-        marked.observe(obs_all, F.count(F.lit(1)).alias("n"))
-        .filter(~drop)
-        .drop("__retired")
-        .select(*snap.columns)
-        .observe(obs_kept, F.count(F.lit(1)).alias("n"))
-    )
-    tmp = f"{state_root}/.compact-tmp-{ids[-1]}"
-    kept.write.mode("overwrite").parquet(tmp)
-    n_all, n_kept = obs_all.get["n"], obs_kept.get["n"]
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(_marker_path(ids[-1])), True
-    )
-    out.write(str(n_kept).encode("utf-8"))
-    out.close()
-    _delete_dir(spark, path)
-    # install as a write job, not a rename: a fenced job output is
-    # complete everywhere, including object stores
-    spark.read.parquet(tmp).write.parquet(path)
-    _delete_dir(spark, tmp)
-    _delete_dir(spark, _marker_path(ids[-1]))
-    return n_all - n_kept
-
-
-def _resolve_prev_snapshot(
-    spark: SparkSession, state_root: str, batch_id: int, op: str
-) -> str | None:
-    """Path of the state snapshot batch ``batch_id`` must read (the
-    latest fenced id strictly below it), or None for genuinely-fresh
-    state. Replay fence: if snapshots at or past this batch exist
-    (=> the batch already ran) but no earlier snapshot survives, its
-    input state was pruned — a recompute would silently refold from
-    empty, so refuse. Exactly-once only holds within the last
-    ``keep_snapshots`` batches; size that to the sink's maximum
-    redelivery depth."""
-    ids = _snapshot_ids(spark, state_root)
-    before = [i for i in ids if i < batch_id]
-    if not before and batch_id > 0 and any(i >= batch_id for i in ids):
-        raise RuntimeError(
-            f"{op}: replay of batch {batch_id} is deeper than the "
-            f"retained state window (fenced snapshots: {ids}) — its "
-            f"input snapshot was pruned. Raise keep_snapshots or "
-            f"restart from a fresh out_dir."
-        )
-    return f"{state_root}/batch={before[-1]}" if before else None
-
-
-def read_latest_upsert(
-    spark: SparkSession, out_dir: str, key_cols: Sequence[str]
-) -> DataFrame:
-    """Merge ``out_dir/out/batch=<id>`` upsert outputs into the current
-    report: for each key, the row from the LATEST batch that emitted it
-    — a window over the bounded key axis, never event volume. The ONE
-    definition of the read-side merge contract shared by the
-    acquisition/drawdown/dwell twins (round-9 review: three copies had
-    crept in)."""
-    rows = spark.read.parquet(f"{out_dir}/out")
-    w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
-    return (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        # 'batch' is the partition-discovery column from batch=<id>
-        # dirs; batch_id is the explicit copy the merge ordered by
-        .drop("__rn", "batch_id", "batch")
-    )
-
+OP = "cusum_drift_stream"
 
 def cusum_drift_stream(
     events: DataFrame,
@@ -392,29 +73,13 @@ def cusum_drift_stream(
         - F.lit(target_micro)
         - F.lit(slack_micro)
     ).cast("long")
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+
+    def fold(batch_df, batch_id, state, fresh):
         if batch_df.isEmpty():
-            return
-        from pyspark.sql import types as T
-
-        spark = batch_df.sparkSession
-        state_root = f"{out_dir}/state"
-        prev = _resolve_prev_snapshot(
-            spark, state_root, batch_id, "cusum_drift_stream"
+            return None
+        _check_key_order(
+            batch_df, state, keys, time_col, tiebreak_col, batch_id, OP
         )
-        state_schema = T.StructType(
-            [batch_df.schema[k] for k in keys]
-            + [
-                T.StructField("p_last", T.LongType()),
-                T.StructField("p_min", T.LongType()),
-                T.StructField("ts_last", batch_df.schema[time_col].dataType),
-            ]
-        )
-        if prev is not None:
-            state = spark.read.schema(state_schema).parquet(prev)
-        else:
-            state = spark.createDataFrame([], state_schema)
-
         w = (
             Window.partitionBy(*keys)
             .orderBy(time_col, tiebreak_col)
@@ -424,21 +89,9 @@ def cusum_drift_stream(
             batch_df.withColumn("__lp", F.sum(dev).over(w))
             .withColumn("__lmin", F.min("__lp").over(w))
         )
-        joined = local.join(F.broadcast(state), keys, "left")
-        # in-order contract: a row at or before its key's last
-        # processed event time would need history rewrite — fail loud
-        n_late = joined.filter(
-            F.col("ts_last").isNotNull() & (F.col(time_col) <= F.col("ts_last"))
-        ).count()
-        if n_late:
-            raise RuntimeError(
-                f"cusum_drift_stream: batch {batch_id} carries {n_late} "
-                f"row(s) at or before already-processed event time for "
-                f"their key — per-key event-time order across batches "
-                f"is the operator's delivery contract"
-            )
         shifted = (
-            joined.withColumn(
+            local.join(F.broadcast(state), keys, "left")
+            .withColumn(
                 "__p", F.coalesce("p_last", F.lit(0)) + F.col("__lp")
             )
             .withColumn(
@@ -456,11 +109,6 @@ def cusum_drift_stream(
             )
             .withColumn("drift_flag", F.col("cusum_micro") > threshold_micro)
         )
-        out_path = f"{out_dir}/out/batch={batch_id}"
-        shifted.select(
-            *batch_df.columns, "cusum_micro", "drift_flag"
-        ).write.mode("overwrite").parquet(out_path)
-
         # new per-key state from what was just computed: last-row P and
         # running min at the last row (which is min over ALL rows seen)
         ordk = F.struct(F.col(time_col), F.col(tiebreak_col))
@@ -468,16 +116,18 @@ def cusum_drift_stream(
             F.max_by("__p", ordk).cast("long").alias("p_last"),
             F.max_by("__pmin", ordk).cast("long").alias("p_min"),
             F.max(time_col).alias("ts_last"),
+            F.max_by(tiebreak_col, ordk).alias("tb_last"),
         )
         carried = state.join(new_state.select(*keys), keys, "left_anti")
-        snap = carried.unionByName(new_state)
-        snap.write.mode("overwrite").parquet(f"{state_root}/batch={batch_id}")
-        # prune old fenced snapshots, never the one just written
-        done = _snapshot_ids(spark, state_root)
-        for old in done[:-keep_snapshots]:
-            _delete_dir(spark, f"{state_root}/batch={old}")
+        return (
+            shifted.select(*batch_df.columns, "cusum_micro", "drift_flag"),
+            carried.unionByName(new_state),
+        )
 
-    writer = events.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    state_schema = _keyed_state_schema(
+        keys, ("p_last", "p_min"), time_col, tiebreak_col
+    )
+    return _fold_stream(
+        events, out_dir, OP, state_schema, fold, checkpoint_dir,
+        keep_snapshots,
+    )

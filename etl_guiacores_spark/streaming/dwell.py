@@ -18,22 +18,18 @@ checkpoint-redelivery replay).
 
 Per-batch output is one CUMULATIVE row per state (an upsert merged by
 ``read_state_dwell``: latest batch per state — a bounded |states|-row
-window). Delivery/replay contracts are the drift.py protocol
-verbatim: per-key event-time order across batches (fail loud),
-``batch=<id>`` dirs with overwrite + ``_SUCCESS`` fencing, replay
-fence on pruned-state redelivery: exactly-once upserts. State at
-100 TB: one row per key plus |states| rows, shuffled like any keyed
-join.
+window). Delivery contract: per-key (event-time, tiebreak) order
+across batches (fail loud), enforced by the shared guard against each
+key's open hold. Snapshots, replay and pruning follow the protocol in
+``streaming/snapshots.py``. State at 100 TB: one row per key plus
+|states| rows, shuffled like any keyed join.
 
 State-size bound: the snapshot is exactly |keys ever seen| open-hold
 rows + |distinct states| aggregate rows, regardless of batch count
 (asserted over 20 micro-batches with key churn in
-tests/test_streaming.py::TestTwinStateBounds); disk keeps only
-``keep_snapshots`` fenced dirs. Key-churn retention: retired keys can
-be compacted out by filtering their ``kind='open'`` rows from the
-latest fenced snapshot (a plain parquet table) between runs — their
-already-closed dwells stay in the per-state aggregates, only the
-open, never-to-close hold is dropped.
+tests/test_streaming.py::TestTwinStateBounds). ``compact_snapshots``
+with ``removable=kind == 'open'`` drops retired keys' open holds
+between runs; their closed dwells stay in the per-state aggregates.
 """
 
 from __future__ import annotations
@@ -42,11 +38,12 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from etl_guiacores_spark.streaming.drift import (
-    _delete_dir,
-    _resolve_prev_snapshot,
-    _snapshot_ids,
+from etl_guiacores_spark.streaming.snapshots import (
+    _check_key_order,
+    _fold_stream,
+    read_latest_upsert,
 )
 
 
@@ -74,36 +71,27 @@ def state_dwell_stream(
             "itself) — rename them first"
         )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import types as T
-
-        from etl_guiacores_spark.operators.temporal import event_micros
-
-        spark = batch_df.sparkSession
-        state_root = f"{out_dir}/state"
-        prev = _resolve_prev_snapshot(
-            spark, state_root, batch_id, "state_dwell_stream"
-        )
-        # every field typed from the stream itself (the acquisition.py
-        # round-8 lesson)
-        state_schema = T.StructType(
+    # every field typed from the stream itself (the acquisition.py
+    # round-8 lesson)
+    def state_schema(batch: T.StructType) -> T.StructType:
+        return T.StructType(
             [T.StructField("kind", T.StringType())]
-            + [batch_df.schema[k] for k in keys]
+            + [batch[k] for k in keys]
             + [
-                T.StructField("__state", batch_df.schema[state_col].dataType),
-                T.StructField("__ts", batch_df.schema[time_col].dataType),
-                T.StructField("__tb", batch_df.schema[tiebreak_col].dataType),
+                T.StructField("__state", batch[state_col].dataType),
+                T.StructField("__ts", batch[time_col].dataType),
+                T.StructField("__tb", batch[tiebreak_col].dataType),
                 T.StructField("n_holds", T.LongType()),
                 T.StructField("total_dwell_us", T.LongType()),
                 T.StructField("max_dwell_us", T.LongType()),
             ]
         )
-        if prev is not None:
-            state = spark.read.schema(state_schema).parquet(prev)
-        else:
-            state = spark.createDataFrame([], state_schema)
+
+    def fold(batch_df, batch_id, state, fresh):
+        if batch_df.isEmpty():
+            return None
+        from etl_guiacores_spark.operators.temporal import event_micros
+
         open0 = state.filter(F.col("kind") == "open").select(
             *keys, "__state", "__ts", "__tb"
         )
@@ -113,37 +101,26 @@ def state_dwell_stream(
             "total_dwell_us",
             "max_dwell_us",
         )
-
+        # the open hold IS the key's last processed event
+        _check_key_order(
+            batch_df,
+            open0.select(
+                *keys,
+                F.col("__ts").alias("ts_last"),
+                F.col("__tb").alias("tb_last"),
+            ),
+            keys,
+            time_col,
+            tiebreak_col,
+            batch_id,
+            "state_dwell_stream",
+        )
         rows = batch_df.select(
             *keys,
             F.col(state_col).alias("__state"),
             F.col(time_col).alias("__ts"),
             F.col(tiebreak_col).alias("__tb"),
         )
-
-        # in-order contract across batches: every batch row for a key
-        # must be strictly after that key's carried open hold (the
-        # open hold IS the key's last processed event)
-        firsts = rows.groupBy(*keys).agg(
-            F.min(F.struct("__ts", "__tb")).alias("__first")
-        )
-        n_late = (
-            firsts.join(
-                open0.select(
-                    *keys, F.struct("__ts", "__tb").alias("__held")
-                ),
-                keys,
-            )
-            .filter(F.col("__first") <= F.col("__held"))
-            .count()
-        )
-        if n_late:
-            raise RuntimeError(
-                f"state_dwell_stream: batch {batch_id} carries rows at "
-                f"or before already-processed event time for {n_late} "
-                f"key(s) — per-key event-time order across batches is "
-                f"the operator's delivery contract"
-            )
 
         combined = open0.unionByName(rows)
         m = event_micros(combined, "__ts")
@@ -184,10 +161,6 @@ def state_dwell_stream(
             "max_dwell_us",
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
-        report.write.mode("overwrite").parquet(
-            f"{out_dir}/out/batch={batch_id}"
-        )
-
         # new state: each key's LAST event is the new open hold
         # (max_by over the injective (ts, tb) order), plus the merged
         # per-state aggregates
@@ -227,23 +200,18 @@ def state_dwell_stream(
                 "max_dwell_us",
             )
         )
-        snap.write.mode("overwrite").parquet(f"{state_root}/batch={batch_id}")
-        done = _snapshot_ids(spark, state_root)
-        for old in done[:-keep_snapshots]:
-            _delete_dir(spark, f"{state_root}/batch={old}")
+        return report, snap
 
-    writer = events.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _fold_stream(
+        events, out_dir, "state_dwell_stream", state_schema, fold,
+        checkpoint_dir, keep_snapshots,
+    )
 
 
 def read_state_dwell(
     spark: SparkSession, out_dir: str, state_col: str
 ) -> DataFrame:
     """Current cumulative report: latest batch's row per state (the
-    shared drift.read_latest_upsert merge, |states|-bounded). Matches
-    the batch ``state_dwell`` output columns."""
-    from etl_guiacores_spark.streaming.drift import read_latest_upsert
-
+    shared read_latest_upsert merge, |states|-bounded). Matches the
+    batch ``state_dwell`` output columns."""
     return read_latest_upsert(spark, out_dir, [state_col])

@@ -4,22 +4,18 @@ parity set alongside the OHLC and CUSUM stream twins.
 
 The batch operator folds each key's ordered series in-plan from a
 NULL seed. The stream version carries exactly the recurrence's state
-between micro-batches — (level, trend, ts_last) per key, two BIGINTs
-plus a watermark timestamp, never row history — and folds each
+between micro-batches — (level, trend) per key, two BIGINTs, plus
+the key's last (time, tiebreak), never row history — and folds each
 micro-batch's rows FROM that carried seed through the identical
 blocked two-level scan (the ``seed_sql`` parameter of the batch
 helpers), so the concatenated outputs are bit-identical to running
 ``holt_smooth`` over the full history: equivalence-tested in
 tests/test_streaming.py.
 
-Delivery/replay contracts are the cusum_drift_stream ones verbatim:
-rows must arrive in per-key event-time order ACROSS batches (fail
-loud otherwise — a late row would need history rewrite); both output
-and state snapshot write to ``batch=<id>`` dirs with overwrite and
-``_SUCCESS`` fencing, and batch N reads the latest fenced snapshot
-with id < N, so a foreachBatch redelivery recomputes from its
-original inputs: exactly-once results. State at 100 TB is one row
-per key, shuffled like any keyed join; snapshots parquet-pruned.
+Delivery contract: the CUSUM twin's per-key (event-time, tiebreak)
+order across batches, enforced by the shared guard. Snapshots, replay and pruning
+follow the protocol in ``streaming/snapshots.py``. State at 100 TB is
+one row per key, shuffled like any keyed join.
 """
 
 from __future__ import annotations
@@ -29,12 +25,14 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_guiacores_spark.streaming.drift import (
-    _delete_dir,
-    _resolve_prev_snapshot,
-    _snapshot_ids,
+from etl_guiacores_spark.streaming.snapshots import (
+    _check_key_order,
+    _fold_stream,
+    _keyed_state_schema,
 )
 
+
+OP = "holt_smooth_stream"
 
 def holt_smooth_stream(
     events: DataFrame,
@@ -68,60 +66,28 @@ def holt_smooth_stream(
     g, h = beta_ppm, 1_000_000 - beta_ppm
     val = F.col(value_micro) if isinstance(value_micro, str) else value_micro
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df, batch_id, state, fresh):
         if batch_df.isEmpty():
-            return
-        from pyspark.sql import types as T
-
-        spark = batch_df.sparkSession
-        state_root = f"{out_dir}/state"
-        prev = _resolve_prev_snapshot(
-            spark, state_root, batch_id, "holt_smooth_stream"
-        )
-        state_schema = T.StructType(
-            [batch_df.schema[k] for k in keys]
-            + [
-                T.StructField("level", T.LongType()),
-                T.StructField("trend", T.LongType()),
-                T.StructField("ts_last", batch_df.schema[time_col].dataType),
-            ]
-        )
-        if prev is not None:
-            state = spark.read.schema(state_schema).parquet(prev)
-        else:
-            state = spark.createDataFrame([], state_schema)
-
+            return None
         rows = batch_df.select(
             *keys,
             F.col(time_col).alias("__ts"),
             F.col(tiebreak_col).alias("__tb"),
             val.cast("long").alias("__v"),
         )
+        _check_key_order(
+            batch_df, state, keys, time_col, tiebreak_col, batch_id, OP
+        )
         grouped = (
             rows.groupBy(*keys)
             .agg(
                 F.sort_array(
                     F.collect_list(F.struct("__ts", "__tb", "__v"))
-                ).alias("__arr"),
-                F.min("__ts").alias("__first_ts"),
+                ).alias("__arr")
             )
             .withColumn("__vals", F.expr("transform(__arr, x -> x.__v)"))
             .join(F.broadcast(state), keys, "left")
         )
-        # in-order contract across batches — fail loud, as the CUSUM
-        # twin does: continuing from carried state with an older row
-        # would silently rewrite history
-        n_late = grouped.filter(
-            F.col("ts_last").isNotNull()
-            & (F.col("__first_ts") <= F.col("ts_last"))
-        ).count()
-        if n_late:
-            raise RuntimeError(
-                f"holt_smooth_stream: batch {batch_id} carries rows at "
-                f"or before already-processed event time for {n_late} "
-                f"key(s) — per-key event-time order across batches is "
-                f"the operator's delivery contract"
-            )
         seed = "named_struct('l', level, 't', trend)"
         scanned = grouped.withColumn(
             "__bseeds",
@@ -143,23 +109,20 @@ def holt_smooth_stream(
             F.col("__z.__st.l").alias("level_micro"),
             F.col("__z.__st.t").alias("trend_micro"),
         )
-        out_path = f"{out_dir}/out/batch={batch_id}"
-        exploded.write.mode("overwrite").parquet(out_path)
-
         ordk = F.struct(F.col(time_col), F.col(tiebreak_col))
         new_state = exploded.groupBy(*keys).agg(
             F.max_by("level_micro", ordk).cast("long").alias("level"),
             F.max_by("trend_micro", ordk).cast("long").alias("trend"),
             F.max(time_col).alias("ts_last"),
+            F.max_by(tiebreak_col, ordk).alias("tb_last"),
         )
         carried = state.join(new_state.select(*keys), keys, "left_anti")
-        snap = carried.unionByName(new_state)
-        snap.write.mode("overwrite").parquet(f"{state_root}/batch={batch_id}")
-        done = _snapshot_ids(spark, state_root)
-        for old in done[:-keep_snapshots]:
-            _delete_dir(spark, f"{state_root}/batch={old}")
+        return exploded, carried.unionByName(new_state)
 
-    writer = events.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    state_schema = _keyed_state_schema(
+        keys, ("level", "trend"), time_col, tiebreak_col
+    )
+    return _fold_stream(
+        events, out_dir, OP, state_schema, fold, checkpoint_dir,
+        keep_snapshots,
+    )

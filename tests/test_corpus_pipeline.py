@@ -931,6 +931,49 @@ def test_span_legs_conserve_an_empty_input(spark, tmp_path):
     assert (m["span_docs"], m["span_total_tokens"]) == (0, 0)
 
 
+def test_span_legs_cache_detection_once_not_on_resume(
+    spark, tmp_path, monkeypatch
+):
+    """Each span leg lands its accounting and its rewritten text from
+    one cached execution of the span detection. A resume over the
+    fenced landings runs no detection, so it fills no cache."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cached_at_release = []
+    release = DataFrame.unpersist
+
+    def spy(self, *args, **kwargs):
+        if "retained_text" in self.columns:  # a span leg's frame
+            cached_at_release.append(persistent().size())
+        return release(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "unpersist", spy)
+    bench_text = ("which of the following best describes the "
+                  "capital allocation strategy question")
+    docs = spark.createDataFrame(
+        [(1, "intro words here " + bench_text + " closing words after"),
+         (2, GOOD), (3, GOOD + " and more")],
+        ["doc_id", "text"],
+    )
+    bench_p = str(tmp_path / "bench")
+    spark.createDataFrame([(bench_text,)], ["text"]).write.parquet(bench_p)
+    cfg = CorpusConfig(
+        min_quality=0.0, near_dup_jaccard=0.99, chunk_tokens=8,
+        chunk_overlap=2, vocab_top_k=50, benchmark_path=bench_p,
+        decontam_min_overlaps=10_000, decontam_spans=True,
+        decontam_span_n=8, strip_spans=True, span_n=10, span_min_docs=2,
+    )
+    out = str(tmp_path / "corpus")
+    base = persistent().size()
+    fresh = run_corpus_pipeline(docs, out, cfg)
+    assert fresh["span_dup_tokens"] > 0
+    assert len(cached_at_release) == 2
+    assert all(n > base for n in cached_at_release)
+    cached_at_release.clear()
+    assert run_corpus_pipeline(docs, out, cfg, resume=True) == fresh
+    assert cached_at_release == [base, base]
+
+
 def test_write_shards_refuses_remote_out_dir(spark):
     import pytest
 

@@ -6,12 +6,21 @@ from __future__ import annotations
 import time
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_guiacores_spark.streaming import (
+    cusum_drift_stream,
+    daily_acquisition_stream,
     discover_until_idle,
+    holt_smooth_stream,
+    max_drawdown_stream,
+    read_daily_acquisition,
+    read_max_drawdown,
+    read_state_dwell,
     session_agg,
+    state_dwell_stream,
     stream_dedupe,
     tumbling_counts,
 )
@@ -379,65 +388,6 @@ class TestAcquisitionStream:
         assert want["2024-01-03"]["n_returning"] == 2    # users 1, 2
         assert want["2024-01-03"]["cum_users"] == 5
 
-    def test_replayed_batch_is_exactly_once(self, spark, tmp_path):
-        """Real redelivery: delete the checkpoint's last commit marker
-        and restart — structured streaming re-runs the final batch.
-        It must recompute from its ORIGINAL input snapshot and
-        overwrite its own output: the merged report is unchanged."""
-        from datetime import datetime as dt
-
-        from etl_guiacores_spark.streaming import (
-            daily_acquisition_stream,
-            read_daily_acquisition,
-        )
-
-        def e(eid, day, hour, user):
-            return (eid, dt(2024, 1, day, hour), user, "click", 1.0)
-
-        batches = [
-            [e(1, 1, 8, user=1), e(2, 1, 9, user=2)],
-            [e(3, 2, 8, user=1), e(4, 2, 9, user=3)],
-            [e(5, 2, 12, user=4), e(6, 3, 8, user=1)],
-        ]
-        src = str(tmp_path / "rp_src")
-        out = str(tmp_path / "rp_out")
-        ckpt = str(tmp_path / "rp_ckpt")
-        spark.createDataFrame(batches[0], EVENTS_SCHEMA).coalesce(
-            1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q = daily_acquisition_stream(stream, out, checkpoint_dir=ckpt)
-        try:
-            q.processAllAvailable()
-            for b in batches[1:]:
-                spark.createDataFrame(b, EVENTS_SCHEMA).coalesce(
-                    1).write.mode("append").parquet(src)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        before = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_daily_acquisition(spark, out).collect()
-        )
-
-        # force redelivery of batch 2
-        (tmp_path / "rp_ckpt" / "commits" / "2").unlink()
-        crc = tmp_path / "rp_ckpt" / "commits" / ".2.crc"
-        if crc.exists():
-            crc.unlink()
-        stream2 = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q2 = daily_acquisition_stream(stream2, out, checkpoint_dir=ckpt)
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        after = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_daily_acquisition(spark, out).collect()
-        )
-        assert after == before
-
     def test_rejects_closed_day_rows(self, spark, tmp_path):
         from datetime import datetime as dt
 
@@ -540,10 +490,11 @@ class TestAcquisitionStream:
 
 
 class TestSnapshotFencing:
-    """The shared snapshot-resolution contract of the CUSUM/Holt
-    stream twins: Hadoop-FS listing (works on any Spark path scheme)
-    and the replay fence (a redelivery deeper than the retained
-    window must refuse, not silently refold from empty state)."""
+    """The snapshot-resolution contract every foreachBatch twin folds
+    on (streaming/snapshots.py): Hadoop-FS listing (works on any Spark
+    path scheme) and the replay fence (a redelivery deeper than the
+    retained window must refuse, not silently refold from empty
+    state)."""
 
     def _mk_snap(self, tmp_path, bid, fenced=True):
         d = tmp_path / "state" / f"batch={bid}"
@@ -552,7 +503,7 @@ class TestSnapshotFencing:
             (d / "_SUCCESS").touch()
 
     def test_listing_ignores_unfenced_and_noise(self, spark, tmp_path):
-        from etl_guiacores_spark.streaming.drift import _snapshot_ids
+        from etl_guiacores_spark.streaming.snapshots import _snapshot_ids
 
         root = str(tmp_path / "state")
         assert _snapshot_ids(spark, root) == []  # missing dir
@@ -565,7 +516,7 @@ class TestSnapshotFencing:
     def test_replay_fence(self, spark, tmp_path):
         import pytest
 
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             _resolve_prev_snapshot,
         )
 
@@ -590,22 +541,28 @@ class TestSnapshotFencing:
         assert _resolve_prev_snapshot(spark, root, 0, "op") is None
 
 
+def dd_flow():
+    # purchase adds micro-value, error subtracts (the q187 shape)
+    return F.when(
+        F.col("event_type") == "purchase",
+        F.floor(F.col("value") * 1_000_000).cast("long"),
+    ).otherwise(-F.floor(F.col("value") * 1_000_000).cast("long"))
+
+
+def dd_batch_report(spark, events):
+    from etl_guiacores_spark.operators.rollup_time import max_drawdown
+
+    df = spark.createDataFrame(events, EVENTS_SCHEMA)
+    flows = df.select("user_id", "ts", "event_id", dd_flow().alias("flow"))
+    return max_drawdown(flows, ["user_id"], ["ts", "event_id"], "flow")
+
+
 class TestDrawdownStream:
     def _flow(self):
-        # purchase adds micro-value, error subtracts (the q187 shape)
-        return F.when(
-            F.col("event_type") == "purchase",
-            F.floor(F.col("value") * 1_000_000).cast("long"),
-        ).otherwise(-F.floor(F.col("value") * 1_000_000).cast("long"))
+        return dd_flow()
 
     def _batch_report(self, spark, events):
-        from etl_guiacores_spark.operators.rollup_time import max_drawdown
-
-        df = spark.createDataFrame(events, EVENTS_SCHEMA)
-        flows = df.select(
-            "user_id", "ts", "event_id", self._flow().alias("flow")
-        )
-        return max_drawdown(flows, ["user_id"], ["ts", "event_id"], "flow")
+        return dd_batch_report(spark, events)
 
     def test_stream_equals_batch_twin(self, spark, tmp_path):
         from etl_guiacores_spark.streaming import (
@@ -654,101 +611,6 @@ class TestDrawdownStream:
         assert u1["peak"] == 5_000_000
         assert u1["final"] == 0
         assert u1["max_drawdown"] == 7_000_000   # peak 5M -> trough -2M
-
-    def test_replayed_batch_is_exactly_once(self, spark, tmp_path):
-        from etl_guiacores_spark.streaming import (
-            max_drawdown_stream,
-            read_max_drawdown,
-        )
-
-        batches = [
-            [ev(1, 1, user=1, etype="purchase", value=3.0)],
-            [ev(2, 10, user=1, etype="error", value=2.0),
-             ev(3, 11, user=2, etype="purchase", value=1.0)],
-            [ev(4, 20, user=1, etype="purchase", value=4.0)],
-        ]
-        src = str(tmp_path / "ddr_src")
-        out = str(tmp_path / "ddr_out")
-        ckpt = str(tmp_path / "ddr_ckpt")
-        spark.createDataFrame(batches[0], EVENTS_SCHEMA).coalesce(
-            1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q = max_drawdown_stream(
-            stream, out, key_cols=["user_id"], flow_col=self._flow(),
-            checkpoint_dir=ckpt)
-        try:
-            q.processAllAvailable()
-            for b in batches[1:]:
-                spark.createDataFrame(b, EVENTS_SCHEMA).coalesce(
-                    1).write.mode("append").parquet(src)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        before = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_max_drawdown(spark, out, ["user_id"]).collect()
-        )
-
-        # force redelivery of batch 2
-        (tmp_path / "ddr_ckpt" / "commits" / "2").unlink()
-        crc = tmp_path / "ddr_ckpt" / "commits" / ".2.crc"
-        if crc.exists():
-            crc.unlink()
-        stream2 = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q2 = max_drawdown_stream(
-            stream2, out, key_cols=["user_id"], flow_col=self._flow(),
-            checkpoint_dir=ckpt)
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        after = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_max_drawdown(spark, out, ["user_id"]).collect()
-        )
-        assert after == before
-
-    def test_same_timestamp_later_tiebreak_is_legal(self, spark, tmp_path):
-        """The cross-batch late check compares the SAME (ts, tiebreak)
-        total order the operator folds in: a later batch carrying the
-        same timestamp with a larger tiebreak must be accepted (round-9
-        review regression)."""
-        from datetime import datetime as dt
-
-        from etl_guiacores_spark.streaming import (
-            max_drawdown_stream,
-            read_max_drawdown,
-        )
-
-        t = dt(2024, 1, 1, 0, 10)
-        batches = [
-            [(1, t, 1, "purchase", 2.0)],
-            [(2, t, 1, "error", 1.0)],     # same ts, larger event_id
-        ]
-        src = str(tmp_path / "ddt_src")
-        out = str(tmp_path / "ddt_out")
-        spark.createDataFrame(batches[0], EVENTS_SCHEMA).coalesce(
-            1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q = max_drawdown_stream(
-            stream, out, key_cols=["user_id"], flow_col=self._flow(),
-            checkpoint_dir=str(tmp_path / "ddt_ckpt"))
-        try:
-            q.processAllAvailable()
-            spark.createDataFrame(batches[1], EVENTS_SCHEMA).coalesce(
-                1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-            assert q.exception() is None
-        finally:
-            q.stop()
-        got = {r["user_id"]: r.asDict() for r in read_max_drawdown(
-            spark, out, ["user_id"]).collect()}
-        want = {r["user_id"]: r.asDict() for r in self._batch_report(
-            spark, [x for b in batches for x in b]).collect()}
-        assert got == want
 
     def test_rejects_out_of_order_batch(self, spark, tmp_path):
         from etl_guiacores_spark.streaming import max_drawdown_stream
@@ -831,58 +693,6 @@ class TestDwellStream:
         # sanity on semantics: user 1 view@1 -> click@5 is a 4-minute
         # view hold; every state has at least one closed hold here
         assert want["view"]["n_holds"] >= 3
-
-    def test_replayed_batch_is_exactly_once(self, spark, tmp_path):
-        from etl_guiacores_spark.streaming import (
-            read_state_dwell,
-            state_dwell_stream,
-        )
-
-        batches = [
-            [ev(1, 1, user=1, etype="view")],
-            [ev(2, 10, user=1, etype="click"), ev(3, 12, user=2, etype="view")],
-            [ev(4, 20, user=1, etype="view"), ev(5, 25, user=2, etype="click")],
-        ]
-        src = str(tmp_path / "dwr_src")
-        out = str(tmp_path / "dwr_out")
-        ckpt = str(tmp_path / "dwr_ckpt")
-        spark.createDataFrame(batches[0], EVENTS_SCHEMA).coalesce(
-            1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q = state_dwell_stream(
-            stream, out, key_cols=["user_id"], state_col="event_type",
-            checkpoint_dir=ckpt)
-        try:
-            q.processAllAvailable()
-            for b in batches[1:]:
-                spark.createDataFrame(b, EVENTS_SCHEMA).coalesce(
-                    1).write.mode("append").parquet(src)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        before = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_state_dwell(spark, out, "event_type").collect()
-        )
-        (tmp_path / "dwr_ckpt" / "commits" / "2").unlink()
-        crc = tmp_path / "dwr_ckpt" / "commits" / ".2.crc"
-        if crc.exists():
-            crc.unlink()
-        stream2 = spark.readStream.schema(EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", 1).parquet(src)
-        q2 = state_dwell_stream(
-            stream2, out, key_cols=["user_id"], state_col="event_type",
-            checkpoint_dir=ckpt)
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        after = sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in read_state_dwell(spark, out, "event_type").collect()
-        )
-        assert after == before
 
     def test_reserved_key_names_fail_loud(self, spark, tmp_path):
         import pytest
@@ -986,7 +796,7 @@ class TestTwinStateBounds:
 
     def test_drawdown_state_is_one_row_per_key(self, spark, tmp_path):
         from etl_guiacores_spark.streaming import max_drawdown_stream
-        from etl_guiacores_spark.streaming.drift import _snapshot_ids
+        from etl_guiacores_spark.streaming.snapshots import _snapshot_ids
 
         def start(stream, out):
             return max_drawdown_stream(
@@ -1018,7 +828,7 @@ class TestTwinStateBounds:
             compact_snapshots,
             max_drawdown_stream,
         )
-        from etl_guiacores_spark.streaming.drift import _snapshot_ids
+        from etl_guiacores_spark.streaming.snapshots import _snapshot_ids
 
         def batch_rows(b, users):
             return [
@@ -1108,7 +918,7 @@ class TestTwinStateBounds:
         rolling back when the original survived."""
         import pytest
 
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             _snapshot_ids,
             compact_snapshots,
         )
@@ -1180,7 +990,7 @@ class TestTwinStateBounds:
         .compact-tmp-<id> that the marker-driven recovery loop never
         sees — the next compact_snapshots on the root must sweep it
         (the original snapshot is untouched, so deletion is safe)."""
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             compact_snapshots,
         )
 
@@ -1210,7 +1020,7 @@ class TestTwinStateBounds:
         ValueError) — the same skip-foreign tolerance the tmp-dir
         sweep already has — and must leave both foreign entries on
         disk (they weren't written by this protocol)."""
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             compact_snapshots,
         )
 
@@ -1245,7 +1055,7 @@ class TestTwinStateBounds:
         corrupt marker contents fail loud instead of want=None."""
         import pytest
 
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             compact_snapshots,
         )
 
@@ -1280,7 +1090,7 @@ class TestTwinStateBounds:
         """A NULL removable-predicate value means 'not affirmed' —
         the row must be KEPT (TRUE & NULL fed to filter(~drop) would
         silently delete it)."""
-        from etl_guiacores_spark.streaming.drift import (
+        from etl_guiacores_spark.streaming.snapshots import (
             compact_snapshots,
         )
 
@@ -1310,7 +1120,7 @@ class TestTwinStateBounds:
             compact_snapshots,
             state_dwell_stream,
         )
-        from etl_guiacores_spark.streaming.drift import _snapshot_ids
+        from etl_guiacores_spark.streaming.snapshots import _snapshot_ids
 
         def start(stream, out):
             return state_dwell_stream(
@@ -1349,7 +1159,7 @@ class TestTwinStateBounds:
 
     def test_dwell_state_is_keys_plus_states(self, spark, tmp_path):
         from etl_guiacores_spark.streaming import state_dwell_stream
-        from etl_guiacores_spark.streaming.drift import _snapshot_ids
+        from etl_guiacores_spark.streaming.snapshots import _snapshot_ids
 
         def start(stream, out):
             return state_dwell_stream(
@@ -1447,3 +1257,214 @@ class TestHoltStream:
             assert raised, "out-of-order batch must fail loud"
         finally:
             q.stop()
+
+
+def _stream_src(spark, src):
+    return spark.readStream.schema(EVENTS_SCHEMA).option(
+        "maxFilesPerTrigger", 1).parquet(src)
+
+
+def _run_batches(spark, tmp_path, batches, start):
+    """Land ``batches`` one file each and run them through the twin
+    ``start(stream, out, ckpt)`` one micro-batch at a time."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(batches[0], EVENTS_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(src)
+    q = start(_stream_src(spark, src), out, ckpt)
+    try:
+        q.processAllAvailable()
+        for b in batches[1:]:
+            spark.createDataFrame(b, EVENTS_SCHEMA).coalesce(1).write.mode(
+                "append").parquet(src)
+            q.processAllAvailable()
+        assert q.exception() is None
+    finally:
+        q.stop()
+    return src, out, ckpt
+
+
+def cusum_kw():
+    return dict(key_cols=["user_id"],
+                value_micro=(F.col("value") * 1_000_000).cast("long"),
+                target_micro=1_000_000, slack_micro=0,
+                threshold_micro=2_000_000)
+
+
+def _start_cusum(stream, out, ckpt):
+    return cusum_drift_stream(stream, out, checkpoint_dir=ckpt, **cusum_kw())
+
+
+def _start_holt(stream, out, ckpt):
+    return holt_smooth_stream(
+        stream, out, key_cols=["user_id"],
+        value_micro=(F.col("value") * 1_000_000).cast("long"),
+        checkpoint_dir=ckpt)
+
+
+def _start_drawdown(stream, out, ckpt):
+    return max_drawdown_stream(stream, out, key_cols=["user_id"],
+                               flow_col=dd_flow(), checkpoint_dir=ckpt)
+
+
+def _read_out(spark, out):
+    return spark.read.parquet(f"{out}/out")
+
+
+def _acq_ev(eid, day, hour, user):
+    return (eid, datetime(2024, 1, day, hour), user, "click", 1.0)
+
+
+_KEYED_BATCHES = [
+    [ev(1, 1, user=1, etype="purchase", value=3.0)],
+    [ev(2, 10, user=1, etype="error", value=2.0),
+     ev(3, 11, user=2, etype="purchase", value=1.0)],
+    [ev(4, 20, user=1, etype="purchase", value=4.0)],
+]
+
+# twin -> (three micro-batches, start, read of the merged report)
+REPLAY_TWINS = {
+    "acquisition": (
+        [
+            [_acq_ev(1, 1, 8, user=1), _acq_ev(2, 1, 9, user=2)],
+            [_acq_ev(3, 2, 8, user=1), _acq_ev(4, 2, 9, user=3)],
+            [_acq_ev(5, 2, 12, user=4), _acq_ev(6, 3, 8, user=1)],
+        ],
+        lambda stream, out, ckpt: daily_acquisition_stream(
+            stream, out, checkpoint_dir=ckpt),
+        read_daily_acquisition,
+    ),
+    "cusum": (_KEYED_BATCHES, _start_cusum, _read_out),
+    "drawdown": (
+        _KEYED_BATCHES,
+        _start_drawdown,
+        lambda spark, out: read_max_drawdown(spark, out, ["user_id"]),
+    ),
+    "dwell": (
+        [
+            [ev(1, 1, user=1, etype="view")],
+            [ev(2, 10, user=1, etype="click"),
+             ev(3, 12, user=2, etype="view")],
+            [ev(4, 20, user=1, etype="view"),
+             ev(5, 25, user=2, etype="click")],
+        ],
+        lambda stream, out, ckpt: state_dwell_stream(
+            stream, out, key_cols=["user_id"], state_col="event_type",
+            checkpoint_dir=ckpt),
+        lambda spark, out: read_state_dwell(spark, out, "event_type"),
+    ),
+    "holt": (_KEYED_BATCHES, _start_holt, _read_out),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(REPLAY_TWINS))
+def test_replayed_batch_is_exactly_once(spark, tmp_path, twin):
+    """Real redelivery: delete the checkpoint's last commit marker
+    and restart — structured streaming re-runs the final batch. It
+    must recompute from its ORIGINAL input snapshot and overwrite its
+    own output: the merged report is unchanged."""
+    batches, start, read = REPLAY_TWINS[twin]
+    src, out, ckpt = _run_batches(spark, tmp_path, batches, start)
+    before = sorted(
+        tuple(sorted(r.asDict().items())) for r in read(spark, out).collect()
+    )
+
+    # force redelivery of batch 2
+    (tmp_path / "ckpt" / "commits" / "2").unlink()
+    crc = tmp_path / "ckpt" / "commits" / ".2.crc"
+    if crc.exists():
+        crc.unlink()
+    q2 = start(_stream_src(spark, src), out, ckpt)
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+    after = sorted(
+        tuple(sorted(r.asDict().items())) for r in read(spark, out).collect()
+    )
+    assert after == before
+
+
+def _per_event(spark, out, *cols):
+    return {r["event_id"]: tuple(r[c] for c in cols)
+            for r in _read_out(spark, out).collect()}
+
+
+def _cusum_got_want(spark, out, events):
+    from etl_guiacores_spark.operators.funnel import cusum_drift
+
+    want = {
+        r["event_id"]: (r["cusum_micro"], r["drift_flag"])
+        for r in cusum_drift(
+            spark.createDataFrame(events, EVENTS_SCHEMA), **cusum_kw()
+        ).collect()
+    }
+    return _per_event(spark, out, "cusum_micro", "drift_flag"), want
+
+
+def _holt_got_want(spark, out, events):
+    from etl_guiacores_spark.operators.rollup_time import holt_smooth
+
+    df = spark.createDataFrame(events, EVENTS_SCHEMA).withColumn(
+        "v_micro", (F.col("value") * 1_000_000).cast("long"))
+    want = {
+        r["event_id"]: (r["level_micro"], r["trend_micro"])
+        for r in holt_smooth(
+            df, "user_id", "ts", "v_micro", tiebreak_col="event_id"
+        ).collect()
+    }
+    return _per_event(spark, out, "level_micro", "trend_micro"), want
+
+
+def _drawdown_got_want(spark, out, events):
+    got = {r["user_id"]: r.asDict()
+           for r in read_max_drawdown(spark, out, ["user_id"]).collect()}
+    want = {r["user_id"]: r.asDict()
+            for r in dd_batch_report(spark, events).collect()}
+    return got, want
+
+
+@pytest.mark.parametrize(
+    "start,got_want",
+    [
+        (_start_cusum, _cusum_got_want),
+        (_start_drawdown, _drawdown_got_want),
+        (_start_holt, _holt_got_want),
+    ],
+    ids=["cusum", "drawdown", "holt"],
+)
+def test_same_timestamp_later_tiebreak_is_legal(
+    spark, tmp_path, start, got_want
+):
+    """The cross-batch late check compares the SAME (ts, tiebreak)
+    total order the twins fold in: a later batch carrying the same
+    timestamp with a larger tiebreak must be accepted, and the stream
+    must still equal its batch twin."""
+    t = datetime(2024, 1, 1, 0, 10)
+    batches = [
+        [(1, t, 1, "purchase", 2.0)],
+        [(2, t, 1, "error", 1.0)],     # same ts, larger event_id
+    ]
+    _, out, _ = _run_batches(spark, tmp_path, batches, start)
+    got, want = got_want(spark, out, [x for b in batches for x in b])
+    assert got == want
+
+
+def test_order_guard_null_held_tiebreak_is_ts_only(spark):
+    """A snapshot without a held tiebreak (written before the state
+    carried one) falls back to the stricter time-only rule: a same-ts
+    row is refused instead of being compared against NULL."""
+    from etl_guiacores_spark.streaming.snapshots import _check_key_order
+
+    t = datetime(2024, 1, 1, 0, 10)
+    rows = spark.createDataFrame([(1, t, 2)], "k int, ts timestamp, id long")
+
+    def check(held_tb):
+        held = spark.createDataFrame(
+            [(1, t, held_tb)], "k int, ts_last timestamp, tb_last long")
+        _check_key_order(rows, held, ["k"], "ts", "id", 7, "op")
+
+    check(1)  # same ts, larger tiebreak: legal
+    with pytest.raises(RuntimeError, match="op: batch 7 .*delivery contract"):
+        check(None)
