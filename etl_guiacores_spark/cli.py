@@ -101,24 +101,23 @@ def _run_scrape_pipeline(spark, urls, args) -> dict:
         max_attempts=args.retries,
         num_partitions=args.partitions,
     )
-    # materialize the fetch ONCE, then split: acting on the lazy
-    # lineage twice (ok + failed) would re-fetch every page
-    gio.write_handoff(fetched, f"{args.out}/fetched")
-    fetched = fetched.sparkSession.read.schema(fetched.schema).parquet(
-        f"{args.out}/fetched"
+    # land the fetch ONCE, then split the stored table: acting on the
+    # lazy lineage twice (ok + failed) would re-fetch every page
+    fetched, seen = gio.land(
+        fetched, f"{args.out}/fetched", failed=F.count("fetch_error")
     )
     # R2: failures are DATA, not discards — land them with their error
     # so a retry run can target exactly the failed ids
-    failed = fetched.filter(F.col("fetch_error").isNotNull())
     gio.write_handoff(
-        failed.select("id_negocio", "url", "fetch_error"),
+        fetched.filter(F.col("fetch_error").isNotNull()).select(
+            "id_negocio", "url", "fetch_error"
+        ),
         f"{args.out}/fetch_quarantine",
     )
-    n_failed = failed.count()
     ok = fetched.filter(F.col("fetch_error").isNull())
     parsed = parse_pages(ok.select("url", "html"))
     result = run_batch_pipeline(parsed, args.out, progress_callback=_progress_cb(args))
-    result.setdefault("metrics", {})["fetch_failed"] = n_failed
+    result.setdefault("metrics", {})["fetch_failed"] = seen["failed"]
     return result
 
 
@@ -176,8 +175,6 @@ def cmd_corpus(spark, args) -> dict:
     """Training-data corpus prep over a documents parquet: quality/lang
     filter -> exact dedup -> LSH near-dup removal -> chunk -> vocab,
     with per-stage metrics (the engine's LLM-pipeline surface)."""
-    from pyspark.sql import functions as F
-
     from etl_guiacores_spark.plans.corpus_pipeline import CorpusConfig, run_corpus_pipeline
 
     raw = spark.read.parquet(args.input)
@@ -188,7 +185,6 @@ def cmd_corpus(spark, args) -> dict:
         if c in raw.columns and c not in ("doc_id", "text")
     ]
     docs = raw.select(*keep)
-    docs = docs.filter(F.length(F.trim("text")) > 0)
     cfg = CorpusConfig(
         min_quality=args.min_quality,
         near_dup_jaccard=args.jaccard,
@@ -256,6 +252,7 @@ def cmd_resolve(spark, args) -> dict:
     business answer when records share no key."""
     from pyspark.sql import functions as F
 
+    from etl_guiacores_spark import io as gio
     from etl_guiacores_spark.operators.linkage import resolve_entities
 
     records = spark.read.parquet(args.input)
@@ -264,9 +261,8 @@ def cmd_resolve(spark, args) -> dict:
         method=args.method,
     )
     out = f"{args.out}/entities"
-    ents.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    n_records = back.count()
+    back, seen = gio.land(ents, out)
+    n_records = seen["records"]
     n_entities = back.select("entity_id").distinct().count()
     return {
         "mode": "resolve",

@@ -21,7 +21,7 @@ import shutil
 from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,6 +48,26 @@ def write_handoff(df: DataFrame, path: str) -> None:
     """L3 — inter-stage handoff; Parquet instead of the reference's
     JSON arrays (reference: src/extractors/run_extraction.py:130-134)."""
     df.write.mode("overwrite").parquet(path)
+
+
+def land(df: DataFrame, path: str, **observed: Column) -> tuple[DataFrame, dict]:
+    """Land a stage handoff: execute ``df`` once through
+    :func:`write_handoff`, then read the STORED table back, so every
+    downstream stage scans parquet instead of replaying ``df``'s
+    lineage (a fetch, a scoring pass, an LSH verify) once per action.
+
+    Returns ``(stored, counts)``. ``counts`` holds ``records`` plus each
+    named aggregate in ``observed``, all observed on the write job
+    itself, so no count needs a job of its own. The re-read carries
+    ``df``'s schema: an empty stage writes no row groups, and schema
+    inference over it would crash the next stage."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("records")]
+    metrics += [c.alias(name) for name, c in observed.items()]
+    # positional, through the module global: a tracer that wraps
+    # write_handoff sees every landing
+    write_handoff(df.observe(obs, *metrics), path)
+    return df.sparkSession.read.schema(df.schema).parquet(path), obs.get
 
 
 def write_partitioned(

@@ -13,7 +13,7 @@ where the partitioning should outlive one job.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -26,14 +26,4 @@ def write_bucketed(
         .mode("overwrite")
         .format("parquet")
         .saveAsTable(table)
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables; with matching bucket specs the
-    planner elides both shuffle exchanges (verify with .explain())."""
-    return spark.table(left_table).hint("merge").join(
-        spark.table(right_table), on=key, how=how
     )

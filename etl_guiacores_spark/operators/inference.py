@@ -30,7 +30,7 @@ aggregation applies). Text never rides a shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark.operators.importance import feature_bucket
@@ -99,24 +99,3 @@ def linear_score(
             .alias("score_ppm"),
         )
     )
-
-
-def quality_gate(
-    docs: DataFrame,
-    weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 4096,
-    seed: str = "lmq",
-    bias_ppm: int = 0,
-    threshold_ppm: int = 0,
-) -> DataFrame:
-    """Keep documents whose linear-model margin clears the threshold —
-    the corpus-filter composition of ``linear_score``. Returns ``docs``
-    rows joined with their (n_tok, score_ppm); the join keys on
-    ``id_col`` only, so document text never rides the scoring shuffle.
-    """
-    scores = linear_score(
-        docs, weights, id_col, text_col, num_buckets, seed, bias_ppm
-    ).filter(F.col("score_ppm") >= threshold_ppm)
-    return docs.join(scores, id_col)

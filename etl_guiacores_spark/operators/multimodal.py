@@ -20,7 +20,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: canonical multimodal record: opaque payload + typed metadata
@@ -107,30 +106,6 @@ def extract_media_features(
             yield pd.DataFrame(out, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(video: DataFrame, every_s: float = 1.0) -> DataFrame:
-    """Video -> per-frame work rows (media_id, frame_idx, frame_ts_s).
-
-    The explode happens BEFORE decode so frame extraction parallelizes
-    across the cluster instead of per-file; the decode stage then maps
-    each (payload, frame_ts) row independently."""
-    duration = F.coalesce(
-        F.element_at(F.col("meta"), "duration_s").cast("double"), F.lit(0.0)
-    )
-    # frames at k * every_s STRICTLY BEFORE the duration: ceil(d/s)
-    # indices 0..n-1 — the old inclusive sequence emitted one frame AT
-    # the duration (a guaranteed-EOF seek for exact-multiple lengths)
-    # and a phantom frame 0 for zero/missing-duration videos
-    n_frames = F.greatest(F.ceil(duration / every_s).cast("int"), F.lit(0))
-    idx = F.when(n_frames > 0, F.sequence(F.lit(0), n_frames - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return (
-        video.filter(F.col("kind") == "video")
-        .select("media_id", "payload", F.explode(idx).alias("frame_idx"))
-        .withColumn("frame_ts_s", F.col("frame_idx") * F.lit(every_s))
-    )
 
 
 # executor-side importability: serialize this module's functions by

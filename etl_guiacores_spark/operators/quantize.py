@@ -1,31 +1,14 @@
-"""Embedding normalization + int8 quantization (ANN storage prep).
+"""Embedding int8 quantization (ANN storage prep).
 
 A 10^10-vector corpus at float32x64 dims is ~2.5 TB of vector bytes;
-int8 symmetric quantization cuts it 4x with ~1% cosine error, and
-normalizing first makes dot product == cosine so search skips the
-norm computation entirely. Both are pure array expressions.
+int8 symmetric quantization cuts it 4x with ~1% cosine error. Both
+directions are pure array expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def l2_normalize(vec: Column) -> Column:
-    """vec / ||vec||; zero vector passes through unchanged."""
-
-    def build(v: Column) -> Column:
-        nrm = F.sqrt(
-            F.aggregate(
-                v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        )
-        return F.when(
-            nrm > 0, F.transform(v, lambda x: x.cast("double") / nrm)
-        ).otherwise(F.transform(v, lambda x: x.cast("double")))
-
-    return F.element_at(F.transform(F.array(vec), build), 1)
 
 
 def quantize_int8(vec: Column) -> Column:

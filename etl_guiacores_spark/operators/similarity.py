@@ -431,15 +431,6 @@ def verified_pairs(
     )
 
 
-def ngram_jaccard(a: Column, b: Column, n: int = 3) -> Column:
-    """Exact Jaccard similarity of the two texts' word-n-gram sets.
-
-    Convenience form over raw text; for joins/batch scoring, stage
-    ``word_shingles`` first and use ``jaccard_of_shingles``.
-    """
-    return jaccard_of_shingles(word_shingles(a, n), word_shingles(b, n))
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------

@@ -1,48 +1,21 @@
-"""Sketch-based approximate aggregates for cardinality and quantiles.
+"""Sketch-based approximate frequency aggregates.
 
-At 100 TB, exact count-distinct on a high-cardinality column shuffles
-every distinct value; exact percentiles shuffle every row into a
-sort. Sketches bound both: HyperLogLog++ state is a few KB per group
-regardless of cardinality, and the quantile summary
-(Greenwald-Khanna) is bounded by 1/accuracy — both merge
-associatively, so partial aggregation works and a pre-aggregated
-sketch tier can serve any grouping rollup.
+At 100 TB, an exact frequency table for a hot column shuffles every
+distinct value; a Count-Min sketch bounds it to a fixed grid of
+counters that merges associatively, so partial aggregation works and
+a pre-aggregated sketch tier can serve any grouping rollup.
 
-These wrap Spark's built-ins behind an explicit, tested error
-contract; they are NOT oracle-checked (approximation is
-engine-specific by design) — the tests assert the error bound against
-the exact answer instead.
+``count_min_frequencies`` wraps Spark's built-in sketch behind an
+explicit, tested error contract (not oracle-checked: approximation is
+engine-specific by design — the tests assert the error bound against
+the exact answer instead); ``countmin_audit`` builds the sketch
+relationally so an oracle can replay it exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_distinct_by(
-    df: DataFrame, keys: list[str], col: str, rsd: float = 0.02
-) -> DataFrame:
-    """count(DISTINCT col) per key group with HLL++ (relative standard
-    deviation <= rsd, default 2%)."""
-    return df.groupBy(*keys).agg(
-        F.approx_count_distinct(col, rsd=rsd).alias("approx_distinct")
-    )
-
-
-def approx_quantiles_by(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    probabilities: list[float] = (0.5, 0.9, 0.99),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Grouped approximate percentiles; rank error <= 1/accuracy."""
-    return df.groupBy(*keys).agg(
-        F.percentile_approx(
-            col, F.array(*[F.lit(p) for p in probabilities]), F.lit(accuracy)
-        ).alias("quantiles")
-    )
 
 
 def count_min_frequencies(

@@ -526,19 +526,6 @@ def winnow_overlap_pairs(
     )
 
 
-def rolling_hash(col: Column, mod: int = 1_000_000_007, base: int = 31) -> Column:
-    """Polynomial rolling hash over tokens (order-sensitive document
-    fingerprint). Library-level op with unit tests; md5 fingerprint is
-    the oracle-checked variant."""
-    toks = tokens(normalize_for_fingerprint(col))
-    tok_val = lambda t: F.ascii(t) * F.length(t)  # cheap per-token value
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * base + tok_val(t)) % mod,
-    )
-
-
 # --- boilerplate removal (HTML -> training text) ---------------------------
 
 #: entity decodes applied after tag stripping, in order (amp LAST so

@@ -135,15 +135,12 @@ class CorpusConfig:
     #: sampling.exact_quota_stratified). None = keep all.
     mixture_total: int | None = None
     mixture_strata: tuple[str, ...] = ("source",)
-    #: when True, the run's last mile packs the final survivor set
-    #: into fixed-budget training sequences and lands them as
+    #: when True, the run's last mile packs its landed ``chunks``
+    #: table into fixed-budget training sequences and lands them as
     #: size-bounded shards with an atomically-committed manifest
-    #: (plans/shard_writer.write_training_shards) under
-    #: ``{out_dir}/shards``. Chunk/overlap parameters are shared with
-    #: the chunking stage, so the pipeline asserts chunk-count and
-    #: token conservation between its own ``chunks`` artifact and the
-    #: shard manifest — the composition invariant that proves the
-    #: stages agree on what a token is.
+    #: (plans/shard_writer) under ``{out_dir}/shards``, asserting
+    #: chunk-count and token conservation between ``chunks`` and the
+    #: packed shards.
     write_shards: bool = False
     budget_tokens: int = 512
     sequences_per_shard: int = 10_000
@@ -535,32 +532,30 @@ def streaming_corpus_ingest(
         survivors, pairs = incremental_near_dup(
             batch_df.select("doc_id", "text"), tables, threshold, portable=portable
         )
-        # execute the dedup plan ONCE via the idempotent per-batch
-        # write, then RE-READ the parquet for the artifact append —
-        # never collect(): a big backlog batch carrying full document
-        # text would OOM the driver
-        out = f"{accepted_dir}/batch={batch_id}"
+        # the idempotent per-batch landing; never collect(): a big
+        # backlog batch carrying full document text would OOM the driver
         try:
-            survivors.write.mode("overwrite").parquet(out)
+            accepted, seen = gio.land(
+                survivors, f"{accepted_dir}/batch={batch_id}"
+            )
         finally:
             # the batch signatures are consumed: release them, or
             # every micro-batch leaks one cache entry
             pairs.staged_sigs.unpersist()
-        spark_b = batch_df.sparkSession
-        accepted = spark_b.read.schema(survivors.schema).parquet(out)
-        if not accepted.isEmpty():
-            append_corpus_artifacts(accepted, tables, portable=portable)
-            if shards_dir is not None:
-                from etl_guiacores_spark.plans.shard_writer import (
-                    append_batch_shards,
-                )
+        if seen["records"] == 0:
+            return
+        append_corpus_artifacts(accepted, tables, portable=portable)
+        if shards_dir is not None:
+            from etl_guiacores_spark.plans.shard_writer import (
+                append_batch_shards,
+            )
 
-                append_batch_shards(
-                    accepted.select("doc_id", "text"),
-                    shards_dir,
-                    batch_id,
-                    **(shard_kwargs or {}),
-                )
+            append_batch_shards(
+                accepted.select("doc_id", "text"),
+                shards_dir,
+                batch_id,
+                **(shard_kwargs or {}),
+            )
 
     return (
         spark.readStream.schema(schema)
@@ -648,8 +643,6 @@ def run_corpus_pipeline(
     ``out_dir`` scheme refuses loudly instead of half-working.
     """
     import json as _json
-
-    from pyspark.sql import Observation
 
     from etl_guiacores_spark.sources.tables import spread_narrow_input
 
@@ -752,29 +745,18 @@ def run_corpus_pipeline(
         )
 
     def _land(df: DataFrame, name: str) -> tuple[DataFrame, int]:
-        """Write a stage handoff with its count OBSERVED on the same
-        job, then re-read the parquet: every downstream stage consumes
-        the STORED table, so the expensive upstream lineage (scoring,
-        shingling, the LSH verify) executes exactly once per stage
-        instead of once per downstream action — the same
-        execute-once-then-reread discipline run_batch_pipeline applies
-        to bronze/silver/gold. Explicit schema on the re-read: an
-        empty stage writes no row groups and inference would crash.
-        Under ``resume``, a landed (``_SUCCESS``-fenced) stage is read
-        back without recomputing ``df``'s lineage."""
+        """Land a stage as ``{out_dir}/{name}`` (``io.land``) and return
+        the stored table with its row count. Under ``resume``, a landed
+        (``_SUCCESS``-fenced) stage is read back without recomputing
+        ``df``'s lineage."""
         path = f"{out_dir}/{name}"
         if resume and _is_fenced(spark, path):
             back = spark.read.schema(df.schema).parquet(path)
             n = back.count()
             emit(f"{name}_resumed", {"records": n})
             return back, n
-        obs = Observation(f"{name}_metrics")
-        gio.write_handoff(
-            df.observe(obs, F.count(F.lit(1)).alias("records")),
-            path,
-        )
-        back = spark.read.schema(df.schema).parquet(path)
-        return back, obs.get["records"]
+        back, seen = gio.land(df, path)
+        return back, seen["records"]
 
     def _land_stripped(
         base: DataFrame, stripped: DataFrame, stage: str, what: str
@@ -1109,6 +1091,10 @@ def run_corpus_pipeline(
             )
         emit("mixture", {"records": n_sampled})
 
+    # the last landing of ``survivors`` counted them
+    n_survivors = next(
+        n for n in (n_sampled, n_gopher, n_before_gopher) if n is not None
+    )
     chunks, n_chunks = _land(
         chunk_documents(
             survivors, chunk_tokens=config.chunk_tokens, overlap=config.chunk_overlap
@@ -1135,27 +1121,24 @@ def run_corpus_pipeline(
             },
         )
     elif config.write_shards:
-        from etl_guiacores_spark.plans.shard_writer import (
-            write_training_shards,
-        )
+        from etl_guiacores_spark.plans.shard_writer import _land_shards
 
-        shard_stats = write_training_shards(
-            survivors.select("doc_id", "text"),
+        shard_stats = _land_shards(
+            chunks,
+            n_survivors,
             f"{out_dir}/shards",
+            None,
             budget_tokens=config.budget_tokens,
-            chunk_tokens=config.chunk_tokens,
-            overlap=config.chunk_overlap,
             num_bins=config.shard_bins,
             sequences_per_shard=config.sequences_per_shard,
         )
-        # Composition invariants, asserted on the STORED artifacts:
-        # the shard writer re-chunks with the same parameters, so its
-        # chunk count must equal the pipeline's landed chunks table,
-        # and the manifest's token total must equal the chunk tables'
-        # token sum — packing may only rearrange tokens, never create
-        # or drop them. A disagreement means two stages disagree on
-        # tokenization, the bug class that silently truncates
-        # training data.
+        # Composition invariants: every landed chunk is packed exactly
+        # once (the chunk references observed on the packed landing),
+        # and the manifest's token total equals the stored chunks
+        # table's token sum — packing may only rearrange tokens, never
+        # create or drop them. A disagreement means two stages
+        # disagree on tokenization, the bug class that silently
+        # truncates training data.
         chunk_tok = (
             chunks.agg(F.sum("n_chunk_tokens").cast("long").alias("t"))
             .first()["t"]

@@ -18,10 +18,10 @@ reference: src/main.py:103-130) so metrics cost no extra pass.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark import io as gio
@@ -41,22 +41,14 @@ from etl_guiacores_spark.schema import canonicalize, to_export
 
 @dataclass
 class PipelineConfig:
-    """Typed mirror of the reference's config surface
-    (reference: src/common/config.py:63-95)."""
+    """The Transform knobs of the reference's config surface
+    (reference: src/common/config.py:63-95). Its scrape knobs live where
+    they are used: the CLI's ``--start-id``/``--end-id``, ``--retries``
+    and ``--partitions``, and ``html_parse.DETAIL_URL_BASE``."""
 
-    base_url: str = "https://www.guiacores.com.ar/index.php?r=search/detail&id="
-    start_id: int = 1
-    end_id: int = 99_999
-    chunk_size: int = 100
-    max_workers: int = 4  # becomes a partition-count hint
-    retry_attempts: int = 3
-    retry_delay: float = 5.0
-    batch_size: int = 1_000
     blocked_domains: tuple[str, ...] = ("guiacores",)
     url_max_length: int = 255
     dedupe_key: str = "id_negocio"
-    keep_versions: int = 5
-    extra: dict = field(default_factory=dict)
 
 
 def clean_leads(df: DataFrame, config: PipelineConfig | None = None) -> DataFrame:
@@ -126,18 +118,10 @@ def run_batch_pipeline(
     config = config or PipelineConfig()
     emit = progress_callback or (lambda stage, info: None)
 
-    spark = raw.sparkSession
-    # the raw lineage may contain the FETCH stage — execute it exactly
-    # once (the bronze write) and re-read the parquet for everything
-    # downstream; deriving later stages from the raw lineage would
-    # re-run the scrape per action (silver write, quarantine write,
-    # gold write, metrics count = 4-5 full re-fetches)
-    bronze_plan = canonicalize(raw)
-    gio.write_handoff(bronze_plan, f"{out_dir}/bronze")
-    # explicit schema: an empty run writes no row groups, and schema
-    # inference over an empty handoff would fail the R4 path
-    bronze = spark.read.schema(bronze_plan.schema).parquet(f"{out_dir}/bronze")
-    if bronze.isEmpty():  # R4 — reference: src/main.py:105-107,116-118
+    # every stage lands through io.land, so the raw lineage (which may
+    # hold the FETCH stage) runs once, in the bronze write
+    bronze, seen = gio.land(canonicalize(raw), f"{out_dir}/bronze")
+    if seen["records"] == 0:  # R4 — reference: src/main.py:105-107,116-118
         emit("done", {"records": 0})
         return {
             "status": "warning",
@@ -147,8 +131,6 @@ def run_batch_pipeline(
         }
     emit("bronze", {"out": f"{out_dir}/bronze"})
 
-    obs = Observation("silver_metrics")
-    qobs = Observation("quarantine_metrics")
     # trim the key BEFORE both the quarantine judgment and the dedupe:
     # split_quarantine already judged on the trimmed value, but the
     # dedupe keyed on the raw value, so ' 5' and '5' both survived
@@ -156,36 +138,26 @@ def run_batch_pipeline(
         config.dedupe_key, F.trim(F.col(config.dedupe_key))
     )
     cleaned, quarantined = split_quarantine(keyed, config.dedupe_key)
-    silver = dedupe_keyed(cleaned, [config.dedupe_key]).observe(
-        obs, F.count(F.lit(1)).alias("records"), F.count("email").alias("with_email")
+    silver, metrics = gio.land(
+        dedupe_keyed(cleaned, [config.dedupe_key]),
+        f"{out_dir}/silver",
+        with_email=F.count("email"),
     )
-    gio.write_handoff(silver, f"{out_dir}/silver")
-    # observe the quarantine count on its OWN write — a separate
-    # .count() later would re-run the clean_leads projection over
-    # bronze a third time for a number this job computes anyway
-    gio.write_handoff(
-        quarantined.observe(qobs, F.count(F.lit(1)).alias("quarantined")),
-        f"{out_dir}/quarantine",
-    )
-    emit("silver", dict(obs.get))
+    _, quarantine = gio.land(quarantined, f"{out_dir}/quarantine")
+    emit("silver", dict(metrics))
 
-    # gold is a projection of the STORED silver (read back, not the
-    # lazy plan): dropDuplicates picks an arbitrary winner per key, so
-    # recomputing it could export a different row than the silver table.
-    # Explicit schema: an all-quarantined run leaves silver EMPTY (no
-    # row groups) and schema inference over it would crash the run
-    # before the audit row lands — the same guard bronze has.
-    gold = to_export(spark.read.schema(silver.schema).parquet(f"{out_dir}/silver"))
-    gio.write_run_csv(gold, f"{out_dir}/gold", clock=clock)
+    # gold is a projection of the STORED silver, not the lazy plan:
+    # dropDuplicates picks an arbitrary winner per key, so recomputing
+    # it could export a different row than the silver table
+    gio.write_run_csv(to_export(silver), f"{out_dir}/gold", clock=clock)
     emit("gold", {"out": f"{out_dir}/gold"})
 
-    metrics = obs.get
     n = metrics["records"]
     result = {
         "status": "success" if n > 0 else "warning",
         "message": f"Processed {n} records",
         "records_processed": n,
-        "metrics": {**metrics, "quarantined": qobs.get["quarantined"]},
+        "metrics": {**metrics, "quarantined": quarantine["records"]},
     }
     # A3 — one audit row per run (reference: manual_scraper.py:297-313)
     gio.append_audit_log(raw.sparkSession, f"{out_dir}/audit_log", **result["metrics"],

@@ -1,32 +1,34 @@
 """Training-shard writer: the last mile from a clean corpus to the
 fixed-length sequence shards a pretraining job actually reads.
 
-One core, :func:`_land_shards`, lands every batch:
+One core, :func:`_land_shards`, lands every batch from a landed chunk
+table — the ``chunk_documents`` rows (chunking.py) of its documents:
 
-1. ``chunk_documents`` — token-window chunks (chunking.py),
-2. ``pack_chunks`` — greedy fill into ``budget_tokens`` sequences
+1. ``pack_chunks`` — greedy fill into ``budget_tokens`` sequences
    (packing.py, bucket-parallel),
-3. ``global_prefix_sum`` — every sequence's global serialization
+2. ``global_prefix_sum`` — every sequence's global serialization
    offset in token space with no single-partition window
    (ordering.py, the q89 shape),
-4. a range-clustered parquet write sized by ``sequences_per_shard``
+3. a range-clustered parquet write sized by ``sequences_per_shard``
    (each shard covers a contiguous global sequence range, so a
    trainer can seek by global index using footer min/max alone),
-5. a MANIFEST (one row per shard file: sequence range, token range,
+4. a MANIFEST (one row per shard file: sequence range, token range,
    counts) plus a stats JSON — both derived from the data written,
    not recomputed upstream.
 
-:func:`write_training_shards` is a batch landed after an empty tail,
-:func:`append_training_shards` one landed after the committed
-manifest's tail; every difference between the two follows from that
-tail.
+:func:`write_training_shards` and :func:`append_training_shards`
+chunk their documents and land the chunks first; the golden corpus run
+hands the core the ``chunks`` table it has already landed. A write is a
+batch landed after an empty tail, an append one landed after the
+committed manifest's tail; every difference between the two follows
+from that tail.
 
-The document and chunk counts are observed on the chunk write itself
-and every other count is read from the landed parquet (the
-execute-once discipline of corpus_pipeline); the conservation
-invariants the q66b oracle checks (token totals, chunk counts, zero
-over-budget) hold by construction and are test-asserted against the
-written artifact.
+Every stage lands through ``io.land``. The document count is observed
+on the chunk write, the packed chunk references on the packed write,
+and every other count is read from the landed parquet; the
+conservation invariants the q66b oracle checks (token totals, chunk
+counts, zero over-budget) hold by construction and are test-asserted
+against the written artifact.
 """
 
 from __future__ import annotations
@@ -112,34 +114,44 @@ def _recover_manifest(out_dir: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _stage_dir(out_dir: str, old_rows: list | None) -> str:
+    """Where a batch after the manifest tail ``old_rows`` stages its
+    chunks, packed sequences and ``stats.json``."""
+    if old_rows is None:
+        return out_dir
+    shard_base = int(old_rows[-1]["shard_id"]) + 1 if old_rows else 0
+    return f"{out_dir}/append_batches/batch_{shard_base:06d}"
+
+
 def _land_shards(
-    docs: DataFrame,
+    chunks: DataFrame,
+    n_docs: int,
     out_dir: str,
     old_rows: list | None,
     budget_tokens: int,
-    chunk_tokens: int,
-    overlap: int,
     num_bins: int,
     sequences_per_shard: int,
+    chunk_s: float = 0.0,
 ) -> dict:
-    """Land ``docs`` as new shards after the manifest tail ``old_rows``
-    (the committed manifest's rows in shard order; ``None`` for an
-    initial write over ``out_dir``) and commit the manifest.
+    """Land the landed chunk table ``chunks`` (of ``n_docs`` documents)
+    as new shards after the manifest tail ``old_rows`` (the committed
+    manifest's rows in shard order; ``None`` for an initial write over
+    ``out_dir``) and commit the manifest.
 
-    An initial write overwrites ``out_dir/shards`` and stages its
-    chunks, packed sequences and ``stats.json`` in ``out_dir``. An
-    append writes new ``shard_id`` partitions only, stages in
+    An initial write overwrites ``out_dir/shards`` and stages its packed
+    sequences and ``stats.json`` in ``out_dir``. An append writes new
+    ``shard_id`` partitions only, stages in
     ``append_batches/batch_<first new shard>``, commits the old rows
     plus the new ones and adds ``appended_after_seq`` to the stats.
+    ``chunk_s`` is the caller's chunking wall, reported in the stats.
     """
     import time
 
-    from pyspark.sql import Observation
-
     from etl_guiacores_spark.session import local_frame
 
-    spark = docs.sparkSession
+    spark = chunks.sparkSession
     appending = old_rows is not None
+    stage_dir = _stage_dir(out_dir, old_rows)
     old_rows = old_rows or []
     if old_rows:
         last = old_rows[-1]
@@ -148,32 +160,14 @@ def _land_shards(
         shard_base = int(last["shard_id"]) + 1
     else:
         seq_base, token_base, shard_base = 0, 0, 0
-    stage_dir = (
-        f"{out_dir}/append_batches/batch_{shard_base:06d}" if appending else out_dir
-    )
 
-    timings: dict[str, float] = {}
+    timings = {"chunk_s": chunk_s}
     t0 = time.time()
-    # both counts ride the chunk write (chunk_documents is one select +
-    # explode, so that job reads its input once)
-    doc_obs, chunk_obs = Observation("shard_docs"), Observation("shard_chunks")
-    chunks = chunk_documents(
-        docs.observe(doc_obs, F.count(F.lit(1)).alias("n")),
-        chunk_tokens=chunk_tokens, overlap=overlap,
+    packed, seen = gio.land(
+        pack_chunks(chunks, budget_tokens=budget_tokens, num_bins=num_bins),
+        f"{stage_dir}/packed",
+        chunk_refs=F.sum(F.size("doc_ids")),
     )
-    gio.write_handoff(
-        chunks.observe(chunk_obs, F.count(F.lit(1)).alias("n")),
-        f"{stage_dir}/chunks",
-    )
-    # explicit schema on every re-read: an empty stage writes no
-    # row groups and inference would crash (corpus_pipeline's rule)
-    chunks = spark.read.schema(chunks.schema).parquet(f"{stage_dir}/chunks")
-    timings["chunk_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    packed = pack_chunks(chunks, budget_tokens=budget_tokens, num_bins=num_bins)
-    gio.write_handoff(packed, f"{stage_dir}/packed")
-    packed = spark.read.schema(packed.schema).parquet(f"{stage_dir}/packed")
     timings["pack_s"] = round(time.time() - t0, 1)
     t0 = time.time()
 
@@ -240,8 +234,8 @@ def _land_shards(
     new_seqs = sum(int(r["n_sequences"]) for r in mrows) - seq_base
     stats = {
         "timings_s": timings,
-        "n_docs": doc_obs.get["n"],
-        "n_chunks": chunk_obs.get["n"],
+        "n_docs": n_docs,
+        "n_chunks": seen["chunk_refs"] or 0,
         "n_sequences": new_seqs,
         "total_tokens": new_tokens,
         "n_shards": len(mrows) - len(old_rows),
@@ -254,6 +248,38 @@ def _land_shards(
         stats["appended_after_seq"] = seq_base
     gio.write_stats_json(stats, f"{stage_dir}/stats.json")
     return stats
+
+
+def _chunk_and_land(
+    docs: DataFrame,
+    out_dir: str,
+    old_rows: list | None,
+    budget_tokens: int,
+    chunk_tokens: int,
+    overlap: int,
+    num_bins: int,
+    sequences_per_shard: int,
+) -> dict:
+    """Chunk ``docs``, land the chunks in the batch's stage directory
+    with the document count observed on that write, then land shards
+    from them (:func:`_land_shards`)."""
+    import time
+
+    from pyspark.sql import Observation
+
+    t0 = time.time()
+    doc_obs = Observation()
+    chunks, _ = gio.land(
+        chunk_documents(
+            docs.observe(doc_obs, F.count(F.lit(1)).alias("n")),
+            chunk_tokens=chunk_tokens, overlap=overlap,
+        ),
+        f"{_stage_dir(out_dir, old_rows)}/chunks",
+    )
+    return _land_shards(
+        chunks, doc_obs.get["n"], out_dir, old_rows, budget_tokens, num_bins,
+        sequences_per_shard, chunk_s=round(time.time() - t0, 1),
+    )
 
 
 def write_training_shards(
@@ -276,7 +302,7 @@ def write_training_shards(
     ``token_offset`` are their dense global index and cumulative token
     start, computed distributed.
     """
-    return _land_shards(
+    return _chunk_and_land(
         docs, out_dir, None, budget_tokens, chunk_tokens, overlap,
         num_bins, sequences_per_shard,
     )
@@ -334,7 +360,7 @@ def append_training_shards(
             "write the initial shard set with write_training_shards first"
         )
     old_rows = docs.sparkSession.read.parquet(manifest_path).orderBy("shard_id").collect()
-    return _land_shards(
+    return _chunk_and_land(
         docs, out_dir, old_rows, budget_tokens, chunk_tokens, overlap,
         num_bins, sequences_per_shard,
     )

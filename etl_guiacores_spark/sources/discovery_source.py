@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-DETAIL_URL = "https://www.guiacores.com.ar/index.php?r=search/detail&id="
+from etl_guiacores_spark.sources.html_parse import DETAIL_URL_BASE
 
 
 def synthetic_listing(rubro: str, localidad: str, page: int, page_size: int = 10):
@@ -51,7 +51,7 @@ def synthetic_listing(rubro: str, localidad: str, page: int, page_size: int = 10
     # tiny page_size (<=2) still advances instead of repeating or
     # regressing the same ids forever
     start = base + page * max(page_size - 2, 1)
-    return [(str(start + i), f"{DETAIL_URL}{start + i}") for i in range(page_size)]
+    return [(str(start + i), f"{DETAIL_URL_BASE}{start + i}") for i in range(page_size)]
 
 
 class _ComboPartition(InputPartition):

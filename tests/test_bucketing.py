@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from etl_guiacores_spark.operators.bucketing import bucketed_join, write_bucketed
+from etl_guiacores_spark.operators.bucketing import write_bucketed
 
 
 def test_bucketed_join_has_no_shuffle(spark):
@@ -11,7 +11,7 @@ def test_bucketed_join_has_no_shuffle(spark):
     write_bucketed(a, "bkt_a", "k", num_buckets=4)
     write_bucketed(b, "bkt_b", "k", num_buckets=4)
     try:
-        joined = bucketed_join(spark, "bkt_a", "bkt_b", "k")
+        joined = spark.table("bkt_a").hint("merge").join(spark.table("bkt_b"), "k")
         assert joined.count() == 1000
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan

@@ -18,6 +18,27 @@ def test_bulk_mode(spark, tmp_path):
     assert row["localidad"] == "(8300) Neuquen"
 
 
+def test_bulk_mode_counts_ride_the_writes(spark, tmp_path, monkeypatch):
+    """Every count a bulk run reports is observed on the write that
+    lands its stage: the run never starts a count job of its own."""
+    frame = type(spark.range(0))  # the session's concrete DataFrame class
+
+    def no_count_job(self, *args, **kwargs):
+        raise AssertionError("a bulk run started a count job")
+
+    monkeypatch.setattr(frame, "count", no_count_job)
+    monkeypatch.setattr(frame, "isEmpty", no_count_job)
+    res = main(
+        ["--out", str(tmp_path / "o"), "--transport", "fake", "bulk",
+         "--start-id", "1", "--end-id", "20"],
+        spark=spark,
+    )
+    monkeypatch.undo()
+    assert res["status"] == "success"
+    assert res["records_processed"] == 20
+    assert res["metrics"]["fetch_failed"] == 0
+
+
 def test_bulk_mode_synthetic_transport(spark, tmp_path):
     """--transport synthetic runs the full-field invertible site
     (q201's source): all X1-X10 fields populated per the closed

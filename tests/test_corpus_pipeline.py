@@ -524,6 +524,34 @@ def test_golden_corpus_run_composes_all_stages(spark, tmp_path):
     assert (shards.agg(F.max("n_tokens")).first()[0] or 0) <= 64
 
 
+def test_golden_run_chunks_its_survivors_once(spark, tmp_path, monkeypatch):
+    """With write_shards the shard stage packs the pipeline's landed
+    chunks table: the survivors are chunked by one call, and the shard
+    stats still count every landed chunk and document."""
+    from etl_guiacores_spark.operators import chunking
+    from etl_guiacores_spark.plans import corpus_pipeline, shard_writer
+
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return chunking.chunk_documents(*args, **kwargs)
+
+    monkeypatch.setattr(corpus_pipeline, "chunk_documents", spy)
+    monkeypatch.setattr(shard_writer, "chunk_documents", spy)
+    docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
+        "doc_id", "text"
+    )
+    cfg = CorpusConfig(
+        min_quality=0.0, chunk_tokens=16, chunk_overlap=4, write_shards=True,
+        budget_tokens=64, sequences_per_shard=50,
+    )
+    m = run_corpus_pipeline(docs, str(tmp_path / "once"), cfg)
+    assert len(calls) == 1
+    assert m["shards"]["n_chunks"] == m["chunks"]
+    assert m["shards"]["n_docs"] == m["after_near_dup"]
+
+
 def test_golden_run_reuses_compiled_classes(spark, tmp_path):
     """A repeated golden run in one JVM reuses its generated classes:
     the session's codegen cache holds the run's whole working set, so

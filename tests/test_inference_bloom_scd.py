@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from etl_guiacores_spark.operators.bloom import bloom_build, bloom_probe
 from etl_guiacores_spark.operators.inference import (
     linear_score,
-    quality_gate,
     synthetic_weights,
 )
 from etl_guiacores_spark.operators.scd import scd2_history
@@ -62,26 +61,6 @@ class TestLinearScore:
         rows2 = sorted((r["bucket"], r["weight_ppm"]) for r in w2.collect())
         assert rows1 == rows2 and len(rows1) == 64
         assert all(-100 <= w <= 100 for _, w in rows1)
-
-    def test_quality_gate_thresholds(self, spark):
-        from etl_guiacores_spark.operators.importance import feature_bucket
-
-        docs = spark.createDataFrame(
-            [(1, "good good"), (2, "bad")], "doc_id long, text string"
-        )
-        buckets = {
-            r["tok"]: r["b"]
-            for r in spark.createDataFrame([("good",), ("bad",)], "tok string")
-            .select("tok", feature_bucket(F.col("tok"), 4096, "t").alias("b"))
-            .collect()
-        }
-        weights = spark.createDataFrame(
-            [(buckets["good"], 7), (buckets["bad"], -7)],
-            "bucket long, weight_ppm long",
-        )
-        kept = quality_gate(docs, weights, seed="t", threshold_ppm=0).collect()
-        assert [r["doc_id"] for r in kept] == [1]
-        assert kept[0]["text"] == "good good"  # original columns survive
 
 
 class TestBloom:

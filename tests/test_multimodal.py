@@ -5,7 +5,6 @@ from __future__ import annotations
 from etl_guiacores_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
-    frame_sample_plan,
 )
 
 
@@ -34,12 +33,3 @@ class TestMediaFeatures:
         assert all("NotImplementedError" in r["decode_error"] for r in got)
         # plumbing still produced byte-level features
         assert all(r["n_bytes"] > 0 and r["sha256"] for r in got)
-
-
-class TestFrameSampling:
-    def test_explode_before_decode(self, spark):
-        plan = frame_sample_plan(make_media(spark), every_s=1.0)
-        rows = plan.collect()
-        # 3.5s video at 1 fps -> frames 0..3
-        assert {r["frame_idx"] for r in rows} == {0, 1, 2, 3}
-        assert all(r["media_id"] == 3 for r in rows)

@@ -6,20 +6,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from etl_guiacores_spark.operators.quantize import dequantize_int8, l2_normalize, quantize_int8
+from etl_guiacores_spark.operators.quantize import dequantize_int8, quantize_int8
 from etl_guiacores_spark.operators.similarity import cosine, with_minhash
 from etl_guiacores_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_l2_normalize_unit_norm(spark):
-    emb = load_table(spark, "embeddings", SF_DIR).limit(50)
-    normed = emb.select(l2_normalize(F.col("embedding")).alias("v"))
-    norms = normed.select(
-        F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)).alias("n")
-    ).collect()
-    assert all(math.isclose(r["n"], 1.0, rel_tol=1e-9) for r in norms)
 
 
 def test_quantize_round_trip_cosine_error(spark):

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from etl_guiacores_spark.operators.similarity import (
     cosine,
     embedding_near_dup_pairs,
+    jaccard_of_shingles,
     knn_brute_force,
     lsh_candidate_pairs,
-    ngram_jaccard,
     simhash,
     with_minhash,
     word_shingles,
@@ -63,10 +63,15 @@ class TestMinhashLsh:
 
 class TestJaccardSimhash:
     def test_jaccard_bounds(self, spark):
+        def jaccard(a, b):
+            return jaccard_of_shingles(
+                word_shingles(F.lit(a), 3), word_shingles(F.lit(b), 3)
+            )
+
         row = spark.range(1).select(
-            ngram_jaccard(F.lit(TEXT_A), F.lit(TEXT_A)).alias("same"),
-            ngram_jaccard(F.lit(TEXT_A), F.lit(TEXT_B)).alias("near"),
-            ngram_jaccard(F.lit(TEXT_A), F.lit(TEXT_C)).alias("far"),
+            jaccard(TEXT_A, TEXT_A).alias("same"),
+            jaccard(TEXT_A, TEXT_B).alias("near"),
+            jaccard(TEXT_A, TEXT_C).alias("far"),
         ).collect()[0]
         assert row["same"] == 1.0
         assert 0 < row["near"] < 1.0

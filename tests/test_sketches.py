@@ -4,37 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_guiacores_spark.operators.sketches import approx_distinct_by, approx_quantiles_by
 from etl_guiacores_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_hll_distinct_within_rsd(spark):
-    li = load_table(spark, "lineitem", SF_DIR)
-    exact = {
-        r["l_returnflag"]: r["c"]
-        for r in li.groupBy("l_returnflag").agg(F.count_distinct("l_orderkey").alias("c")).collect()
-    }
-    approx = {
-        r["l_returnflag"]: r["approx_distinct"]
-        for r in approx_distinct_by(li, ["l_returnflag"], "l_orderkey", rsd=0.02).collect()
-    }
-    for flag, exact_n in exact.items():
-        rel_err = abs(approx[flag] - exact_n) / exact_n
-        assert rel_err < 0.1, (flag, exact_n, approx[flag])  # 5 sigma headroom
-
-
-def test_quantile_sketch_rank_error(spark):
-    o = load_table(spark, "orders", SF_DIR)
-    got = approx_quantiles_by(o, ["o_orderstatus"], "o_totalprice", [0.5], accuracy=10_000)
-    approx_med = {r["o_orderstatus"]: r["quantiles"][0] for r in got.collect()}
-    for status, med in approx_med.items():
-        vals = o.filter(F.col("o_orderstatus") == status)
-        n = vals.count()
-        below = vals.filter(F.col("o_totalprice") <= med).count()
-        rank = below / n
-        assert abs(rank - 0.5) < 0.01, (status, rank)  # rank error <= 1/accuracy + slack
 
 
 def test_frequent_items_contains_true_heavy_hitter(spark):

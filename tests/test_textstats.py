@@ -8,7 +8,6 @@ from etl_guiacores_spark.operators.textstats import (
     fingerprint,
     lang_id,
     quality_score,
-    rolling_hash,
     stopword_ratio,
     token_count,
 )
@@ -57,14 +56,6 @@ class TestFingerprint:
         a, b = fingerprint(F.lit("Hello,  World!")), fingerprint(F.lit("hello world"))
         row = spark.range(1).select(a.alias("a"), b.alias("b")).collect()[0]
         assert row["a"] == row["b"]
-
-    def test_rolling_hash_order_sensitive(self, spark):
-        df = spark.range(1).select(
-            rolling_hash(F.lit("alpha beta gamma")).alias("h1"),
-            rolling_hash(F.lit("gamma beta alpha")).alias("h2"),
-        )
-        row = df.collect()[0]
-        assert row["h1"] != row["h2"]
 
 
 def test_bigram_query_survives_single_token_docs(spark, tmp_path):

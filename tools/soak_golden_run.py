@@ -273,7 +273,7 @@ def main() -> int:
 
     # --- shard artifacts vs manifest ---------------------------------
     budget = cfg.budget_tokens
-    chunks = spark.read.parquet(f"{pdir}/shards/chunks")
+    chunks = spark.read.parquet(f"{pdir}/chunks")
     shards = spark.read.parquet(f"{pdir}/shards/shards")
     manifest = [
         r.asDict()
