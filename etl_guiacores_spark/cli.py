@@ -277,16 +277,20 @@ def cmd_compact(spark, args) -> dict:
     """Small-files compaction (io.compact_parquet): rewrite a parquet
     directory into target-size files, optionally range-clustered on
     sort columns; atomic swap."""
-    import glob
-
     from etl_guiacores_spark import io as gio
 
+    def n_files() -> int:
+        return sum(
+            1 for name, is_dir in gio._list_children(spark, args.input)
+            if not is_dir and name.endswith(".parquet")
+        )
+
     sort_cols = [c for c in (args.sort_cols or "").split(",") if c]
-    before = len(glob.glob(f"{args.input.rstrip('/')}/*.parquet"))
+    before = n_files()
     n = gio.compact_parquet(
         spark, args.input, args.target_records, sort_cols=sort_cols or None
     )
-    after = len(glob.glob(f"{args.input.rstrip('/')}/*.parquet"))
+    after = n_files()
     return {
         "mode": "compact",
         "rows": n,

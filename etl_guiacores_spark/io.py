@@ -13,19 +13,185 @@ materialization, safe at any scale:
 - Parquet between stages  <- JSON handoff files          (L3)
 - ``version=<ts>`` partition + retention prune <- versions/ dir (L6)
 - ``snapshot_ts=<ts>`` partition + TTL filter  <- cache files   (L5)
+
+Storage seam: every listing, rename, delete and small-file write under
+an output path goes through the Hadoop-FileSystem helpers below, never
+``os``/``pathlib``/``shutil``. An output root is a Spark path, so a
+driver-local probe would silently see nothing on HDFS/S3 or under a
+``file://`` URI. Two mechanisms sit on the helpers: one rename-swap
+publish with rollback-on-next-touch recovery (``_swap_publish``, used
+by ``compact_parquet`` and the shard manifest) and one stamped-partition
+core (``_write_stamped``/``_stamps``/``_drop_stamps``) under both the
+L6 versions and the L5 snapshots.
 """
 
 from __future__ import annotations
 
-import shutil
 from datetime import datetime, timezone
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_guiacores_spark.session import local_frame
+
+
+# Small-file helpers over the Hadoop FileSystem API: the only code in the
+# package that lists, renames, deletes or writes small files under an
+# output path. Shared by the sinks below, the shard writer, the corpus
+# pipeline's resume fencing and the streaming snapshot protocol.
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hp, hp.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    hp, fs = _hadoop_path(spark, path)
+    return bool(fs.exists(hp))
+
+
+def _is_fenced(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` is a committed Spark write: its job committer
+    lands ``_SUCCESS`` last, so a crashed write is never fenced."""
+    return _exists(spark, f"{path}/_SUCCESS")
+
+
+def _read_sidecar(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 text of a small file, or None when it does not exist."""
+    hp, fs = _hadoop_path(spark, path)
+    if not fs.exists(hp):
+        return None
+    stream = fs.open(hp)
+    try:
+        return str(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+
+
+def _write_sidecar(spark: SparkSession, path: str, text: str) -> None:
+    """Overwrite-write a small UTF-8 file (parent dirs created)."""
+    hp, fs = _hadoop_path(spark, path)
+    out = fs.create(hp, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _list_children(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
+    """(name, is_directory) of each entry under ``path``; [] when the
+    path does not exist."""
+    hp, fs = _hadoop_path(spark, path)
+    if not fs.exists(hp):
+        return []
+    return [
+        (st.getPath().getName(), bool(st.isDirectory()))
+        for st in fs.listStatus(hp)
+    ]
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is a no-op."""
+    hp, fs = _hadoop_path(spark, path)
+    fs.delete(hp, True)
+
+
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``, which must not exist. Hadoop's
+    ``FileSystem.rename`` reports failure by returning False, not by
+    raising, and moves ``src`` INTO an existing directory ``dst``; both
+    raise here instead."""
+    hsrc, fs = _hadoop_path(spark, src)
+    hdst = _hadoop_path(spark, dst)[0]
+    if fs.exists(hdst) or not fs.rename(hsrc, hdst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _staging(path: str) -> tuple[str, str]:
+    base = path.rstrip("/")
+    return f"{base}.__commit_tmp__", f"{base}.__commit_old__"
+
+
+def _swap_publish(df: DataFrame, path: str, **options) -> None:
+    """Publish ``df`` as the parquet directory ``path`` by a rename swap
+    instead of Spark's mode('overwrite'), which deletes the old
+    directory BEFORE the new files land. The write lands in
+    ``<path>.__commit_tmp__`` (a ``_SUCCESS`` marker is touched in case
+    the committer was configured not to write one), then ``path`` moves
+    to ``<path>.__commit_old__`` and the staged copy to ``path``. So
+    ``path`` is the fully-committed old or new table at every instant
+    except the gap between the two renames; a crash there leaves the old
+    copy behind, which :func:`_recover_swap` rolls back on the next
+    touch. Single writer, no concurrent readers; on an object store a
+    rename copies then deletes, so the swap is for ``file``/HDFS-like
+    schemes."""
+    spark = df.sparkSession
+    tmp, old = _staging(path)
+    _delete_path(spark, tmp)
+    df.write.mode("overwrite").options(**options).parquet(tmp)
+    if not _is_fenced(spark, tmp):
+        _write_sidecar(spark, f"{tmp}/_SUCCESS", "")
+    _delete_path(spark, old)
+    if _exists(spark, path):
+        _rename(spark, path, old)
+    _rename(spark, tmp, path)
+    _delete_path(spark, old)
+
+
+def _recover_swap(spark: SparkSession, path: str) -> None:
+    """Repair ``path`` after a crash inside :func:`_swap_publish`.
+
+    - ``path`` present: the crash was before or after the swap; ``path``
+      is authoritative and the staging dirs are debris.
+    - ``path`` missing, old copy present: the crash hit the gap between
+      the two renames. Roll BACK, since the old copy is fully valid. For
+      the shard manifest, rolling FORWARD would mark a crashed append
+      committed without its batch marker, so a replay would append the
+      batch a second time.
+    - neither: a staged copy alone is a pre-swap crash's debris.
+    """
+    tmp, old = _staging(path)
+    if not _exists(spark, path) and _exists(spark, old):
+        _rename(spark, old, path)
+    _delete_path(spark, tmp)
+    _delete_path(spark, old)
+
+
+def _write_stamped(df: DataFrame, path: str, col: str, ts: str) -> str:
+    """Write ``df`` as the ``col=<ts>`` partition of ``path``. A stamp is
+    ONE write's rows: with second-granularity stamps a retry (or two
+    writes inside a second) would APPEND into the same partition and
+    every reader would silently see doubled rows, so a same-stamp
+    partition is replaced instead of merged into."""
+    _delete_path(df.sparkSession, f"{path}/{col}={ts}")
+    df.withColumn(col, F.lit(ts)).write.mode("append").partitionBy(col).parquet(path)
+    return ts
+
+
+def _stamps(spark: SparkSession, path: str, col: str) -> list[str]:
+    """The stamps of ``path``'s ``col=<ts>`` partitions, sorted."""
+    prefix = f"{col}="
+    return sorted(
+        name[len(prefix):]
+        for name, is_dir in _list_children(spark, path)
+        if is_dir and name.startswith(prefix)
+    )
+
+
+def _drop_stamps(
+    spark: SparkSession, path: str, col: str, stamps: list[str]
+) -> list[str]:
+    for ts in stamps:
+        _delete_path(spark, f"{path}/{col}={ts}")
+    return stamps
+
+
+def _epoch_s(clock: datetime | None) -> int:
+    return int((clock or datetime.now(timezone.utc)).timestamp())
 
 
 def run_timestamp(clock: datetime | None = None) -> str:
@@ -107,14 +273,15 @@ def compact_parquet(
     clustering — min/max footer stats then prune file ranges for
     predicates on the sort key, the poor man's z-order for a single
     dimension (multi-dimension clustering is operators/ordering.py's
-    zorder_layout). The rewrite is staged through a sibling temp dir
-    then swapped in, so no reader can observe a half-written FILE —
-    but the swap is two renames, and a reader that lists the path in
-    the instant between them sees it missing. The guarantee is
-    single-writer, no-concurrent-readers (the same assumption every
-    sink in this engine makes); deployments needing concurrent
-    readers should publish through a versioned directory + pointer
-    (write_version) or a table format with a metadata commit.
+    zorder_layout). The rewrite is published by :func:`_swap_publish`,
+    so no reader can observe a half-written FILE, and a crash between
+    its two renames is rolled back by the next call
+    (:func:`_recover_swap`) with no row lost. A reader that lists the
+    path in the instant between the renames sees it missing: the
+    guarantee is single-writer, no-concurrent-readers (the same
+    assumption every sink in this engine makes); deployments needing
+    concurrent readers should publish through a versioned directory +
+    pointer (write_version) or a table format with a metadata commit.
 
     The output file count is computed EXPLICITLY (ceil(rows/target))
     rather than inherited from the scan: Spark spreads even tiny
@@ -124,6 +291,7 @@ def compact_parquet(
     metadata-only job, no data scan); ``maxRecordsPerFile`` stays on
     as the skew backstop for uneven range partitions.
     """
+    _recover_swap(spark, path)
     n = spark.read.parquet(path).count()  # footer-stats count
     n_out = max(1, -(-n // target_records_per_file))
     df = spark.read.parquet(path)
@@ -135,17 +303,7 @@ def compact_parquet(
         # coalesce, not repartition: merges scan partitions without a
         # shuffle — compaction is IO-bound, don't add a network pass
         out = df.coalesce(n_out)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-        .parquet(tmp)
-    )
-    old = path.rstrip("/") + ".__compact_old__"
-    shutil.rmtree(old, ignore_errors=True)
-    Path(path).rename(old)
-    Path(tmp).rename(path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_publish(out, path, maxRecordsPerFile=target_records_per_file)
     return n
 
 
@@ -171,16 +329,12 @@ def delete_keys(
     over plain parquet directories (acceptable when there is ONE
     writer, the same assumption every other sink in this engine makes).
 
-    The file moves use the local filesystem API; an object-store
-    deployment swaps them for the Hadoop FileSystem equivalents (or
-    uses a table format whose DELETE does exactly this plan). The
-    Spark-side plan — pushdown-pruned affected-file discovery,
-    anti-join rewrite of only those files — is the part that matters
-    at 100 TB and is storage-agnostic.
+    The file moves and the flat-directory check go through the Hadoop
+    FileSystem helpers, so ``path`` may be any Spark path; on an object
+    store each move is a copy then a delete.
 
     Returns {"files_rewritten", "rows_deleted"}.
     """
-    import os
     import uuid
 
     key_rows = keys.select(F.col(key_col)).distinct()
@@ -207,10 +361,16 @@ def delete_keys(
     # moving a rewritten file to the root would silently corrupt them
     # — partitioned tables delete per-partition (the affected
     # partition dirs are themselves small rewrite units)
-    root = str(Path(path).resolve())
-    for f in affected:
-        parent = str(Path(f.replace("file://", "")).resolve().parent)
-        if parent != root:
+    root, fs = _hadoop_path(spark, path)
+    root = fs.makeQualified(root)
+    jvm = spark._jvm
+    # input_file_name is a URL-encoded URI; compare qualified paths
+    files = [
+        fs.makeQualified(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)))
+        for f in affected
+    ]
+    for f, hf in zip(affected, files):
+        if not hf.getParent().equals(root):
             raise ValueError(
                 f"delete_keys requires a flat parquet directory; {f} is nested "
                 f"(partitioned layout) — run per partition directory instead"
@@ -229,76 +389,51 @@ def delete_keys(
     staging = path.rstrip("/") + f".__delete_{uuid.uuid4().hex[:8]}__"
     kept.write.mode("overwrite").parquet(staging)
     n_after = spark.read.parquet(staging).count()
-    moved = []
-    for name in os.listdir(staging):
-        if name.endswith(".parquet"):
-            os.rename(os.path.join(staging, name), os.path.join(path, name))
-            moved.append(name)
-    for f in affected:
-        local = f.replace("file://", "")
-        os.remove(local)
-    shutil.rmtree(staging, ignore_errors=True)
+    for name, is_dir in _list_children(spark, staging):
+        if not is_dir and name.endswith(".parquet"):
+            _rename(spark, f"{staging}/{name}", f"{path.rstrip('/')}/{name}")
+    for hf in files:
+        _delete_path(spark, hf.toString())
+    _delete_path(spark, staging)
     return {"files_rewritten": len(affected), "rows_deleted": n_before - n_after}
 
 
 def write_version(
     df: DataFrame, path: str, clock: datetime | None = None, keep_last: int | None = None
 ) -> str:
-    """L6 — write into a ``version=<ts>`` partition; optionally prune
-    to the newest ``keep_last`` versions
+    """L6 — write into a ``version=<ts>`` partition (a same-stamp
+    partition is replaced); optionally prune to the newest
+    ``keep_last`` versions
     (reference: src/common/versioning.py:96-108)."""
-    ts = run_timestamp(clock)
-    # a version is ONE run's output: with second-granularity stamps a
-    # retry (or two runs inside a second) would APPEND into the same
-    # partition and every reader would silently see doubled rows —
-    # replace the colliding partition instead of merging into it
-    existing = Path(path) / f"version={ts}"
-    if existing.exists():
-        shutil.rmtree(existing, ignore_errors=True)
-    df.withColumn("version", F.lit(ts)).write.mode("append").partitionBy("version").parquet(path)
+    ts = _write_stamped(df, path, "version", run_timestamp(clock))
     if keep_last is not None:
         prune_versions(path, keep_last)
     return ts
 
 
 def list_versions(path: str) -> list[str]:
-    root = Path(path)
-    if not root.exists():
-        return []
-    return sorted(p.name.split("=", 1)[1] for p in root.glob("version=*"))
+    return _stamps(SparkSession.active(), path, "version")
 
 
 def prune_versions(path: str, keep_last: int) -> list[str]:
     """Retention: drop all but the newest N version partitions."""
     versions = list_versions(path)
     doomed = versions[:-keep_last] if keep_last > 0 else versions
-    for v in doomed:
-        shutil.rmtree(Path(path) / f"version={v}", ignore_errors=True)
-    return doomed
+    return _drop_stamps(SparkSession.active(), path, "version", doomed)
 
 
 def read_latest_version(spark: SparkSession, path: str) -> DataFrame:
     """max-by-name version selection (reference: src/common/versioning.py:75-94)."""
-    versions = list_versions(path)
+    versions = _stamps(spark, path, "version")
     if not versions:
         raise FileNotFoundError(f"no versions under {path}")
     return spark.read.parquet(f"{path}/version={versions[-1]}")
 
 
 def write_snapshot(df: DataFrame, path: str, clock: datetime | None = None) -> str:
-    """L5 — TTL-cache write: snapshot partition stamped with epoch secs."""
-    dt = clock or datetime.now(timezone.utc)
-    ts = str(int(dt.timestamp()))
-    # same-second retry guard as write_version: a snapshot is ONE
-    # write's rows — appending into an existing partition would double
-    # every reader's rows silently
-    existing = Path(path) / f"snapshot_ts={ts}"
-    if existing.exists():
-        shutil.rmtree(existing, ignore_errors=True)
-    df.withColumn("snapshot_ts", F.lit(ts)).write.mode("append").partitionBy(
-        "snapshot_ts"
-    ).parquet(path)
-    return ts
+    """L5 — TTL-cache write: snapshot partition stamped with epoch secs
+    (a same-second partition is replaced)."""
+    return _write_stamped(df, path, "snapshot_ts", str(_epoch_s(clock)))
 
 
 def read_snapshot(
@@ -306,28 +441,26 @@ def read_snapshot(
 ) -> DataFrame | None:
     """L5 — newest non-expired snapshot, else None (cache miss)
     (reference: src/common/cache_loader.py:64-94)."""
-    now = int((clock or datetime.now(timezone.utc)).timestamp())
-    snaps = sorted(
-        int(p.name.split("=", 1)[1]) for p in Path(path).glob("snapshot_ts=*")
-    ) if Path(path).exists() else []
-    live = [s for s in snaps if now - s <= ttl_seconds]
+    now = _epoch_s(clock)
+    live = [
+        int(ts) for ts in _stamps(spark, path, "snapshot_ts")
+        if now - int(ts) <= ttl_seconds
+    ]
     if not live:
         return None
-    return spark.read.parquet(f"{path}/snapshot_ts={live[-1]}")
+    return spark.read.parquet(f"{path}/snapshot_ts={max(live)}")
 
 
 def expire_snapshots(path: str, ttl_seconds: int, clock: datetime | None = None) -> list[str]:
     """L5 retention — delete snapshot partitions older than the TTL
     (reference: src/common/cache_loader.py:40-62)."""
-    now = int((clock or datetime.now(timezone.utc)).timestamp())
+    spark = SparkSession.active()
+    now = _epoch_s(clock)
     doomed = [
-        p.name.split("=", 1)[1]
-        for p in Path(path).glob("snapshot_ts=*")
-        if now - int(p.name.split("=", 1)[1]) > ttl_seconds
+        ts for ts in _stamps(spark, path, "snapshot_ts")
+        if now - int(ts) > ttl_seconds
     ]
-    for ts in doomed:
-        shutil.rmtree(Path(path) / f"snapshot_ts={ts}", ignore_errors=True)
-    return doomed
+    return _drop_stamps(spark, path, "snapshot_ts", doomed)
 
 
 def read_processed_csvs(spark: SparkSession, glob_path: str) -> DataFrame:
@@ -395,8 +528,11 @@ def write_stats_json(stats: dict, path: str) -> None:
     (reference: src/extractors/sequential_scraper.py:421-439)."""
     import json
 
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(stats, f, indent=2, ensure_ascii=False, default=str)
+    _write_sidecar(
+        SparkSession.active(),
+        path,
+        json.dumps(stats, indent=2, ensure_ascii=False, default=str),
+    )
 
 
 def append_audit_log(spark: SparkSession, path: str, **fields) -> None:
@@ -410,63 +546,3 @@ def append_audit_log(spark: SparkSession, path: str, **fields) -> None:
     schema = T.StructType([T.StructField("entry", T.StringType(), True)])
     df = local_frame(spark, [(_json.dumps(row, default=str),)], schema)
     df.write.mode("append").json(path)
-
-
-# Small-file helpers over the Hadoop FileSystem API, not os/pathlib: a
-# stage or snapshot root is a Spark path, so on HDFS/S3 a driver-local
-# probe would silently see nothing. Shared by the corpus pipeline's
-# resume fencing and sidecars and by the streaming snapshot protocol.
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hp, hp.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _is_fenced(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` is a committed Spark write: its job committer
-    lands ``_SUCCESS`` last, so a crashed write is never fenced."""
-    hp, fs = _hadoop_path(spark, f"{path}/_SUCCESS")
-    return bool(fs.exists(hp))
-
-
-def _read_sidecar(spark: SparkSession, path: str) -> str | None:
-    """The UTF-8 text of a small file, or None when it does not exist."""
-    hp, fs = _hadoop_path(spark, path)
-    if not fs.exists(hp):
-        return None
-    stream = fs.open(hp)
-    try:
-        return str(
-            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        )
-    finally:
-        stream.close()
-
-
-def _write_sidecar(spark: SparkSession, path: str, text: str) -> None:
-    """Overwrite-write a small UTF-8 file (parent dirs created)."""
-    hp, fs = _hadoop_path(spark, path)
-    out = fs.create(hp, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _list_children(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
-    """(name, is_directory) of each entry under ``path``; [] when the
-    path does not exist."""
-    hp, fs = _hadoop_path(spark, path)
-    if not fs.exists(hp):
-        return []
-    return [
-        (st.getPath().getName(), bool(st.isDirectory()))
-        for st in fs.listStatus(hp)
-    ]
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path``; a missing path is a no-op."""
-    hp, fs = _hadoop_path(spark, path)
-    fs.delete(hp, True)

@@ -33,7 +33,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark import io as gio
-from etl_guiacores_spark.io import _is_fenced, _read_sidecar, _write_sidecar
+from etl_guiacores_spark.io import (
+    _is_fenced,
+    _list_children,
+    _read_sidecar,
+    _write_sidecar,
+)
 from etl_guiacores_spark.operators.bucketing import write_bucketed
 from etl_guiacores_spark.operators.chunking import (
     build_vocab,
@@ -567,33 +572,6 @@ def streaming_corpus_ingest(
     )
 
 
-# every stage dir run_corpus_pipeline ever lands via _land. The
-# missing-fingerprint resume guard probes ALL of them: any one
-# surviving fence means the out_dir holds prior artifacts whose
-# provenance a missing pipeline_config.json can no longer vouch for.
-# Keep in sync with the _land call sites below. The shard writer's
-# output is probed separately via its stats.json sidecar — the shard
-# resume path reads stats.json, not a _SUCCESS fence at shards/, so a
-# fence probe there would be dead code (round-10 review finding).
-_LANDED_STAGES = (
-    "bronze_chunks",
-    "filtered",
-    "decontaminated",
-    "eval_span_accounting",
-    "eval_span_stripped",
-    "bronze_rechunked",
-    "dup_pairs",
-    "clean",
-    "span_accounting",
-    "span_stripped",
-    "bronze_restripped",
-    "gopher_gated",
-    "sampled",
-    "chunks",
-    "vocab",
-)
-
-
 def _config_fingerprint(config: CorpusConfig) -> dict:
     from dataclasses import asdict
 
@@ -634,12 +612,12 @@ def run_corpus_pipeline(
     ``resume=True`` with a different ``docs`` refuses too; and resume
     over fenced stage artifacts that carry NO fingerprint (pre-guard
     artifacts, or a deleted sidecar) refuses rather than trusting
-    them. The PIPELINE's sidecar IO (fingerprint, metrics.json) goes
-    through the Hadoop FileSystem API so resume works on any Spark
-    path scheme, exactly like the ``_SUCCESS`` fencing itself. The
-    optional shard writer is the one local-only component: its atomic
-    manifest publish is a posix ``os.rename`` swap by design
-    (shard_writer.py), so ``write_shards=True`` with a remote
+    them. All storage IO (fences, fingerprint, metrics.json, the
+    shard writer's manifest, markers and stats.json) goes through
+    ``io``'s Hadoop-FileSystem helpers, so resume works on any Spark
+    path scheme. The optional shard writer publishes its manifest by a
+    rename swap (``io._swap_publish``); on an object store a rename
+    copies then deletes, so ``write_shards=True`` with a non-``file``
     ``out_dir`` scheme refuses loudly instead of half-working.
     """
     import json as _json
@@ -664,11 +642,12 @@ def run_corpus_pipeline(
     ):
         raise ValueError(
             "run_corpus_pipeline: write_shards=True requires a local "
-            f"(posix) out_dir — got {out_dir!r}. The shard writer's "
-            "atomic manifest publish is an os.rename swap "
-            "(plans/shard_writer.py) and its stats.json sidecars are "
-            "driver-local; write shards to local disk and ship them, "
-            "or run the pipeline without shards on this scheme."
+            f"(posix or file://) out_dir — got {out_dir!r}. The shard "
+            "writer publishes its manifest by a rename swap "
+            "(io._swap_publish), and on an object store a rename copies "
+            "then deletes, so the swap is not atomic there; write shards "
+            "to local disk and ship them, or run the pipeline without "
+            "shards on this scheme."
         )
     emit = progress_callback or (lambda stage, info: None)
     spark = docs.sparkSession
@@ -722,16 +701,19 @@ def run_corpus_pipeline(
                 "or use a fresh out_dir."
             )
     elif resume and (
-        any(_is_fenced(spark, f"{out_dir}/{s}") for s in _LANDED_STAGES)
+        any(
+            is_dir and _is_fenced(spark, f"{out_dir}/{name}")
+            for name, is_dir in _list_children(spark, out_dir)
+        )
         or _read_sidecar(spark, f"{out_dir}/shards/stats.json") is not None
     ):
-        # probe EVERY landed stage name, not just the first: a torn
-        # out_dir whose "filtered" fence is missing but whose later
-        # fences (clean, dup_pairs, ...) survive would otherwise write
-        # a fresh fingerprint here and have _land silently reuse those
-        # unverified later-stage artifacts (round-9 advice item). The
-        # shard output is probed via stats.json — what the shard
-        # resume path below actually reuses
+        # ANY fenced child refuses: a torn out_dir whose "filtered"
+        # fence is missing but whose later fences (clean, dup_pairs,
+        # ...) survive would otherwise write a fresh fingerprint here
+        # and have _land silently reuse those unverified later-stage
+        # artifacts. The shard output is probed via stats.json — what
+        # the shard resume path below actually reuses; the shard writer
+        # fences no shards/_SUCCESS
         raise ValueError(
             "run_corpus_pipeline(resume=True): fenced stage artifacts "
             f"exist in {out_dir} but no pipeline_config.json fingerprint "

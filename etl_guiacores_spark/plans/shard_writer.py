@@ -29,89 +29,27 @@ and every other count is read from the landed parquet; the
 conservation invariants the q66b oracle checks (token totals, chunk
 counts, zero over-budget) hold by construction and are test-asserted
 against the written artifact.
+
+Storage goes through ``io``'s Hadoop-FileSystem helpers: the manifest
+is published by ``io._swap_publish`` (the rename swap
+``compact_parquet`` uses too) and repaired by ``io._recover_swap`` on
+the next touch; the batch markers and ``stats.json`` are small files
+written through ``io._write_sidecar``. Any path a Spark write accepts
+works, ``file://`` URIs included; an object store's copy-then-delete
+rename makes the swap unsafe there.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_guiacores_spark import io as gio
 from etl_guiacores_spark.operators.chunking import chunk_documents
 from etl_guiacores_spark.operators.ordering import global_prefix_sum
 from etl_guiacores_spark.operators.packing import pack_chunks
-
-
-def _manifest_tmp(manifest_path: str) -> str:
-    return manifest_path.rstrip("/") + ".__commit_tmp__"
-
-
-def _manifest_old(manifest_path: str) -> str:
-    return manifest_path.rstrip("/") + ".__commit_old__"
-
-
-def _commit_manifest_atomic(manifest_df: DataFrame, manifest_path: str) -> None:
-    """Publish a manifest with a rename-swap (the compact_parquet
-    pattern) instead of Spark's mode('overwrite'), which deletes the
-    old directory BEFORE the new files land — a crash in that window
-    would leave no manifest at all, and the prune-on-retry protocol
-    would then read the whole shard set as orphan (the round-5 judge's
-    high finding). With the swap, the manifest directory is either the
-    fully-committed old version or the fully-committed new one at
-    every instant except the sub-millisecond gap between the two
-    renames — and THAT gap leaves ``<manifest>.__commit_old__`` behind,
-    which :func:`_recover_manifest` rolls back to a valid state on the
-    next touch. A ``_SUCCESS`` marker is guaranteed inside the
-    published directory (touched explicitly in case the Hadoop
-    committer was configured not to), so readers can distinguish a
-    committed manifest from debris."""
-    import os
-    import shutil
-
-    tmp, old = _manifest_tmp(manifest_path), _manifest_old(manifest_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    manifest_df.write.mode("overwrite").parquet(tmp)
-    success = os.path.join(tmp, "_SUCCESS")
-    if not os.path.exists(success):
-        with open(success, "w"):
-            pass
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(manifest_path):
-        os.rename(manifest_path, old)
-    os.rename(tmp, manifest_path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _recover_manifest(out_dir: str) -> None:
-    """Repair the manifest directory after a crash inside
-    :func:`_commit_manifest_atomic`. Three possible residues:
-
-    - committed manifest present + leftover tmp/old: the crash was
-      before or after the swap — the manifest is authoritative, the
-      leftovers are debris; delete them.
-    - no manifest but ``__commit_old__`` present: the crash hit the
-      gap between the two renames. Roll BACK (the old manifest is
-      fully valid); the crashed append's new shard partitions become
-      orphans past its tail and the retry re-appends the batch exactly
-      once. Rolling FORWARD to the staged new manifest would instead
-      mark the batch committed without its marker, so a replay would
-      append it a second time.
-    - neither: nothing to do (tmp alone is just a pre-swap crash).
-    """
-    import os
-    import shutil
-
-    manifest_path = f"{out_dir}/manifest"
-    tmp, old = _manifest_tmp(manifest_path), _manifest_old(manifest_path)
-    if os.path.isdir(manifest_path):
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        return
-    if os.path.isdir(old):
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.rename(old, manifest_path)
-        return
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stage_dir(out_dir: str, old_rows: list | None) -> str:
@@ -226,7 +164,10 @@ def _land_shards(
         kept = [tuple(r[f.name] for f in manifest.schema) for r in old_rows]
         manifest = local_frame(spark, kept, manifest.schema).unionByName(manifest)
     manifest = manifest.orderBy("shard_id")
-    _commit_manifest_atomic(manifest, f"{out_dir}/manifest")
+    # a rename swap, not mode('overwrite'): that deletes the old
+    # manifest before the new one lands, and a crash in the window would
+    # make the prune-on-retry protocol read every shard as orphan
+    gio._swap_publish(manifest, f"{out_dir}/manifest")
     mrows = spark.read.schema(manifest.schema).parquet(f"{out_dir}/manifest").collect()
     timings["manifest_s"] = round(time.time() - t0, 1)
 
@@ -337,10 +278,11 @@ def append_training_shards(
     ``global_seq`` stays dense 0..n-1, shards tile the token stream
     (first_token of each new shard continues exactly where the tail
     ended), and no sequence exceeds the budget. The manifest commit
-    itself is a rename-swap (:func:`_commit_manifest_atomic`) so a
-    crash at ANY point leaves either the old or the new manifest fully
-    readable — never a deleted-but-not-rewritten directory — and the
-    prune-on-retry protocol (:func:`prune_orphan_shards`) stays sound.
+    itself is a rename swap (``io._swap_publish``) so a crash at ANY
+    point leaves either the old or the new manifest fully readable
+    (after ``io._recover_swap``) — never a deleted-but-not-rewritten
+    directory — and the prune-on-retry protocol
+    (:func:`prune_orphan_shards`) stays sound.
     Shard boundaries are
     manifest-defined rather than ``global_seq // sequences_per_shard``
     arithmetic once appends exist — consumers must seek via the
@@ -350,16 +292,15 @@ def append_training_shards(
     Raises FileNotFoundError when ``out_dir`` has no manifest — use
     :func:`write_training_shards` for the initial load.
     """
-    import os
-
-    _recover_manifest(out_dir)
+    spark = docs.sparkSession
     manifest_path = f"{out_dir}/manifest"
-    if not os.path.isdir(manifest_path):
+    gio._recover_swap(spark, manifest_path)
+    if not gio._exists(spark, manifest_path):
         raise FileNotFoundError(
             f"append_training_shards: no manifest at {manifest_path} — "
             "write the initial shard set with write_training_shards first"
         )
-    old_rows = docs.sparkSession.read.parquet(manifest_path).orderBy("shard_id").collect()
+    old_rows = spark.read.parquet(manifest_path).orderBy("shard_id").collect()
     return _chunk_and_land(
         docs, out_dir, old_rows, budget_tokens, chunk_tokens, overlap,
         num_bins, sequences_per_shard,
@@ -372,8 +313,8 @@ def prune_orphan_shards(out_dir: str, allow_full_reset: bool = False) -> int:
 
     ``append_training_shards`` commits in two steps: shard files
     first, manifest second (the manifest itself atomically, via
-    :func:`_commit_manifest_atomic`, with :func:`_recover_manifest`
-    run here first to repair a crash inside the swap). A crash between
+    ``io._swap_publish``, with ``io._recover_swap`` run here first to
+    repair a crash inside the swap). A crash between
     the two steps leaves shard_id partition dirs the manifest does not
     cover; a retry would then append INTO those same ids (its shard
     ids derive from the manifest tail) and duplicate files inside one
@@ -401,23 +342,18 @@ def prune_orphan_shards(out_dir: str, allow_full_reset: bool = False) -> int:
     Returns the number of partition dirs removed. No shards dir, or
     no partitions, -> 0 (nothing landed, nothing to prune).
     """
-    import os
-    import re
-    import shutil
-
-    _recover_manifest(out_dir)
+    spark = SparkSession.active()
     manifest_path = f"{out_dir}/manifest"
     shards_path = f"{out_dir}/shards"
-    if not os.path.isdir(shards_path):
-        return 0
+    gio._recover_swap(spark, manifest_path)
     partitions = {
         name: int(m.group(1))
-        for name in os.listdir(shards_path)
-        if (m := re.fullmatch(r"shard_id=(\d+)", name))
+        for name, is_dir in gio._list_children(spark, shards_path)
+        if is_dir and (m := re.fullmatch(r"shard_id=(\d+)", name))
     }
     if not partitions:
         return 0
-    if not os.path.isdir(manifest_path):
+    if not gio._exists(spark, manifest_path):
         if not allow_full_reset:
             raise RuntimeError(
                 f"prune_orphan_shards: {len(partitions)} shard partition(s) "
@@ -430,22 +366,24 @@ def prune_orphan_shards(out_dir: str, allow_full_reset: bool = False) -> int:
             )
         max_covered = -1
     else:
-        if not os.path.exists(os.path.join(manifest_path, "_SUCCESS")):
+        if not gio._is_fenced(spark, manifest_path):
             raise RuntimeError(
                 f"prune_orphan_shards: manifest at {manifest_path} has no "
                 "_SUCCESS marker — a partial or legacy write whose "
                 "MAX(shard_id) cannot be trusted to bound the prune. "
                 "Repair or remove the manifest explicitly first."
             )
-        import duckdb
-
-        max_covered = duckdb.sql(
-            f"SELECT COALESCE(MAX(shard_id), -1) FROM '{manifest_path}/*.parquet'"
-        ).fetchone()[0]
+        # an explicit schema: a 0-row manifest may hold no part file
+        # to infer one from
+        max_covered = (
+            spark.read.schema("shard_id int").parquet(manifest_path)
+            .agg(F.coalesce(F.max("shard_id"), F.lit(-1)))
+            .first()[0]
+        )
     removed = 0
     for name, sid in partitions.items():
         if sid > max_covered:
-            shutil.rmtree(os.path.join(shards_path, name))
+            gio._delete_path(spark, f"{shards_path}/{name}")
             removed += 1
     return removed
 
@@ -470,25 +408,23 @@ def append_batch_shards(
     Returns the writer stats, or None when the marker says the batch
     already landed.
     """
-    import os
-
+    spark = docs.sparkSession
     marker_dir = f"{out_dir}/_appended_batches"
     marker = f"{marker_dir}/batch_{batch_id}"
-    if os.path.exists(marker):
+    if gio._exists(spark, marker):
         return None
     # full reset is permitted ONLY when no batch ever completed (no
     # marker exists): then any landed partitions are debris from a
     # crashed first attempt. Once a marker exists, a missing manifest
     # means lost metadata over valid shards — prune raises instead.
-    no_batch_ever_landed = not (
-        os.path.isdir(marker_dir) and os.listdir(marker_dir)
+    no_batch_ever_landed = not any(
+        name.startswith("batch_")
+        for name, _ in gio._list_children(spark, marker_dir)
     )
     prune_orphan_shards(out_dir, allow_full_reset=no_batch_ever_landed)
-    if os.path.isdir(f"{out_dir}/manifest"):
+    if gio._exists(spark, f"{out_dir}/manifest"):
         stats = append_training_shards(docs, out_dir, **shard_kwargs)
     else:
         stats = write_training_shards(docs, out_dir, **shard_kwargs)
-    os.makedirs(marker_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        f.write("")
+    gio._write_sidecar(spark, marker, "")
     return stats

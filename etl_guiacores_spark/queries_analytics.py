@@ -34,16 +34,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: last one — bounded to one live tree per query per process instead
 #: of one per bench/determinism/driver run accumulating in /tmp
 _SCRATCH: dict[str, str] = {}
-
-
-def _sweep_scratch() -> None:
-    import shutil
-
-    for d in _SCRATCH.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SCRATCH.clear()
-
-
 _SWEEP_REGISTERED = False
 
 
@@ -52,9 +42,14 @@ def _scratch_dir(tag: str) -> str:
     import shutil
     import tempfile
 
+    def sweep() -> None:
+        for d in _SCRATCH.values():
+            shutil.rmtree(d, ignore_errors=True)
+        _SCRATCH.clear()
+
     global _SWEEP_REGISTERED
     if not _SWEEP_REGISTERED:  # once per process, not once per call
-        atexit.register(_sweep_scratch)
+        atexit.register(sweep)
         _SWEEP_REGISTERED = True
     old = _SCRATCH.pop(tag, None)
     if old is not None:

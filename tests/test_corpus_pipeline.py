@@ -546,10 +546,14 @@ def test_golden_run_chunks_its_survivors_once(spark, tmp_path, monkeypatch):
         min_quality=0.0, chunk_tokens=16, chunk_overlap=4, write_shards=True,
         budget_tokens=64, sequences_per_shard=50,
     )
-    m = run_corpus_pipeline(docs, str(tmp_path / "once"), cfg)
-    assert len(calls) == 1
-    assert m["shards"]["n_chunks"] == m["chunks"]
-    assert m["shards"]["n_docs"] == m["after_near_dup"]
+    # a plain out_dir and its file:// URI: every stage, the shard
+    # manifest swap and its sidecars take both
+    for form, as_path in (("plain", str), ("uri", lambda p: p.as_uri())):
+        calls.clear()
+        m = run_corpus_pipeline(docs, as_path(tmp_path / form / "once"), cfg)
+        assert len(calls) == 1
+        assert m["shards"]["n_chunks"] == m["chunks"]
+        assert m["shards"]["n_docs"] == m["after_near_dup"]
 
 
 def test_golden_run_reuses_compiled_classes(spark, tmp_path):
@@ -694,6 +698,13 @@ def test_resume_guards_input_identity_and_missing_fingerprint(
         fh.write("{}")
     with pytest.raises(ValueError, match="no pipeline_config.json"):
         run_corpus_pipeline(docs, out2, cfg, resume=True)
+
+    # the probe is every fenced child of out_dir, not a hand-kept list
+    # of stage names: a fenced stage the list never named refuses too
+    out3 = str(tmp_path / "resume_unlisted_stage")
+    spark.range(3).write.parquet(os.path.join(out3, "packed"))
+    with pytest.raises(ValueError, match="no pipeline_config.json"):
+        run_corpus_pipeline(docs, out3, cfg, resume=True)
 
 
 def test_resume_recomputes_torn_mid_stage(spark, tmp_path):

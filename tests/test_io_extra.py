@@ -132,28 +132,67 @@ def test_xml_roundtrip(spark, tmp_path):
     assert (a.lang, a.source, a.n_chars) == (b.lang, b.source, b.n_chars)
 
 
+#: each path form the storage helpers take: a plain path and its file:// URI
+PATH_FORMS = (("plain", str), ("uri", lambda p: p.as_uri()))
+
+
 class TestCompactParquet:
     def test_compaction_reduces_files_and_preserves_rows(self, spark, tmp_path):
         from etl_guiacores_spark.io import compact_parquet
-
-        p = str(tmp_path / "frag")
-        # simulate fine-grained appends: 20 tiny files
-        for i in range(20):
-            spark.range(i * 10, i * 10 + 10).withColumn(
-                "v", F.col("id") * 2
-            ).coalesce(1).write.mode("append").parquet(p)
         import glob
-        before = len(glob.glob(f"{p}/*.parquet"))
-        assert before >= 20
-        n = compact_parquet(spark, p, target_records_per_file=200)
-        assert n == 200
-        after = len(glob.glob(f"{p}/*.parquet"))
-        assert after < before
+
+        for form, as_path in PATH_FORMS:
+            local = str(tmp_path / form / "frag")
+            p = as_path(tmp_path / form / "frag")
+            # simulate fine-grained appends: 20 tiny files
+            for i in range(20):
+                spark.range(i * 10, i * 10 + 10).withColumn(
+                    "v", F.col("id") * 2
+                ).coalesce(1).write.mode("append").parquet(p)
+            before = len(glob.glob(f"{local}/*.parquet"))
+            assert before >= 20
+            n = compact_parquet(spark, p, target_records_per_file=200)
+            assert n == 200
+            after = len(glob.glob(f"{local}/*.parquet"))
+            assert after < before
+            back = spark.read.parquet(p)
+            assert back.count() == 200
+            assert back.agg(F.sum("v")).first()[0] == sum(2 * i for i in range(200))
+            # no leftover staging dirs
+            assert not glob.glob(f"{local}.__commit_*")
+
+    def test_mid_swap_crash_rolls_back_on_next_call(self, spark, tmp_path, monkeypatch):
+        """A crash between the swap's two renames leaves the table only
+        in its rollback copy; the next compaction restores it first and
+        loses no row."""
+        import glob
+        import os
+
+        import pytest
+
+        p = str(tmp_path / "crash")
+        for i in range(5):
+            spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(p)
+        real_rename = gio._rename
+        calls = {"n": 0}
+
+        def crashing_rename(spark_, src, dst):
+            calls["n"] += 1
+            if calls["n"] == 2:  # after table -> old, before tmp -> table
+                raise RuntimeError("simulated crash mid-swap")
+            real_rename(spark_, src, dst)
+
+        monkeypatch.setattr(gio, "_rename", crashing_rename)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            gio.compact_parquet(spark, p, target_records_per_file=100)
+        monkeypatch.setattr(gio, "_rename", real_rename)
+        assert not os.path.isdir(p) and os.path.isdir(f"{p}.__commit_old__")
+
+        assert gio.compact_parquet(spark, p, target_records_per_file=100) == 50
         back = spark.read.parquet(p)
-        assert back.count() == 200
-        assert back.agg(F.sum("v")).first()[0] == sum(2 * i for i in range(200))
-        # no leftover staging dirs
-        assert not glob.glob(f"{p}.__compact_*")
+        assert sorted(r["id"] for r in back.collect()) == list(range(50))
+        assert len(glob.glob(f"{p}/*.parquet")) == 1
+        assert not glob.glob(f"{p}.__commit_*")
 
     def test_sorted_compaction_clusters_ranges(self, spark, tmp_path):
         from etl_guiacores_spark.io import compact_parquet
@@ -186,25 +225,27 @@ class TestDeleteKeys:
         from etl_guiacores_spark.io import delete_keys
         import glob
 
-        p = str(tmp_path / "t")
-        # 4 files with disjoint key ranges
-        for lo in (0, 100, 200, 300):
-            spark.range(lo, lo + 100).withColumn("v", F.col("id") * 10) \
-                .coalesce(1).write.mode("append").parquet(p)
-        files_before = set(glob.glob(f"{p}/*.parquet"))
-        assert len(files_before) == 4
-        keys = spark.createDataFrame([(105,), (150,)], "id long")
-        res = delete_keys(spark, p, "id", keys)
-        assert res == {"files_rewritten": 1, "rows_deleted": 2}
-        files_after = set(glob.glob(f"{p}/*.parquet"))
-        # three untouched files survive byte-identical (same names)
-        assert len(files_before & files_after) == 3
-        back = spark.read.parquet(p)
-        assert back.count() == 398
-        assert back.filter(F.col("id").isin(105, 150)).count() == 0
-        # non-deleted row in the rewritten file survives with its value
-        assert back.filter(F.col("id") == 101).first()["v"] == 1010
-        assert not glob.glob(f"{p}.__delete_*")
+        for form, as_path in PATH_FORMS:
+            local = str(tmp_path / form / "t")
+            p = as_path(tmp_path / form / "t")
+            # 4 files with disjoint key ranges
+            for lo in (0, 100, 200, 300):
+                spark.range(lo, lo + 100).withColumn("v", F.col("id") * 10) \
+                    .coalesce(1).write.mode("append").parquet(p)
+            files_before = set(glob.glob(f"{local}/*.parquet"))
+            assert len(files_before) == 4
+            keys = spark.createDataFrame([(105,), (150,)], "id long")
+            res = delete_keys(spark, p, "id", keys)
+            assert res == {"files_rewritten": 1, "rows_deleted": 2}
+            files_after = set(glob.glob(f"{local}/*.parquet"))
+            # three untouched files survive byte-identical (same names)
+            assert len(files_before & files_after) == 3
+            back = spark.read.parquet(p)
+            assert back.count() == 398
+            assert back.filter(F.col("id").isin(105, 150)).count() == 0
+            # non-deleted row in the rewritten file survives with its value
+            assert back.filter(F.col("id") == 101).first()["v"] == 1010
+            assert not glob.glob(f"{local}.__delete_*")
 
     def test_no_affected_files_is_noop(self, spark, tmp_path):
         from etl_guiacores_spark.io import delete_keys

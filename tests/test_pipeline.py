@@ -52,23 +52,26 @@ def test_pipeline_end_to_end(spark, tmp_path):
 
 
 def test_versioned_and_snapshot_io(spark, tmp_path):
+    # every path as a plain path and as its file:// URI: the sinks list
+    # and delete through the Hadoop FileSystem, which takes both
     df = spark.createDataFrame([(1, "a")], ["k", "v"])
-    vpath = str(tmp_path / "versions")
-    for i in range(1, 8):
-        gio.write_version(df, vpath, clock=datetime(2025, 1, i, tzinfo=timezone.utc), keep_last=5)
-    assert len(gio.list_versions(vpath)) == 5  # retention pruned to last-N
-    latest = gio.read_latest_version(spark, vpath)
-    assert latest.count() == 1
+    for form, as_path in (("plain", str), ("uri", lambda p: p.as_uri())):
+        vpath = as_path(tmp_path / form / "versions")
+        for i in range(1, 8):
+            gio.write_version(df, vpath, clock=datetime(2025, 1, i, tzinfo=timezone.utc), keep_last=5)
+        assert len(gio.list_versions(vpath)) == 5  # retention pruned to last-N
+        latest = gio.read_latest_version(spark, vpath)
+        assert latest.count() == 1
 
-    spath = str(tmp_path / "cache")
-    gio.write_snapshot(df, spath, clock=datetime(2025, 1, 1, tzinfo=timezone.utc))
-    # fresh within TTL
-    hit = gio.read_snapshot(spark, spath, ttl_seconds=3600,
-                            clock=datetime(2025, 1, 1, 0, 30, tzinfo=timezone.utc))
-    assert hit is not None and hit.count() == 1
-    # expired -> miss, expire_snapshots prunes it
-    miss = gio.read_snapshot(spark, spath, ttl_seconds=3600,
-                             clock=datetime(2025, 1, 2, tzinfo=timezone.utc))
-    assert miss is None
-    doomed = gio.expire_snapshots(spath, 3600, clock=datetime(2025, 1, 2, tzinfo=timezone.utc))
-    assert len(doomed) == 1
+        spath = as_path(tmp_path / form / "cache")
+        gio.write_snapshot(df, spath, clock=datetime(2025, 1, 1, tzinfo=timezone.utc))
+        # fresh within TTL
+        hit = gio.read_snapshot(spark, spath, ttl_seconds=3600,
+                                clock=datetime(2025, 1, 1, 0, 30, tzinfo=timezone.utc))
+        assert hit is not None and hit.count() == 1
+        # expired -> miss, expire_snapshots prunes it
+        miss = gio.read_snapshot(spark, spath, ttl_seconds=3600,
+                                 clock=datetime(2025, 1, 2, tzinfo=timezone.utc))
+        assert miss is None
+        doomed = gio.expire_snapshots(spath, 3600, clock=datetime(2025, 1, 2, tzinfo=timezone.utc))
+        assert len(doomed) == 1

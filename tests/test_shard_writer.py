@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_guiacores_spark import io as gio
 from etl_guiacores_spark.plans.shard_writer import write_training_shards
 
 
@@ -23,7 +24,15 @@ def test_shards_manifest_and_conservation(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").filter(
         F.length(F.trim("text")) > 0
     ).select("doc_id", "text")
-    out = str(tmp_path / "shards_out")
+    # a plain out_dir and its file:// URI: the writer's swap, markers
+    # and stats go through the Hadoop FileSystem, which takes both
+    for form, as_path in (("plain", str), ("uri", lambda p: p.as_uri())):
+        _check_shards_manifest_and_conservation(
+            spark, docs, as_path(tmp_path / form / "shards_out")
+        )
+
+
+def _check_shards_manifest_and_conservation(spark, docs, out):
     stats = write_training_shards(
         docs, out, budget_tokens=128, chunk_tokens=32, overlap=4,
         num_bins=8, sequences_per_shard=50,
@@ -209,19 +218,19 @@ class TestBatchAppendProtocol:
         s0 = append_batch_shards(self._docs(spark, 0, 200), out, 0, **self.KW)
         landed = _parquet_mtimes(f"{out}/shards")
 
-        real_rename = os.rename
+        real_rename = gio._rename
         calls = {"n": 0}
 
-        def crashing_rename(src, dst):
+        def crashing_rename(spark_, src, dst):
             calls["n"] += 1
             if calls["n"] == 2:  # after manifest -> old, before tmp -> manifest
                 raise RuntimeError("simulated crash mid-swap")
-            real_rename(src, dst)
+            real_rename(spark_, src, dst)
 
-        monkeypatch.setattr(os, "rename", crashing_rename)
+        monkeypatch.setattr(gio, "_rename", crashing_rename)
         with pytest.raises(RuntimeError, match="simulated crash"):
             append_batch_shards(self._docs(spark, 200, 400), out, 1, **self.KW)
-        monkeypatch.setattr(os, "rename", real_rename)
+        monkeypatch.setattr(gio, "_rename", real_rename)
 
         # crash residue: manifest gone, rollback copy present
         assert not os.path.isdir(f"{out}/manifest")
